@@ -794,8 +794,13 @@ class HNSWIndex:
             inner_l = inner.value_lengths().to_numpy(zero_copy_only=False)
             flat = inner.flatten().to_numpy(zero_copy_only=False)
             if numeric_ids:
-                # ids are unique and every neighbor id exists in ids
+                # ids are unique; a neighbor id outside them is corruption
                 fpos = np.searchsorted(ids, flat)
+                bad = (fpos >= n) | (ids[np.minimum(fpos, n - 1)] != flat)
+                if bad.any():
+                    raise ValueError(
+                        f"HNSW neighbor id {flat[bad][0].item()!r} is not a node of its graph"
+                    )
             else:
                 pos = {v: i for i, v in enumerate(ids)}
                 fpos = np.fromiter(

@@ -39,6 +39,10 @@ from fabstir_vectordb_spark.operators.ivf import IVFIndex
 from fabstir_vectordb_spark.operators.pq import ProductQuantizer, _adc_tables
 from fabstir_vectordb_spark.operators.topk import ROUND_DECIMALS, topk_per_query
 
+# search_bulk collects the query set and broadcasts it while the query
+# vectors fit this many float64 bytes: 65,536 queries at dim 384
+_MAX_BROADCAST_QUERY_BYTES = 65_536 * 384 * 8
+
 
 class IVFPQIndex:
     def __init__(self, ivf: IVFIndex, pq: ProductQuantizer, residual: bool = False):
@@ -193,8 +197,8 @@ class IVFPQIndex:
         (4, 4) — explicit arguments always win.
 
         Physical shape (r12 optimization): when the query set is bounded
-        (<= ``max_broadcast_queries`` rows, default 65,536 or
-        $FABSTIR_MAX_BROADCAST_QUERIES) it is collected once and the
+        (its float64 vectors within ``_MAX_BROADCAST_QUERY_BYTES``, 192 MiB:
+        65,536 queries at dim 384) it is collected once and the
         probe table is BROADCAST into a single ``mapInArrow`` pass over
         the codes — the codes table is never shuffled and never
         converted to pandas; only Q x n_probe x fetch partial rows move
@@ -219,7 +223,7 @@ class IVFPQIndex:
                 rerank_vectors=rerank_vectors, oversample=oversample,
                 rerank_vector_col=self.ivf.vector_col,
             )
-        max_bq = int(os.environ.get("FABSTIR_MAX_BROADCAST_QUERIES", "65536"))
+        max_bq = _MAX_BROADCAST_QUERY_BYTES // (8 * self.ivf.centroids.shape[1])
         qrows = (
             queries.select(query_id_col, query_vector_col)
             .limit(max_bq + 1)

@@ -26,8 +26,14 @@ Semantics preserved:
 
 Spark-first storage: ONE DataFrame (id, vector, metadata-struct, ts,
 deleted) rather than two indices + a metadata side-map.  Mutations are
-column rewrites (merge-on-read style); `vacuum` is the compaction.
-An optional IVFIndex accelerates search once trained.
+column rewrites (merge-on-read style) committed through one step that
+drops the caches and logs the events; `vacuum` is the compaction.
+
+One search plan: search, search_batch and search_dataframe all rank
+through ``_ranked`` — IVFIndex.search_bulk over the clustered table when
+an index is trained and no filter is given, else an exact knn_bulk over
+the filtered live rows.  search_dataframe returns that plan as a
+DataFrame; the other two collect it with the metadata joined on.
 """
 
 from __future__ import annotations
@@ -47,8 +53,8 @@ from fabstir_vectordb_spark.functions.filters import compile_filter
 from fabstir_vectordb_spark.functions.schema import MetadataSchema
 from fabstir_vectordb_spark.operators.cache import QueryResultCache
 from fabstir_vectordb_spark.operators.ivf import IVFIndex
-from fabstir_vectordb_spark.operators.knn import brute_force_knn
-from fabstir_vectordb_spark.operators.topk import topk_per_query
+from fabstir_vectordb_spark.operators.knn import knn_bulk
+from fabstir_vectordb_spark.plans.tuning import plan_search
 
 RECENCY_DAYS = 7  # src/hybrid/core.rs:77
 FORMAT_VERSION = 3  # mirrors MANIFEST_VERSION (src/core/chunk.rs:30)
@@ -182,6 +188,89 @@ class VectorDbSession:
 
     # ------------------------------------------------------------------ add
 
+    def _validate_items(
+        self, vectors: list[dict], now: _dt.datetime
+    ) -> tuple[list[dict], list[tuple[str | None, Exception]], int | None]:
+        """Validate an insert batch row by row: dimension, in-batch
+        duplicate ids, timestamp type and metadata schema.  Returns the
+        valid rows, the ``(id, error)`` of each rejected row (id None when
+        the item has none) and the batch dimension.  Reads session state,
+        never writes it: the dimension is fixed by the first row that FULLY
+        validates, and only the caller's commit pins it."""
+        rows: list[dict] = []
+        errors: list[tuple[str | None, Exception]] = []
+        seen: set[str] = set()
+        dim = self._dim
+        for item in vectors:
+            try:
+                vid = str(item["id"])
+            except (KeyError, TypeError) as e:
+                errors.append((None, e))
+                continue
+            try:
+                vec = [float(x) for x in item["vector"]]
+                if not vec:
+                    raise VectorDbError(f"empty vector for id {vid!r}")
+                if dim is not None and len(vec) != dim:
+                    raise VectorDbError(
+                        f"dimension mismatch for id {vid!r}: got {len(vec)}, expected {dim}"
+                    )
+                if vid in seen:
+                    raise VectorDbError(f"duplicate id in batch: {vid!r}")
+                ts = item.get("timestamp") or now
+                # a bad-typed timestamp would otherwise fail the whole
+                # batch later, in createDataFrame
+                if not isinstance(ts, _dt.datetime):
+                    raise VectorDbError(
+                        f"timestamp for id {vid!r} must be a datetime, got {type(ts).__name__}"
+                    )
+                md = item.get("metadata")
+                if self._schema is not None:
+                    self._schema.validate_metadata(md)
+            except (VectorDbError, KeyError, TypeError, ValueError) as e:
+                errors.append((vid, e))
+                continue
+            dim = len(vec) if dim is None else dim
+            seen.add(vid)
+            rows.append(
+                {"id": vid, "vector": vec, "metadata": md, "ts": ts, "deleted": False}
+            )
+        return rows, errors, dim
+
+    def _live_rows(self, ids, *cols: str) -> list[Row]:
+        """The one live-id probe: (id, *cols) of the live rows among
+        ``ids`` — one job, bounded by the batch size."""
+        if self._df is None:
+            return []
+        return (
+            self._df.filter(F.col("id").isin(sorted(set(ids))) & ~F.col("deleted"))
+            .select("id", *cols)
+            .collect()
+        )
+
+    def _commit(
+        self, df: DataFrame, event: str, ids: list[str], ts: _dt.datetime | None = None
+    ) -> None:
+        """Every mutation's last step: drop the caches, swap in the new
+        table, bound its lineage and log one event per id."""
+        self._invalidate()
+        self._df = df
+        self._bound_lineage()
+        if ids:
+            self._emit(event, ids, ts)
+
+    def _append(self, rows: list[dict], dim: int | None, now: _dt.datetime) -> None:
+        batch = self._create_batch_df(rows)
+        self._dim = dim
+        self._commit(
+            batch
+            if self._df is None
+            else self._df.unionByName(batch, allowMissingColumns=True),
+            "Inserted",
+            [r["id"] for r in rows],
+            now,
+        )
+
     def add_vectors(
         self,
         vectors: list[dict],
@@ -189,58 +278,21 @@ class VectorDbSession:
     ) -> int:
         """Batch insert. Each item: {id, vector, metadata?, timestamp?}.
 
-        Validates dimension + schema + duplicate ids (within the batch and
-        against live rows) before anything is appended.
+        All or nothing: dimension, schema and duplicate ids (within the
+        batch and against live rows) are checked before anything, the
+        session dimension included, is touched; the first error raises.
         """
         if not vectors:
             return 0
         now = timestamp or _utcnow()
-        seen: set[str] = set()
-        rows = []
-        for item in vectors:
-            vid = str(item["id"])
-            vec = [float(x) for x in item["vector"]]
-            if not vec:
-                raise VectorDbError(f"empty vector for id {vid!r}")
-            if self._dim is None:
-                self._dim = len(vec)
-            elif len(vec) != self._dim:
-                raise VectorDbError(
-                    f"dimension mismatch for id {vid!r}: got {len(vec)}, expected {self._dim}"
-                )
-            if vid in seen:
-                raise VectorDbError(f"duplicate id in batch: {vid!r}")
-            seen.add(vid)
-            md = item.get("metadata")
-            if self._schema is not None:
-                self._schema.validate_metadata(md)
-            rows.append(
-                {
-                    "id": vid,
-                    "vector": vec,
-                    "metadata": md,
-                    "ts": item.get("timestamp") or now,
-                    "deleted": False,
-                }
-            )
-        if self._df is not None:
-            clash = (
-                self._df.filter(~F.col("deleted"))
-                .filter(F.col("id").isin(sorted(seen)))
-                .select("id")
-                .limit(1)
-                .collect()
-            )
-            if clash:
-                raise VectorDbError(f"duplicate id: {clash[0]['id']!r} already exists")
-        self._invalidate()
-        batch = self._create_batch_df(rows)
-        if self._df is None:
-            self._df = batch
-        else:
-            self._df = self._df.unionByName(batch, allowMissingColumns=True)
-        self._bound_lineage()
-        self._emit("Inserted", [r["id"] for r in rows], now)
+        rows, errors, dim = self._validate_items(vectors, now)
+        if errors:
+            raise errors[0][1]
+        clash = {r["id"] for r in self._live_rows(r["id"] for r in rows)}
+        for r in rows:
+            if r["id"] in clash:
+                raise VectorDbError(f"duplicate id: {r['id']!r} already exists")
+        self._append(rows, dim, now)
         return len(rows)
 
     def batch_add_vectors(
@@ -254,86 +306,23 @@ class VectorDbSession:
         valid rows are committed — via a single live-id existence probe
         and a single union, never a per-row loop."""
         now = timestamp or _utcnow()
-        errors: list[dict] = []
-        rows: list[dict] = []
-        seen: set[str] = set()
-        dim = self._dim
-        for item in vectors:
-            try:
-                vid = str(item["id"])
-            except (KeyError, TypeError) as e:
-                errors.append({"id": "?", "error": f"missing id: {e}"})
-                continue
-            try:
-                vec = [float(x) for x in item["vector"]]
-                if not vec:
-                    raise VectorDbError(f"empty vector for id {vid!r}")
-                if dim is not None and len(vec) != dim:
-                    raise VectorDbError(
-                        f"dimension mismatch for id {vid!r}: got {len(vec)}, expected {dim}"
-                    )
-                if vid in seen:
-                    raise VectorDbError(f"duplicate id in batch: {vid!r}")
-                ts = item.get("timestamp") or now
-                if not isinstance(ts, _dt.datetime):
-                    # validate here, per-row: a bad-typed timestamp would
-                    # otherwise escape to createDataFrame and abort the
-                    # whole batch after state was already touched
-                    raise VectorDbError(
-                        f"timestamp for id {vid!r} must be a datetime, got {type(ts).__name__}"
-                    )
-                md = item.get("metadata")
-                if self._schema is not None:
-                    self._schema.validate_metadata(md)
-            except (VectorDbError, KeyError, TypeError, ValueError) as e:
-                errors.append({"id": vid, "error": str(e)})
-                continue
-            # commit the batch dimension only once a row FULLY validates —
-            # a rejected first row must not pin the dim for later rows
-            if dim is None:
-                dim = len(vec)
-            seen.add(vid)
-            rows.append(
-                {
-                    "id": vid,
-                    "vector": vec,
-                    "metadata": md,
-                    "ts": ts,
-                    "deleted": False,
-                }
-            )
-        if rows and self._df is not None:
-            clash = {
-                r["id"]
-                for r in self._df.filter(~F.col("deleted"))
-                .filter(F.col("id").isin(sorted(seen)))
-                .select("id")
-                .collect()
-            }
-            if clash:
-                kept = []
-                for row in rows:
-                    if row["id"] in clash:
-                        errors.append(
-                            {
-                                "id": row["id"],
-                                "error": f"duplicate id: {row['id']!r} already exists",
-                            }
-                        )
-                    else:
-                        kept.append(row)
-                rows = kept
+        rows, bad, dim = self._validate_items(vectors, now)
+        errors = [
+            {"id": "?", "error": f"missing id: {e}"}
+            if vid is None
+            else {"id": vid, "error": str(e)}
+            for vid, e in bad
+        ]
         if rows:
-            self._dim = dim
-            self._invalidate()
-            batch = self._create_batch_df(rows)
-            self._df = (
-                batch
-                if self._df is None
-                else self._df.unionByName(batch, allowMissingColumns=True)
+            clash = {r["id"] for r in self._live_rows(r["id"] for r in rows)}
+            errors.extend(
+                {"id": r["id"], "error": f"duplicate id: {r['id']!r} already exists"}
+                for r in rows
+                if r["id"] in clash
             )
-            self._bound_lineage()
-            self._emit("Inserted", [r["id"] for r in rows], now)
+            rows = [r for r in rows if r["id"] not in clash]
+        if rows:
+            self._append(rows, dim, now)
         return {"successful": len(rows), "failed": len(errors), "errors": errors}
 
     @classmethod
@@ -421,32 +410,111 @@ class VectorDbSession:
             ]
         )
         mds = [r["metadata"] for r in rows]
-        if any(md for md in mds):
-            inferred = _infer_md_type(self.spark, mds)
+        md_type = T.StructType()
+        if any(mds):
+            md_type = _infer_md_type(self.spark, mds)
             if self._schema is not None:
                 # declared fields take their declared types; undeclared
                 # extras keep inferred types (only declared fields are
                 # checked — schema.rs:199-205)
-                md_type: T.StructType = _merge_struct(self._schema.spark_type(), inferred)
-                md_type = T.StructType([f for f in md_type if f.name in inferred.fieldNames()])
-            else:
-                md_type = inferred
-            schema = T.StructType(list(base) + [T.StructField("metadata", md_type, True)])
-        else:
-            schema = T.StructType(
-                list(base)
-                + [T.StructField("metadata", T.StructType(), True)]
-            )
-        data = [
-            (r["id"], r["vector"], r["ts"], r["deleted"], r["metadata"])
-            for r in rows
-        ]
-        cols = ["id", "vector", "ts", "deleted", "metadata"]
-        return self.spark.createDataFrame(
-            [dict(zip(cols, d)) for d in data], schema
-        ).select(*cols)
+                names = md_type.fieldNames()
+                merged = _merge_struct(self._schema.spark_type(), md_type)
+                md_type = T.StructType([f for f in merged if f.name in names])
+        base.add(T.StructField("metadata", md_type, True))
+        return self.spark.createDataFrame(rows, base)
 
     # ---------------------------------------------------------------- search
+
+    def _live(self) -> DataFrame:
+        return self._df.filter(~F.col("deleted"))
+
+    def _ranked(
+        self,
+        queries: DataFrame,
+        k: int,
+        *,
+        filter: dict | None = None,
+        threshold: float | None = None,
+        n_probe: int | None = None,
+        search_recent: bool = True,
+        search_historical: bool = True,
+    ) -> DataFrame:
+        """The one search plan behind every search surface: (query_id,
+        id, distance, score), <= k rows per query, nothing collected.
+
+        The recency flags become one ``ts`` predicate against a 7-day
+        cutoff.  A trained index with no metadata filter probes the
+        clustered table (``IVFIndex.search_bulk``), with the probe width
+        from ``plan_search`` unless ``n_probe`` is given; anything else is
+        an exact ``knn_bulk`` over the live rows, pre-filtered BEFORE
+        ranking (exact, superseding the reference's k*3 oversampling,
+        hybrid/core.rs:513-549).  ``threshold`` keeps score >= threshold."""
+        cutoff = F.lit(_utcnow() - _dt.timedelta(days=RECENCY_DAYS))
+        recency = F.lit(True)
+        if not search_recent:
+            recency &= F.col("ts") < cutoff
+        if not search_historical:
+            recency &= F.col("ts") >= cutoff
+        if self._index is not None and self._index.is_trained and filter is None:
+            if self._assigned is None:
+                self._refresh_assigned()
+            if n_probe is None:
+                # planner heuristic (search_integration.rs:375-449): probe
+                # width by dataset size and k; the live count is cached at
+                # assignment time — no count job per search
+                n_probe = plan_search(
+                    self._live_count or 0, k, self._index.n_clusters,
+                    brute_force_threshold=0,
+                ).n_probe or self._index.n_clusters
+            res = self._index.search_bulk(
+                self._assigned.filter(recency), queries, k, n_probe=n_probe
+            )
+        else:
+            rows = self._live().filter(recency)
+            if filter is not None:
+                rows = rows.filter(
+                    compile_filter(filter, rows.schema, metadata_col="metadata")
+                )
+            res = knn_bulk(rows, queries, k, metric="l2", id_col="id", vector_col="vector")
+        res = res.withColumn("score", D.similarity_score("distance"))
+        return res if threshold is None else res.filter(F.col("score") >= threshold)
+
+    def _collect(
+        self, ranked: DataFrame, query_ids: list[str], include_vectors: bool = False
+    ) -> dict[str, list[dict]]:
+        """Materialize a ranked result on the driver: one join for the
+        metadata (and vectors), one collect, ascending (round(distance, 6),
+        id) per query.  The ranked plan already holds <= k rows per query
+        and the threshold only removes rows, so no second top-k runs."""
+        cols = ["id", "metadata"] + (["vector"] if include_vectors else [])
+        rows = (
+            ranked.join(self._live().select(*cols), "id", "left")
+            .orderBy("query_id", F.round("distance", 6), "id")
+            .collect()
+        )
+        out: dict[str, list[dict]] = {qid: [] for qid in query_ids}
+        for r in rows:
+            item = {
+                "id": r["id"],
+                "distance": r["distance"],
+                "score": r["score"],
+                "metadata": _row_to_plain(r["metadata"]) if r["metadata"] is not None else None,
+            }
+            if include_vectors:
+                item["vector"] = list(r["vector"])
+            out[r["query_id"]].append(item)
+        return out
+
+    def _query_frame(self, queries: list[tuple[str, list[float]]]) -> DataFrame:
+        for _, vec in queries:
+            if self._dim is not None and len(vec) != self._dim:
+                raise VectorDbError(
+                    f"query dimension {len(vec)} != index dimension {self._dim}"
+                )
+        return self.spark.createDataFrame(
+            [(qid, [float(x) for x in vec]) for qid, vec in queries],
+            "query_id string, vector array<float>",
+        )
 
     def search(
         self,
@@ -460,12 +528,15 @@ class VectorDbSession:
         n_probe: int | None = None,
         diversify: float | None = None,
     ) -> list[dict]:
-        """``diversify=lam`` (0..1] re-ranks with MMR (operators/
+        """Point search: the one-query case of the shared plan
+        (``_ranked`` then ``_collect``), memoized in the query-result
+        cache until the next mutation.
+
+        ``diversify=lam`` (0..1] re-ranks with MMR (operators/
         scoring.py:mmr_rerank semantics): the engine fetches 3k
         candidates and greedily trades relevance against redundancy;
         lam=1.0 returns the plain relevance order.  The MMR pass runs
-        over the <= 3k already-collected candidate rows — the point-API
-        surface, like the rest of this method."""
+        over the <= 3k already-collected candidate rows."""
         if diversify is not None:
             if not (0.0 < diversify <= 1.0):
                 raise VectorDbError("diversify must be in (0, 1]")
@@ -481,10 +552,6 @@ class VectorDbSession:
             return out
         if self._df is None:
             return []
-        if self._dim is not None and len(query_vector) != self._dim:
-            raise VectorDbError(
-                f"query dimension {len(query_vector)} != index dimension {self._dim}"
-            )
         cache_key = QueryResultCache.key(
             [float(x) for x in query_vector], k,
             extra=json.dumps(
@@ -496,63 +563,12 @@ class VectorDbSession:
         cached = self._cache.get(cache_key)
         if cached is not None:
             return cached
-        df = self._df.filter(~F.col("deleted"))
-        cutoff = _utcnow() - _dt.timedelta(days=RECENCY_DAYS)
-        if not search_recent:
-            df = df.filter(F.col("ts") < F.lit(cutoff))
-        if not search_historical:
-            df = df.filter(F.col("ts") >= F.lit(cutoff))
-        if filter is not None:
-            # pre-filter BEFORE ranking — exact, supersedes the reference's
-            # k*3 oversampling (hybrid/core.rs:513-549)
-            df = df.filter(compile_filter(filter, df.schema, metadata_col="metadata"))
-
-        queries = self.spark.createDataFrame(
-            [("q0", [float(x) for x in query_vector])],
-            "query_id string, vector array<float>",
+        ranked = self._ranked(
+            self._query_frame([("q0", query_vector)]), k,
+            filter=filter, threshold=threshold, n_probe=n_probe,
+            search_recent=search_recent, search_historical=search_historical,
         )
-        use_index = self._index is not None and self._index.is_trained and filter is None
-        if use_index:
-            if self._assigned is None:
-                self._refresh_assigned()
-            if n_probe is None:
-                # planner heuristic (search_integration.rs:375-449): probe
-                # width by dataset size and k; the live count is cached at
-                # assignment time — no count job per search
-                from fabstir_vectordb_spark.plans.tuning import plan_search
-
-                plan = plan_search(self._live_count or 0, k, self._index.n_clusters,
-                                   brute_force_threshold=0)
-                n_probe = plan.n_probe or self._index.n_clusters
-            assigned = self._assigned
-            if not search_recent:
-                assigned = assigned.filter(F.col("ts") < F.lit(cutoff))
-            if not search_historical:
-                assigned = assigned.filter(F.col("ts") >= F.lit(cutoff))
-            res = self._index.search(assigned, queries, k, n_probe=n_probe)
-        else:
-            res = brute_force_knn(df, queries, k, metric="l2", impl="expr")
-        scored = (
-            res.withColumn("score", D.similarity_score("distance"))
-            .filter(F.col("score") >= threshold)
-            .join(df.select("id", "vector", "metadata"), "id", "left")
-        )
-        rows = (
-            topk_per_query(scored, k)
-            .orderBy(F.round("distance", 6), "id")
-            .collect()
-        )
-        out = []
-        for r in rows:
-            item = {
-                "id": r["id"],
-                "distance": r["distance"],
-                "score": r["score"],
-                "metadata": _row_to_plain(r["metadata"]) if r["metadata"] is not None else None,
-            }
-            if include_vectors:
-                item["vector"] = list(r["vector"])
-            out.append(item)
+        out = self._collect(ranked, ["q0"], include_vectors)["q0"]
         self._cache.put(cache_key, out)
         return out
 
@@ -563,71 +579,21 @@ class VectorDbSession:
         threshold: float = 0.0,
         filter: dict | None = None,
     ) -> dict[str, list[dict]]:
-        """Bulk multi-query search — the shape Spark is actually built
-        for: ONE distributed job for the whole query batch instead of a
-        per-query round trip (the reference has no batch search; its
-        clients loop over session.search).
+        """Bulk multi-query search: the same plan as search(), run ONCE
+        for the whole query batch instead of a per-query round trip (the
+        reference has no batch search; its clients loop over
+        session.search).
 
         `queries`: [{"id": qid, "vector": [...]}, ...]
         Returns {qid: [results sorted by ascending distance]}.
         """
+        qids = [str(q["id"]) for q in queries]
         if self._df is None or not queries:
-            return {str(q["id"]): [] for q in queries}
-        for q in queries:
-            if self._dim is not None and len(q["vector"]) != self._dim:
-                raise VectorDbError(
-                    f"query dimension {len(q['vector'])} != index dimension {self._dim}"
-                )
-        df = self._df.filter(~F.col("deleted"))
-        if filter is not None:
-            df = df.filter(compile_filter(filter, df.schema, metadata_col="metadata"))
-        qdf = self.spark.createDataFrame(
-            [(str(q["id"]), [float(x) for x in q["vector"]]) for q in queries],
-            "query_id string, vector array<float>",
+            return {qid: [] for qid in qids}
+        qdf = self._query_frame([(qid, q["vector"]) for qid, q in zip(qids, queries)])
+        return self._collect(
+            self._ranked(qdf, k, filter=filter, threshold=threshold), qids
         )
-        # same planner as search(): trained index + no metadata filter ->
-        # probe path over the one-time-materialized clustered table
-        use_index = (
-            self._index is not None and self._index.is_trained and filter is None
-        )
-        if use_index:
-            if self._assigned is None:
-                self._refresh_assigned()
-            from fabstir_vectordb_spark.plans.tuning import plan_search
-
-            plan = plan_search(
-                self._live_count or 0, k, self._index.n_clusters,
-                brute_force_threshold=0,
-            )
-            res = self._index.search(
-                self._assigned, qdf, k,
-                n_probe=plan.n_probe or self._index.n_clusters,
-            )
-        else:
-            res = brute_force_knn(df, qdf, k, metric="l2", impl="kernel")
-        scored = (
-            res.withColumn("score", D.similarity_score("distance"))
-            .filter(F.col("score") >= threshold)
-            .join(df.select("id", "metadata"), "id", "left")
-        )
-        rows = (
-            topk_per_query(scored, k)
-            .orderBy("query_id", F.round("distance", 6), "id")
-            .collect()
-        )
-        out: dict[str, list[dict]] = {str(q["id"]): [] for q in queries}
-        for r in rows:
-            out[r["query_id"]].append(
-                {
-                    "id": r["id"],
-                    "distance": r["distance"],
-                    "score": r["score"],
-                    "metadata": _row_to_plain(r["metadata"])
-                    if r["metadata"] is not None
-                    else None,
-                }
-            )
-        return out
 
     def search_dataframe(
         self,
@@ -638,47 +604,19 @@ class VectorDbSession:
         query_id_col: str = "query_id",
         query_vector_col: str = "vector",
     ) -> DataFrame:
-        """DataFrame -> DataFrame bulk search — the pipeline surface.
-
-        Unlike search()/search_batch() (reference-shaped point APIs that
-        materialize results on the driver), BOTH sides stay distributed:
-        the query set is never collected, the result is a DataFrame of
-        (query_id, id, distance, score).  Trained index + no metadata
-        filter routes to IVFIndex.search_bulk (distributed probe
-        selection + cogrouped cluster GEMM); otherwise knn_bulk (hash
-        blocks + cogrouped GEMM).  This is the two-big-tables similarity
-        join a 100 TB corpus-vs-corpus job needs."""
+        """DataFrame -> DataFrame bulk search — the pipeline surface: the
+        plan search() and search_batch() collect, returned uncollected.
+        The query set is never collected either; the result is a
+        DataFrame of (query_id, id, distance, score), <= k rows per
+        query — the two-big-tables similarity join a 100 TB
+        corpus-vs-corpus job needs."""
         if self._df is None:
             raise VectorDbError("session has no vectors")
         qdf = queries.select(
             F.col(query_id_col).alias("query_id"),
             F.col(query_vector_col).alias("vector"),
         )
-        use_index = (
-            self._index is not None and self._index.is_trained and filter is None
-        )
-        if use_index:
-            if self._assigned is None:
-                self._refresh_assigned()
-            if n_probe is None:
-                from fabstir_vectordb_spark.plans.tuning import plan_search
-
-                plan = plan_search(
-                    self._live_count or 0, k, self._index.n_clusters,
-                    brute_force_threshold=0,
-                )
-                n_probe = plan.n_probe or self._index.n_clusters
-            res = self._index.search_bulk(self._assigned, qdf, k, n_probe=n_probe)
-        else:
-            from fabstir_vectordb_spark.operators.knn import knn_bulk
-
-            df = self._df.filter(~F.col("deleted"))
-            if filter is not None:
-                df = df.filter(
-                    compile_filter(filter, df.schema, metadata_col="metadata")
-                )
-            res = knn_bulk(df, qdf, k, metric="l2", id_col="id", vector_col="vector")
-        return res.withColumn("score", D.similarity_score("distance"))
+        return self._ranked(qdf, k, filter=filter, n_probe=n_probe)
 
     # ------------------------------------------------------------------ get
 
@@ -688,13 +626,7 @@ class VectorDbSession:
         return self._df
 
     def get_vector(self, vector_id: str) -> dict | None:
-        if self._df is None:
-            return None
-        rows = (
-            self._df.filter((F.col("id") == str(vector_id)) & ~F.col("deleted"))
-            .limit(1)
-            .collect()
-        )
+        rows = self._live_rows([str(vector_id)], "vector", "metadata")
         if not rows:
             return None
         r = rows[0]
@@ -717,42 +649,28 @@ class VectorDbSession:
         one column rewrite, never a per-id driver loop: at 10k ids the old
         loop was 10k Spark jobs and an O(N)-deep plan."""
         ids = [str(v) for v in vector_ids]
-        if self._df is None:
-            return {
-                "successful": 0,
-                "failed": len(ids),
-                "errors": [f"vector not found: {v!r}" for v in ids],
-            }
-        live = {
-            r["id"]
-            for r in self._df.filter(
-                F.col("id").isin(sorted(set(ids))) & ~F.col("deleted")
-            )
-            .select("id")
-            .collect()
-        }
-        successful, failed, errors = 0, 0, []
+        live = {r["id"] for r in self._live_rows(ids)}
         hit: set[str] = set()
+        errors: list[str] = []
         for vid in ids:
             # a duplicate id in the batch fails on its second occurrence,
             # exactly as the sequential reference loop would
             if vid in live and vid not in hit:
-                successful += 1
                 hit.add(vid)
             else:
-                failed += 1
                 errors.append(f"vector not found: {vid!r}")
         if hit:
-            self._invalidate()
-            self._df = self._df.withColumn(
-                "deleted",
-                F.when(F.col("id").isin(sorted(hit)), F.lit(True)).otherwise(
-                    F.col("deleted")
+            self._commit(
+                self._df.withColumn(
+                    "deleted",
+                    F.when(F.col("id").isin(sorted(hit)), F.lit(True)).otherwise(
+                        F.col("deleted")
+                    ),
                 ),
+                "Deleted",
+                sorted(hit),
             )
-            self._bound_lineage()
-            self._emit("Deleted", sorted(hit))
-        return {"successful": successful, "failed": failed, "errors": errors}
+        return {"successful": len(hit), "failed": len(errors), "errors": errors}
 
     def migrate_aged(
         self,
@@ -792,15 +710,17 @@ class VectorDbSession:
             .collect()
         )
         if batch:
-            self._invalidate()
-            self._df = self._df.withColumn(
-                "tier",
-                F.when(F.col("id").isin(batch), F.lit("historical")).otherwise(
-                    F.col("tier")
+            self._commit(
+                self._df.withColumn(
+                    "tier",
+                    F.when(F.col("id").isin(batch), F.lit("historical")).otherwise(
+                        F.col("tier")
+                    ),
                 ),
+                "Migrated",
+                batch,
+                now,
             )
-            self._bound_lineage()
-            self._emit("Migrated", batch, now)
         return {"migrated": len(batch), "remaining_aged": n_aged - len(batch)}
 
     def delete_by_metadata(self, filter: dict, return_ids: bool = True) -> dict:
@@ -829,15 +749,15 @@ class VectorDbSession:
             )
             n = len(ids)
         else:
-            n = self._df.filter(match).count()
-        self._invalidate()
-        self._df = self._df.withColumn(
-            "deleted", F.when(match, F.lit(True)).otherwise(F.col("deleted"))
+            ids, n = [], self._df.filter(match).count()
+        self._commit(
+            self._df.withColumn(
+                "deleted", F.when(match, F.lit(True)).otherwise(F.col("deleted"))
+            ),
+            "Deleted",
+            ids,
         )
-        self._bound_lineage()
         if return_ids:
-            if ids:
-                self._emit("Deleted", ids)
             return {"deletedCount": n, "deletedIds": ids}
         return {"deletedCount": n}
 
@@ -858,88 +778,53 @@ class VectorDbSession:
         if self._schema is not None:
             # single-update path surfaces schema violations as exceptions
             self._schema.validate_metadata(metadata)
-        res = self.batch_update_metadata([(str(vector_id), metadata)], _validated=True)
+        res = self.batch_update_metadata([(str(vector_id), metadata)])
         if res["failed"]:
             raise VectorDbError(res["errors"][0])
 
-    def batch_update_metadata(
-        self,
-        updates: list[tuple[str, dict | None]],
-        _validated: bool = False,
-    ) -> dict:
+    def batch_update_metadata(self, updates: list[tuple[str, dict | None]]) -> dict:
         """FULL-REPLACE metadata for a batch of ids in ONE pass: a single
         bounded collect of the touched rows' (vector, ts), one anti-filter,
         one union — instead of N driver round-trips each growing the plan
         (session.rs:581-632 is per-id; hybrid/core.rs:968-986 is the
         batch-stats shape).  The collect is bounded by the batch size, and
         the replacement payload already lives driver-side anyway."""
-        items: list[tuple[str, dict | None]] = [(str(i), m) for i, m in updates]
         errors: list[str] = []
-        bad: set[int] = set()
-        if not _validated and self._schema is not None:
-            for pos, (vid, md) in enumerate(items):
+        good: list[str] = []  # the id of each schema-valid position
+        want: dict[str, dict | None] = {}
+        for vid, md in ((str(i), m) for i, m in updates):
+            if self._schema is not None:
                 try:
                     self._schema.validate_metadata(md)
                 except Exception as e:
-                    bad.add(pos)
                     errors.append(str(e))
-        if self._df is None:
-            return {
-                "successful": 0,
-                "failed": len(items),
-                "errors": errors
-                + [
-                    f"vector not found: {vid!r}"
-                    for pos, (vid, _) in enumerate(items)
-                    if pos not in bad
-                ],
-            }
-        want: dict[str, dict | None] = {}
-        for pos, (vid, md) in enumerate(items):
-            if pos not in bad:
-                want[vid] = md  # duplicate id: last update wins, as sequentially
-        old = {
-            r["id"]: r
-            for r in self._df.filter(
-                F.col("id").isin(sorted(want)) & ~F.col("deleted")
-            )
-            .select("id", "vector", "ts")
-            .collect()
-        }
-        repl_rows = [
-            {
-                "id": vid,
-                "vector": list(old[vid]["vector"]),
-                "metadata": md,
-                "ts": old[vid]["ts"],
-                "deleted": False,
-            }
-            for vid, md in want.items()
-            if vid in old
-        ]
+                    continue
+            good.append(vid)
+            want[vid] = md  # duplicate id: last update wins, as sequentially
+        old = {r["id"]: r for r in self._live_rows(want, "vector", "ts")}
         # per-position stats: every occurrence of a live id succeeds (the
         # sequential reference loop would re-update the still-live row)
-        successful = sum(
-            1 for pos, (vid, _) in enumerate(items) if pos not in bad and vid in old
-        )
-        errors.extend(
-            f"vector not found: {vid!r}"
-            for pos, (vid, _) in enumerate(items)
-            if pos not in bad and vid not in old
-        )
-        failed = len(items) - successful
-        if repl_rows:
-            self._invalidate()
-            touched = sorted(r["id"] for r in repl_rows)
-            rest = self._df.filter(
-                ~(F.col("id").isin(touched) & ~F.col("deleted"))
+        successful = sum(1 for vid in good if vid in old)
+        errors.extend(f"vector not found: {vid!r}" for vid in good if vid not in old)
+        touched = sorted(vid for vid in want if vid in old)
+        if touched:
+            repl = self._create_batch_df(
+                [
+                    {
+                        "id": vid,
+                        "vector": list(old[vid]["vector"]),
+                        "metadata": want[vid],
+                        "ts": old[vid]["ts"],
+                        "deleted": False,
+                    }
+                    for vid in touched
+                ]
             )
-            self._df = rest.unionByName(
-                self._create_batch_df(repl_rows), allowMissingColumns=True
+            rest = self._df.filter(~(F.col("id").isin(touched) & ~F.col("deleted")))
+            self._commit(
+                rest.unionByName(repl, allowMissingColumns=True), "Updated", touched
             )
-            self._bound_lineage()
-            self._emit("Updated", touched)
-        return {"successful": successful, "failed": failed, "errors": errors}
+        return {"successful": successful, "failed": len(updates) - successful, "errors": errors}
 
     # --------------------------------------------------------------- vacuum
 
@@ -1047,8 +932,7 @@ class VectorDbSession:
     def train_index(self, n_clusters: int = 16, **fit_kw) -> None:
         if self._df is None:
             raise VectorDbError("nothing to train on")
-        live = self._df.filter(~F.col("deleted"))
-        self._index = IVFIndex.fit(live, n_clusters=n_clusters, **fit_kw)
+        self._index = IVFIndex.fit(self._live(), n_clusters=n_clusters, **fit_kw)
         # materialize the clustered table ONCE (the reference assigns at
         # insert time, ivf/core.rs:431-455) — searches reuse it until the
         # next mutation instead of re-running a full-table GEMM each call
@@ -1057,8 +941,7 @@ class VectorDbSession:
     def _refresh_assigned(self) -> None:
         if self._index is None or not self._index.is_trained or self._df is None:
             return
-        live = self._df.filter(~F.col("deleted"))
-        self._assigned = self._index.assign(live).cache()
+        self._assigned = self._index.assign(self._live()).cache()
         self._live_count = self._assigned.count()
 
     # ---------------------------------------------------------- persistence
@@ -1168,10 +1051,6 @@ def verify_integrity(spark: SparkSession, path: str) -> dict:
 
 
 # -------------------------------------------------------------------- utils
-
-def _ddl(dtype: T.DataType) -> str:
-    return dtype.simpleString()
-
 
 def _infer_md_type(spark: SparkSession, mds: list) -> T.StructType:
     """Infer a struct type for a batch of metadata dicts via the JSON reader

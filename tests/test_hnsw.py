@@ -181,6 +181,27 @@ def test_tiny_graphs(spark):
     assert [r["id"] for r in sorted(res, key=lambda r: r["distance"])] == [1, 2]
 
 
+def test_unresolved_neighbor_id_fails_loudly(spark):
+    # a neighbor id that is no node of the graph must raise, never
+    # resolve to whichever node sorts next to it
+    rng = np.random.default_rng(5)
+    vec = spark.createDataFrame(
+        [(i * 10, rng.normal(size=4).tolist()) for i in range(20)],
+        "id long, vector array<double>",
+    )
+    q = spark.createDataFrame([(0, [0.0] * 4)], "query_id long, vector array<double>")
+    idx = HNSWIndex(M=4, M0=8, ef_construction=16, num_graphs=1,
+                    id_col="id", vector_col="vector")
+    g = idx.build(vec)
+    assert len(idx.search_bulk(g, q, 3, ef=16).collect()) == 3
+    rows = [r.asDict() for r in g.collect()]
+    node = next(r for r in rows if r["neighbors"] and r["neighbors"][0])
+    node["neighbors"][0][0] = 15  # between the real ids 10 and 20
+    bad = spark.createDataFrame(rows, g.schema)
+    with pytest.raises(Exception, match="neighbor id 15 is not a node"):
+        idx.search_bulk(bad, q, 3, ef=16).collect()
+
+
 def test_graph_stats_shape(vectors):
     idx = HNSWIndex(M=8, M0=16, ef_construction=50, num_graphs=4,
                     id_col="id", vector_col="vector")

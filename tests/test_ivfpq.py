@@ -105,6 +105,36 @@ def test_partial_probe_prunes(idx, encoded, queries):
     assert bad.count() == 0
 
 
+@pytest.mark.parametrize("rerank", [False, True])
+def test_cogroup_fallback_matches_broadcast(monkeypatch, idx, encoded, embeddings, queries, rerank):
+    """A query set over the broadcast byte cap takes the cogroup plan
+    (distributed probe selection); its rows equal the broadcast plan's."""
+    import fabstir_vectordb_spark.operators.ivfpq as ivfpq_mod
+
+    def search():
+        return _rows(
+            idx.search_bulk(
+                encoded, queries, 10, n_probe=3, oversample=4,
+                rerank_vectors=embeddings if rerank else None,
+            )
+        )
+
+    calls = []
+    probe_pairs = idx.ivf.probe_pairs
+    monkeypatch.setattr(
+        idx.ivf, "probe_pairs", lambda *a, **kw: calls.append(1) or probe_pairs(*a, **kw)
+    )
+    broadcast = search()
+    assert not calls
+    # room for 2 of the 6 query vectors
+    dim = idx.ivf.centroids.shape[1]
+    monkeypatch.setattr(ivfpq_mod, "_MAX_BROADCAST_QUERY_BYTES", 2 * dim * 8)
+    fallback = search()
+    assert calls
+    assert len(broadcast) == 6 * 10
+    assert fallback == broadcast
+
+
 def test_write_read_encoded_roundtrip(tmp_path, spark, idx, encoded, embeddings, queries):
     """Persisted IVFADC layout: partitionBy(cluster_id) parquet + model
     sidecars; reload must reproduce codes exactly and the partition-pruned

@@ -119,14 +119,23 @@ def test_schema_validation_on_add(spark):
 
 
 def test_recency_flags(spark):
-    s = VectorDbSession(spark)
-    old_ts = dt.datetime.utcnow() - dt.timedelta(days=30)
-    s.add_vectors([{"id": "old", "vector": [1.0, 0.0], "timestamp": old_ts}])
-    s.add_vectors([{"id": "new", "vector": [0.9, 0.0]}])
-    recent = s.search([1.0, 0.0], k=10, search_historical=False)
-    assert [r["id"] for r in recent] == ["new"]
-    hist = s.search([1.0, 0.0], k=10, search_recent=False)
-    assert [r["id"] for r in hist] == ["old"]
+    for trained in (False, True):
+        s = VectorDbSession(spark)
+        old_ts = dt.datetime.utcnow() - dt.timedelta(days=30)
+        s.add_vectors([{"id": "old", "vector": [1.0, 0.0], "timestamp": old_ts}])
+        s.add_vectors([{"id": "new", "vector": [0.9, 0.0]}])
+        if trained:
+            # the predicate must also hold on the clustered table: train
+            # on enough rows, then drop the fillers so only old/new live
+            fillers = [{"id": f"f{i}", "vector": [-5.0 - i, 3.0]} for i in range(10)]
+            s.add_vectors(fillers)
+            s.train_index(n_clusters=2)
+            s.batch_delete([f["id"] for f in fillers])
+            assert s._index.is_trained
+        recent = s.search([1.0, 0.0], k=10, search_historical=False)
+        assert [r["id"] for r in recent] == ["new"]
+        hist = s.search([1.0, 0.0], k=10, search_recent=False)
+        assert [r["id"] for r in hist] == ["old"]
 
 
 def test_save_load_roundtrip(tmp_path, spark, session):

@@ -137,6 +137,18 @@ def test_batch_add_rejected_row_does_not_pin_dim(spark):
     # session dim is the committed row's
     res2 = s.batch_add_vectors([{"id": "c", "vector": [3.0, 4.0]}])
     assert res2["successful"] == 1
+    # add_vectors rejects the whole batch before touching any state
+    for bad in (
+        [{"id": "a", "vector": [1.0, 2.0, 3.0]}, {"id": "b", "vector": [1.0, 2.0]}],
+        [{"id": "a", "vector": [1.0, 2.0, 3.0]}, {"id": "a", "vector": [1.0, 2.0, 3.0]}],
+        [{"id": "a", "vector": [1.0, 2.0, 3.0], "metadata": {"lang": 7}}],
+    ):
+        s2 = VectorDbSession(spark)
+        s2.set_schema({"fields": {"lang": {"type": "string"}}})
+        with pytest.raises(ValueError):
+            s2.add_vectors(bad)
+        assert s2._dim is None and s2.dataframe() is None
+        assert s2.add_vectors([{"id": "c", "vector": [3.0, 4.0]}]) == 1
 
 
 def test_single_update_still_raises(sess):
