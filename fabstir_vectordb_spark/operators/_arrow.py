@@ -1,0 +1,83 @@
+"""The Arrow boundary of the Python vector kernels.
+
+The ``mapInArrow`` / ``applyInArrow`` kernels of the exact-kNN, IVF, PQ
+and HNSW families read their input and build their output here, so the
+kernel bodies are plain numpy and the conversion rules live in one place:
+a ``list<float|double>`` column is one flat buffer viewed as ``(n, dim)``
+(no per-row objects, no pandas); a bad vector raises instead of becoming
+NaN distances that silently reorder neighbours; output rows are positions
+into the input columns, so ids leave a kernel with the Arrow type they
+came in with.
+"""
+
+from __future__ import annotations
+
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+
+
+def matrix(col: pa.Array | pa.ChunkedArray, name: str, dtype=np.float64) -> np.ndarray:
+    """A list column as an ``(n, dim)`` array of ``dtype``: a writable copy
+    of the flat value buffer.  Raises ``ValueError`` naming ``name`` on a
+    null vector, a null element, or a vector whose length differs from the
+    first one's."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    n = len(col)
+    if col.null_count:
+        raise ValueError(f"column {name!r}: null vector")
+    if n == 0:
+        return np.empty((0, 0), dtype=dtype)
+    lengths = col.value_lengths().to_numpy(zero_copy_only=False)
+    dim = int(lengths[0])
+    if (lengths != dim).any():
+        bad = int(lengths[np.flatnonzero(lengths != dim)[0]])
+        raise ValueError(f"column {name!r}: vector of length {bad} in a batch of dim {dim}")
+    flat = col.flatten()
+    if flat.null_count:
+        raise ValueError(f"column {name!r}: null element inside a vector")
+    return np.array(flat.to_numpy(zero_copy_only=False), dtype=dtype).reshape(n, dim)
+
+
+def sort_keys(col: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    """Ids as a numpy array ``lexsort`` can order: numeric ids as they
+    are, object ids as ``str`` (ASCII order == Spark string order)."""
+    ids = col.to_numpy(zero_copy_only=False)
+    return ids.astype(str) if ids.dtype == object else ids
+
+
+def append(batch: pa.RecordBatch, name: str, values: pa.Array) -> pa.RecordBatch:
+    """``batch`` with one more column; the input columns pass through."""
+    return pa.RecordBatch.from_arrays(
+        batch.columns + [values], schema=batch.schema.append(pa.field(name, values.type))
+    )
+
+
+def topk_schema(qid_type: T.DataType, id_type: T.DataType) -> T.StructType:
+    """The ``(query_id, id, distance)`` schema every top-k kernel emits."""
+    return (
+        T.StructType()
+        .add("query_id", qid_type, False)
+        .add("id", id_type, False)
+        .add("distance", T.DoubleType(), False)
+    )
+
+
+def topk_table(qids, qpos: np.ndarray, ids, vpos: np.ndarray, dist: np.ndarray) -> pa.Table:
+    """``(query_id, id, distance)`` rows: query ``qids[qpos[i]]``, id
+    ``ids[vpos[i]]`` at ``dist[i]``, both taken from their Arrow columns."""
+    return pa.table(
+        {
+            "query_id": qids.take(qpos),
+            "id": ids.take(vpos),
+            "distance": pa.array(dist, pa.float64()),
+        }
+    )
+
+
+def collect_matrix(df: DataFrame, col: str) -> np.ndarray:
+    """Collect one vector column to the driver through Arrow (no Row
+    objects) as an ``(n, dim)`` float64 array, in ``df``'s row order."""
+    return matrix(df.select(col).toArrow().column(0), col)

@@ -17,21 +17,18 @@ from __future__ import annotations
 import numpy as np
 
 
-def _pairwise_sq(X: np.ndarray, C: np.ndarray) -> np.ndarray:
-    """(n, k) squared L2 distances, GEMM-formed; clamped at 0 (the
-    expansion can cancel to ~-1e-16 for coincident points)."""
-    d = (
-        np.einsum("ij,ij->i", X, X)[:, None]
-        - 2.0 * (X @ C.T)
-        + np.einsum("ij,ij->i", C, C)[None, :]
-    )
+def _pairwise_sq(X: np.ndarray, C: np.ndarray, x_sq: np.ndarray) -> np.ndarray:
+    """(n, k) squared L2 distances, GEMM-formed from ``x_sq``, the squared
+    norms of the rows of X; clamped at 0 (the expansion can cancel to
+    ~-1e-16 for coincident points)."""
+    d = x_sq[:, None] - 2.0 * (X @ C.T) + np.einsum("ij,ij->i", C, C)[None, :]
     return np.maximum(d, 0.0)
 
 
 def training_error(X: np.ndarray, C: np.ndarray) -> float:
     """Mean squared distance to the assigned centroid — the reference's
     k-means training error metric (ivf/core.rs:419-429)."""
-    return float(_pairwise_sq(X, C).min(axis=1).mean())
+    return float(_pairwise_sq(X, C, np.einsum("ij,ij->i", X, X)).min(axis=1).mean())
 
 
 def kmeans_fit(
@@ -50,23 +47,28 @@ def kmeans_fit(
     n = len(X)
     if n < k:
         raise ValueError(f"need >= {k} training points, got {n}")
+    x_sq = np.einsum("ij,ij->i", X, X)  # constant across seeding and every Lloyd step
     # k-means++ seeding
     idx = [int(rng.randint(n))]
-    d2 = _pairwise_sq(X, X[idx[-1] : idx[-1] + 1])[:, 0]
+    d2 = _pairwise_sq(X, X[idx[-1] : idx[-1] + 1], x_sq)[:, 0]
     for _ in range(1, k):
         total = d2.sum()
         if total <= 0:
             idx.append(int(rng.randint(n)))
         else:
             idx.append(int(rng.choice(n, p=d2 / total)))
-        d2 = np.minimum(d2, _pairwise_sq(X, X[idx[-1] : idx[-1] + 1])[:, 0])
+        d2 = np.minimum(d2, _pairwise_sq(X, X[idx[-1] : idx[-1] + 1], x_sq)[:, 0])
     C = X[idx].copy()
     # Lloyd's
     for _ in range(iters):
-        assign = _pairwise_sq(X, C).argmin(axis=1)
+        assign = _pairwise_sq(X, C, x_sq).argmin(axis=1)
         newC = C.copy()
-        for j in range(k):
-            members = X[assign == j]
+        # one stable sort lays each cluster's members out contiguously in
+        # row order — the rows, and the order, of the mask X[assign == j],
+        # so the means are bit-identical to a per-cluster mask scan
+        order = np.argsort(assign, kind="stable")
+        bounds = np.searchsorted(assign[order], np.arange(1, k))
+        for j, members in enumerate(np.split(X[order], bounds)):
             if len(members):
                 newC[j] = members.mean(axis=0)
         shift = float(np.abs(newC - C).max())

@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fabstir_vectordb_spark.operators import _arrow
 from fabstir_vectordb_spark.operators.topk import topk_per_query
 
 _SPLITMIX_C0 = np.uint64(0x9E3779B97F4A7C15)
@@ -390,13 +391,10 @@ class HNSWIndex:
             from fabstir_vectordb_spark.operators._kmeans import kmeans_fit
             from fabstir_vectordb_spark.operators.ivf import IVFIndex
 
-            sample = (
-                prep.select(F.col(self.vector_col).alias("__arr"))
-                .orderBy(F.col(self.id_col))
-                .limit(10_000)
-                .collect()
+            X = _arrow.collect_matrix(
+                prep.select(self.vector_col).orderBy(F.col(self.id_col)).limit(10_000),
+                self.vector_col,
             )
-            X = np.asarray([np.asarray(r[0], dtype=np.float64) for r in sample])
             G = min(G, len(X))
             self.num_graphs = G
             cents = kmeans_fit(
@@ -693,12 +691,9 @@ class HNSWIndex:
         candidates).  Default None = full fan-out, the exactness-hook
         configuration."""
         import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
 
         spark = graph.sparkSession
         ef = int(ef) if ef else max(64, k)
-        qid_t = queries.schema[query_id_col].dataType
-        id_t = graph.schema["id"].dataType
         k_i = int(k)
 
         q0 = self._prep(queries, query_vector_col).select(
@@ -745,69 +740,40 @@ class HNSWIndex:
                     (F.col("graph_id") + F.lit(0)).cast("int").alias("graph_id")
                 ).distinct()
             qrep = q0.crossJoin(gids)
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", qid_t, False),
-                T.StructField("id", id_t, False),
-                T.StructField("distance", T.DoubleType(), False),
-            ]
+        out_schema = _arrow.topk_schema(
+            queries.schema[query_id_col].dataType, graph.schema["id"].dataType
         )
-
         cosine = self.metric == "cosine"
-        arrow_schema = to_arrow_schema(out_schema)
 
         def graph_topk(ga: "pa.Table", qa: "pa.Table") -> "pa.Table":
-            # Arrow-native kernel (r12 optimization, guide §4.2/§4.3):
-            # the graph table is the heavy side of this cogroup, and the
-            # former applyInPandas paid (a) a full Arrow->pandas
-            # conversion of every nested column and (b) a per-row Python
-            # parse (pos dict + per-layer list comprehensions, ~35 ms per
-            # graph).  Reading the Arrow buffers directly makes the parse
-            # vectorized: vectors are one flat float64 buffer reshaped to
-            # (n, dim), neighbor lists are CSR (offsets + one flat id
-            # buffer) sliced into per-layer position views, and the
-            # id->position map is ONE searchsorted over the flat buffer
-            # (~9 ms per graph measured at the 100k datum).  Same rows,
-            # same distances, same tie-breaks as the pandas form.
+            # The graph table is the heavy side of this cogroup, so its
+            # parse is vectorized over the Arrow buffers: vectors through
+            # the operators/_arrow.py flat-buffer view, neighbor lists as
+            # CSR (offsets + one flat id buffer) sliced into per-layer
+            # position views, and the id->position map as ONE
+            # searchsorted of the flat buffer into the sorted ids.
             if ga.num_rows == 0 or qa.num_rows == 0:
-                return arrow_schema.empty_table()
+                return pa.table({})  # a cogroup side may arrive with no columns
             ga = ga.combine_chunks()
-            ids_raw = ga.column("id").to_numpy(zero_copy_only=False)
-            # stable argsort == the former sort_values("id", mergesort)
+            ids_raw = _arrow.sort_keys(ga.column("id"))
             order = np.argsort(ids_raw, kind="stable")
             ids = ids_raw[order]
-            numeric_ids = ids.dtype != object
-            if not numeric_ids:
-                ids = ids.astype(str)
             n = len(ids)
-            vec = ga.column("vector").combine_chunks()
-            dim = vec.value_lengths()[0].as_py()
-            V = (
-                vec.flatten().to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False).reshape(n, dim)[order]
-            )
+            V = _arrow.matrix(ga.column("vector"), "vector")[order]
             levels = ga.column("level").to_numpy(zero_copy_only=False)[order]
             deleted = ga.column("deleted").to_numpy(zero_copy_only=False)[order]
             outer = ga.column("neighbors").combine_chunks()
             outer_l = outer.value_lengths().to_numpy(zero_copy_only=False)
             inner = outer.flatten()
             inner_l = inner.value_lengths().to_numpy(zero_copy_only=False)
-            flat = inner.flatten().to_numpy(zero_copy_only=False)
-            if numeric_ids:
-                # ids are unique; a neighbor id outside them is corruption
-                fpos = np.searchsorted(ids, flat)
-                bad = (fpos >= n) | (ids[np.minimum(fpos, n - 1)] != flat)
-                if bad.any():
-                    raise ValueError(
-                        f"HNSW neighbor id {flat[bad][0].item()!r} is not a node of its graph"
-                    )
-            else:
-                pos = {v: i for i, v in enumerate(ids)}
-                fpos = np.fromiter(
-                    (pos[x] for x in flat.astype(str)),
-                    dtype=np.int64, count=len(flat),
+            flat = _arrow.sort_keys(inner.flatten())
+            # ids are unique; a neighbor id outside them is corruption
+            fpos = np.searchsorted(ids, flat)
+            bad = (fpos >= n) | (ids[np.minimum(fpos, n - 1)] != flat)
+            if bad.any():
+                raise ValueError(
+                    f"HNSW neighbor id {flat[bad][0].item()!r} is not a node of its graph"
                 )
-            fpos = np.ascontiguousarray(fpos, dtype=np.int64)
             inner_off = np.concatenate(([0], np.cumsum(inner_l)))
             outer_off = np.concatenate(([0], np.cumsum(outer_l)))
             layer_arrays = [
@@ -828,16 +794,9 @@ class HNSWIndex:
             max_lvl = int(levels[entry])
             visited = np.zeros(n, dtype=bool)  # shared scratch, reset per beam
 
-            qids_col = qa.column("query_id").to_pylist()
-            qvec = qa.column("__qv").combine_chunks()
-            qdim = qvec.value_lengths()[0].as_py()
-            Qm = (
-                qvec.flatten().to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False).reshape(len(qids_col), qdim)
-            )
-            out_q, out_id, out_d = [], [], []
-            for qi, qid in enumerate(qids_col):
-                q = Qm[qi]
+            Qm = _arrow.matrix(qa.column("__qv"), "__qv")
+            out_q, out_v, out_d = [], [], []
+            for qi, q in enumerate(Qm):
                 q_zero = cosine and not q.any()
                 dcache: dict[int, float] = {}
                 eps = [entry]
@@ -857,22 +816,15 @@ class HNSWIndex:
                         # so beam/top-k order is unchanged); 0-norm guard
                         # mirrors the exact kernel exactly
                         d = 1.0 if (q_zero or zero_node[p]) else d * d / 2.0
-                    out_q.append(qid)
-                    out_id.append(ids[p])
+                    out_q.append(qi)
+                    out_v.append(order[p])
                     out_d.append(d)
                     taken += 1
                     if taken >= k_i:
                         break
-            return pa.table(
-                [
-                    pa.array(out_q, arrow_schema.field("query_id").type),
-                    pa.array(
-                        [x.item() if hasattr(x, "item") else x for x in out_id],
-                        arrow_schema.field("id").type,
-                    ),
-                    pa.array(out_d, pa.float64()),
-                ],
-                schema=arrow_schema,
+            return _arrow.topk_table(
+                qa.column("query_id"), np.asarray(out_q, dtype=np.int64),
+                ga.column("id"), np.asarray(out_v, dtype=np.int64), out_d,
             )
 
         partials = (

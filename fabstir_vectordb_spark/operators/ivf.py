@@ -39,10 +39,13 @@ import os
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from fabstir_vectordb_spark.functions import distance as D
+from fabstir_vectordb_spark.operators import _arrow
 from fabstir_vectordb_spark.operators.knn import brute_force_knn
 from fabstir_vectordb_spark.operators.topk import topk_per_query
 
@@ -51,6 +54,20 @@ DEFAULT_N_PROBE = 16
 DEFAULT_TRAIN_SIZE = 10_000
 DEFAULT_MAX_ITER = 25
 MIN_TRAINING_SIZE = 10  # below this: brute-force mode (hybrid/core.rs:262-269)
+
+
+def _nearest(V: np.ndarray, C: np.ndarray, c_sq: np.ndarray) -> np.ndarray:
+    """Nearest-centroid ids (int32) of the rows of ``V``:
+    argmin_c |v-c|^2 = argmin_c (|c|^2 - 2 v.c); |v|^2 is constant per row."""
+    return (c_sq[None, :] - 2.0 * (V @ C.T)).argmin(axis=1).astype(np.int32)
+
+
+def _probe_order(C: np.ndarray, q: np.ndarray, n_probe: int) -> np.ndarray:
+    """The ``n_probe`` centroids nearest ``q``, ordered by
+    (round(distance, 6), centroid id) — the one probe ranking of every
+    IVF search path."""
+    d = np.linalg.norm(C - q, axis=1)
+    return np.lexsort((np.arange(len(d)), np.round(d, 6)))[:n_probe]
 
 
 @dataclass
@@ -83,24 +100,26 @@ class IVFIndex:
         rounds of job-scheduling overhead for data this small.
         engine="mllib": distributed KMeans for when train_size is raised
         beyond driver scale."""
-        n = vectors.count()
+        X = (
+            _arrow.collect_matrix(
+                vectors.select(vector_col).orderBy(vectors[id_col]).limit(train_size),
+                vector_col,
+            )
+            if engine == "sample"
+            else None
+        )
+        # a sample short of train_size holds every row: its size is the count
+        n = len(X) if X is not None and len(X) < train_size else vectors.count()
         if n < MIN_TRAINING_SIZE:
             return cls(centroids=None, id_col=id_col, vector_col=vector_col)
         n_clusters = min(n_clusters, n)  # k-means needs >= k points (ivf/core.rs:252)
 
-        if engine == "sample":
+        if X is not None:
             from fabstir_vectordb_spark.operators._kmeans import (
                 kmeans_fit,
                 training_error,
             )
 
-            sample = (
-                vectors.select(F.col(vector_col).alias("__arr"))
-                .orderBy(vectors[id_col])
-                .limit(train_size)
-                .collect()
-            )
-            X = np.asarray([np.asarray(r[0], dtype=np.float64) for r in sample])
             cents = kmeans_fit(
                 X, n_clusters, iters=max_iter, rng=np.random.RandomState(seed)
             )
@@ -137,37 +156,28 @@ class IVFIndex:
 
         Arrow-batched numpy argmin over the broadcast centroid matrix —
         one (batch x n_clusters) GEMM per Arrow batch, no per-row Python.
+        The input columns pass through the kernel untouched.
         (A pure column-expression argmin over 256 centroids x D dims blows
         past codegen method limits, so the kernel is the right physical
         choice here.)
         """
-        import pandas as pd
-        from pyspark.sql import types as T
-
         if self.centroids is None:
             return vectors.withColumn(out_col, F.lit(0))
 
-        spark = vectors.sparkSession
-        bc = spark.sparkContext.broadcast(self.centroids)
+        bc = vectors.sparkSession.sparkContext.broadcast(self.centroids)
         vector_col = self.vector_col
-        out_schema = T.StructType(
-            list(vectors.schema) + [T.StructField(out_col, T.IntegerType(), False)]
-        )
+        out_schema = T.StructType(list(vectors.schema)).add(out_col, T.IntegerType(), False)
 
         def assign_batches(batches):
             C = bc.value  # (n_clusters, dim)
             c_sq = (C * C).sum(axis=1)
-            for pdf in batches:
-                if pdf.empty:
+            for b in batches:
+                if b.num_rows == 0:
                     continue
-                V = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vector_col]]
-                )
-                # argmin_c |v-c|^2 = argmin_c (|c|^2 - 2 v.c); |v|^2 constant per row
-                scores = c_sq[None, :] - 2.0 * (V @ C.T)
-                yield pdf.assign(**{out_col: scores.argmin(axis=1).astype("int32")})
+                V = _arrow.matrix(b.column(vector_col), vector_col)
+                yield _arrow.append(b, out_col, pa.array(_nearest(V, C, c_sq)))
 
-        return vectors.mapInPandas(assign_batches, out_schema)
+        return vectors.mapInArrow(assign_batches, out_schema)
 
     # --------------------------------------------------------------- search
 
@@ -175,9 +185,7 @@ class IVFIndex:
         out = []
         for r in rows:
             q = np.asarray(r[1], dtype=np.float64)
-            d = np.linalg.norm(self.centroids - q, axis=1)
-            order = np.lexsort((np.arange(len(d)), np.round(d, 6)))[:n_probe]
-            for cid in order:
+            for cid in _probe_order(self.centroids, q, n_probe):
                 out.append((r[0], int(cid)))
         return out
 
@@ -276,10 +284,11 @@ class IVFIndex:
         any partitioning of the same probed row set.
 
         Plan: centroids (tiny, driver-held by construction) broadcast
-        into a map-only Arrow kernel that ranks them per query batch with
-        one GEMM and emits the n_probe nearest as (query, cluster) rows —
-        distributed probe selection with the exact ranking order of the
-        driver path (``_probes_from_rows``).  The probe table (Q x
+        into a map-only Arrow kernel (``probe_pairs``) that ranks them
+        for each query of a batch and emits the n_probe nearest as
+        (query, cluster) rows — distributed probe selection with the
+        exact ranking arithmetic of the driver path
+        (``_probes_from_rows``).  The probe table (Q x
         n_probe rows) then COGROUPS with the clustered table on
         cluster_id, and each cluster runs one vectorized GEMM kernel
         emitting <= k rows per (query, cluster) — the same block-partial
@@ -293,9 +302,6 @@ class IVFIndex:
         At n_probe = n_clusters this is exactly brute force — the same
         oracle hook as ``search``.
         """
-        import pandas as pd
-        from pyspark.sql import types as T
-
         from fabstir_vectordb_spark.operators.knn import cogroup_block_knn, knn_bulk
 
         if self.centroids is None:
@@ -346,15 +352,11 @@ class IVFIndex:
         centroids with the exact ranking order of the driver path
         (``_probes_from_rows``).  Shared by ``search_bulk`` and the
         IVFPQ composition (operators/ivfpq.py)."""
-        import pandas as pd
-        from pyspark.sql import types as T
-
         if self.centroids is None:
             raise ValueError(
                 "index is untrained (brute-force mode): no centroids to probe"
             )
-        spark = queries.sparkSession
-        bc = spark.sparkContext.broadcast(self.centroids)
+        bc = queries.sparkSession.sparkContext.broadcast(self.centroids)
         q = queries.select(
             F.col(query_id_col).alias("query_id"),
             F.col(query_vector_col).alias("__qv"),
@@ -370,22 +372,19 @@ class IVFIndex:
 
         def probe_kernel(batches):
             C = np.asarray(bc.value, dtype=np.float64)
-            for pdf in batches:
-                if pdf.empty:
+            for b in batches:
+                if b.num_rows == 0:
                     continue
-                out_qid, out_blk, out_qv = [], [], []
-                for qid, qv in zip(pdf["query_id"], pdf["__qv"]):
-                    # same arithmetic + tie order as _probes_from_rows
-                    d = np.linalg.norm(C - np.asarray(qv, dtype=np.float64), axis=1)
-                    order = np.lexsort((np.arange(len(d)), np.round(d, 6)))[:np_]
-                    out_qid.extend([qid] * len(order))
-                    out_blk.extend(int(c) for c in order)
-                    out_qv.extend([qv] * len(order))
-                yield pd.DataFrame(
-                    {"query_id": out_qid, "__blk": out_blk, "__qv": out_qv}
-                )
+                Q = _arrow.matrix(b.column("__qv"), query_vector_col)
+                blk = np.concatenate([_probe_order(C, qv, np_) for qv in Q])
+                rows = np.repeat(np.arange(len(Q)), np_)
+                yield pa.record_batch({
+                    "query_id": b.column("query_id").take(rows),
+                    "__blk": pa.array(blk.astype(np.int32)),
+                    "__qv": b.column("__qv").take(rows),
+                })
 
-        return q.mapInPandas(probe_kernel, probe_schema)
+        return q.mapInArrow(probe_kernel, probe_schema)
 
     # ------------------------------------------------------------- evaluate
 

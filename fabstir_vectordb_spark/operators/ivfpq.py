@@ -31,17 +31,24 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
-from fabstir_vectordb_spark.operators.ivf import IVFIndex
-from fabstir_vectordb_spark.operators.pq import ProductQuantizer, _adc_tables
+from fabstir_vectordb_spark.operators import _arrow
+from fabstir_vectordb_spark.operators.ivf import IVFIndex, _nearest
+from fabstir_vectordb_spark.operators.pq import ProductQuantizer, _adc_tables, _pq_codes
 from fabstir_vectordb_spark.operators.topk import ROUND_DECIMALS, topk_per_query
 
 # search_bulk collects the query set and broadcasts it while the query
 # vectors fit this many float64 bytes: 65,536 queries at dim 384
 _MAX_BROADCAST_QUERY_BYTES = 65_536 * 384 * 8
+# the broadcast search builds the raw-mode (nq, M, K) float64 LUT set once
+# on the driver and ships it while it fits this many bytes; above it each
+# scan task builds the same tables lazily
+_MAX_PRECOMPUTED_LUT_BYTES = 64 << 20
 
 
 class IVFPQIndex:
@@ -58,29 +65,6 @@ class IVFPQIndex:
         # set by fit(recall_target=...): the PQPlan whose n_probe /
         # oversample become search_bulk's defaults for this index
         self.tuned = None
-
-    def _with_residual(self, assigned: DataFrame, out_col: str) -> DataFrame:
-        """assigned (+cluster_id) -> + residual column, JVM-side: a
-        broadcast (cluster_id, centroid) join + zip_with subtraction —
-        no Python, no shuffle (broadcast hash join)."""
-        spark = assigned.sparkSession
-        cents = spark.createDataFrame(
-            [(int(c), self.ivf.centroids[c].tolist())
-             for c in range(len(self.ivf.centroids))],
-            "cluster_id int, __cent array<double>",
-        )
-        return (
-            assigned.join(F.broadcast(cents), "cluster_id")
-            .withColumn(
-                out_col,
-                F.zip_with(
-                    F.col(self.ivf.vector_col).cast("array<double>"),
-                    "__cent",
-                    lambda x, y: x - y,
-                ),
-            )
-            .drop("__cent")
-        )
 
     @classmethod
     def fit(
@@ -130,20 +114,20 @@ class IVFPQIndex:
             vectors, n_clusters=n_clusters, seed=seed,
             id_col=id_col, vector_col=vector_col,
         )
-        if residual and ivf.centroids is not None:
-            idx = cls(ivf, None, residual=True)
-            res = idx._with_residual(ivf.assign(vectors), "__res")
-            idx.pq = ProductQuantizer.fit(
-                res, n_subspaces=n_subspaces, n_centroids=n_centroids,
-                seed=seed, vector_col="__res", opq=opq,
+        residual = residual and ivf.centroids is not None
+        if residual:
+            # the codebooks train on x - centroid(x) over the first 10,000
+            # rows, ProductQuantizer.fit's default sample
+            t = ivf.assign(vectors).select(vector_col, "cluster_id").limit(10_000).toArrow()
+            X = _arrow.matrix(t.column(0), vector_col)
+            X -= ivf.centroids[t.column(1).to_numpy()]
+            pq = ProductQuantizer._fit_sample(X, n_subspaces, n_centroids, seed=seed, opq=opq)
+        else:
+            pq = ProductQuantizer.fit(
+                vectors, n_subspaces=n_subspaces, n_centroids=n_centroids,
+                seed=seed, vector_col=vector_col, opq=opq,
             )
-            idx.tuned = tuned
-            return idx
-        pq = ProductQuantizer.fit(
-            vectors, n_subspaces=n_subspaces, n_centroids=n_centroids,
-            seed=seed, vector_col=vector_col, opq=opq,
-        )
-        idx = cls(ivf, pq, residual=False)
+        idx = cls(ivf, pq, residual=residual)
         idx.tuned = tuned
         return idx
 
@@ -154,15 +138,39 @@ class IVFPQIndex:
 
         Untrained-IVF mode (below the training threshold, mirroring
         IVFIndex's small-data bypass): everything lands in cluster 0 and
-        search degrades to plain ADC over the whole table."""
+        search degrades to plain ADC over the whole table.
+
+        Trained mode is one map-only Arrow pass: nearest-centroid assign
+        (the arithmetic of IVFIndex.assign), the residual x - centroid
+        when ``residual``, and the PQ codes of that vector."""
         if self.ivf.centroids is None:
-            assigned = vectors.withColumn("cluster_id", F.lit(0).cast("int"))
-        else:
-            assigned = self.ivf.assign(vectors)
-        if self.residual and self.ivf.centroids is not None:
-            res = self._with_residual(assigned, "__res")
-            return self.pq.encode(res, vector_col="__res").drop("__res")
-        return self.pq.encode(assigned, vector_col=self.ivf.vector_col)
+            return self.pq.encode(
+                vectors.withColumn("cluster_id", F.lit(0).cast("int")),
+                vector_col=self.ivf.vector_col,
+            )
+        bc = vectors.sparkSession.sparkContext.broadcast(
+            (self.ivf.centroids, self.pq.codebooks, self.pq.rotation)
+        )
+        vector_col, residual = self.ivf.vector_col, self.residual
+        out_schema = (
+            T.StructType(list(vectors.schema))
+            .add("cluster_id", T.IntegerType(), False)
+            .add("pq_codes", T.ArrayType(T.IntegerType()), True)
+        )
+
+        def kernel(batches):
+            C, books, rot = bc.value
+            c_sq = (C * C).sum(axis=1)
+            for b in batches:
+                if b.num_rows == 0:
+                    continue
+                V = _arrow.matrix(b.column(vector_col), vector_col)
+                cid = _nearest(V, C, c_sq)
+                codes = _pq_codes(V - C[cid] if residual else V, books, rot)
+                b = _arrow.append(b, "cluster_id", pa.array(cid))
+                yield _arrow.append(b, "pq_codes", codes)
+
+        return vectors.mapInArrow(kernel, out_schema)
 
     def search_bulk(
         self,
@@ -261,12 +269,8 @@ class IVFPQIndex:
         M, sub = self.pq.n_subspaces, self.pq.sub_dim
         fetch = k * (oversample if rerank_vectors is not None else 1)
 
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", queries.schema[query_id_col].dataType, False),
-                T.StructField("id", encoded.schema[id_col].dataType, False),
-                T.StructField("distance", T.DoubleType(), False),
-            ]
+        out_schema = _arrow.topk_schema(
+            queries.schema[query_id_col].dataType, encoded.schema[id_col].dataType
         )
 
         def cluster_adc(key, vpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
@@ -372,9 +376,6 @@ class IVFPQIndex:
         ``topk_per_query`` then selects exactly the same rows, and
         distances are computed by the same LUT arithmetic — bit-identical
         per (query, id)."""
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         id_col = self.ivf.id_col
         np_eff = min(n_probe, self.ivf.n_clusters)
         pairs = self.ivf._probes_from_rows(qrows, np_eff)
@@ -407,30 +408,24 @@ class IVFPQIndex:
         # tables ship as None and each task builds them once lazily.
         # Residual LUTs are per-(cluster, query) and stay in-task.
         tables_pre = None
-        if not residual and len(qrows) * M * K * 8 <= 64 << 20:
+        if not residual and len(qrows) * M * K * 8 <= _MAX_PRECOMPUTED_LUT_BYTES:
             Qr = (
                 np.stack([q @ self.pq.rotation for q in Q])
                 if self.pq.rotation is not None else Q
             )
             tables_pre = _adc_tables(self.pq.codebooks, Qr, M, sub)
+        qid_arrow = pa.array(qids, to_arrow_type(queries.schema[query_id_col].dataType))
         bc = encoded.sparkSession.sparkContext.broadcast(
             (
-                qids, Q, cl2q_np, self.pq.codebooks, self.pq.rotation,
+                qid_arrow, Q, cl2q_np, self.pq.codebooks, self.pq.rotation,
                 self.ivf.centroids if self.residual else None,
                 tables_pre,
             )
         )
         fetch = k * (oversample if rerank_vectors is not None else 1)
-        out_schema = T.StructType(
-            [
-                T.StructField(
-                    "query_id", queries.schema[query_id_col].dataType, False
-                ),
-                T.StructField("id", encoded.schema[id_col].dataType, False),
-                T.StructField("distance", T.DoubleType(), False),
-            ]
+        out_schema = _arrow.topk_schema(
+            queries.schema[query_id_col].dataType, encoded.schema[id_col].dataType
         )
-        arrow_schema = to_arrow_schema(out_schema)
 
         def adc_kernel(batches):
             qids_l, Q_l, cl2q_l, books, rot, cents, tables_bc = bc.value
@@ -480,23 +475,15 @@ class IVFPQIndex:
             for b in batches:
                 if b.num_rows == 0:
                     continue
-                tb = pa.table(b).combine_chunks()
-                blk = tb.column("__blk").to_numpy(zero_copy_only=False)
-                ids = tb.column("id").to_numpy(zero_copy_only=False)
-                if ids.dtype == object:
-                    ids = ids.astype(str)
-                codes_col = tb.column("__codes").combine_chunks()
-                codes = (
-                    codes_col.flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .reshape(len(ids), -1)
-                )
+                blk = b.column("__blk").to_numpy(zero_copy_only=False)
+                ids = _arrow.sort_keys(b.column("id"))
+                codes = _arrow.matrix(b.column("__codes"), "__codes", np.int64)
                 nb = len(ids)
                 if gbuf is None or len(gbuf) < nb:
                     gbuf = np.empty((nb, M))
                     dbuf = np.empty(nb)
                     rbuf = np.empty(nb)
-                out_q, out_id, out_d = [], [], []
+                out_q, out_v, out_d = [], [], []
                 # group the batch's rows by cluster (a batch may span
                 # clusters); per-group top-fetch keeps the partials tiny
                 order = np.argsort(blk, kind="stable")
@@ -536,17 +523,14 @@ class IVFPQIndex:
                             ][:fetch]
                         else:
                             cand = np.lexsort((c_ids, dr))[:fetch]
-                        out_q.extend([qids_l[qi]] * len(cand))
-                        out_id.extend(c_ids[cand].tolist())
-                        out_d.extend(d[cand].tolist())
-                yield pa.record_batch(
-                    [
-                        pa.array(out_q, arrow_schema.field("query_id").type),
-                        pa.array(out_id, arrow_schema.field("id").type),
-                        pa.array(out_d, pa.float64()),
-                    ],
-                    schema=arrow_schema,
-                )
+                        out_q.append(np.full(len(cand), qi, dtype=np.int64))
+                        out_v.append(rows[cand])
+                        out_d.append(d[cand])
+                if out_q:
+                    yield from _arrow.topk_table(
+                        qids_l, np.concatenate(out_q), b.column("id"),
+                        np.concatenate(out_v), np.concatenate(out_d),
+                    ).to_batches()
 
         partials = v.mapInArrow(adc_kernel, out_schema)
         cand = topk_per_query(partials, fetch)

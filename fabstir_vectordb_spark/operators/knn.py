@@ -14,7 +14,7 @@ whole-stage-codegen column expression, windowed top-k.  Simple, fully
 declarative; the cross-join output is Q*N rows, so use it when Q is tiny
 or a metadata pre-filter makes N small.
 
-``impl="kernel"`` — Arrow-batched numpy kernel via ``mapInPandas``: each
+``impl="kernel"`` — Arrow-batched numpy kernel via ``mapInArrow``: each
 input partition computes distances for all queries with BLAS and emits
 only its per-partition top-k per query (a map-side partial reduction —
 no Q*N shuffle).  A final window over Q * num_partitions * k rows picks
@@ -28,12 +28,14 @@ for why that makes results deterministic across engines.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from fabstir_vectordb_spark.functions import distance as D
+from fabstir_vectordb_spark.operators import _arrow
 from fabstir_vectordb_spark.operators.topk import ROUND_DECIMALS, topk_per_query
 
 _METRICS = ("l2", "cosine", "dot")
@@ -72,10 +74,9 @@ def _batch_topk_rows(
     metric: str,
     V: np.ndarray,
     ids: np.ndarray,
-    qids,
     Q: np.ndarray,
     k: int,
-):
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """All-queries-at-once top-k over one vector block.
 
     One GEMM (``Q @ V.T``) SCREENS candidates per query; the final
@@ -91,14 +92,14 @@ def _batch_topk_rows(
     (~dim*eps*|v||q|, covered by the 1e-9 absolute + relative pads), so
     no true top-k member can be screened out.
 
-    Yields (query_id, id, distance) triples appended to lists.
+    Returns (query position, vector position, distance) arrays, one
+    entry per output row; ``ids`` (sort keys) only break distance ties.
     """
     nq, n = len(Q), len(V)
-    out_q: list = []
-    out_id: list = []
-    out_d: list = []
+    empty = np.empty(0, dtype=np.int64)
     if n == 0 or nq == 0:
-        return out_q, out_id, out_d
+        return empty, empty, np.empty(0)
+    out_q, out_v, out_d = [empty], [empty], [np.empty(0)]
 
     if metric == "l2":
         vn2 = np.einsum("ij,ij->i", V, V)
@@ -159,10 +160,10 @@ def _batch_topk_rows(
                 keep = keep[np.lexsort((cids[keep], dr[keep]))][:k]
             else:
                 keep = np.lexsort((cids, dr))[:k]
-            out_q.extend([qids[qs + j]] * len(keep))
-            out_id.extend(cids[keep].tolist())
-            out_d.extend(d[keep].tolist())
-    return out_q, out_id, out_d
+            out_q.append(np.full(len(keep), qs + j, dtype=np.int64))
+            out_v.append(cand[keep])
+            out_d.append(d[keep])
+    return np.concatenate(out_q), np.concatenate(out_v), np.concatenate(out_d)
 
 
 def knn_join(
@@ -222,35 +223,23 @@ def knn_kernel(
     )
     if not qrows:
         raise ValueError("empty query set")
-    qids = [r[0] for r in qrows]
+    qid_type = queries.schema[query_id_col].dataType
+    qids = pa.array([r[0] for r in qrows], to_arrow_type(qid_type))
     Q = np.asarray([r[1] for r in qrows], dtype=np.float64)
     bc = spark.sparkContext.broadcast((qids, Q))
-
-    qid_type = queries.schema[query_id_col].dataType
-    id_type = vectors.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", qid_type, False),
-            T.StructField("id", id_type, False),
-            T.StructField("distance", T.DoubleType(), False),
-        ]
-    )
+    out_schema = _arrow.topk_schema(qid_type, vectors.schema[id_col].dataType)
 
     def partial_topk(batches):
         qids_l, Q_l = bc.value
-        for pdf in batches:
-            if pdf.empty:
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vector_col]])
-            ids = pdf[id_col].to_numpy()
-            if ids.dtype == object:
-                ids = ids.astype(str)  # lexsort-able; ASCII order == Spark string order
-            out_q, out_id, out_d = _batch_topk_rows(metric, V, ids, qids_l, Q_l, k)
-            yield pd.DataFrame(
-                {"query_id": out_q, "id": out_id, "distance": out_d}
-            )
+            V = _arrow.matrix(b.column(vector_col), vector_col)
+            ids = b.column(id_col)
+            qpos, vpos, d = _batch_topk_rows(metric, V, _arrow.sort_keys(ids), Q_l, k)
+            yield from _arrow.topk_table(qids_l, qpos, ids, vpos, d).to_batches()
 
-    partials = vectors.select(id_col, vector_col).mapInPandas(partial_topk, out_schema)
+    partials = vectors.select(id_col, vector_col).mapInArrow(partial_topk, out_schema)
     return topk_per_query(partials, k)
 
 
@@ -274,7 +263,7 @@ def knn_bulk(
     variants lack): vectors are hashed into `vector_blocks` blocks and
     shuffled ONCE; the query table is replicated per block (Q x VB rows
     — queries are usually the smaller side, and VB is a knob).  A
-    cogrouped applyInPandas computes each (vector-block x all-queries)
+    cogrouped applyInArrow computes each (vector-block x all-queries)
     GEMM and emits only block-local top-k, so the final shuffle is
     Q * VB * k partial rows, never Q * N.  Size VB so one block's
     vectors fit a task's memory (N/VB * dim * 8B).
@@ -336,30 +325,20 @@ def cogroup_block_knn(
     vectorized distance kernel and emits <= k rows per (query, block).
     The caller defines what a block is — a hash bucket (knn_bulk) or an
     IVF cluster (IVFIndex.search_bulk) — and applies the global top-k."""
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", qid_type, False),
-            T.StructField("id", id_type, False),
-            T.StructField("distance", T.DoubleType(), False),
-        ]
-    )
 
-    def block_topk(vpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-        if vpdf.empty or qpdf.empty:
-            return pd.DataFrame({"query_id": [], "id": [], "distance": []})
-        V = np.asarray([np.asarray(x, dtype=np.float64) for x in vpdf["__v"]])
-        ids = vpdf["id"].to_numpy()
-        if ids.dtype == object:
-            ids = ids.astype(str)
-        qids = qpdf["query_id"].to_numpy()
-        Q = np.asarray([np.asarray(x, dtype=np.float64) for x in qpdf["__qv"]])
-        out_q, out_id, out_d = _batch_topk_rows(metric, V, ids, qids, Q, k)
-        return pd.DataFrame({"query_id": out_q, "id": out_id, "distance": out_d})
+    def block_topk(vt: pa.Table, qt: pa.Table) -> pa.Table:
+        if vt.num_rows == 0 or qt.num_rows == 0:
+            return pa.table({})  # a cogroup side may arrive with no columns
+        V = _arrow.matrix(vt.column("__v"), "__v")
+        Q = _arrow.matrix(qt.column("__qv"), "__qv")
+        ids = vt.column("id")
+        qpos, vpos, d = _batch_topk_rows(metric, V, _arrow.sort_keys(ids), Q, k)
+        return _arrow.topk_table(qt.column("query_id"), qpos, ids, vpos, d)
 
     return (
         v.groupBy("__blk")
         .cogroup(qrep.groupBy("__blk"))
-        .applyInPandas(block_topk, out_schema)
+        .applyInArrow(block_topk, _arrow.topk_schema(qid_type, id_type))
     )
 
 

@@ -10,8 +10,11 @@ Spark design: training samples to the driver and runs tiny per-subspace
 k-means fits (sklearn-free Lloyd's in numpy — M fits of K centroids on a
 bounded `train_size` sample is driver-scale work, exactly like the
 reference's train()).  Encode/decode/ADC run distributed as Arrow-batched
-mapInPandas kernels with the codebooks broadcast — at 100 TB the codes
-table is the only thing that moves (M bytes/vector vs 4*dim).
+kernels with the codebooks broadcast — at 100 TB the codes table is the
+only thing that moves (M bytes/vector vs 4*dim).  The training sample and
+encode cross the Python boundary through operators/_arrow.py (flat
+buffers, no pandas); decode and the ADC searches still use pandas
+batches.
 """
 
 from __future__ import annotations
@@ -21,12 +24,33 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
+from fabstir_vectordb_spark.operators import _arrow
 from fabstir_vectordb_spark.operators._kmeans import kmeans_fit as _kmeans_fit
+
+
+def _pq_codes(V: np.ndarray, books: np.ndarray, rot: np.ndarray | None) -> pa.Array:
+    """list<int32> column of the M nearest-codeword ids of each row of
+    ``V`` (vector_ops.rs:449-485), rotated first when ``rot`` is set."""
+    if rot is not None:
+        V = V @ rot
+    M, sub = len(books), books.shape[2]
+    codes = np.empty((len(V), M), dtype=np.int32)
+    for m in range(M):
+        Xm = V[:, m * sub : (m + 1) * sub]
+        # (n, k) distance matrix via |x|^2 - 2xC + |C|^2
+        d = (
+            np.einsum("ij,ij->i", Xm, Xm)[:, None]
+            - 2.0 * Xm @ books[m].T
+            + np.einsum("ij,ij->i", books[m], books[m])[None, :]
+        )
+        codes[:, m] = d.argmin(axis=1)
+    offsets = np.arange(len(V) + 1, dtype=np.int32) * M
+    return pa.ListArray.from_arrays(offsets, codes.ravel())
 
 
 def _adc_tables(books: "np.ndarray", Q: "np.ndarray", M: int, sub: int,
@@ -140,15 +164,19 @@ class ProductQuantizer:
         on the training sample vs the unrotated fit — opq=True is
         therefore never worse than opq=False on the sample by
         construction (the auto-fallback a default must have)."""
-        sample = [
-            np.asarray(r[0], dtype=np.float64)
-            for r in df.select(vector_col).limit(train_size).collect()
-        ]
-        if len(sample) < n_centroids:
+        X = _arrow.collect_matrix(df.select(vector_col).limit(train_size), vector_col)
+        return cls._fit_sample(X, n_subspaces, n_centroids, iters, seed, opq)
+
+    @classmethod
+    def _fit_sample(
+        cls, X: np.ndarray, n_subspaces: int, n_centroids: int,
+        iters: int = 25, seed: int = 42, opq: bool | str | None = False,
+    ) -> "ProductQuantizer":
+        """``fit`` on an already collected ``(n, dim)`` float64 sample."""
+        if len(X) < n_centroids:
             raise ValueError(
-                f"need >= {n_centroids} training vectors, got {len(sample)}"
+                f"need >= {n_centroids} training vectors, got {len(X)}"
             )
-        X = np.asarray(sample)
         dim = X.shape[1]
         if dim % n_subspaces != 0:
             raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
@@ -190,34 +218,17 @@ class ProductQuantizer:
     ) -> DataFrame:
         """vector -> array<int> of M centroid indices (vector_ops.rs:449-485)."""
         bc = df.sparkSession.sparkContext.broadcast((self.codebooks, self.rotation))
-        M, sub = self.n_subspaces, self.sub_dim
-        out_schema = T.StructType(
-            list(df.schema) + [T.StructField(code_col, T.ArrayType(T.IntegerType()), True)]
-        )
+        out_schema = T.StructType(list(df.schema)).add(code_col, T.ArrayType(T.IntegerType()))
 
         def kernel(batches):
             books, rot = bc.value
-            for pdf in batches:
-                if pdf.empty:
+            for b in batches:
+                if b.num_rows == 0:
                     continue
-                V = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vector_col]]
-                )
-                if rot is not None:
-                    V = V @ rot
-                codes = np.empty((len(V), M), dtype=np.int32)
-                for m in range(M):
-                    Xm = V[:, m * sub : (m + 1) * sub]
-                    # (n, k) distance matrix via |x|^2 - 2xC + |C|^2
-                    d = (
-                        np.einsum("ij,ij->i", Xm, Xm)[:, None]
-                        - 2.0 * Xm @ books[m].T
-                        + np.einsum("ij,ij->i", books[m], books[m])[None, :]
-                    )
-                    codes[:, m] = d.argmin(axis=1)
-                yield pdf.assign(**{code_col: [c.tolist() for c in codes]})
+                V = _arrow.matrix(b.column(vector_col), vector_col)
+                yield _arrow.append(b, code_col, _pq_codes(V, books, rot))
 
-        return df.mapInPandas(kernel, out_schema)
+        return df.mapInArrow(kernel, out_schema)
 
     # ------------------------------------------------------------ decode
 
@@ -307,14 +318,8 @@ class ProductQuantizer:
         if not qrows:  # np.stack over zero query LUTs has no shape
             return spark.createDataFrame(
                 [],
-                T.StructType(
-                    [
-                        T.StructField(
-                            "query_id", queries.schema[query_id_col].dataType, False
-                        ),
-                        T.StructField("id", codes_df.schema[id_col].dataType, False),
-                        T.StructField("distance", T.DoubleType(), False),
-                    ]
+                _arrow.topk_schema(
+                    queries.schema[query_id_col].dataType, codes_df.schema[id_col].dataType
                 ),
             )
         qids = [r[0] for r in qrows]
@@ -326,14 +331,8 @@ class ProductQuantizer:
         bc = spark.sparkContext.broadcast((qids, Q, self.codebooks))
         M, sub = self.n_subspaces, self.sub_dim
 
-        qid_type = queries.schema[query_id_col].dataType
-        id_type = codes_df.schema[id_col].dataType
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", qid_type, False),
-                T.StructField("id", id_type, False),
-                T.StructField("distance", T.DoubleType(), False),
-            ]
+        out_schema = _arrow.topk_schema(
+            queries.schema[query_id_col].dataType, codes_df.schema[id_col].dataType
         )
 
         def kernel(batches):
@@ -422,14 +421,8 @@ class ProductQuantizer:
             F.col(query_vector_col).alias("__qv"),
         ).crossJoin(blocks)
 
-        out_schema = T.StructType(
-            [
-                T.StructField(
-                    "query_id", queries.schema[query_id_col].dataType, False
-                ),
-                T.StructField("id", codes_df.schema[id_col].dataType, False),
-                T.StructField("distance", T.DoubleType(), False),
-            ]
+        out_schema = _arrow.topk_schema(
+            queries.schema[query_id_col].dataType, codes_df.schema[id_col].dataType
         )
 
         def block_adc(vpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:

@@ -1,0 +1,65 @@
+"""The Arrow kernel boundary (operators/_arrow.py) rejects bad vectors.
+
+A null element would become NaN in the flat buffer and NaN distances
+silently reorder neighbours, so every kernel built on the boundary must
+fail loudly, naming the column, on a null vector, a null element, or a
+vector whose length differs from its batch's dim."""
+
+import numpy as np
+import pyarrow as pa
+import pytest
+
+from fabstir_vectordb_spark.operators import _arrow
+from fabstir_vectordb_spark.operators.ivf import IVFIndex
+from fabstir_vectordb_spark.operators.knn import knn_bulk
+from fabstir_vectordb_spark.operators.pq import ProductQuantizer
+
+DIM = 4
+# bad vector -> the fragment of the error that names the defect
+BAD = {
+    "null vector": None,
+    "null element": [1.0, None, 0.0, 0.0],
+    "vector of length 2 in a batch of dim 4": [1.0, 2.0],
+}
+
+
+def test_matrix_parses_and_rejects():
+    col = pa.array([[1.0, 2.0], [3.0, 4.0]], pa.list_(pa.float32()))
+    m = _arrow.matrix(col, "v")
+    assert m.dtype == np.float64 and m.flags.writeable
+    assert np.array_equal(m, [[1.0, 2.0], [3.0, 4.0]])
+    assert np.array_equal(_arrow.matrix(col.slice(1), "v"), [[3.0, 4.0]])
+    for what, bad in BAD.items():
+        arr = pa.array([[0.5] * DIM, bad], pa.list_(pa.float64()))
+        with pytest.raises(ValueError, match=f"column 'v': .*{what}"):
+            _arrow.matrix(arr, "v")
+
+
+def _vectors(spark, bad):
+    rows = [(i, [float(i), 1.0, 0.0, -float(i)]) for i in range(12)] + [(99, bad)]
+    # one partition: the bad row shares its Arrow batch with good rows
+    return spark.createDataFrame(rows, "id long, vector array<double>").coalesce(1)
+
+
+def _assign(df):
+    idx = IVFIndex(centroids=np.eye(2, DIM), id_col="id", vector_col="vector")
+    return idx.assign(df)
+
+
+def _encode(df):
+    pq = ProductQuantizer(2, 2, DIM, np.zeros((2, 2, 2)))
+    return pq.encode(df, vector_col="vector")
+
+
+def _knn_bulk(df):
+    q = df.sparkSession.createDataFrame([(0, [0.0] * DIM)], "query_id long, vector array<double>")
+    return knn_bulk(df, q, 3, vector_blocks=1)
+
+
+@pytest.mark.parametrize("what", list(BAD))
+@pytest.mark.parametrize("op", [_assign, _encode, _knn_bulk])
+def test_kernels_fail_loudly_on_bad_vectors(spark, op, what):
+    with pytest.raises(Exception) as err:
+        op(_vectors(spark, BAD[what])).collect()
+    msg = str(err.value)
+    assert "ValueError: column '" in msg and what in msg

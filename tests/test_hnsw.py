@@ -167,6 +167,21 @@ def test_string_ids(spark):
     ]
 
 
+def test_string_ids_small_exact(spark):
+    # fast twin of test_string_ids: the kernel's str-id position map
+    rng = np.random.default_rng(8)
+    rows = [(f"n{i:03d}", rng.normal(size=6).tolist()) for i in range(40)]
+    vec = spark.createDataFrame(rows, "id string, vector array<double>")
+    q = spark.createDataFrame(rows[:4], "query_id string, vector array<double>")
+    idx = HNSWIndex(M=64, M0=64, ef_construction=64, num_graphs=2,
+                    id_col="id", vector_col="vector")
+    res = idx.search_bulk(idx.build(vec), q, 5, ef=64).collect()
+    exact = brute_force_knn(vec, q, 5, metric="l2", id_col="id", vector_col="vector")
+    key = lambda r: (r["query_id"], r["id"], round(r["distance"], 6))
+    assert len(res) == 4 * 5
+    assert sorted(map(key, res)) == sorted(map(key, exact.collect()))
+
+
 def test_tiny_graphs(spark):
     # single vector, and a graph count larger than the vector count
     vec = spark.createDataFrame(

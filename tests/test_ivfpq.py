@@ -135,6 +135,62 @@ def test_cogroup_fallback_matches_broadcast(monkeypatch, idx, encoded, embedding
     assert fallback == broadcast
 
 
+@pytest.mark.parametrize("rerank", [False, True])
+def test_lazy_lut_build_matches_broadcast_luts(monkeypatch, idx, encoded, embeddings, queries, rerank):
+    """Above the precomputed-LUT byte cap the broadcast search ships no
+    tables and each scan task builds them itself; rows are identical."""
+    import fabstir_vectordb_spark.operators.ivfpq as ivfpq_mod
+
+    def search():
+        return _rows(
+            idx.search_bulk(
+                encoded, queries, 10, n_probe=3, oversample=4,
+                rerank_vectors=embeddings if rerank else None,
+            )
+        )
+
+    precomputed = search()
+    monkeypatch.setattr(ivfpq_mod, "_MAX_PRECOMPUTED_LUT_BYTES", 0)
+    lazy = search()
+    assert len(precomputed) == 6 * 10
+    assert lazy == precomputed
+
+
+@pytest.mark.parametrize("residual", [False, True])
+def test_fused_encode_matches_two_pass_composition(spark, residual):
+    """IVFPQIndex.encode's single Arrow pass returns, row for row, the
+    cluster ids and codes of the composition it fuses: IVFIndex.assign,
+    the JVM-side residual, then ProductQuantizer.encode."""
+    import numpy as np
+
+    from fabstir_vectordb_spark.operators.ivf import IVFIndex
+    from fabstir_vectordb_spark.operators.pq import ProductQuantizer
+
+    data = _clustered_data(spark, n=240)
+    rng = np.random.default_rng(4)
+    ivf = IVFIndex(rng.normal(scale=10.0, size=(4, 16)), "vec_id", "embedding")
+    idx = IVFPQIndex(ivf, ProductQuantizer(4, 8, 16, rng.normal(size=(4, 8, 4))), residual)
+    assigned = idx.ivf.assign(data)
+    if residual:
+        cents = spark.createDataFrame(
+            [(c, ivf.centroids[c].tolist()) for c in range(4)],
+            "cluster_id int, cent array<double>",
+        )
+        assigned = assigned.join(F.broadcast(cents), "cluster_id").withColumn(
+            "embedding", F.zip_with("embedding", "cent", lambda x, y: x - y)
+        )
+    ref = idx.pq.encode(assigned, vector_col="embedding")
+
+    def rows(df):
+        return sorted(
+            (r["vec_id"], r["cluster_id"], tuple(r["pq_codes"])) for r in df.collect()
+        )
+
+    got = rows(idx.encode(data))
+    assert len(got) == 240
+    assert got == rows(ref)
+
+
 def test_write_read_encoded_roundtrip(tmp_path, spark, idx, encoded, embeddings, queries):
     """Persisted IVFADC layout: partitionBy(cluster_id) parquet + model
     sidecars; reload must reproduce codes exactly and the partition-pruned

@@ -674,3 +674,37 @@ def test_mg_frequent_items_pure_jvm_bounded_exchanges(spark):
     assert "FlatMapGroupsInPandas" not in plan
     assert "MapInPandas" not in plan
     assert "Exchange SinglePartition" not in plan
+
+
+def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings):
+    """knn_bulk, IVF assign / search_bulk and IVFPQ encode run their
+    Python kernels through mapInArrow / applyInArrow: a plan that slides
+    back to the pandas boundary fails here."""
+    import numpy as np
+
+    from fabstir_vectordb_spark.operators.ivf import IVFIndex
+    from fabstir_vectordb_spark.operators.ivfpq import IVFPQIndex
+    from fabstir_vectordb_spark.operators.knn import knn_bulk
+    from fabstir_vectordb_spark.operators.pq import ProductQuantizer
+
+    emb = embeddings.select("vec_id", "embedding")
+    dim = len(emb.first()["embedding"])
+    queries = emb.limit(4).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("vector")
+    )
+    rng = np.random.default_rng(0)
+    ivf = IVFIndex(rng.normal(size=(4, dim)), "vec_id", "embedding")
+    pq = ProductQuantizer(4, 8, dim, rng.normal(size=(4, 8, dim // 4)))
+    plans = {
+        "knn_bulk": knn_bulk(
+            emb, queries, 5, id_col="vec_id", vector_col="embedding"
+        ),
+        "assign": ivf.assign(emb),
+        "search_bulk": ivf.search_bulk(ivf.assign(emb), queries, 5, n_probe=2),
+        "ivfpq_encode": IVFPQIndex(ivf, pq).encode(emb),
+    }
+    for name, df in plans.items():
+        plan = _executed(df)
+        assert "InArrow" in plan, name
+        assert "MapInPandas" not in plan, name
+        assert "FlatMapCoGroupsInPandas" not in plan, name
