@@ -15,11 +15,15 @@ declarative; the cross-join output is Q*N rows, so use it when Q is tiny
 or a metadata pre-filter makes N small.
 
 ``impl="kernel"`` — Arrow-batched numpy kernel via ``mapInArrow``: each
-input partition computes distances for all queries with BLAS and emits
-only its per-partition top-k per query (a map-side partial reduction —
-no Q*N shuffle).  A final window over Q * num_partitions * k rows picks
-the exact global top-k.  This is the 100 TB path: the only shuffle is the
-tiny partial-result set.
+input batch computes distances for all queries with BLAS and emits only
+its top-k per query (a map-side partial reduction — no Q*N shuffle).  A
+final window over the Q * batches * k partial rows picks the exact global
+top-k.  This is the 100 TB path: the only shuffle is the tiny
+partial-result set.  The partial pass is ``partial_knn``, the one kernel
+body for driver-held queries: ``knn_kernel`` merges it with
+``topk_per_query``, and the session's point searches (session.py) run it
+over the probed clusters of an IVF table with the metadata carried along
+and merge it on the driver, with no exchange at all.
 
 Both strategies rank by (round(distance, 6), id) — see operators/topk.py
 for why that makes results deterministic across engines.
@@ -191,6 +195,101 @@ def knn_join(
     return topk_per_query(scored, k)
 
 
+def partial_knn(
+    vectors: DataFrame,
+    qids: list,
+    Q: np.ndarray,
+    qid_type: T.DataType,
+    k: int,
+    metric: str = "l2",
+    id_col: str = "id",
+    vector_col: str = "vector",
+    probes: dict[int, np.ndarray] | None = None,
+    carry: tuple[str, ...] | list[str] = (),
+) -> DataFrame:
+    """The one partial top-k kernel over driver-held queries: one map-only
+    ``mapInArrow`` pass over ``vectors``, no exchange.
+
+    ``qids`` and the ``(nq, dim)`` float64 matrix ``Q`` are broadcast.
+    Each Arrow batch emits its top-k per query under the (round(distance,
+    6), id) order, so the union of the partials holds the exact global
+    top-k; the caller merges them (``topk_per_query``, or a sort on the
+    driver).  ``probes`` ({cluster id: positions in ``Q`` of the queries
+    probing it}) reads only the probed clusters and restricts each query
+    to its own: a batch's rows are grouped by their ``cluster_id`` and
+    each group ranks only the queries that probed it (the per-(cluster,
+    batch) grouping of ``IVFPQIndex._search_bulk_broadcast``).  ``carry``
+    columns ride along, taken by position from the batch, so no join
+    re-attaches them.
+
+    Output: (query_id, id, distance, *carry)."""
+    if metric not in _METRICS:
+        raise ValueError(f"unknown metric {metric!r}; one of {_METRICS}")
+    bc = vectors.sparkSession.sparkContext.broadcast(
+        (pa.array(qids, to_arrow_type(qid_type)), Q, probes)
+    )
+    out_schema = _arrow.topk_schema(qid_type, vectors.schema[id_col].dataType)
+    for c in carry:
+        out_schema.add(vectors.schema[c])
+    cols = list(dict.fromkeys([id_col, vector_col, *carry]))
+    if probes is not None:
+        # only probed clusters are read: on a partitionBy(cluster_id)
+        # layout the IN list prunes whole directories at the scan
+        vectors = vectors.filter(F.col("cluster_id").isin(sorted(probes)))
+        cols.append("cluster_id")
+
+    def partial_topk(batches):
+        qids_l, Q_l, probes_l = bc.value
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            V = _arrow.matrix(b.column(vector_col), vector_col)
+            ids = b.column(id_col)
+            keys = _arrow.sort_keys(ids)
+            if probes_l is None:
+                qpos, vpos, d = _batch_topk_rows(metric, V, keys, Q_l, k)
+            else:
+                qpos, vpos, d = _probed_topk_rows(
+                    metric, V, keys, Q_l, k, b.column("cluster_id"), probes_l
+                )
+            t = _arrow.topk_table(qids_l, qpos, ids, vpos, d)
+            for c in carry:
+                t = t.append_column(c, b.column(c).take(vpos))
+            yield from t.to_batches()
+
+    return vectors.select(*cols).mapInArrow(partial_topk, out_schema)
+
+
+def _probed_topk_rows(
+    metric: str,
+    V: np.ndarray,
+    keys: np.ndarray,
+    Q: np.ndarray,
+    k: int,
+    clusters: pa.Array,
+    probes: dict[int, np.ndarray],
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``_batch_topk_rows`` per cluster group of one batch: each group of
+    rows ranks only the queries that probe its cluster."""
+    blk = clusters.to_numpy(zero_copy_only=False)
+    order = np.argsort(blk, kind="stable")
+    blk_s = blk[order]
+    starts = np.flatnonzero(np.r_[True, blk_s[1:] != blk_s[:-1]])
+    ends = np.r_[starts[1:], len(blk_s)]
+    empty = np.empty(0, dtype=np.int64)
+    out_q, out_v, out_d = [empty], [empty], [np.empty(0)]
+    for s, e in zip(starts, ends):
+        qidx = probes.get(int(blk_s[s]))
+        if qidx is None:
+            continue  # no query probes this cluster
+        rows = order[s:e]
+        qp, vp, d = _batch_topk_rows(metric, V[rows], keys[rows], Q[qidx], k)
+        out_q.append(qidx[qp])
+        out_v.append(rows[vp])
+        out_d.append(d)
+    return np.concatenate(out_q), np.concatenate(out_v), np.concatenate(out_d)
+
+
 def knn_kernel(
     vectors: DataFrame,
     queries: DataFrame,
@@ -202,20 +301,20 @@ def knn_kernel(
     query_vector_col: str = "vector",
     query_rows: list | None = None,
 ) -> DataFrame:
-    """Partial-reduction numpy kNN (impl="kernel").
+    """Partial-reduction numpy kNN (impl="kernel"): ``partial_knn`` merged
+    by ``topk_per_query``.
 
     Queries are collected to the driver (they are the small side — the
-    same assumption the expr path's broadcast makes) and shipped to
-    executors inside the Arrow task closure.  ``query_rows`` optionally
-    supplies that collect's result (rows of (query_id, vector), the
-    exact shape `queries.select(query_id_col, query_vector_col)` yields):
-    a caller constructing several kernel searches can run the collects
+    same assumption the expr path's broadcast makes) and broadcast to the
+    kernel.  ``query_rows`` optionally supplies that collect's result
+    (rows of (query_id, vector), the exact shape
+    `queries.select(query_id_col, query_vector_col)` yields): a caller
+    constructing several kernel searches can run the collects
     concurrently (guide §2.6 — overlap independent driver jobs) instead
     of paying one sequential driver job per search.
     """
     if metric not in _METRICS:
         raise ValueError(f"unknown metric {metric!r}; one of {_METRICS}")
-    spark = vectors.sparkSession
     qrows = (
         query_rows
         if query_rows is not None
@@ -223,23 +322,16 @@ def knn_kernel(
     )
     if not qrows:
         raise ValueError("empty query set")
-    qid_type = queries.schema[query_id_col].dataType
-    qids = pa.array([r[0] for r in qrows], to_arrow_type(qid_type))
-    Q = np.asarray([r[1] for r in qrows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast((qids, Q))
-    out_schema = _arrow.topk_schema(qid_type, vectors.schema[id_col].dataType)
-
-    def partial_topk(batches):
-        qids_l, Q_l = bc.value
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            V = _arrow.matrix(b.column(vector_col), vector_col)
-            ids = b.column(id_col)
-            qpos, vpos, d = _batch_topk_rows(metric, V, _arrow.sort_keys(ids), Q_l, k)
-            yield from _arrow.topk_table(qids_l, qpos, ids, vpos, d).to_batches()
-
-    partials = vectors.select(id_col, vector_col).mapInArrow(partial_topk, out_schema)
+    partials = partial_knn(
+        vectors,
+        [r[0] for r in qrows],
+        np.asarray([r[1] for r in qrows], dtype=np.float64),
+        queries.schema[query_id_col].dataType,
+        k,
+        metric,
+        id_col=id_col,
+        vector_col=vector_col,
+    )
     return topk_per_query(partials, k)
 
 

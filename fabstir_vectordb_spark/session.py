@@ -29,11 +29,17 @@ deleted) rather than two indices + a metadata side-map.  Mutations are
 column rewrites (merge-on-read style) committed through one step that
 drops the caches and logs the events; `vacuum` is the compaction.
 
-One search plan: search, search_batch and search_dataframe all rank
-through ``_ranked`` — IVFIndex.search_bulk over the clustered table when
-an index is trained and no filter is given, else an exact knn_bulk over
-the filtered live rows.  search_dataframe returns that plan as a
-DataFrame; the other two collect it with the metadata joined on.
+One candidate choice, two plans split by where the queries live.  Every
+search ranks the rows ``_candidates`` picks: the clustered table, probed,
+when an index is trained and no filter is given, else the filtered live
+rows, exactly.  search and search_batch hold their queries on the driver,
+so they broadcast them into ONE map-only Arrow pass (``partial_knn``)
+that streams only the probed clusters, carries each row's metadata along
+and emits <= k rows per (query, batch); the driver keeps the first k.
+That is one Spark job and no exchange per call.  search_dataframe's
+queries are an uncollected DataFrame, so it returns ``_ranked``:
+IVFIndex.search_bulk or knn_bulk over the same rows.  Both plans return
+the same rows.
 """
 
 from __future__ import annotations
@@ -44,6 +50,7 @@ import os
 import uuid
 from typing import Any
 
+import numpy as np
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -53,7 +60,8 @@ from fabstir_vectordb_spark.functions.filters import compile_filter
 from fabstir_vectordb_spark.functions.schema import MetadataSchema
 from fabstir_vectordb_spark.operators.cache import QueryResultCache
 from fabstir_vectordb_spark.operators.ivf import IVFIndex
-from fabstir_vectordb_spark.operators.knn import knn_bulk
+from fabstir_vectordb_spark.operators.knn import knn_bulk, partial_knn
+from fabstir_vectordb_spark.operators.topk import rounded
 from fabstir_vectordb_spark.plans.tuning import plan_search
 
 RECENCY_DAYS = 7  # src/hybrid/core.rs:77
@@ -78,12 +86,23 @@ def _row_to_plain(v: Any) -> Any:
     return v
 
 
+def _result_item(r: Row, include_vectors: bool) -> dict:
+    """One search result as the session API returns it."""
+    item = {
+        "id": r["id"],
+        "distance": r["distance"],
+        "score": r["score"],
+        "metadata": _row_to_plain(r["metadata"]) if r["metadata"] is not None else None,
+    }
+    if include_vectors:
+        item["vector"] = list(r["vector"])
+    return item
+
+
 def _mmr_select(results: list[dict], k: int, lam: float) -> list[dict]:
     """Driver-side MMR over an already-collected candidate list (the
     point-API twin of operators/scoring.py:mmr_rerank — same greedy
     selection, same rounded tie discipline)."""
-    import numpy as np
-
     if not results:
         return []
     cand = sorted(
@@ -428,27 +447,23 @@ class VectorDbSession:
     def _live(self) -> DataFrame:
         return self._df.filter(~F.col("deleted"))
 
-    def _ranked(
+    def _candidates(
         self,
-        queries: DataFrame,
         k: int,
-        *,
-        filter: dict | None = None,
-        threshold: float | None = None,
-        n_probe: int | None = None,
-        search_recent: bool = True,
-        search_historical: bool = True,
-    ) -> DataFrame:
-        """The one search plan behind every search surface: (query_id,
-        id, distance, score), <= k rows per query, nothing collected.
+        filter: dict | None,
+        n_probe: int | None,
+        search_recent: bool,
+        search_historical: bool,
+    ) -> tuple[DataFrame, int | None]:
+        """The rows a search ranks, and the IVF probe width (None: rank
+        them exactly) — the one candidate choice of every search surface.
 
         The recency flags become one ``ts`` predicate against a 7-day
         cutoff.  A trained index with no metadata filter probes the
-        clustered table (``IVFIndex.search_bulk``), with the probe width
-        from ``plan_search`` unless ``n_probe`` is given; anything else is
-        an exact ``knn_bulk`` over the live rows, pre-filtered BEFORE
-        ranking (exact, superseding the reference's k*3 oversampling,
-        hybrid/core.rs:513-549).  ``threshold`` keeps score >= threshold."""
+        clustered table, with the probe width from ``plan_search`` unless
+        ``n_probe`` is given; anything else ranks the live rows exactly,
+        pre-filtered BEFORE ranking (exact, superseding the reference's
+        k*3 oversampling, hybrid/core.rs:513-549)."""
         cutoff = F.lit(_utcnow() - _dt.timedelta(days=RECENCY_DAYS))
         recency = F.lit(True)
         if not search_recent:
@@ -466,55 +481,103 @@ class VectorDbSession:
                     self._live_count or 0, k, self._index.n_clusters,
                     brute_force_threshold=0,
                 ).n_probe or self._index.n_clusters
-            res = self._index.search_bulk(
-                self._assigned.filter(recency), queries, k, n_probe=n_probe
+            return self._assigned.filter(recency), n_probe
+        rows = self._live().filter(recency)
+        if filter is not None:
+            rows = rows.filter(
+                compile_filter(filter, rows.schema, metadata_col="metadata")
             )
-        else:
-            rows = self._live().filter(recency)
-            if filter is not None:
-                rows = rows.filter(
-                    compile_filter(filter, rows.schema, metadata_col="metadata")
-                )
+        return rows, None
+
+    def _ranked(
+        self,
+        queries: DataFrame,
+        k: int,
+        *,
+        filter: dict | None = None,
+        threshold: float | None = None,
+        n_probe: int | None = None,
+        search_recent: bool = True,
+        search_historical: bool = True,
+    ) -> DataFrame:
+        """The search plan over a DataFrame of queries: (query_id, id,
+        distance, score), <= k rows per query, nothing collected —
+        ``IVFIndex.search_bulk`` or ``knn_bulk`` over ``_candidates``.
+        ``threshold`` keeps score >= threshold."""
+        rows, n_probe = self._candidates(
+            k, filter, n_probe, search_recent, search_historical
+        )
+        if n_probe is None:
             res = knn_bulk(rows, queries, k, metric="l2", id_col="id", vector_col="vector")
+        else:
+            res = self._index.search_bulk(rows, queries, k, n_probe=n_probe)
         res = res.withColumn("score", D.similarity_score("distance"))
         return res if threshold is None else res.filter(F.col("score") >= threshold)
 
-    def _collect(
-        self, ranked: DataFrame, query_ids: list[str], include_vectors: bool = False
+    def _search_points(
+        self,
+        queries: list[tuple[str, list[float]]],
+        k: int,
+        *,
+        filter: dict | None = None,
+        threshold: float | None = None,
+        n_probe: int | None = None,
+        search_recent: bool = True,
+        search_historical: bool = True,
+        include_vectors: bool = False,
     ) -> dict[str, list[dict]]:
-        """Materialize a ranked result on the driver: one join for the
-        metadata (and vectors), one collect, ascending (round(distance, 6),
-        id) per query.  The ranked plan already holds <= k rows per query
-        and the threshold only removes rows, so no second top-k runs."""
-        cols = ["id", "metadata"] + (["vector"] if include_vectors else [])
-        rows = (
-            ranked.join(self._live().select(*cols), "id", "left")
-            .orderBy("query_id", F.round("distance", 6), "id")
-            .collect()
-        )
-        out: dict[str, list[dict]] = {qid: [] for qid in query_ids}
-        for r in rows:
-            item = {
-                "id": r["id"],
-                "distance": r["distance"],
-                "score": r["score"],
-                "metadata": _row_to_plain(r["metadata"]) if r["metadata"] is not None else None,
-            }
-            if include_vectors:
-                item["vector"] = list(r["vector"])
-            out[r["query_id"]].append(item)
-        return out
+        """The search of driver-held queries: ONE Spark job.
 
-    def _query_frame(self, queries: list[tuple[str, list[float]]]) -> DataFrame:
+        The queries are broadcast into ``partial_knn``, which streams the
+        ``_candidates`` rows once (on the IVF path only the probed
+        clusters, the probes ranked here by ``IVFIndex._probes_from_rows``)
+        and emits <= k rows per (query, batch) with the metadata (and
+        vector) taken from the batch itself.  The driver keeps the first
+        k of each query by (round(distance, 6), id) — the rounded key from
+        Spark's ``round`` in the collected projection, the same key as
+        ``topk_per_query`` — then applies ``threshold``.  Rows equal those
+        of ``_ranked`` over the same queries."""
         for _, vec in queries:
             if self._dim is not None and len(vec) != self._dim:
                 raise VectorDbError(
                     f"query dimension {len(vec)} != index dimension {self._dim}"
                 )
-        return self.spark.createDataFrame(
-            [(qid, [float(x) for x in vec]) for qid, vec in queries],
-            "query_id string, vector array<float>",
+        qids = [qid for qid, _ in queries]
+        # through float32, as an array<float> query column would hold them
+        Q = np.asarray(
+            [[float(x) for x in vec] for _, vec in queries], dtype=np.float32
+        ).astype(np.float64)
+        rows, n_probe = self._candidates(
+            k, filter, n_probe, search_recent, search_historical
         )
+        probes = None
+        if n_probe is not None:
+            by_cluster: dict[int, list[int]] = {}
+            for pos, cid in self._index._probes_from_rows(
+                list(enumerate(Q)), min(n_probe, self._index.n_clusters)
+            ):
+                by_cluster.setdefault(cid, []).append(pos)
+            probes = {c: np.asarray(p, dtype=np.int64) for c, p in by_cluster.items()}
+        carry = ["metadata"] + (["vector"] if include_vectors else [])
+        partials = partial_knn(
+            rows, qids, Q, T.StringType(), k, probes=probes, carry=carry
+        ).select(
+            "*",
+            rounded("distance").alias("__rd"),
+            D.similarity_score("distance").alias("score"),
+        )
+        per_query: dict[str, list[Row]] = {qid: [] for qid in qids}
+        for r in partials.collect():
+            per_query[r["query_id"]].append(r)
+        out: dict[str, list[dict]] = {}
+        for qid, rs in per_query.items():
+            rs.sort(key=lambda r: (r["__rd"], r["id"]))
+            out[qid] = [
+                _result_item(r, include_vectors)
+                for r in rs[:k]
+                if threshold is None or r["score"] >= threshold
+            ]
+        return out
 
     def search(
         self,
@@ -528,9 +591,9 @@ class VectorDbSession:
         n_probe: int | None = None,
         diversify: float | None = None,
     ) -> list[dict]:
-        """Point search: the one-query case of the shared plan
-        (``_ranked`` then ``_collect``), memoized in the query-result
-        cache until the next mutation.
+        """Point search: the one-query case of ``_search_points`` (one
+        Spark job), memoized in the query-result cache until the next
+        mutation.
 
         ``diversify=lam`` (0..1] re-ranks with MMR (operators/
         scoring.py:mmr_rerank semantics): the engine fetches 3k
@@ -563,12 +626,12 @@ class VectorDbSession:
         cached = self._cache.get(cache_key)
         if cached is not None:
             return cached
-        ranked = self._ranked(
-            self._query_frame([("q0", query_vector)]), k,
+        out = self._search_points(
+            [("q0", query_vector)], k,
             filter=filter, threshold=threshold, n_probe=n_probe,
             search_recent=search_recent, search_historical=search_historical,
-        )
-        out = self._collect(ranked, ["q0"], include_vectors)["q0"]
+            include_vectors=include_vectors,
+        )["q0"]
         self._cache.put(cache_key, out)
         return out
 
@@ -579,8 +642,8 @@ class VectorDbSession:
         threshold: float = 0.0,
         filter: dict | None = None,
     ) -> dict[str, list[dict]]:
-        """Bulk multi-query search: the same plan as search(), run ONCE
-        for the whole query batch instead of a per-query round trip (the
+        """Bulk multi-query search: ``_search_points`` run ONCE for the
+        whole query batch — one Spark job, not a per-query round trip (the
         reference has no batch search; its clients loop over
         session.search).
 
@@ -590,9 +653,9 @@ class VectorDbSession:
         qids = [str(q["id"]) for q in queries]
         if self._df is None or not queries:
             return {qid: [] for qid in qids}
-        qdf = self._query_frame([(qid, q["vector"]) for qid, q in zip(qids, queries)])
-        return self._collect(
-            self._ranked(qdf, k, filter=filter, threshold=threshold), qids
+        return self._search_points(
+            [(qid, q["vector"]) for qid, q in zip(qids, queries)], k,
+            filter=filter, threshold=threshold,
         )
 
     def search_dataframe(
@@ -605,11 +668,12 @@ class VectorDbSession:
         query_vector_col: str = "vector",
     ) -> DataFrame:
         """DataFrame -> DataFrame bulk search — the pipeline surface: the
-        plan search() and search_batch() collect, returned uncollected.
-        The query set is never collected either; the result is a
-        DataFrame of (query_id, id, distance, score), <= k rows per
-        query — the two-big-tables similarity join a 100 TB
-        corpus-vs-corpus job needs."""
+        query set is never collected, so it runs ``_ranked`` (a cogroup
+        over the same ``_candidates`` rows search() ranks) and returns it
+        uncollected — a DataFrame of (query_id, id, distance, score),
+        <= k rows per query, the same rows search_batch returns — the
+        two-big-tables similarity join a 100 TB corpus-vs-corpus job
+        needs."""
         if self._df is None:
             raise VectorDbError("session has no vectors")
         qdf = queries.select(
@@ -829,13 +893,21 @@ class VectorDbSession:
     # --------------------------------------------------------------- vacuum
 
     def vacuum(self) -> dict:
-        """Physically remove soft-deleted rows (hybrid/core.rs:989-1011)."""
+        """Physically remove soft-deleted rows (hybrid/core.rs:989-1011).
+
+        The table's lineage is computed once: the whole table is
+        checkpointed, one aggregation counts both sides, and the live rows
+        are checkpointed again from those local blocks."""
         if self._df is None:
             return {"removed": 0, "remaining": 0}
         self._invalidate()
-        removed = self._df.filter(F.col("deleted")).count()
-        self._df = self._df.filter(~F.col("deleted")).localCheckpoint(eager=True)
-        return {"removed": removed, "remaining": self._df.count()}
+        whole = self._df.localCheckpoint(eager=True)
+        counts = whole.agg(
+            F.count(F.when(F.col("deleted"), 1)).alias("removed"),
+            F.count(F.when(~F.col("deleted"), 1)).alias("remaining"),
+        ).collect()[0]
+        self._df = whole.filter(~F.col("deleted")).localCheckpoint(eager=True)
+        return {"removed": counts["removed"], "remaining": counts["remaining"]}
 
     # ---------------------------------------------------------------- stats
 
@@ -1000,7 +1072,8 @@ class VectorDbSession:
                 f"incompatible format version {manifest.get('version')} != {FORMAT_VERSION}"
             )
         s = cls(spark, session_id=manifest.get("session_id"))
-        s._df = spark.read.parquet(os.path.join(path, "vectors")).drop("cluster_id")
+        saved = spark.read.parquet(os.path.join(path, "vectors"))
+        s._df = saved.drop("cluster_id")
         s._dim = manifest.get("dimension")
         schema_path = os.path.join(path, "schema.json")
         if os.path.exists(schema_path):
@@ -1008,6 +1081,11 @@ class VectorDbSession:
                 s._schema = MetadataSchema.from_json(json.load(f))
         if manifest.get("trained"):
             s._index = IVFIndex.load(path)
+            # save() wrote cluster_id from this same index: the saved
+            # layout IS the clustered table, so the first search assigns
+            # nothing and a probe reads only its clusters' directories
+            s._assigned = saved.filter(~F.col("deleted"))
+            s._live_count = manifest["total_vectors"]
         return s
 
 
