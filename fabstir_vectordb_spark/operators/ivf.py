@@ -151,10 +151,18 @@ class IVFIndex:
 
     # --------------------------------------------------------------- assign
 
+    def nearest(self, V: np.ndarray) -> np.ndarray:
+        """Nearest-centroid cluster ids (int32) of the rows of ``V`` (float64,
+        as ``_arrow.matrix`` reads a vector column) — the one assignment
+        kernel of IVF insert (ivf/core.rs:431-455): ``assign`` runs it per
+        Arrow batch, a session runs it on the driver over an insert batch."""
+        C = self.centroids
+        return _nearest(V, C, (C * C).sum(axis=1))
+
     def assign(self, vectors: DataFrame, out_col: str = "cluster_id") -> DataFrame:
         """Add nearest-centroid cluster ids (IVF insert, ivf/core.rs:431-455).
 
-        Arrow-batched numpy argmin over the broadcast centroid matrix —
+        Arrow-batched ``nearest`` over the broadcast centroid matrix —
         one (batch x n_clusters) GEMM per Arrow batch, no per-row Python.
         The input columns pass through the kernel untouched.
         (A pure column-expression argmin over 256 centroids x D dims blows
@@ -169,13 +177,12 @@ class IVFIndex:
         out_schema = T.StructType(list(vectors.schema)).add(out_col, T.IntegerType(), False)
 
         def assign_batches(batches):
-            C = bc.value  # (n_clusters, dim)
-            c_sq = (C * C).sum(axis=1)
+            index = IVFIndex(centroids=bc.value)
             for b in batches:
                 if b.num_rows == 0:
                     continue
                 V = _arrow.matrix(b.column(vector_col), vector_col)
-                yield _arrow.append(b, out_col, pa.array(_nearest(V, C, c_sq)))
+                yield _arrow.append(b, out_col, pa.array(index.nearest(V)))
 
         return vectors.mapInArrow(assign_batches, out_schema)
 

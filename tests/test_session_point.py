@@ -151,9 +151,14 @@ def test_wrong_dimension_raises_before_any_job(spark, trained):
     assert _jobs_for(spark, "wrong_dim", call) == 0
 
 
-def test_point_search_is_one_job(spark, trained, exact):
-    # trained index, clustered table warm from train_index
-    assert trained._assigned is not None
+def _no_assign(self, *a, **kw):
+    raise AssertionError("the session re-assigned its rows after train_index")
+
+
+def test_point_search_is_one_job(spark, trained, exact, monkeypatch):
+    # the table is clustered from train_index on: no search assigns
+    assert "cluster_id" in trained._df.columns
+    monkeypatch.setattr(IVFIndex, "assign", _no_assign)
     assert _jobs_for(spark, "pt_ivf", lambda: trained.search([3.3, 0.1, 1.0, 0.0], k=K)) == 1
     assert _jobs_for(
         spark, "pt_filtered",
@@ -176,32 +181,19 @@ def test_search_batch_is_one_job(spark, trained):
 
 def test_loaded_session_reuses_saved_layout(tmp_path, spark, trained, monkeypatch):
     path = str(tmp_path / "db")
-    trained.save(path)
-    loaded = VectorDbSession.load(spark, path)
-    reference = VectorDbSession.load(spark, path)
-    assert loaded._live_count == trained.get_stats()["vectorCount"]
-
-    def no_assign(self, *a, **kw):
-        raise AssertionError("a loaded session re-assigned its rows")
-
     with monkeypatch.context() as m:
-        m.setattr(IVFIndex, "assign", no_assign)
+        m.setattr(IVFIndex, "assign", _no_assign)
+        trained.save(path)
+        loaded = VectorDbSession.load(spark, path)
+        assert loaded._live_count == trained.get_stats()["vectorCount"]
         got = loaded.search(QUERIES[1][1], k=K)
 
-    # the reference drops the loaded layout, so its search re-assigns
-    calls = []
-    orig = IVFIndex.assign
+    # the saved layout is the assignment a fresh pass of the index gives
+    def layout(df):
+        return {r["id"]: r["cluster_id"] for r in df.select("id", "cluster_id").collect()}
 
-    def counted(self, *a, **kw):
-        calls.append(1)
-        return orig(self, *a, **kw)
-
-    reference._invalidate()
-    with monkeypatch.context() as m:
-        m.setattr(IVFIndex, "assign", counted)
-        want = reference.search(QUERIES[1][1], k=K)
-    assert calls
-    assert got == want
+    assert layout(loaded._df) == layout(loaded._index.assign(loaded.dataframe()))
+    assert layout(loaded._df) == layout(trained._df)
     assert got == trained.search(QUERIES[1][1], k=K)
 
 

@@ -1,0 +1,338 @@
+"""The session write path: assign at insert and JVM-local write batches.
+
+Once an index is trained the session table carries ``cluster_id``: every
+insert is assigned on the driver as it is appended and an update keeps its
+row's cluster, so no write, search, vacuum, save or load re-assigns the
+table.  A write batch is one Arrow table held by Spark as a local relation,
+its metadata parsed by ``from_json``; the parity tests below pin that
+conversion against the Python-row ``createDataFrame`` builder it replaced,
+kept here as the reference.
+"""
+
+import datetime as dt
+import json
+import os
+from decimal import Decimal
+
+import pytest
+from pyspark.errors import PySparkTypeError
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from fabstir_vectordb_spark.operators.ivf import IVFIndex
+from fabstir_vectordb_spark.session import VectorDbError, VectorDbSession, _merge_struct
+
+T0 = dt.datetime(2024, 5, 6, 7, 8, 9, 123456)
+
+
+def _jobs_for(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _tasks_for(spark, group):
+    tracker = spark.sparkContext.statusTracker()
+    return sum(
+        tracker.getStageInfo(sid).numTasks
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+    )
+
+
+# ------------------------------------------------- the reference builder
+
+
+def _reference_md_type(spark, mds):
+    """The JSON-reader inference of the replaced builder (one Spark job)."""
+    texts = spark.createDataFrame([(json.dumps(md),) for md in mds if md], "j string")
+    t = spark.read.json(texts.rdd.map(lambda r: r["j"])).schema
+    return T.StructType([f for f in t if not f.name.startswith("_corrupt")])
+
+
+def _reference_batch(session, rows):
+    """The replaced builder: ``createDataFrame`` of Python rows."""
+    base = T.StructType(
+        [
+            T.StructField("id", T.StringType(), False),
+            T.StructField("vector", T.ArrayType(T.FloatType()), False),
+            T.StructField("ts", T.TimestampType(), False),
+            T.StructField("deleted", T.BooleanType(), False),
+        ]
+    )
+    mds = [r["metadata"] for r in rows]
+    md_type = T.StructType()
+    if any(mds):
+        md_type = _reference_md_type(session.spark, mds)
+        if session._schema is not None:
+            names = md_type.fieldNames()
+            merged = _merge_struct(session._schema.spark_type(), md_type)
+            md_type = T.StructType([f for f in merged if f.name in names])
+    base.add(T.StructField("metadata", md_type, True))
+    return session.spark.createDataFrame(rows, base)
+
+
+def _rows(mds, vectors=None):
+    return [
+        {
+            "id": f"r{i}",
+            "vector": vectors[i] if vectors else [float(i), 0.5, -1.0],
+            "metadata": md,
+            "ts": T0 + dt.timedelta(seconds=i),
+            "deleted": False,
+        }
+        for i, md in enumerate(mds)
+    ]
+
+
+def _collected(df):
+    return df.schema.simpleString(), [r.asDict(recursive=True) for r in df.collect()]
+
+
+PARITY = {
+    "nested_structs": [
+        {"a": {"x": 1, "y": {"z": "q"}}, "n": 1},
+        {"a": {"x": 2}, "n": 2},
+    ],
+    "arrays": [{"tags": ["a", "b"], "nums": [1, 2]}, {"tags": [], "nums": [3]}],
+    "null_fields": [{"a": None, "b": 1}, None, {}, {"a": "x", "b": None}],
+    "int_and_bool_in_string_field": [{"a": "x"}, {"a": 1}, {"a": True}],
+}
+
+
+@pytest.mark.parametrize("mds", PARITY.values(), ids=list(PARITY))
+def test_batch_builder_matches_python_rows(spark, mds):
+    s = VectorDbSession(spark)
+    rows = _rows(mds)
+    assert _collected(s._create_batch_df(rows)) == _collected(_reference_batch(s, rows))
+
+
+def test_batch_builder_string_field_values(spark):
+    # int and bool in an otherwise-string field are stored as their JSON
+    # text, as the Python-row builder stored them
+    s = VectorDbSession(spark)
+    got = s._create_batch_df(_rows(PARITY["int_and_bool_in_string_field"]))
+    assert [r["metadata"]["a"] for r in got.collect()] == ["x", "1", "true"]
+
+
+def test_batch_builder_declared_schema_merge(spark):
+    s = VectorDbSession(spark)
+    s.set_schema({"fields": {"score": {"type": "number"}, "lang": {"type": "string"}}})
+    rows = _rows([{"score": 1.5, "lang": "en", "extra": 3}, {"score": None, "lang": "de"}])
+    got = _collected(s._create_batch_df(rows))
+    assert got == _collected(_reference_batch(s, rows))
+    assert "score:double" in got[0] and "extra:bigint" in got[0]
+
+
+def test_batch_builder_vectors_and_timestamps(spark):
+    # float32 rounding of the vectors (a subnormal and float32's max
+    # included) and naive-datetime timestamps with microseconds
+    s = VectorDbSession(spark)
+    vecs = [[0.1, 1.0 / 3.0, 1e-40], [3.4028234663852886e38, -2.5, 7.0000001]]
+    rows = _rows([{"a": 1}, {"a": 2}], vectors=vecs)
+    got = _collected(s._create_batch_df(rows))
+    assert got == _collected(_reference_batch(s, rows))
+    assert [r["ts"] for r in got[1]] == [T0, T0 + dt.timedelta(seconds=1)]
+
+
+def test_batch_builder_deliberate_changes(spark):
+    s = VectorDbSession(spark)
+    # int and float in one field: stored as double (the Python-row builder
+    # raised)
+    mixed = _rows([{"a": 1}, {"a": 1.5}])
+    with pytest.raises(PySparkTypeError):
+        _reference_batch(s, mixed).collect()
+    got = s._create_batch_df(mixed)
+    assert got.schema["metadata"].dataType.simpleString() == "struct<a:double>"
+    assert [r["metadata"]["a"] for r in got.collect()] == [1.0, 1.5]
+    # an int beyond int64: stored as decimal(20,0) (it raised)
+    big = _rows([{"a": 10**19}])
+    with pytest.raises(PySparkTypeError):
+        _reference_batch(s, big).collect()
+    got = s._create_batch_df(big)
+    assert got.schema["metadata"].dataType.simpleString() == "struct<a:decimal(20,0)>"
+    assert got.collect()[0]["metadata"]["a"] == Decimal(10**19)
+    # an object or a large float in a string-inferred field: its JSON text
+    # (it was the Python repr, "{'b': 1}" and '1.5e+20')
+    texts = _rows([{"a": "s"}, {"a": {"b": 1}}, {"a": 1.5e20}])
+    old = [r["metadata"]["a"] for r in _reference_batch(s, texts).collect()]
+    assert old == ["s", "{'b': 1}", "1.5e+20"]
+    new = [r["metadata"]["a"] for r in s._create_batch_df(texts).collect()]
+    assert new == ["s", '{"b":1}', "1.5E20"]
+
+
+def test_batch_is_one_local_partition(spark):
+    s = VectorDbSession(spark)
+    batch = s._create_batch_df(_rows([{"a": i} for i in range(20)]))
+    assert batch.rdd.getNumPartitions() == 1
+    plan = batch._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "PythonRDD" not in plan and "ExistingRDD" not in plan
+
+
+# ------------------------------------------------ non-dict metadata
+
+
+def test_non_dict_metadata_fails_its_row(spark):
+    s = VectorDbSession(spark)
+    with pytest.raises(VectorDbError, match="'b'"):
+        s.add_vectors(
+            [
+                {"id": "a", "vector": [1.0, 2.0], "metadata": {"k": 1}},
+                {"id": "b", "vector": [1.0, 2.0], "metadata": "not-a-dict"},
+            ]
+        )
+    assert s._dim is None and s.dataframe() is None
+    res = s.batch_add_vectors(
+        [
+            {"id": "a", "vector": [1.0, 2.0], "metadata": {"k": 1}},
+            {"id": "b", "vector": [1.0, 2.0], "metadata": ["x"]},
+            {"id": "c", "vector": [3.0, 4.0]},
+        ]
+    )
+    assert res["successful"] == 2 and res["failed"] == 1
+    assert res["errors"][0]["id"] == "b" and "metadata" in res["errors"][0]["error"]
+    assert s.get_vector("a")["metadata"] == {"k": 1} and s.get_vector("b") is None
+    res = s.batch_update_metadata([("a", "text"), ("c", {"k": 2})])
+    assert res["successful"] == 1 and res["failed"] == 1
+    assert "'a'" in res["errors"][0]
+    assert s.get_vector("a")["metadata"] == {"k": 1}
+    assert s.get_vector("c")["metadata"] == {"k": 2}
+    with pytest.raises(VectorDbError, match="'a'"):
+        s.update_metadata("a", 7)
+
+
+# ------------------------------------------------ assign at insert
+
+
+def _item(i, lang="en", prefix="v"):
+    return {
+        "id": f"{prefix}{i:03d}",
+        "vector": [(i % 12) * 1.0, (i % 5) * 0.5, float(i % 3), 1.0],
+        "metadata": {"lang": lang, "rank": i},
+    }
+
+
+@pytest.fixture()
+def trained(spark):
+    s = VectorDbSession(spark)
+    s.add_vectors([_item(i, lang="de" if i % 4 == 0 else "en") for i in range(60)])
+    s.train_index(n_clusters=6, seed=3)
+    assert s._index.is_trained
+    return s
+
+
+def _no_assign(self, *a, **kw):
+    raise AssertionError("the session re-assigned its rows after train_index")
+
+
+def _write_cycle(s, start):
+    s.add_vectors([_item(i, prefix="n") for i in range(start, start + 8)])
+    s.batch_update_metadata([(f"n{start:03d}", {"lang": "fr", "rank": -1})])
+    s.batch_delete([f"n{start + 1:03d}", "v001"])
+    s.delete_by_metadata({"lang": "de"})
+
+
+def test_writes_are_one_job_each(spark, trained):
+    assert _jobs_for(
+        spark, "w_add", lambda: trained.add_vectors([_item(i, prefix="n") for i in range(5)])
+    ) == 1
+    assert _jobs_for(
+        spark, "w_upd",
+        lambda: trained.batch_update_metadata([("n000", {"lang": "fr"}), ("v002", None)]),
+    ) == 1
+
+
+def test_search_after_writes_is_one_job(spark, trained):
+    base = trained._df.rdd.getNumPartitions()
+    trained.add_vectors([_item(i, prefix="n") for i in range(5)])
+    trained.batch_update_metadata([("n000", {"lang": "fr", "rank": 0})])
+    trained.batch_delete(["v003"])
+    q = [3.0, 1.0, 0.0, 1.0]
+    assert _jobs_for(spark, "w_search", lambda: trained.search(q, k=5)) == 1
+    assert _tasks_for(spark, "w_search") <= base + 2
+
+
+def test_nothing_reassigns_after_training(tmp_path, spark, trained, monkeypatch):
+    q = [5.0, 1.0, 2.0, 1.0]
+    path = str(tmp_path / "db")
+    monkeypatch.setattr(IVFIndex, "assign", _no_assign)
+    _write_cycle(trained, 0)
+    first = trained.search(q, k=5)
+    trained.vacuum()
+    trained.save(path)
+    loaded = VectorDbSession.load(spark, path)
+    assert loaded.search(q, k=5) == first
+    monkeypatch.undo()
+    assert {r["id"] for r in first}.isdisjoint({"n001", "v001", "v000", "v004"})
+
+
+def test_inserted_rows_are_assigned_as_assign_would(spark, trained):
+    trained.add_vectors([_item(i, prefix="n") for i in range(37)])
+    trained.batch_update_metadata([("n005", {"lang": "fr"}), ("v010", {"lang": "fr"})])
+    got = {r["id"]: r["cluster_id"] for r in trained._df.collect()}
+    redo = trained._index.assign(trained.dataframe())
+    assert got == {r["id"]: r["cluster_id"] for r in redo.collect()}
+    assert "cluster_id" not in trained.dataframe().columns
+
+
+def test_save_writes_one_file_per_cluster(tmp_path, trained):
+    _write_cycle(trained, 0)
+    path = str(tmp_path / "db")
+    trained.save(path)
+    root = os.path.join(path, "vectors")
+    dirs = [d for d in os.listdir(root) if d.startswith("cluster_id=")]
+    assert len(dirs) > 1
+    for d in dirs:
+        files = [f for f in os.listdir(os.path.join(root, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+
+
+# ---------------------------------------- the cache and count contract
+
+
+def test_replaced_cached_tables_are_unpersisted(spark, trained):
+    # each cycle caches a clustered table (train_index) and a compacted one
+    # (vacuum); the table each replaces is unpersisted, so the persisted
+    # RDD count does not grow from one cycle to the next
+    sc = spark.sparkContext
+    sizes = []
+    for c in range(3):
+        trained.add_vectors([_item(i, prefix=f"c{c}") for i in range(4)])
+        trained.batch_delete([f"c{c}000"])
+        trained.train_index(n_clusters=6, seed=3)
+        trained.vacuum()
+        sizes.append(len(sc._jsc.getPersistentRDDs()))
+    assert sizes[2] <= sizes[0], sizes
+
+
+def test_live_count_follows_every_mutation(tmp_path, spark, trained):
+    s = trained
+
+    def check(what):
+        assert s._live_count == s.get_stats()["vectorCount"], what
+
+    check("train")
+    s.add_vectors([_item(i, prefix="n") for i in range(6)])
+    check("add")
+    s.batch_add_vectors([_item(6, prefix="n"), _item(0, prefix="n"), {"id": "bad"}])
+    check("batch_add")
+    s.batch_delete(["n000", "n000", "missing"])
+    check("delete")
+    s.batch_update_metadata([("n001", {"lang": "de"}), ("missing", None)])
+    check("update")
+    assert s.delete_by_metadata({"lang": "de"})["deletedCount"] > 0
+    check("delete_by_metadata")
+    s.delete_by_metadata({"rank": {"$lt": 5}}, return_ids=False)
+    check("delete_by_metadata(return_ids=False)")
+    s.migrate_aged(age_days=0, now=dt.datetime.now() + dt.timedelta(days=1))
+    check("migrate_aged")
+    s.vacuum()
+    check("vacuum")
+    path = str(tmp_path / "db")
+    s.save(path)
+    loaded = VectorDbSession.load(spark, path)
+    assert loaded._live_count == loaded.get_stats()["vectorCount"] == s._live_count
