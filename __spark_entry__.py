@@ -4894,15 +4894,6 @@ def _pq_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_pq_adc_knn_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ compression + ADC search + exact re-rank (vector_ops.rs:390-578)
-    — ranked output is model-dependent (k-means codebooks); bench-only.
-    The registered q_pq_adc_knn certifies the same path via dominance."""
-    return _pq_result(spark, sf_dir).select(
-        "query_id", "id", r6("distance").alias("distance")
-    )
-
-
 def _ranked_by_query(df: DataFrame) -> DataFrame:
     from pyspark.sql import Window
 

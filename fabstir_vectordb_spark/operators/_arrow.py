@@ -1,8 +1,9 @@
 """The Arrow boundary of the Python vector kernels.
 
 The ``mapInArrow`` / ``applyInArrow`` kernels of the exact-kNN, IVF, PQ
-and HNSW families read their input and build their output here, so the
-kernel bodies are plain numpy and the conversion rules live in one place:
+(encode, decode, ADC) and HNSW-search families read their input and
+build their output here, so the kernel bodies are plain numpy and the
+conversion rules live in one place:
 a ``list<float|double>`` column is one flat buffer viewed as ``(n, dim)``
 (no per-row objects, no pandas); a bad vector raises instead of becoming
 NaN distances that silently reorder neighbours; output rows are positions
@@ -53,6 +54,12 @@ def append(batch: pa.RecordBatch, name: str, values: pa.Array) -> pa.RecordBatch
     return pa.RecordBatch.from_arrays(
         batch.columns + [values], schema=batch.schema.append(pa.field(name, values.type))
     )
+
+
+def lists(X: np.ndarray) -> pa.ListArray:
+    """An ``(n, d)`` matrix as a list column: row i is list i."""
+    offsets = np.arange(len(X) + 1, dtype=np.int32) * X.shape[1]
+    return pa.ListArray.from_arrays(offsets, X.ravel())
 
 
 def topk_schema(qid_type: T.DataType, id_type: T.DataType) -> T.StructType:

@@ -196,6 +196,17 @@ class IVFIndex:
                 out.append((r[0], int(cid)))
         return out
 
+    def probes_by_cluster(self, Q: np.ndarray, n_probe: int) -> dict[int, np.ndarray]:
+        """{cluster id: positions in ``Q`` of the queries probing it}, in
+        the ranking of ``_probes_from_rows``: the ``probes`` argument of
+        ``knn.partial_knn`` and ``pq.partial_adc``."""
+        by_cluster: dict[int, list[int]] = {}
+        for pos, cid in self._probes_from_rows(
+            list(enumerate(Q)), min(n_probe, self.n_clusters)
+        ):
+            by_cluster.setdefault(cid, []).append(pos)
+        return {c: np.asarray(p, dtype=np.int64) for c, p in by_cluster.items()}
+
     def probes_for(self, queries: DataFrame, n_probe: int, query_id_col="query_id",
                    query_vector_col="vector") -> list[tuple]:
         """Driver-side: rank centroids per query, take n_probe

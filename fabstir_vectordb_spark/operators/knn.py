@@ -31,6 +31,8 @@ for why that makes results deterministic across engines.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
@@ -217,8 +219,8 @@ def partial_knn(
     driver).  ``probes`` ({cluster id: positions in ``Q`` of the queries
     probing it}) reads only the probed clusters and restricts each query
     to its own: a batch's rows are grouped by their ``cluster_id`` and
-    each group ranks only the queries that probed it (the per-(cluster,
-    batch) grouping of ``IVFPQIndex._search_bulk_broadcast``).  ``carry``
+    each group ranks only the queries that probed it (``_probed_topk_rows``,
+    the grouping ``pq.partial_adc`` shares).  ``carry``
     columns ride along, taken by position from the batch, so no join
     re-attaches them.
 
@@ -250,7 +252,10 @@ def partial_knn(
                 qpos, vpos, d = _batch_topk_rows(metric, V, keys, Q_l, k)
             else:
                 qpos, vpos, d = _probed_topk_rows(
-                    metric, V, keys, Q_l, k, b.column("cluster_id"), probes_l
+                    b.column("cluster_id"), probes_l,
+                    lambda cid, rows, qidx: _batch_topk_rows(
+                        metric, V[rows], keys[rows], Q_l[qidx], k
+                    ),
                 )
             t = _arrow.topk_table(qids_l, qpos, ids, vpos, d)
             for c in carry:
@@ -261,16 +266,17 @@ def partial_knn(
 
 
 def _probed_topk_rows(
-    metric: str,
-    V: np.ndarray,
-    keys: np.ndarray,
-    Q: np.ndarray,
-    k: int,
     clusters: pa.Array,
     probes: dict[int, np.ndarray],
+    rank: Callable[[int, np.ndarray, np.ndarray], tuple[np.ndarray, np.ndarray, np.ndarray]],
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """``_batch_topk_rows`` per cluster group of one batch: each group of
-    rows ranks only the queries that probe its cluster."""
+    """The per-cluster grouping of one batch, shared by ``partial_knn`` and
+    ``pq.partial_adc``: the batch's rows are grouped by ``clusters`` (a
+    batch may span clusters) and each group ranks only the queries that
+    probe its cluster.  ``rank(cluster id, rows, qidx)`` ranks the batch
+    rows ``rows`` against the queries at positions ``qidx`` and returns
+    (position in ``qidx``, position in ``rows``, distance); the result maps
+    them back to (query position, batch row position, distance)."""
     blk = clusters.to_numpy(zero_copy_only=False)
     order = np.argsort(blk, kind="stable")
     blk_s = blk[order]
@@ -279,11 +285,12 @@ def _probed_topk_rows(
     empty = np.empty(0, dtype=np.int64)
     out_q, out_v, out_d = [empty], [empty], [np.empty(0)]
     for s, e in zip(starts, ends):
-        qidx = probes.get(int(blk_s[s]))
+        cid = int(blk_s[s])
+        qidx = probes.get(cid)
         if qidx is None:
             continue  # no query probes this cluster
         rows = order[s:e]
-        qp, vp, d = _batch_topk_rows(metric, V[rows], keys[rows], Q[qidx], k)
+        qp, vp, d = rank(cid, rows, qidx)
         out_q.append(qidx[qp])
         out_v.append(rows[vp])
         out_d.append(d)

@@ -11,10 +11,16 @@ k-means fits (sklearn-free Lloyd's in numpy — M fits of K centroids on a
 bounded `train_size` sample is driver-scale work, exactly like the
 reference's train()).  Encode/decode/ADC run distributed as Arrow-batched
 kernels with the codebooks broadcast — at 100 TB the codes table is the
-only thing that moves (M bytes/vector vs 4*dim).  The training sample and
-encode cross the Python boundary through operators/_arrow.py (flat
-buffers, no pandas); decode and the ADC searches still use pandas
-batches.
+only thing that moves (M bytes/vector vs 4*dim).  All of them cross the
+Python boundary through operators/_arrow.py (flat buffers, no pandas).
+
+ADC ranking is written once: ``_adc_topk_rows`` ranks a block of codes
+against a set of per-query lookup tables, and two wrappers run it —
+``partial_adc``, one map-only ``mapInArrow`` pass for driver-held queries
+(``adc_knn``, IVFPQ's broadcast plan), and ``cogroup_block_adc``, an
+``applyInArrow`` cogroup for a query set that stays a DataFrame
+(``adc_knn_bulk``, IVFPQ's fallback).  Every path ends in
+``topk_per_query`` and, with re-rank vectors, ``exact_rerank``.
 """
 
 from __future__ import annotations
@@ -23,14 +29,22 @@ import json
 import os
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
+from fabstir_vectordb_spark.functions import distance as D
 from fabstir_vectordb_spark.operators import _arrow
 from fabstir_vectordb_spark.operators._kmeans import kmeans_fit as _kmeans_fit
+from fabstir_vectordb_spark.operators.knn import _probed_topk_rows
+from fabstir_vectordb_spark.operators.topk import ROUND_DECIMALS, topk_per_query
+
+# partial_adc builds the raw-mode (nq, M, K) float64 LUT set once on the
+# driver and ships it while it fits this many bytes; above it each scan
+# task builds the same tables lazily
+_MAX_PRECOMPUTED_LUT_BYTES = 64 << 20
 
 
 def _pq_codes(V: np.ndarray, books: np.ndarray, rot: np.ndarray | None) -> pa.Array:
@@ -49,27 +63,235 @@ def _pq_codes(V: np.ndarray, books: np.ndarray, rot: np.ndarray | None) -> pa.Ar
             + np.einsum("ij,ij->i", books[m], books[m])[None, :]
         )
         codes[:, m] = d.argmin(axis=1)
-    offsets = np.arange(len(V) + 1, dtype=np.int32) * M
-    return pa.ListArray.from_arrays(offsets, codes.ravel())
+    return _arrow.lists(codes)
 
 
-def _adc_tables(books: "np.ndarray", Q: "np.ndarray", M: int, sub: int,
-                chunk: int = 512) -> "np.ndarray":
-    """(nq, M, K) ADC lookup tables for an (already rotated / residual-
-    shifted) query batch.  ONE einsum per <= ``chunk`` queries replaces
-    the former M einsum calls PER QUERY (the per-call Python dispatch
-    dominated at bulk query counts — guide §4.2, vectorize whole batches
-    inside kernels).  Values are bit-identical to the per-query form:
-    einsum('qmkj,qmkj->qmk') reduces j in the same naive sequential
-    order as einsum('kj,kj->k') does for each (q, m).  ``chunk`` bounds
-    the (chunk, M, K, sub) broadcast temporary to a few MB."""
+def _code_matrix(col: pa.Array | pa.ChunkedArray, name: str, M: int, K: int) -> np.ndarray:
+    """A code column as an ``(n, M)`` int64 matrix.  Raises ``ValueError``
+    naming ``name`` on a null or ragged code array (``_arrow.matrix``), a
+    row of other than ``M`` codes, or a code outside ``[0, K)``: the flat
+    LUT gather would read a code of K from the next subspace's table and
+    wrap a negative one, both silently."""
+    codes = _arrow.matrix(col, name, np.int64)
+    if codes.shape[1] != M:
+        raise ValueError(f"column {name!r}: {codes.shape[1]} codes per row, the quantizer has {M}")
+    lo, hi = codes.min(), codes.max()
+    if lo < 0 or hi >= K:
+        raise ValueError(f"column {name!r}: code {lo if lo < 0 else hi} outside [0, {K})")
+    return codes
+
+
+def _adc_tables(books: np.ndarray, Q: np.ndarray, rot: np.ndarray | None,
+                chunk: int = 512) -> np.ndarray:
+    """Flat (nq, M*K) ADC lookup tables: entry ``m*K + c`` of row j is the
+    squared L2 distance from slice m of query j (rotated first by ``rot``,
+    one ``q @ rot`` per row) to codeword c of subspace m.  Every ADC path
+    builds its tables here, so their distances are bit-identical.
+
+    ONE einsum per <= ``chunk`` queries replaces the former M einsum calls
+    PER QUERY (the per-call Python dispatch dominated at bulk query counts
+    — guide §4.2, vectorize whole batches inside kernels).  Values are
+    bit-identical to the per-query form: einsum('qmkj,qmkj->qmk') reduces
+    j in the same naive sequential order as einsum('kj,kj->k') does for
+    each (q, m).  ``chunk`` bounds the (chunk, M, K, sub) broadcast
+    temporary to a few MB."""
+    if rot is not None:
+        Q = np.stack([q @ rot for q in Q])
+    M, K, sub = books.shape
     nq = len(Q)
-    out = np.empty((nq, M, books.shape[1]), dtype=np.float64)
+    out = np.empty((nq, M, K), dtype=np.float64)
     Qr = Q.reshape(nq, M, 1, sub)
     for s in range(0, nq, chunk):
         D = books[None, :, :, :] - Qr[s : s + chunk]
         out[s : s + chunk] = np.einsum("qmkj,qmkj->qmk", D, D)
-    return out
+    return out.reshape(nq, M * K)
+
+
+class _Scratch:
+    """The gather and sum buffers of ``_adc_topk_rows``, grown to the
+    largest block seen and reused by every later call of one task.  A
+    fresh (n, M) temporary per (query, block) was ~1.6 GB of first-touch
+    pages per search at the 100k datum, the dominant kernel cost on
+    slow-faulting hosts; the values are unchanged (same gather, same
+    sequential axis-1 sum)."""
+
+    def __init__(self):
+        self.g = self.d = self.r = np.empty(0)
+
+    def views(self, n: int, M: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        if len(self.g) < n:
+            self.g, self.d, self.r = np.empty((n, M)), np.empty(n), np.empty(n)
+        return self.g[:n], self.d[:n], self.r[:n]
+
+
+def _adc_topk_rows(
+    luts: np.ndarray | list[np.ndarray],
+    codes: np.ndarray,
+    keys: np.ndarray,
+    fetch: int,
+    scratch: _Scratch,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The one ADC top-``fetch`` selection: every flat ``(M*K,)`` LUT in
+    ``luts`` (rows of ``_adc_tables``) against the ``(n, M)`` int64
+    ``codes`` of one block.  A row's distance is sqrt(sum_m lut[m*K +
+    code_m]); each query keeps its first ``fetch`` rows by
+    (round(distance, 6), key) — an argpartition shortlist, then lexsort
+    — so per-block partials always hold the global top-``fetch``.
+
+    Returns (position in ``luts``, row position, distance) arrays, one
+    entry per output row; ``keys`` (sort keys) only break distance ties."""
+    n, M = codes.shape
+    empty = np.empty(0, dtype=np.int64)
+    if n == 0 or len(luts) == 0:
+        return empty, empty, np.empty(0)
+    out_q, out_v, out_d = [empty], [empty], [np.empty(0)]
+    # the flat LUT index m*K + code_m, shared by every query of the block
+    flat_idx = codes + np.arange(M, dtype=np.int64) * (len(luts[0]) // M)
+    g, dv, rv = scratch.views(n, M)
+    for j, lut in enumerate(luts):
+        np.take(lut, flat_idx, out=g)
+        np.sum(g, axis=1, out=dv)
+        d = np.sqrt(dv, out=dv)
+        dr = np.round(d, ROUND_DECIMALS, out=rv)
+        # `n > fetch > 0`: fetch=0 falls to the empty lexsort[:0] branch
+        # (the shortlist's empty-slice max would raise)
+        if n > fetch > 0:
+            part = np.argpartition(dr, fetch - 1)
+            thresh = dr[part[:fetch]].max()
+            cand = np.flatnonzero(dr <= thresh)
+            cand = cand[np.lexsort((keys[cand], dr[cand]))][:fetch]
+        else:
+            cand = np.lexsort((keys, dr))[:fetch]
+        out_q.append(np.full(len(cand), j, dtype=np.int64))
+        out_v.append(cand)
+        out_d.append(d[cand])
+    return np.concatenate(out_q), np.concatenate(out_v), np.concatenate(out_d)
+
+
+def partial_adc(
+    codes_df: DataFrame,
+    qids: list,
+    Q: np.ndarray,
+    qid_type: T.DataType,
+    fetch: int,
+    pq: "ProductQuantizer",
+    id_col: str = "vec_id",
+    code_col: str = "pq_codes",
+    probes: dict[int, np.ndarray] | None = None,
+    centroids: np.ndarray | None = None,
+    cluster_col: str = "cluster_id",
+) -> DataFrame:
+    """The ADC partial top-``fetch`` over driver-held queries: one map-only
+    ``mapInArrow`` pass over ``codes_df``, no exchange — the shape of
+    ``knn.partial_knn`` with the ADC body.  ``qids`` and the ``(nq, dim)``
+    float64 matrix ``Q`` are broadcast; each Arrow batch emits its
+    top-``fetch`` per query, and the caller merges the partials with
+    ``topk_per_query``.  ``probes`` ({cluster id: positions in ``Q`` of
+    the queries probing it}) reads only the probed clusters — an IN
+    filter on ``cluster_col``, which prunes a partitionBy(cluster_id)
+    layout at the scan — and ranks each cluster group of a batch against
+    only its probing queries (``knn._probed_topk_rows``).
+
+    ``centroids`` marks codes of the residual x - c (IVFADC): a cluster's
+    LUTs are built from q - c, since ||x - q|| == ||(x - c) - (q - c)||,
+    once per cluster per task.  Otherwise one LUT set serves every row,
+    built once on the driver and broadcast while it fits
+    ``_MAX_PRECOMPUTED_LUT_BYTES`` (every task rebuilding it cost ~0.09 s
+    CPU per task x 28 tasks at the 100k datum, plus a first-touch
+    straggler), else built once per task.
+
+    Output: (query_id, id, distance)."""
+    M, K, _ = pq.codebooks.shape
+    luts = None
+    if centroids is None and len(Q) * M * K * 8 <= _MAX_PRECOMPUTED_LUT_BYTES:
+        luts = _adc_tables(pq.codebooks, Q, pq.rotation)
+    qid_arrow = pa.array(qids, to_arrow_type(qid_type))
+    bc = codes_df.sparkSession.sparkContext.broadcast(
+        (qid_arrow, Q, probes, pq.codebooks, pq.rotation, centroids, luts)
+    )
+    out_schema = _arrow.topk_schema(qid_type, codes_df.schema[id_col].dataType)
+    cols = [id_col, code_col]
+    if probes is not None:
+        codes_df = codes_df.filter(F.col(cluster_col).isin(sorted(probes)))
+        cols.append(cluster_col)
+
+    def adc_topk(batches):
+        qids_l, Q_l, probes_l, books, rot, cents, luts_l = bc.value
+        scratch = _Scratch()
+        cluster_luts: dict[int, np.ndarray] = {}
+
+        def luts_for(cid, qidx):
+            nonlocal luts_l
+            if cents is not None:
+                if cid not in cluster_luts:
+                    cluster_luts[cid] = _adc_tables(books, Q_l[qidx] - cents[cid], rot)
+                return cluster_luts[cid]
+            if luts_l is None:
+                luts_l = _adc_tables(books, Q_l, rot)
+            # row views, not a copy of the probing queries' tables
+            return luts_l if qidx is None else [luts_l[i] for i in qidx]
+
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            codes = _code_matrix(b.column(code_col), code_col, M, K)
+            ids = b.column(id_col)
+            keys = _arrow.sort_keys(ids)
+            if probes_l is None:
+                qpos, vpos, d = _adc_topk_rows(luts_for(None, None), codes, keys, fetch, scratch)
+            else:
+                qpos, vpos, d = _probed_topk_rows(
+                    b.column(cluster_col), probes_l,
+                    lambda cid, rows, qidx: _adc_topk_rows(
+                        luts_for(cid, qidx), codes[rows], keys[rows], fetch, scratch
+                    ),
+                )
+            yield from _arrow.topk_table(qids_l, qpos, ids, vpos, d).to_batches()
+
+    return codes_df.select(*cols).mapInArrow(adc_topk, out_schema)
+
+
+def cogroup_block_adc(
+    v: DataFrame,
+    qrep: DataFrame,
+    fetch: int,
+    pq: "ProductQuantizer",
+    qid_type: T.DataType,
+    id_type: T.DataType,
+    centroids: np.ndarray | None = None,
+) -> DataFrame:
+    """The ADC block partial top-``fetch`` for a query set that stays a
+    DataFrame: cogroup ``v`` (id, __codes, __blk) with ``qrep`` (query_id,
+    __qv, __blk) on __blk; each group builds its queries' LUTs and runs
+    ``_adc_topk_rows`` — the shape of ``knn.cogroup_block_knn`` with the
+    ADC body.  The caller defines what a block is — a hash bucket
+    (``adc_knn_bulk``) or an IVF cluster (``IVFPQIndex.search_bulk``) —
+    and applies the global top-``fetch``.  ``centroids`` marks residual
+    codes, as in ``partial_adc``: each block's queries shift by its
+    centroid."""
+    bc = v.sparkSession.sparkContext.broadcast((pq.codebooks, pq.rotation, centroids))
+    M, K, _ = pq.codebooks.shape
+    scratch = _Scratch()
+
+    def block_adc(vt: pa.Table, qt: pa.Table) -> pa.Table:
+        if vt.num_rows == 0 or qt.num_rows == 0:
+            return pa.table({})  # a cogroup side may arrive with no columns
+        books, rot, cents = bc.value
+        Q = _arrow.matrix(qt.column("__qv"), "__qv")
+        if cents is not None:
+            Q -= cents[vt.column("__blk")[0].as_py()]
+        codes = _code_matrix(vt.column("__codes"), "__codes", M, K)
+        ids = vt.column("id")
+        qpos, vpos, d = _adc_topk_rows(
+            _adc_tables(books, Q, rot), codes, _arrow.sort_keys(ids), fetch, scratch
+        )
+        return _arrow.topk_table(qt.column("query_id"), qpos, ids, vpos, d)
+
+    return (
+        v.groupBy("__blk")
+        .cogroup(qrep.groupBy("__blk"))
+        .applyInArrow(block_adc, _arrow.topk_schema(qid_type, id_type))
+    )
 
 
 def exact_rerank(
@@ -83,15 +305,12 @@ def exact_rerank(
     query_vector_col: str = "vector",
 ) -> DataFrame:
     """Exact re-rank of an over-fetched candidate set: true L2 on only the
-    Q*k*oversample candidate rows, then top-k.  Shared by
-    ProductQuantizer.adc_knn_bulk and IVFPQIndex.search_bulk so the
-    full-probe-equivalence contract can't drift between them.
+    Q*k*oversample candidate rows, then top-k.  Shared by every ADC
+    search (``_top_candidates``) so the full-probe-equivalence contract
+    can't drift between them.
 
     cand is the small side of both joins; no broadcast hint on the query
     table (it may be big) — AQE decides."""
-    from fabstir_vectordb_spark.functions import distance as D
-    from fabstir_vectordb_spark.operators.topk import topk_per_query
-
     vecs = rerank_vectors.select(
         F.col(id_col).alias("id"),
         F.col(rerank_vector_col).alias("__rv_vec"),
@@ -111,6 +330,24 @@ def exact_rerank(
         )
     )
     return topk_per_query(exact, k)
+
+
+def _top_candidates(
+    partials: DataFrame,
+    fetch: int,
+    k: int,
+    queries: DataFrame,
+    rerank_vectors: DataFrame | None,
+    **cols: str,
+) -> DataFrame:
+    """The tail of every ADC search: the global top-``fetch`` of the
+    partials, then, with ``rerank_vectors``, their exact re-rank to the
+    top ``k`` (``exact_rerank``, which takes ``cols``); without them
+    ``fetch == k``."""
+    cand = topk_per_query(partials, fetch)
+    if rerank_vectors is None:
+        return cand
+    return exact_rerank(cand, queries, rerank_vectors, k, **cols)
 
 
 class ProductQuantizer:
@@ -240,24 +477,23 @@ class ProductQuantizer:
         reconstructs the rotated vector, so it is rotated back
         (R^T = R^{-1} for orthonormal R)."""
         bc = df.sparkSession.sparkContext.broadcast((self.codebooks, self.rotation))
-        out_schema = T.StructType(
-            list(df.schema) + [T.StructField(out_col, T.ArrayType(T.DoubleType()), True)]
-        )
+        out_schema = T.StructType(list(df.schema)).add(out_col, T.ArrayType(T.DoubleType()))
+        M, K, sub = self.codebooks.shape
 
         def kernel(batches):
             books, rot = bc.value
-            for pdf in batches:
-                if pdf.empty:
+            for b in batches:
+                if b.num_rows == 0:
                     continue
-                recon = [
-                    np.concatenate([books[m][c[m]] for m in range(len(c))])
-                    for c in pdf[code_col]
-                ]
+                codes = _code_matrix(b.column(code_col), code_col, M, K)
+                # (n, M, sub): codeword codes[i, m] of subspace m
+                recon = books[np.arange(M), codes].reshape(len(codes), M * sub)
                 if rot is not None:
-                    recon = [r @ rot.T for r in recon]
-                yield pdf.assign(**{out_col: [r.tolist() for r in recon]})
+                    # per row, the form the reconstruction has always used
+                    recon = np.stack([r @ rot.T for r in recon])
+                yield _arrow.append(b, out_col, _arrow.lists(recon))
 
-        return df.mapInPandas(kernel, out_schema)
+        return df.mapInArrow(kernel, out_schema)
 
     # --------------------------------------------------------- ADC search
 
@@ -276,93 +512,30 @@ class ProductQuantizer:
     ) -> DataFrame:
         """Asymmetric-distance kNN over PQ codes: per query, precompute the
         (M, K) subspace distance table, then each row's approximate squared
-        L2 is M table lookups — no vector decode, no full-width math.
-        Same partial-reduction shape as operators/knn.knn_kernel.
+        L2 is M table lookups — no vector decode, no full-width math.  The
+        queries are collected and broadcast into one ``partial_adc`` pass,
+        merged by ``topk_per_query``.
 
         With `rerank_vectors` (the full-precision table), ADC over-fetches
         k*oversample candidates and re-ranks them exactly — the standard
         PQ accuracy recovery: the expensive full-width math runs on only
         Q*k*oversample rows, never the whole table."""
-        from fabstir_vectordb_spark.operators.topk import ROUND_DECIMALS, topk_per_query
-
-        if rerank_vectors is not None:
-            cand = self.adc_knn(
-                codes_df, queries, k * oversample,
-                id_col=id_col, code_col=code_col,
-                query_id_col=query_id_col, query_vector_col=query_vector_col,
+        qid_type = queries.schema[query_id_col].dataType
+        t = queries.select(query_id_col, query_vector_col).toArrow()
+        if t.num_rows == 0:  # np.stack over zero query LUTs has no shape
+            return codes_df.sparkSession.createDataFrame(
+                [], _arrow.topk_schema(qid_type, codes_df.schema[id_col].dataType)
             )
-            vecs = rerank_vectors.select(
-                F.col(id_col).alias("id"),
-                F.col(rerank_vector_col).alias("__rv_vec"),
-            )
-            q = queries.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(query_vector_col).alias("__rv_q"),
-            )
-            from fabstir_vectordb_spark.functions import distance as D
-
-            exact = (
-                cand.drop("distance")
-                .join(vecs, "id")
-                .join(F.broadcast(q), "query_id")
-                .select(
-                    "query_id",
-                    "id",
-                    D.l2_distance("__rv_vec", "__rv_q").alias("distance"),
-                )
-            )
-            return topk_per_query(exact, k)
-
-        spark = codes_df.sparkSession
-        qrows = queries.select(query_id_col, query_vector_col).collect()
-        if not qrows:  # np.stack over zero query LUTs has no shape
-            return spark.createDataFrame(
-                [],
-                _arrow.topk_schema(
-                    queries.schema[query_id_col].dataType, codes_df.schema[id_col].dataType
-                ),
-            )
-        qids = [r[0] for r in qrows]
-        Q = np.asarray([np.asarray(r[1], dtype=np.float64) for r in qrows])
-        if self.rotation is not None:
-            # LUTs are built in rotated space; distances are unchanged
-            # because the rotation is orthonormal
-            Q = Q @ self.rotation
-        bc = spark.sparkContext.broadcast((qids, Q, self.codebooks))
-        M, sub = self.n_subspaces, self.sub_dim
-
-        out_schema = _arrow.topk_schema(
-            queries.schema[query_id_col].dataType, codes_df.schema[id_col].dataType
+        fetch = k * (oversample if rerank_vectors is not None else 1)
+        partials = partial_adc(
+            codes_df, t.column(0).to_pylist(), _arrow.matrix(t.column(1), query_vector_col),
+            qid_type, fetch, self, id_col=id_col, code_col=code_col,
         )
-
-        def kernel(batches):
-            qids_l, Q_l, books = bc.value
-            # tables[j]: (M, K) squared distances from query j's m-th
-            # slice — built for the whole query batch in one vectorized
-            # pass (bit-identical values, see _adc_tables)
-            tables = _adc_tables(books, np.asarray(Q_l), M, sub)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                codes = np.asarray([np.asarray(c) for c in pdf[code_col]])
-                ids = pdf[id_col].to_numpy()
-                if ids.dtype == object:
-                    ids = ids.astype(str)
-                out_q, out_id, out_d = [], [], []
-                for j, qid in enumerate(qids_l):
-                    # gather: distance = sum_m table[m, code_m]
-                    d = np.sqrt(
-                        np.sum(tables[j][np.arange(M)[None, :], codes], axis=1)
-                    )
-                    dr = np.round(d, ROUND_DECIMALS)
-                    order = np.lexsort((ids, dr))[:k]
-                    out_q.extend([qid] * len(order))
-                    out_id.extend(ids[order].tolist())
-                    out_d.extend(d[order].tolist())
-                yield pd.DataFrame({"query_id": out_q, "id": out_id, "distance": out_d})
-
-        partials = codes_df.select(id_col, code_col).mapInPandas(kernel, out_schema)
-        return topk_per_query(partials, k)
+        return _top_candidates(
+            partials, fetch, k, queries, rerank_vectors,
+            id_col=id_col, rerank_vector_col=rerank_vector_col,
+            query_id_col=query_id_col, query_vector_col=query_vector_col,
+        )
 
     def adc_knn_bulk(
         self,
@@ -381,35 +554,14 @@ class ProductQuantizer:
         """ADC kNN with the QUERY SET as a DataFrame — no driver collect,
         the bulk companion to ``adc_knn`` (the same two-big-tables shape
         as operators/knn.knn_bulk: codes hash into blocks and shuffle
-        once, queries replicate per block, a cogrouped kernel gathers
+        once, queries replicate per block, ``cogroup_block_adc`` gathers
         block-local top-k, the final shuffle is Q x blocks x k rows).
 
         Identical per-pair arithmetic and (round(6), id) tie-breaks as
         ``adc_knn``, so both paths return the same rows for the same
         fitted quantizer."""
-        from fabstir_vectordb_spark.operators.topk import (
-            ROUND_DECIMALS,
-            topk_per_query,
-        )
-
-        if rerank_vectors is not None:
-            cand = self.adc_knn_bulk(
-                codes_df, queries, k * oversample,
-                id_col=id_col, code_col=code_col,
-                query_id_col=query_id_col, query_vector_col=query_vector_col,
-                vector_blocks=vector_blocks,
-            )
-            return exact_rerank(
-                cand, queries, rerank_vectors, k,
-                id_col=id_col, rerank_vector_col=rerank_vector_col,
-                query_id_col=query_id_col, query_vector_col=query_vector_col,
-            )
-
         spark = codes_df.sparkSession
         VB = vector_blocks or spark.sparkContext.defaultParallelism
-        bc = spark.sparkContext.broadcast((self.codebooks, self.rotation))
-        M, sub = self.n_subspaces, self.sub_dim
-
         v = codes_df.select(
             F.col(id_col).alias("id"),
             F.col(code_col).alias("__codes"),
@@ -420,55 +572,16 @@ class ProductQuantizer:
             F.col(query_id_col).alias("query_id"),
             F.col(query_vector_col).alias("__qv"),
         ).crossJoin(blocks)
-
-        out_schema = _arrow.topk_schema(
-            queries.schema[query_id_col].dataType, codes_df.schema[id_col].dataType
+        fetch = k * (oversample if rerank_vectors is not None else 1)
+        partials = cogroup_block_adc(
+            v, qrep, fetch, self,
+            queries.schema[query_id_col].dataType, codes_df.schema[id_col].dataType,
         )
-
-        def block_adc(vpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-            if vpdf.empty or qpdf.empty:
-                return pd.DataFrame({"query_id": [], "id": [], "distance": []})
-            books, rot = bc.value
-            codes = np.asarray([np.asarray(c) for c in vpdf["__codes"]])
-            ids = vpdf["id"].to_numpy()
-            if ids.dtype == object:
-                ids = ids.astype(str)
-            marange = np.arange(M)[None, :]
-            Qm = np.asarray(
-                [np.asarray(qv, dtype=np.float64) for qv in qpdf["__qv"]]
-            )
-            if rot is not None:
-                # per-row dgemv, exactly the former per-query `q @ rot`
-                Qm = np.stack([q @ rot for q in Qm])
-            # (nq, M, K) subspace tables for the whole group batch in one
-            # vectorized pass (bit-identical values, see _adc_tables)
-            tables = _adc_tables(books, Qm, M, sub)
-            out_q, out_id, out_d = [], [], []
-            for i, qid in enumerate(qpdf["query_id"]):
-                d = np.sqrt(np.sum(tables[i][marange, codes], axis=1))
-                dr = np.round(d, ROUND_DECIMALS)
-                # `> k > 0`: k=0 falls to the empty lexsort[:0] branch
-                # (the shortlist's empty-slice max would raise)
-                if len(d) > k > 0:
-                    part = np.argpartition(dr, k - 1)
-                    thresh = dr[part[:k]].max()
-                    cand = np.flatnonzero(dr <= thresh)
-                    cand = cand[np.lexsort((ids[cand], dr[cand]))][:k]
-                else:
-                    cand = np.lexsort((ids, dr))[:k]
-                out_q.extend([qid] * len(cand))
-                out_id.extend(ids[cand].tolist())
-                out_d.extend(d[cand].tolist())
-            return pd.DataFrame(
-                {"query_id": out_q, "id": out_id, "distance": out_d}
-            )
-
-        partials = (
-            v.groupBy("__blk")
-            .cogroup(qrep.groupBy("__blk"))
-            .applyInPandas(block_adc, out_schema)
+        return _top_candidates(
+            partials, fetch, k, queries, rerank_vectors,
+            id_col=id_col, rerank_vector_col=rerank_vector_col,
+            query_id_col=query_id_col, query_vector_col=query_vector_col,
         )
-        return topk_per_query(partials, k)
 
     # -------------------------------------------------------- persistence
 

@@ -582,7 +582,7 @@ class VectorDbSession:
 
         The queries are broadcast into ``partial_knn``, which streams the
         ``_candidates`` rows once (on the IVF path only the probed
-        clusters, the probes ranked here by ``IVFIndex._probes_from_rows``)
+        clusters, the probes ranked here by ``IVFIndex.probes_by_cluster``)
         and emits <= k rows per (query, batch) with the metadata (and
         vector) taken from the batch itself.  The driver keeps the first
         k of each query by (round(distance, 6), id) — the rounded key from
@@ -602,14 +602,9 @@ class VectorDbSession:
         rows, n_probe = self._candidates(
             k, filter, n_probe, search_recent, search_historical
         )
-        probes = None
-        if n_probe is not None:
-            by_cluster: dict[int, list[int]] = {}
-            for pos, cid in self._index._probes_from_rows(
-                list(enumerate(Q)), min(n_probe, self._index.n_clusters)
-            ):
-                by_cluster.setdefault(cid, []).append(pos)
-            probes = {c: np.asarray(p, dtype=np.int64) for c, p in by_cluster.items()}
+        probes = (
+            None if n_probe is None else self._index.probes_by_cluster(Q, n_probe)
+        )
         carry = ["metadata"] + (["vector"] if include_vectors else [])
         partials = partial_knn(
             rows, qids, Q, T.StringType(), k, probes=probes, carry=carry

@@ -3,7 +3,9 @@
 A null element would become NaN in the flat buffer and NaN distances
 silently reorder neighbours, so every kernel built on the boundary must
 fail loudly, naming the column, on a null vector, a null element, or a
-vector whose length differs from its batch's dim."""
+vector whose length differs from its batch's dim.  The ADC kernels
+likewise reject a PQ code outside [0, K), which the flat lookup-table
+gather would otherwise read from the wrong subspace or wrap."""
 
 import numpy as np
 import pyarrow as pa
@@ -11,6 +13,7 @@ import pytest
 
 from fabstir_vectordb_spark.operators import _arrow
 from fabstir_vectordb_spark.operators.ivf import IVFIndex
+from fabstir_vectordb_spark.operators.ivfpq import IVFPQIndex
 from fabstir_vectordb_spark.operators.knn import knn_bulk
 from fabstir_vectordb_spark.operators.pq import ProductQuantizer
 
@@ -63,3 +66,47 @@ def test_kernels_fail_loudly_on_bad_vectors(spark, op, what):
         op(_vectors(spark, BAD[what])).collect()
     msg = str(err.value)
     assert "ValueError: column '" in msg and what in msg
+
+
+K = 2  # codewords per subspace of the quantizer below
+
+
+def _pq():
+    return ProductQuantizer(2, K, DIM, np.arange(8.0).reshape(2, K, 2))
+
+
+def _codes(spark, bad_code):
+    rows = [(i, i % 2, [i % K, (i // 2) % K]) for i in range(12)]
+    rows.append((99, 0, [0, bad_code]))
+    # one partition: the bad row shares its Arrow batch with good rows
+    return spark.createDataFrame(
+        rows, "vec_id long, cluster_id int, pq_codes array<int>"
+    ).coalesce(1)
+
+
+def _queries(df):
+    return df.sparkSession.createDataFrame(
+        [(0, [0.0] * DIM)], "query_id long, vector array<double>"
+    )
+
+
+def _adc_knn(codes):
+    return _pq().adc_knn(codes, _queries(codes), 3)
+
+
+def _adc_knn_bulk(codes):
+    return _pq().adc_knn_bulk(codes, _queries(codes), 3, vector_blocks=1)
+
+
+def _ivfpq_search_bulk(codes):
+    ivf = IVFIndex(centroids=np.eye(2, DIM), id_col="vec_id", vector_col="vector")
+    return IVFPQIndex(ivf, _pq()).search_bulk(codes, _queries(codes), 3, n_probe=2)
+
+
+@pytest.mark.parametrize("code", [K, -1])
+@pytest.mark.parametrize("op", [_adc_knn, _adc_knn_bulk, _ivfpq_search_bulk])
+def test_adc_kernels_fail_loudly_on_out_of_range_codes(spark, op, code):
+    with pytest.raises(Exception) as err:
+        op(_codes(spark, code)).collect()
+    msg = str(err.value)
+    assert "ValueError: column '" in msg and f"code {code} outside [0, {K})" in msg

@@ -23,6 +23,21 @@ def encoded(idx, embeddings):
 
 
 @pytest.fixture(scope="module")
+def residual_idx(spark, embeddings):
+    return IVFPQIndex.fit(
+        embeddings, n_clusters=8, n_subspaces=8, n_centroids=16, seed=42,
+        residual=True,
+    )
+
+
+@pytest.fixture(scope="module")
+def residual_encoded(residual_idx, embeddings):
+    df = residual_idx.encode(embeddings).cache()
+    df.count()
+    return df
+
+
+@pytest.fixture(scope="module")
 def queries(embeddings):
     return embeddings.filter(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("vector")
@@ -105,11 +120,22 @@ def test_partial_probe_prunes(idx, encoded, queries):
     assert bad.count() == 0
 
 
-@pytest.mark.parametrize("rerank", [False, True])
-def test_cogroup_fallback_matches_broadcast(monkeypatch, idx, encoded, embeddings, queries, rerank):
+@pytest.mark.parametrize(
+    "rerank, residual",
+    [(False, False), (True, False), (False, True), (True, True)],
+    ids=["False", "True", "False-residual", "True-residual"],
+)
+def test_cogroup_fallback_matches_broadcast(request, monkeypatch, embeddings, queries, rerank, residual):
     """A query set over the broadcast byte cap takes the cogroup plan
-    (distributed probe selection); its rows equal the broadcast plan's."""
+    (distributed probe selection); its rows equal the broadcast plan's.
+    With residual codes the cogroup shifts each cluster's queries by its
+    centroid, the broadcast plan builds per-cluster LUTs: same rows."""
     import fabstir_vectordb_spark.operators.ivfpq as ivfpq_mod
+
+    prefix = "residual_" if residual else ""
+    idx = request.getfixturevalue(prefix + "idx")
+    encoded = request.getfixturevalue(prefix + "encoded")
+    assert idx.residual is residual
 
     def search():
         return _rows(
@@ -139,7 +165,7 @@ def test_cogroup_fallback_matches_broadcast(monkeypatch, idx, encoded, embedding
 def test_lazy_lut_build_matches_broadcast_luts(monkeypatch, idx, encoded, embeddings, queries, rerank):
     """Above the precomputed-LUT byte cap the broadcast search ships no
     tables and each scan task builds them itself; rows are identical."""
-    import fabstir_vectordb_spark.operators.ivfpq as ivfpq_mod
+    import fabstir_vectordb_spark.operators.pq as pq_mod
 
     def search():
         return _rows(
@@ -150,7 +176,7 @@ def test_lazy_lut_build_matches_broadcast_luts(monkeypatch, idx, encoded, embedd
         )
 
     precomputed = search()
-    monkeypatch.setattr(ivfpq_mod, "_MAX_PRECOMPUTED_LUT_BYTES", 0)
+    monkeypatch.setattr(pq_mod, "_MAX_PRECOMPUTED_LUT_BYTES", 0)
     lazy = search()
     assert len(precomputed) == 6 * 10
     assert lazy == precomputed

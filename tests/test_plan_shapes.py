@@ -676,12 +676,15 @@ def test_mg_frequent_items_pure_jvm_bounded_exchanges(spark):
     assert "Exchange SinglePartition" not in plan
 
 
-def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings):
-    """knn_bulk, IVF assign / search_bulk and IVFPQ encode run their
-    Python kernels through mapInArrow / applyInArrow: a plan that slides
-    back to the pandas boundary fails here."""
+def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings, monkeypatch):
+    """knn_bulk, IVF assign / search_bulk, PQ decode and the ADC searches,
+    IVFPQ encode and both IVFPQ search_bulk plans (broadcast, and the
+    cogroup fallback above the query byte cap) run their Python kernels
+    through mapInArrow / applyInArrow: a plan that slides back to the
+    pandas boundary fails here."""
     import numpy as np
 
+    import fabstir_vectordb_spark.operators.ivfpq as ivfpq_mod
     from fabstir_vectordb_spark.operators.ivf import IVFIndex
     from fabstir_vectordb_spark.operators.ivfpq import IVFPQIndex
     from fabstir_vectordb_spark.operators.knn import knn_bulk
@@ -695,14 +698,24 @@ def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings):
     rng = np.random.default_rng(0)
     ivf = IVFIndex(rng.normal(size=(4, dim)), "vec_id", "embedding")
     pq = ProductQuantizer(4, 8, dim, rng.normal(size=(4, 8, dim // 4)))
+    ivfpq = IVFPQIndex(ivf, pq)
+    codes = ivfpq.encode(emb)
     plans = {
         "knn_bulk": knn_bulk(
             emb, queries, 5, id_col="vec_id", vector_col="embedding"
         ),
         "assign": ivf.assign(emb),
         "search_bulk": ivf.search_bulk(ivf.assign(emb), queries, 5, n_probe=2),
-        "ivfpq_encode": IVFPQIndex(ivf, pq).encode(emb),
+        "ivfpq_encode": codes,
+        "pq_decode": pq.decode(codes),
+        "adc_knn": pq.adc_knn(codes, queries, 5),
+        "adc_knn_bulk": pq.adc_knn_bulk(codes, queries, 5),
+        "ivfpq_search_bulk": ivfpq.search_bulk(codes, queries, 5, n_probe=2),
     }
+    # room for one of the four query vectors: the cogroup fallback
+    monkeypatch.setattr(ivfpq_mod, "_MAX_BROADCAST_QUERY_BYTES", dim * 8)
+    plans["ivfpq_search_bulk_fallback"] = ivfpq.search_bulk(codes, queries, 5, n_probe=2)
+    assert "FlatMapCoGroupsInArrow" in _executed(plans["ivfpq_search_bulk_fallback"])
     for name, df in plans.items():
         plan = _executed(df)
         assert "InArrow" in plan, name

@@ -37,6 +37,28 @@ def test_encode_decode_roundtrip(pq, embeddings):
     assert mse < baseline * 0.9
 
 
+@pytest.mark.parametrize("rotated", [False, True])
+def test_decode_matches_per_row_reference(spark, rotated):
+    """decode's vectorized codebook gather (and the per-row rotation back
+    to the original space) returns exactly the per-row numpy
+    reconstruction."""
+    rng = np.random.default_rng(7)
+    books = rng.normal(size=(4, 8, 3))
+    rot = np.linalg.qr(rng.normal(size=(12, 12)))[0] if rotated else None
+    pq = ProductQuantizer(4, 8, 12, books, rotation=rot)
+    codes = rng.integers(0, 8, size=(50, 4))
+    df = spark.createDataFrame(
+        [(i, c.tolist()) for i, c in enumerate(codes)], "vec_id long, pq_codes array<int>"
+    )
+    got = {r["vec_id"]: r["decoded"] for r in pq.decode(df).collect()}
+    assert len(got) == len(codes)
+    for i, c in enumerate(codes):
+        want = np.concatenate([books[m][c[m]] for m in range(4)])
+        if rot is not None:
+            want = want @ rot.T
+        assert got[i] == want.tolist()
+
+
 def test_encode_is_nearest_centroid(pq, embeddings):
     rows = pq.encode(embeddings.limit(20)).select("embedding", "pq_codes").collect()
     for r in rows:
