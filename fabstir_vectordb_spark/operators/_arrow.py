@@ -1,9 +1,9 @@
 """The Arrow boundary of the Python vector kernels.
 
 The ``mapInArrow`` / ``applyInArrow`` kernels of the exact-kNN, IVF, PQ
-(encode, decode, ADC) and HNSW-search families read their input and
-build their output here, so the kernel bodies are plain numpy and the
-conversion rules live in one place:
+(encode, decode, ADC) and HNSW (build, insert, compaction, routers,
+search) families read their input and build their output here, so the
+kernel bodies are plain numpy and the conversion rules live in one place:
 a ``list<float|double>`` column is one flat buffer viewed as ``(n, dim)``
 (no per-row objects, no pandas); a bad vector raises instead of becoming
 NaN distances that silently reorder neighbours; output rows are positions
@@ -60,6 +60,13 @@ def lists(X: np.ndarray) -> pa.ListArray:
     """An ``(n, d)`` matrix as a list column: row i is list i."""
     offsets = np.arange(len(X) + 1, dtype=np.int32) * X.shape[1]
     return pa.ListArray.from_arrays(offsets, X.ravel())
+
+
+def ragged(lengths, values: pa.Array) -> pa.ListArray:
+    """A list column from per-row ``lengths`` over the flat ``values``:
+    row i is the next ``lengths[i]`` values."""
+    offsets = np.concatenate(([0], np.cumsum(lengths, dtype=np.int64)))
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values)
 
 
 def topk_schema(qid_type: T.DataType, id_type: T.DataType) -> T.StructType:

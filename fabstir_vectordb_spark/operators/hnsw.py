@@ -10,9 +10,11 @@ Spark-native shape instead:
 
 **Partition-local graphs.**  Vectors are hashed into ``num_graphs``
 disjoint graphs (``graph_id = pmod(xxhash64(id), G)``); each graph is
-built INDEPENDENTLY inside one ``applyInPandas`` task with the standard
+built INDEPENDENTLY inside one ``applyInArrow`` task with the standard
 HNSW insertion algorithm (Malkov & Yashunin 2016, IEEE TPAMI 40(4) —
-public literature).  A query runs the multi-layer beam search on every
+public literature).  Build, insert and compaction all grow a graph
+through one body, ``_grow_graph``, and search and insert read a stored
+graph through one parse, ``_parse_graph``.  A query runs the multi-layer beam search on every
 graph in parallel and the per-graph top-k partials are merged by the
 same O(Q·G·k) window ``topk_per_query`` used by the exact kernel — the
 identical partial-reduction shape as operators/knn.py, so the global
@@ -52,9 +54,10 @@ from __future__ import annotations
 
 import heapq
 import math
+from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -183,34 +186,12 @@ def _insert_node(i, V, levels, nbrs, entry, max_lvl, M, M0, ef_c, visited=None):
     return entry, max_lvl
 
 
-def _build_local_graph(V: np.ndarray, levels: np.ndarray, M: int, M0: int, ef_c: int):
-    """Build one in-memory HNSW graph over rows of V (insertion order =
-    row order).  Returns nbrs: pos -> [np.array(layer 0), ...] up to that
-    node's level.  Neighbor selection is closest-M (the reference's
-    simple selection; the diversity heuristic is a quality knob, not a
-    semantic)."""
-    n = len(V)
-    nbrs: list[list[np.ndarray]] = [
-        [np.empty(0, dtype=np.int64) for _ in range(int(levels[i]) + 1)] for i in range(n)
-    ]
-    if n == 0:
-        return nbrs, -1
-    entry, max_lvl = 0, int(levels[0])
-    visited = np.zeros(n, dtype=bool)  # shared scratch, reset per search
-    for i in range(1, n):
-        entry, max_lvl = _insert_node(
-            i, V, levels, nbrs, entry, max_lvl, M, M0, ef_c, visited
-        )
-    return nbrs, max_lvl
-
-
-def _entry_pos(levels: np.ndarray, ids: np.ndarray) -> int:
+def _entry_pos(levels: np.ndarray) -> int:
     """Entry point = max level, ties to min id (deterministic; the
     reference keeps the first max-level node, which under sorted-id
-    insertion is the same node)."""
-    top = int(levels.max())
-    at_top = np.flatnonzero(levels == top)
-    return int(at_top[np.argsort(ids[at_top], kind="stable")[0]])
+    insertion is the same node).  ``levels`` are in sorted-id order, so
+    that is the first max-level position."""
+    return int(np.argmax(levels))
 
 
 def _graph_schema(id_t) -> "T.StructType":
@@ -228,37 +209,124 @@ def _graph_schema(id_t) -> "T.StructType":
     )
 
 
-def _build_kernel(out_schema, M, M0, ef_c, m_l, seed):
-    """One-graph-per-task build kernel over (id, __v, deleted,
-    graph_id, __h) rows — shared by build() and compact_graph() so a
-    compacted graph is bit-identical to a fresh build of its
-    survivors."""
+class _Graph(NamedTuple):
+    """One graph's nodes in sorted-id order; node ``p`` is position ``p``
+    of every field."""
 
-    def build_graph(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        # sorted-id insertion: deterministic graphs (see module doc)
-        pdf = pdf.sort_values("id", kind="mergesort").reset_index(drop=True)
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["__v"]])
-        levels = _levels_from_hash(
-            pdf["__h"].to_numpy().astype(np.uint64), m_l, seed
-        )
-        nbrs, _ = _build_local_graph(V, levels, M, M0, ef_c)
-        ids = pdf["id"].to_numpy()
-        return pd.DataFrame(
-            {
-                "graph_id": pdf["graph_id"].to_numpy(),
-                "id": ids,
-                "level": levels,
-                "neighbors": [
-                    [ids[layer].tolist() for layer in node] for node in nbrs
-                ],
-                "vector": [v.tolist() for v in V],
-                "deleted": pdf["deleted"].to_numpy(),
-            }
-        )
+    ids: pa.Array  # the id column, Arrow type kept
+    keys: np.ndarray  # the ids as _arrow.sort_keys
+    V: np.ndarray
+    levels: np.ndarray
+    deleted: np.ndarray
+    nbrs: list  # p -> [layer-0 neighbor positions, layer-1 ..., ...]
 
-    return build_graph
+
+def _check_unique(keys: np.ndarray) -> None:
+    """Raise ``ValueError`` naming an id that the sorted ``keys`` hold
+    twice: a graph maps each id to one node, and the reference refuses a
+    duplicate insert (hnsw/core.rs:227-230)."""
+    dup = np.flatnonzero(keys[1:] == keys[:-1])
+    if len(dup):
+        raise ValueError(f"HNSW id {keys[dup[0]].item()!r} occurs twice in one graph")
+
+
+def _parse_graph(ga: pa.Table) -> _Graph:
+    """The ``_graph_schema`` rows of one graph, parsed for search and
+    insert.  Vectorized over the Arrow buffers: vectors through the
+    operators/_arrow.py flat-buffer view, neighbor lists as CSR (offsets
+    + one flat id buffer) sliced into per-layer position views, and the
+    id->position map as ONE searchsorted of the flat buffer into the
+    sorted ids.  Raises ``ValueError`` on a repeated id or a neighbor id
+    that is no node."""
+    ga = ga.combine_chunks()
+    keys = _arrow.sort_keys(ga.column("id"))
+    order = np.argsort(keys, kind="stable")
+    keys = keys[order]
+    _check_unique(keys)
+    n = len(keys)
+    outer = ga.column("neighbors").combine_chunks()
+    outer_l = outer.value_lengths().to_numpy(zero_copy_only=False)
+    inner = outer.flatten()
+    inner_l = inner.value_lengths().to_numpy(zero_copy_only=False)
+    flat = _arrow.sort_keys(inner.flatten())
+    # ids are unique; a neighbor id outside them is corruption
+    fpos = np.searchsorted(keys, flat)
+    bad = (fpos >= n) | (keys[np.minimum(fpos, n - 1)] != flat)
+    if bad.any():
+        raise ValueError(
+            f"HNSW neighbor id {flat[bad][0].item()!r} is not a node of its graph"
+        )
+    layer_arrays = np.split(fpos, np.cumsum(inner_l)[:-1])
+    outer_off = np.concatenate(([0], np.cumsum(outer_l)))
+    return _Graph(
+        ids=ga.column("id").combine_chunks().take(order),
+        keys=keys,
+        V=_arrow.matrix(ga.column("vector"), "vector")[order],
+        levels=ga.column("level").to_numpy(zero_copy_only=False)[order],
+        deleted=ga.column("deleted").to_numpy(zero_copy_only=False)[order],
+        # per-node layer lists, reordered to sorted-id positions
+        nbrs=[layer_arrays[outer_off[oi]:outer_off[oi + 1]] for oi in order],
+    )
+
+
+def _grow_graph(old: _Graph | None, new: pa.Table, gid: int,
+                M: int, M0: int, ef_c: int, m_l: float, seed: int) -> pa.Table:
+    """Insert the ``new`` rows (id, __v, deleted, __h) into graph ``gid``
+    and return all its ``_graph_schema`` rows — the one graph-growing
+    body behind build() and compact_graph() (``old`` None: an empty
+    graph) and insert() (``old`` the parsed existing graph).
+
+    New nodes go in after the old ones, in sorted-id order, at levels
+    drawn from their hash, so a graph is a pure function of its rows and
+    config (see module doc).  Neighbor selection is closest-M (the
+    reference's simple selection; the diversity heuristic is a quality
+    knob, not a semantic).  Raises ``ValueError`` naming an id the graph
+    would hold twice."""
+    new = new.combine_chunks()
+    keys = _arrow.sort_keys(new.column("id"))
+    order = np.argsort(keys, kind="stable")
+    keys = keys[order]
+    ids = new.column("id").combine_chunks().take(order)
+    V = _arrow.matrix(new.column("__v"), "__v")[order]
+    levels = _levels_from_hash(new.column("__h").to_numpy()[order], m_l, seed)
+    deleted = new.column("deleted").to_numpy(zero_copy_only=False)[order]
+    nbrs = [
+        [np.empty(0, dtype=np.int64) for _ in range(lvl + 1)]
+        for lvl in levels.tolist()
+    ]
+    if old is None:
+        entry, max_lvl, start = 0, int(levels[0]), 1
+    else:
+        entry = _entry_pos(old.levels)
+        max_lvl, start = int(old.levels[entry]), len(old.keys)
+        keys = np.concatenate([old.keys, keys])
+        ids = pa.concat_arrays([old.ids, ids])
+        V = np.vstack([old.V, V])
+        levels = np.concatenate([old.levels, levels])
+        deleted = np.concatenate([old.deleted, deleted])
+        nbrs = old.nbrs + nbrs
+    _check_unique(np.sort(keys))
+    visited = np.zeros(len(V), dtype=bool)  # shared scratch, reset per search
+    for i in range(start, len(V)):
+        entry, max_lvl = _insert_node(
+            i, V, levels, nbrs, entry, max_lvl, M, M0, ef_c, visited
+        )
+    # neighbors as CSR: one flat position buffer taken from the id column
+    layers = [layer for node in nbrs for layer in node]
+    neighbors = _arrow.ragged(
+        [len(node) for node in nbrs],
+        _arrow.ragged([len(l) for l in layers], ids.take(np.concatenate(layers))),
+    )
+    return pa.table(
+        {
+            "graph_id": pa.array(np.full(len(V), gid, dtype=np.int32)),
+            "id": ids,
+            "level": pa.array(levels, pa.int32()),
+            "neighbors": neighbors,
+            "vector": _arrow.lists(V),
+            "deleted": pa.array(deleted, pa.bool_()),
+        }
+    )
 
 
 class HNSWIndex:
@@ -319,14 +387,20 @@ class HNSWIndex:
         self.metric = metric
         self.m_l = 1.0 / math.log(max(self.M, 2))
 
-    def _route(self, router_ivf, prep: DataFrame,
+    def _route(self, prep: DataFrame,
                deleted_col: str | None = None) -> DataFrame:
-        """``prep`` + cluster_id, honoring multi-assignment: top-1 is
-        the plain broadcast nearest-centroid pass; assign_graphs > 1
-        emits one row per (vector, nearest-graph) pair via the probe
-        kernel — map-only (the vector rides through the kernel), no
-        join back, so spilling adds zero corpus shuffles.  A deleted
-        flag (rare at build time) is re-attached via a slim id join."""
+        """``prep`` + cluster_id, the nearest of the routers on the index,
+        honoring multi-assignment: top-1 is the plain broadcast
+        nearest-centroid pass; assign_graphs > 1 emits one row per
+        (vector, nearest-graph) pair via the probe kernel — map-only (the
+        vector rides through the kernel), no join back, so spilling adds
+        zero corpus shuffles.  A deleted flag (rare at build time) is
+        re-attached via a slim id join."""
+        from fabstir_vectordb_spark.operators.ivf import IVFIndex
+
+        router_ivf = IVFIndex(
+            centroids=self._routers, id_col=self.id_col, vector_col=self.vector_col
+        )
         if self.assign_graphs <= 1:
             return router_ivf.assign(prep)
         pairs = router_ivf.probe_pairs(
@@ -360,11 +434,41 @@ class HNSWIndex:
             ),
         )
 
+    def _hash_graph(self, G: int):
+        """graph_id of a hash layout: pmod(xxhash64(id), G)."""
+        return F.pmod(F.xxhash64(F.col(self.id_col)), F.lit(G)).cast("int")
+
+    def _new_rows(self, prep: DataFrame, graph_expr, deleted_col: str | None,
+                  id_t) -> DataFrame:
+        """The (id, __v, deleted, graph_id, __h) rows _grow_graph inserts.
+        Ids take the graph's id type; both hashes read them uncast, so
+        graph placement and levels do not depend on the graph."""
+        return prep.select(
+            F.col(self.id_col).cast(id_t).alias("id"),
+            F.col(self.vector_col).alias("__v"),
+            (F.col(deleted_col) if deleted_col else F.lit(False)).alias("deleted"),
+            graph_expr.alias("graph_id"),
+            F.xxhash64(F.col(self.id_col), F.lit(self.seed)).alias("__h"),
+        )
+
+    def _grow_from_empty(self):
+        """The groupBy(graph_id).applyInArrow kernel of build() and
+        compact_graph(): each graph grows from empty, so a compacted graph
+        is bit-identical to a fresh build of its survivors."""
+        cfg = (self.M, self.M0, self.ef_construction, self.m_l, self.seed)
+
+        def grow(key, new):
+            return _grow_graph(None, new, key[0].as_py(), *cfg)
+
+        return grow
+
     # -- construction ----------------------------------------------------
     def build(self, vectors: DataFrame, deleted_col: str | None = None) -> DataFrame:
-        """One applyInPandas task per graph; the only shuffle is the
-        graph-id hash partition.  Output columns: graph_id, id, level,
-        neighbors (array<array<id>>, layer-major), vector, deleted."""
+        """One applyInArrow task per graph, each running _grow_graph from
+        an empty graph; the only shuffle is the graph-id hash partition.
+        Output columns: graph_id, id, level, neighbors
+        (array<array<id>>, layer-major), vector, deleted.  An id that
+        occurs twice in one graph raises ``ValueError``."""
         spark = vectors.sparkSession
         if self.num_graphs:
             G = int(self.num_graphs)
@@ -379,7 +483,6 @@ class HNSWIndex:
             )
             self.num_graphs = G  # pin so insert() hashes consistently
         id_t = vectors.schema[self.id_col].dataType
-        M, M0, ef_c, m_l, seed = self.M, self.M0, self.ef_construction, self.m_l, self.seed
 
         prep = self._prep(vectors, self.vector_col)
         if self.partitioner == "kmeans":
@@ -389,7 +492,6 @@ class HNSWIndex:
             # size-capped sample like IVFIndex.fit; assignment is the
             # same broadcast nearest-centroid pass.
             from fabstir_vectordb_spark.operators._kmeans import kmeans_fit
-            from fabstir_vectordb_spark.operators.ivf import IVFIndex
 
             X = _arrow.collect_matrix(
                 prep.select(self.vector_col).orderBy(F.col(self.id_col)).limit(10_000),
@@ -401,26 +503,14 @@ class HNSWIndex:
                 X, G, iters=10, rng=np.random.RandomState(self.seed)
             )
             self._routers = np.asarray(cents, dtype=np.float64)
-            router_ivf = IVFIndex(
-                centroids=self._routers, id_col=self.id_col,
-                vector_col=self.vector_col,
-            )
             graph_expr = F.col("cluster_id").cast("int")
-            prep = self._route(router_ivf, prep, deleted_col)
+            prep = self._route(prep, deleted_col)
         else:
-            graph_expr = F.pmod(
-                F.xxhash64(F.col(self.id_col)), F.lit(G)
-            ).cast("int")
-        src = prep.select(
-            F.col(self.id_col).alias("id"),
-            F.col(self.vector_col).alias("__v"),
-            (F.col(deleted_col) if deleted_col else F.lit(False)).alias("deleted"),
-            graph_expr.alias("graph_id"),
-            F.xxhash64(F.col(self.id_col), F.lit(self.seed)).alias("__h"),
+            graph_expr = self._hash_graph(G)
+        src = self._new_rows(prep, graph_expr, deleted_col, id_t)
+        return src.groupBy("graph_id").applyInArrow(
+            self._grow_from_empty(), _graph_schema(id_t)
         )
-        out_schema = _graph_schema(id_t)
-        build_graph = _build_kernel(out_schema, M, M0, ef_c, m_l, seed)
-        return src.groupBy("graph_id").applyInPandas(build_graph, out_schema)
 
     def insert(
         self,
@@ -431,7 +521,10 @@ class HNSWIndex:
         """Incremental batch insert into existing graphs — the recent-
         delta mutation path (the reference inserts one vector at a time,
         hnsw/core.rs:226-396; here a batch cogroups with its graphs and
-        each task runs the same insertion loop for ONLY the new nodes).
+        each task runs _grow_graph over the parsed graph for ONLY the new
+        nodes; a graph with no old rows grows exactly as build() grows
+        it).  An id already in its graph raises ``ValueError``, as the
+        reference refuses a duplicate insert (hnsw/core.rs:227-230).
 
         Insertion order is existing-first then new-sorted-by-id, so
         ``insert(build(A), B)`` is a valid deterministic HNSW graph but
@@ -439,7 +532,6 @@ class HNSWIndex:
         contracts (dominance, recall, exactness at complete-graph
         config) hold identically — HNSW semantics never depended on
         insertion order.  Returns the updated graph DataFrame."""
-        spark = graph.sparkSession
         if self.num_graphs:
             # G is a constant of the index — carried on the instance
             # (build() pins it), no job needed
@@ -452,9 +544,9 @@ class HNSWIndex:
             self.num_graphs = G
         G = max(G, 1)
         id_t = graph.schema["id"].dataType
-        M, M0, ef_c, m_l, seed = self.M, self.M0, self.ef_construction, self.m_l, self.seed
 
         prep = self._prep(new_vectors, self.vector_col)
+        graph_expr = self._hash_graph(G)
         if self.partitioner == "kmeans":
             # route new vectors to their nearest-centroid graph so the
             # probe-pruned search keeps seeing cluster-coherent graphs.
@@ -464,112 +556,30 @@ class HNSWIndex:
             # than silently falling back to hash assignment — hash-placed
             # inserts land in cluster-incoherent graphs that a
             # probe_graphs<G search would systematically miss (ADVICE r5).
-            from fabstir_vectordb_spark.operators.ivf import IVFIndex
-
+            # An empty graph has nothing to route against yet: hash.
             if self._routers is None:
-                rows = self.graph_routers(graph).collect()
-                if rows:
-                    cents = np.zeros(
-                        (G, len(rows[0]["__router"])), dtype=np.float64
-                    )
-                    for r in rows:
-                        cents[int(r["graph_id"])] = np.asarray(
-                            r["__router"], dtype=np.float64
-                        )
-                    self._routers = cents
+                rt = self.graph_routers(graph).toArrow()
+                if rt.num_rows:
+                    R = _arrow.matrix(rt.column("__router"), "__router")
+                    self._routers = np.zeros((G, R.shape[1]), dtype=np.float64)
+                    self._routers[rt.column("graph_id").to_numpy()] = R
             if self._routers is not None:
-                prep = self._route(
-                    IVFIndex(
-                        centroids=self._routers, id_col=self.id_col,
-                        vector_col=self.vector_col,
-                    ),
-                    prep, deleted_col,
-                )
+                prep = self._route(prep, deleted_col)
                 graph_expr = F.col("cluster_id").cast("int")
-            else:  # empty graph: nothing to route against yet
-                graph_expr = F.pmod(
-                    F.xxhash64(F.col(self.id_col)), F.lit(G)
-                ).cast("int")
-        else:
-            graph_expr = F.pmod(
-                F.xxhash64(F.col(self.id_col)), F.lit(G)
-            ).cast("int")
-        new = prep.select(
-            F.col(self.id_col).alias("id"),
-            F.col(self.vector_col).alias("__v"),
-            (F.col(deleted_col) if deleted_col else F.lit(False)).alias("__del"),
-            graph_expr.alias("graph_id"),
-            F.xxhash64(F.col(self.id_col), F.lit(self.seed)).alias("__h"),
-        )
-        out_schema = graph.select(
-            "graph_id", "id", "level", "neighbors", "vector", "deleted"
-        ).schema
+        new = self._new_rows(prep, graph_expr, deleted_col, id_t)
+        cols = ["graph_id", "id", "level", "neighbors", "vector", "deleted"]
+        cfg = (self.M, self.M0, self.ef_construction, self.m_l, self.seed)
 
-        def merge_graph(key, gpdf: pd.DataFrame, npdf: pd.DataFrame) -> pd.DataFrame:
-            cols = ["graph_id", "id", "level", "neighbors", "vector", "deleted"]
-            if npdf.empty:
-                return gpdf[cols] if not gpdf.empty else pd.DataFrame(columns=cols)
-            gpdf = gpdf.sort_values("id", kind="mergesort").reset_index(drop=True)
-            npdf = npdf.sort_values("id", kind="mergesort").reset_index(drop=True)
-            n_old = len(gpdf)
-            V_old = (
-                np.asarray([np.asarray(v, dtype=np.float64) for v in gpdf["vector"]])
-                if n_old
-                else np.empty((0, 0))
-            )
-            V_new = np.asarray([np.asarray(v, dtype=np.float64) for v in npdf["__v"]])
-            V = np.vstack([V_old, V_new]) if n_old else V_new
-            ids_old = gpdf["id"].to_numpy() if n_old else np.empty(0, dtype=object)
-            pos = {v: i for i, v in enumerate(ids_old)}
-            levels_new = _levels_from_hash(
-                npdf["__h"].to_numpy().astype(np.uint64), m_l, seed
-            )
-            levels = np.concatenate(
-                [gpdf["level"].to_numpy() if n_old else np.empty(0, dtype=np.int64),
-                 levels_new]
-            ).astype(np.int64)
-            nbrs = [
-                [np.asarray([pos[x] for x in layer], dtype=np.int64) for layer in node]
-                for node in (gpdf["neighbors"] if n_old else [])
-            ] + [
-                [np.empty(0, dtype=np.int64) for _ in range(int(levels_new[j]) + 1)]
-                for j in range(len(npdf))
-            ]
-            if n_old:
-                entry = _entry_pos(levels[:n_old], ids_old)
-                max_lvl = int(levels[entry])
-                start = n_old
-            else:
-                entry, max_lvl = 0, int(levels[0])
-                start = 1
-            visited = np.zeros(len(V), dtype=bool)
-            for i in range(start, len(V)):
-                entry, max_lvl = _insert_node(
-                    i, V, levels, nbrs, entry, max_lvl, M, M0, ef_c, visited
-                )
-            ids_all = np.concatenate([ids_old, npdf["id"].to_numpy()])
-            deleted_all = np.concatenate(
-                [gpdf["deleted"].to_numpy() if n_old else np.empty(0, dtype=bool),
-                 npdf["__del"].to_numpy()]
-            )
-            gid = int(key[0])
-            return pd.DataFrame(
-                {
-                    "graph_id": np.full(len(V), gid, dtype=np.int32),
-                    "id": ids_all,
-                    "level": levels,
-                    "neighbors": [
-                        [ids_all[layer].tolist() for layer in node] for node in nbrs
-                    ],
-                    "vector": [v.tolist() for v in V],
-                    "deleted": deleted_all,
-                }
-            )
+        def merge_graph(key, ga: pa.Table, na: pa.Table) -> pa.Table:
+            if na.num_rows == 0:
+                return ga.select(cols)  # no new rows: the graph as it is
+            old = _parse_graph(ga) if ga.num_rows else None
+            return _grow_graph(old, na, key[0].as_py(), *cfg)
 
         return (
             graph.groupBy("graph_id")
             .cogroup(new.groupBy("graph_id"))
-            .applyInPandas(merge_graph, out_schema)
+            .applyInArrow(merge_graph, graph.select(cols).schema)
         )
 
     # -- search ----------------------------------------------------------
@@ -580,24 +590,23 @@ class HNSWIndex:
         per-graph mean vectors, computed in one pass over the graph
         table.  Compute once and pass to search_bulk(routers=...) when
         issuing many searches."""
-        spark = graph.sparkSession
-        if self._routers is not None:
-            return spark.createDataFrame(
-                [
-                    (int(i), [float(x) for x in c])
-                    for i, c in enumerate(self._routers)
-                ],
-                "graph_id int, __router array<double>",
-            )
         out_schema = "graph_id int, __router array<double>"
 
-        def mean_kernel(key, pdf):
-            V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["vector"]])
-            return pd.DataFrame(
-                {"graph_id": [int(key[0])], "__router": [V.mean(axis=0).tolist()]}
+        def table(gids, R):
+            return pa.table(
+                {"graph_id": pa.array(gids, pa.int32()), "__router": _arrow.lists(R)}
             )
 
-        return graph.groupBy("graph_id").applyInPandas(mean_kernel, out_schema)
+        if self._routers is not None:
+            return graph.sparkSession.createDataFrame(
+                table(np.arange(len(self._routers)), self._routers), out_schema
+            )
+
+        def router(key, ga):
+            V = _arrow.matrix(ga.column("vector"), "vector")
+            return table([key[0].as_py()], V.mean(axis=0, keepdims=True))
+
+        return graph.groupBy("graph_id").applyInArrow(router, out_schema)
 
     def compact_graph(
         self,
@@ -620,8 +629,9 @@ class HNSWIndex:
         holds identically on the compacted graph; graph membership is
         preserved (nodes keep their graph_id — no re-routing, so a
         kmeans-routed layout stays cluster-coherent); a rebuilt graph
-        is bit-identical to a fresh build of its survivors (shared
-        kernel, hash-derived levels).
+        is bit-identical to a fresh build of its survivors (both grow
+        each graph from empty through _grow_graph, and levels are
+        hash-derived).
 
         Cost shape at scale: one tiny per-graph aggregate (G rows to
         the driver) picks the rebuild set; only those graphs' live rows
@@ -654,13 +664,9 @@ class HNSWIndex:
                 F.xxhash64(F.col("id"), F.lit(self.seed)).alias("__h"),
             )
         )
-        id_t = graph.schema["id"].dataType
-        out_schema = _graph_schema(id_t)
-        kernel = _build_kernel(
-            out_schema, self.M, self.M0, self.ef_construction, self.m_l,
-            self.seed,
+        rebuilt = src.groupBy("graph_id").applyInArrow(
+            self._grow_from_empty(), _graph_schema(graph.schema["id"].dataType)
         )
-        rebuilt = src.groupBy("graph_id").applyInPandas(kernel, out_schema)
         return keep.unionByName(rebuilt)
 
     def search_bulk(
@@ -690,8 +696,6 @@ class HNSWIndex:
         per-query dominance contract holds at any R (pruning only LOSES
         candidates).  Default None = full fan-out, the exactness-hook
         configuration."""
-        import pyarrow as pa
-
         spark = graph.sparkSession
         ef = int(ef) if ef else max(64, k)
         k_i = int(k)
@@ -745,54 +749,20 @@ class HNSWIndex:
         )
         cosine = self.metric == "cosine"
 
-        def graph_topk(ga: "pa.Table", qa: "pa.Table") -> "pa.Table":
-            # The graph table is the heavy side of this cogroup, so its
-            # parse is vectorized over the Arrow buffers: vectors through
-            # the operators/_arrow.py flat-buffer view, neighbor lists as
-            # CSR (offsets + one flat id buffer) sliced into per-layer
-            # position views, and the id->position map as ONE
-            # searchsorted of the flat buffer into the sorted ids.
+        def graph_topk(ga: pa.Table, qa: pa.Table) -> pa.Table:
             if ga.num_rows == 0 or qa.num_rows == 0:
                 return pa.table({})  # a cogroup side may arrive with no columns
-            ga = ga.combine_chunks()
-            ids_raw = _arrow.sort_keys(ga.column("id"))
-            order = np.argsort(ids_raw, kind="stable")
-            ids = ids_raw[order]
-            n = len(ids)
-            V = _arrow.matrix(ga.column("vector"), "vector")[order]
-            levels = ga.column("level").to_numpy(zero_copy_only=False)[order]
-            deleted = ga.column("deleted").to_numpy(zero_copy_only=False)[order]
-            outer = ga.column("neighbors").combine_chunks()
-            outer_l = outer.value_lengths().to_numpy(zero_copy_only=False)
-            inner = outer.flatten()
-            inner_l = inner.value_lengths().to_numpy(zero_copy_only=False)
-            flat = _arrow.sort_keys(inner.flatten())
-            # ids are unique; a neighbor id outside them is corruption
-            fpos = np.searchsorted(ids, flat)
-            bad = (fpos >= n) | (ids[np.minimum(fpos, n - 1)] != flat)
-            if bad.any():
-                raise ValueError(
-                    f"HNSW neighbor id {flat[bad][0].item()!r} is not a node of its graph"
-                )
-            inner_off = np.concatenate(([0], np.cumsum(inner_l)))
-            outer_off = np.concatenate(([0], np.cumsum(outer_l)))
-            layer_arrays = [
-                fpos[inner_off[j]:inner_off[j + 1]]
-                for j in range(len(inner_l))
-            ]
-            # per-node layer lists, reordered to sorted-id positions
-            nbrs = [
-                layer_arrays[outer_off[oi]:outer_off[oi + 1]] for oi in order
-            ]
+            g = _parse_graph(ga)
+            V, nbrs, deleted = g.V, g.nbrs, g.deleted
             # cosine rides on L2 over unit vectors; norm-0 rows skipped
             # normalization in _prep, so they are detectable here and
             # get the exact kernel's 0-norm guard distance of 1.0
             zero_node = (
                 np.einsum("ij,ij->i", V, V) == 0.0 if cosine and V.size else None
             )
-            entry = _entry_pos(levels, ids)
-            max_lvl = int(levels[entry])
-            visited = np.zeros(n, dtype=bool)  # shared scratch, reset per beam
+            entry = _entry_pos(g.levels)
+            max_lvl = int(g.levels[entry])
+            visited = np.zeros(len(V), dtype=bool)  # shared scratch, reset per beam
 
             Qm = _arrow.matrix(qa.column("__qv"), "__qv")
             out_q, out_v, out_d = [], [], []
@@ -817,14 +787,14 @@ class HNSWIndex:
                         # mirrors the exact kernel exactly
                         d = 1.0 if (q_zero or zero_node[p]) else d * d / 2.0
                     out_q.append(qi)
-                    out_v.append(order[p])
+                    out_v.append(p)
                     out_d.append(d)
                     taken += 1
                     if taken >= k_i:
                         break
             return _arrow.topk_table(
                 qa.column("query_id"), np.asarray(out_q, dtype=np.int64),
-                ga.column("id"), np.asarray(out_v, dtype=np.int64), out_d,
+                g.ids, np.asarray(out_v, dtype=np.int64), out_d,
             )
 
         partials = (

@@ -472,8 +472,9 @@ def write_graph_stream(
         # at one of this batch's versions — the bare ".v{batch}" OR a
         # retry-suffixed ".v{batch}r{n}" (a prior retry of a half-written
         # batch publishes under an r-suffix; see below) — and all older
-        # versions were pruned, so re-running the insert would duplicate
-        # every id in the batch.  The batch is idempotent-complete — skip.
+        # versions were pruned, so re-running the insert would raise
+        # (HNSWIndex.insert refuses an id its graph already holds).  The
+        # batch is idempotent-complete — skip.
         if os.path.lexists(graph_path):
             real = os.path.realpath(graph_path)
             # realpath BOTH sides: an ancestor symlink anywhere in the

@@ -196,9 +196,11 @@ def test_tiny_graphs(spark):
     assert [r["id"] for r in sorted(res, key=lambda r: r["distance"])] == [1, 2]
 
 
-def test_unresolved_neighbor_id_fails_loudly(spark):
+@pytest.mark.parametrize("op", ["search_bulk", "insert"])
+def test_unresolved_neighbor_id_fails_loudly(spark, op):
     # a neighbor id that is no node of the graph must raise, never
-    # resolve to whichever node sorts next to it
+    # resolve to whichever node sorts next to it — on search and on
+    # insert alike, since both read a stored graph through one parse
     rng = np.random.default_rng(5)
     vec = spark.createDataFrame(
         [(i * 10, rng.normal(size=4).tolist()) for i in range(20)],
@@ -213,8 +215,139 @@ def test_unresolved_neighbor_id_fails_loudly(spark):
     node = next(r for r in rows if r["neighbors"] and r["neighbors"][0])
     node["neighbors"][0][0] = 15  # between the real ids 10 and 20
     bad = spark.createDataFrame(rows, g.schema)
+    new = spark.createDataFrame([(1000, [0.5] * 4)], "id long, vector array<double>")
+    run = {
+        "search_bulk": lambda: idx.search_bulk(bad, q, 3, ef=16),
+        "insert": lambda: idx.insert(bad, new),
+    }[op]
     with pytest.raises(Exception, match="neighbor id 15 is not a node"):
-        idx.search_bulk(bad, q, 3, ef=16).collect()
+        run().collect()
+
+
+def test_duplicate_ids_fail_loudly(spark):
+    # a graph maps each id to one node, and the reference refuses a
+    # duplicate insert (hnsw/core.rs:227-230): inserting an id its graph
+    # already holds, building from a repeated id, or searching a graph
+    # table read back with a repeated row raises, naming the id
+    rng = np.random.default_rng(5)
+    vec = spark.createDataFrame(
+        [(i, rng.normal(size=4).tolist()) for i in range(20)],
+        "id long, vector array<double>",
+    )
+    again = spark.createDataFrame([(3, [9.0] * 4)], "id long, vector array<double>")
+    q = spark.createDataFrame([(0, [9.0] * 4)], "query_id long, vector array<double>")
+    idx = HNSWIndex(M=4, M0=8, ef_construction=16, num_graphs=1,
+                    id_col="id", vector_col="vector")
+    g = idx.build(vec).cache()
+    with pytest.raises(Exception, match="HNSW id 3 occurs twice"):
+        idx.insert(g, again).collect()
+    with pytest.raises(Exception, match="HNSW id 3 occurs twice"):
+        idx.build(vec.unionByName(again)).collect()
+    rows = g.collect()
+    repeated = spark.createDataFrame(rows + [r for r in rows if r["id"] == 3], g.schema)
+    with pytest.raises(Exception, match="HNSW id 3 occurs twice"):
+        idx.search_bulk(repeated, q, 3, ef=16).collect()
+
+
+def _grow_reference(idx, old_rows, new_rows):
+    """Driver-side reference graphs: per graph, the old nodes in sorted-id
+    order, then the new ones inserted one by one in sorted-id order by the
+    _insert_node loop, levels drawn from their hash.  ``old_rows`` are
+    graph rows (graph_id, id, level, neighbors, vector, deleted);
+    ``new_rows`` are (graph_id, id, vector, deleted, hash)."""
+    from fabstir_vectordb_spark.operators.hnsw import _insert_node, _levels_from_hash
+
+    out = []
+    for gid in sorted({r[0] for r in old_rows} | {r[0] for r in new_rows}):
+        old = sorted((r for r in old_rows if r[0] == gid), key=lambda r: r[1])
+        new = sorted((r for r in new_rows if r[0] == gid), key=lambda r: r[1])
+        if not new:
+            out += old
+            continue
+        ids = [r[1] for r in old] + [r[1] for r in new]
+        pos = {x: i for i, x in enumerate(ids)}
+        V = np.array([r[4] for r in old] + [r[2] for r in new], dtype=np.float64)
+        new_levels = _levels_from_hash(
+            np.array([r[4] for r in new], dtype=np.int64), idx.m_l, idx.seed
+        ).tolist()
+        levels = [r[2] for r in old] + new_levels
+        nbrs = [
+            [np.array([pos[x] for x in layer], dtype=np.int64) for layer in r[3]]
+            for r in old
+        ] + [[np.empty(0, dtype=np.int64) for _ in range(lvl + 1)] for lvl in new_levels]
+        if old:
+            # entry point: the first (= min-id) node at the top level
+            max_lvl = max(levels[: len(old)])
+            entry, start = levels.index(max_lvl), len(old)
+        else:
+            entry, max_lvl, start = 0, levels[0], 1
+        for i in range(start, len(ids)):
+            entry, max_lvl = _insert_node(
+                i, V, np.array(levels), nbrs, entry, max_lvl,
+                idx.M, idx.M0, idx.ef_construction,
+            )
+        deleted = [r[5] for r in old] + [r[3] for r in new]
+        out += [
+            (gid, ids[i], levels[i], [[ids[p] for p in layer] for layer in nbrs[i]],
+             V[i].tolist(), deleted[i])
+            for i in range(len(ids))
+        ]
+    return sorted(out)
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
+def test_graphs_match_driver_reference(spark, id_type, metric):
+    # build(A), insert(build(A), B) and compact_graph come out bit for bit
+    # as the driver-side _insert_node loop; A leaves graph 2 empty, so the
+    # insert also grows a graph that has no old rows
+    G = 3
+    rng = np.random.default_rng(17)
+    key = (lambda i: 10**12 + 7 * i) if id_type == "long" else (lambda i: f"k{i * 37 % 101:03d}")
+    df = spark.createDataFrame(
+        [(key(i), rng.normal(size=5).tolist(), i % 4 == 0) for i in range(90)],
+        f"id {id_type}, vector array<double>, dead boolean",
+    )
+    idx = HNSWIndex(M=4, M0=8, ef_construction=12, num_graphs=G,
+                    id_col="id", vector_col="vector", metric=metric)
+    src = [
+        (r["gid"], r["id"], r["vector"], r["dead"], r["h"])
+        for r in idx._prep(df, "vector").select(
+            F.pmod(F.xxhash64("id"), F.lit(G)).cast("int").alias("gid"),
+            "id", "vector", "dead",
+            F.xxhash64("id", F.lit(idx.seed)).alias("h"),
+        ).collect()
+    ]
+    in_a = {r[1] for r in src if r[0] != 2 and r[4] % 3}
+    a = [r for r in src if r[1] in in_a]
+    b = [r for r in src if r[1] not in in_a]
+    assert a and b and {r[0] for r in b} >= {2}
+
+    def rows(graph):
+        return sorted(
+            (r["graph_id"], r["id"], r["level"], r["neighbors"], r["vector"], r["deleted"])
+            for r in graph.collect()
+        )
+
+    built = idx.build(df.filter(F.col("id").isin(list(in_a))), deleted_col="dead")
+    ref_built = _grow_reference(idx, [], a)
+    assert rows(built) == ref_built
+
+    grown = idx.insert(built, df.filter(~F.col("id").isin(list(in_a))), deleted_col="dead")
+    ref_grown = _grow_reference(idx, ref_built, b)
+    assert rows(grown) == ref_grown
+
+    compacted = idx.compact_graph(grown.cache(), min_deleted_fraction=0.01)
+    h = {r[1]: r[4] for r in src}
+    hot = {r[0] for r in ref_grown if r[5]}
+    ref_compacted = sorted(
+        [r for r in ref_grown if r[0] not in hot]
+        + _grow_reference(
+            idx, [],
+            [(r[0], r[1], r[4], False, h[r[1]]) for r in ref_grown if r[0] in hot and not r[5]],
+        )
+    )
+    assert rows(compacted) == ref_compacted
 
 
 def test_graph_stats_shape(vectors):

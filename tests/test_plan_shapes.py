@@ -678,13 +678,15 @@ def test_mg_frequent_items_pure_jvm_bounded_exchanges(spark):
 
 def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings, monkeypatch):
     """knn_bulk, IVF assign / search_bulk, PQ decode and the ADC searches,
-    IVFPQ encode and both IVFPQ search_bulk plans (broadcast, and the
-    cogroup fallback above the query byte cap) run their Python kernels
-    through mapInArrow / applyInArrow: a plan that slides back to the
-    pandas boundary fails here."""
+    IVFPQ encode, both IVFPQ search_bulk plans (broadcast, and the
+    cogroup fallback above the query byte cap), and the HNSW build,
+    insert, compaction and mean routers of a hash build run their Python
+    kernels through mapInArrow / applyInArrow: a plan that slides back to
+    the pandas boundary fails here."""
     import numpy as np
 
     import fabstir_vectordb_spark.operators.ivfpq as ivfpq_mod
+    from fabstir_vectordb_spark.operators.hnsw import HNSWIndex
     from fabstir_vectordb_spark.operators.ivf import IVFIndex
     from fabstir_vectordb_spark.operators.ivfpq import IVFPQIndex
     from fabstir_vectordb_spark.operators.knn import knn_bulk
@@ -716,8 +718,19 @@ def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings, monkeypatch)
     monkeypatch.setattr(ivfpq_mod, "_MAX_BROADCAST_QUERY_BYTES", dim * 8)
     plans["ivfpq_search_bulk_fallback"] = ivfpq.search_bulk(codes, queries, 5, n_probe=2)
     assert "FlatMapCoGroupsInArrow" in _executed(plans["ivfpq_search_bulk_fallback"])
+    hnsw = HNSWIndex(M=4, M0=8, ef_construction=8, num_graphs=2,
+                     id_col="vec_id", vector_col="embedding")
+    graph = hnsw.build(
+        emb.filter(F.col("vec_id") % 2 == 0).withColumn("dead", F.col("vec_id") % 3 == 0),
+        deleted_col="dead",
+    )
+    plans["hnsw_build"] = graph
+    plans["hnsw_insert"] = hnsw.insert(graph, emb.filter(F.col("vec_id") % 2 == 1))
+    plans["hnsw_compact_graph"] = hnsw.compact_graph(graph)
+    plans["hnsw_graph_routers"] = hnsw.graph_routers(graph)
     for name, df in plans.items():
         plan = _executed(df)
         assert "InArrow" in plan, name
         assert "MapInPandas" not in plan, name
+        assert "FlatMapGroupsInPandas" not in plan, name
         assert "FlatMapCoGroupsInPandas" not in plan, name
