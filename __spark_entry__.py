@@ -120,7 +120,7 @@ def q_knn_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     res = brute_force_knn(
         emb, _query_vectors(spark, sf_dir), K,
-        metric="l2", impl="kernel", id_col="vec_id", vector_col="embedding",
+        metric="l2", id_col="vec_id", vector_col="embedding",
     )
     return res.select(
         "query_id", "id", r6("distance").alias("distance")
@@ -132,7 +132,7 @@ def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     res = brute_force_knn(
         emb, _query_vectors(spark, sf_dir), K,
-        metric="cosine", impl="kernel", id_col="vec_id", vector_col="embedding",
+        metric="cosine", id_col="vec_id", vector_col="embedding",
     )
     return res.select(
         "query_id", "id", r6("distance").alias("distance")
@@ -144,7 +144,7 @@ def q_knn_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     res = brute_force_knn(
         emb, _query_vectors(spark, sf_dir), K,
-        metric="dot", impl="kernel", id_col="vec_id", vector_col="embedding",
+        metric="dot", id_col="vec_id", vector_col="embedding",
     )
     return res.select(
         "query_id", "id", r6(-F.col("distance")).alias("dot")
@@ -350,7 +350,7 @@ def q_search_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     res = brute_force_knn(
         emb, _query_vectors(spark, sf_dir), 50,
-        metric="l2", impl="kernel", id_col="vec_id", vector_col="embedding",
+        metric="l2", id_col="vec_id", vector_col="embedding",
     )
     scored = res.select(
         "query_id",
@@ -861,7 +861,7 @@ def q_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred = compile_filter({"label": {"$in": [1, 3, 5]}}, emb.schema)
     res = brute_force_knn(
         emb.filter(pred), _query_vectors(spark, sf_dir), K,
-        metric="l2", impl="kernel", id_col="vec_id", vector_col="embedding",
+        metric="l2", id_col="vec_id", vector_col="embedding",
     )
     return res.select("query_id", "id", r6("distance").alias("distance"))
 
@@ -938,7 +938,7 @@ def q_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = _ranked_by_query(idx.search(assigned, queries, K, n_probe=4))
     exact = _ranked_by_query(
         brute_force_knn(
-            assigned, queries, K, metric="l2", impl="kernel",
+            assigned, queries, K, metric="l2",
             id_col="vec_id", vector_col="embedding",
         )
     )
@@ -1815,7 +1815,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries = _query_vectors(spark, sf_dir)
     exact = brute_force_knn(
-        emb, queries, K, metric="l2", impl="kernel",
+        emb, queries, K, metric="l2",
         id_col="vec_id", vector_col="embedding",
     )
     lsh_idx = LSHIndex.fit(
@@ -1898,7 +1898,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("vec_id"), F.col("vector").alias("embedding")
     )
     exact_live = brute_force_knn(
-        live, queries, K, metric="l2", impl="kernel",
+        live, queries, K, metric="l2",
         id_col="vec_id", vector_col="embedding",
     )
     hc = spark.createDataFrame(
@@ -2132,7 +2132,7 @@ def _keyword_fusion_base(spark: SparkSession, sf_dir: str) -> dict:
     lex20 = with_rank(bm25_search(docs, queries, k=20, postings=post), depth=20).cache()
     knn20 = brute_force_knn(
         emb, vqueries, 20,
-        metric="cosine", impl="kernel", id_col="vec_id", vector_col="embedding",
+        metric="cosine", id_col="vec_id", vector_col="embedding",
     )
     sem20 = with_rank(
         knn20.select(
@@ -3169,7 +3169,7 @@ def q_media_embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("media_id").isin([f"ima_{i}" for i in range(4)])
     ).select(F.col("media_id").alias("query_id"), F.col("features").alias("vector"))
     res = brute_force_knn(
-        table, queries, K, metric="cosine", impl="kernel",
+        table, queries, K, metric="cosine",
         id_col="media_id", vector_col="features",
     )
     ranked = _ranked_by_query(res)
@@ -3341,7 +3341,7 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx.search_bulk(enc, queries, K, n_probe=2, oversample=4, rerank_vectors=emb)
     )
     exact_raw = brute_force_knn(
-        emb, queries, K, metric="l2", impl="kernel",
+        emb, queries, K, metric="l2",
         id_col="vec_id", vector_col="embedding",
     )
     exact = _ranked_by_query(exact_raw)
@@ -4047,7 +4047,7 @@ def q_merge_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     for pred, w in ((F.col("label") < 5, 0.7), (F.col("label") >= 5, 0.3)):
         res = brute_force_knn(
             emb.filter(pred), queries, 20,
-            metric="l2", impl="kernel", id_col="vec_id", vector_col="embedding",
+            metric="l2", id_col="vec_id", vector_col="embedding",
             query_rows=rows_q,
         )
         parts.append(
@@ -4138,7 +4138,7 @@ def q_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows_exp, rows_q = fut_exp.result(), fut_q.result()
     res = brute_force_knn(
-        emb, expanded, K, metric="l2", impl="kernel",
+        emb, expanded, K, metric="l2",
         id_col="vec_id", vector_col="embedding", query_id_col="eq_id",
         query_rows=rows_exp,
     )
@@ -4160,7 +4160,7 @@ def q_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cand = brute_force_knn(
         emb, qv, 20,
-        metric="l2", impl="kernel", id_col="vec_id", vector_col="embedding",
+        metric="l2", id_col="vec_id", vector_col="embedding",
         query_rows=rows_q,
     ).select(
         "query_id", "id",
@@ -4774,7 +4774,7 @@ def q_hybrid_merge_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = [
         brute_force_knn(
             emb.filter(pred), queries, K,
-            metric="l2", impl="kernel", id_col="vec_id", vector_col="embedding",
+            metric="l2", id_col="vec_id", vector_col="embedding",
             query_rows=rows_q,
         )
         for pred in (F.col("label") < 5, F.col("label") >= 5)
@@ -4934,7 +4934,7 @@ def q_pq_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = _ranked_by_query(
         brute_force_knn(
             emb, _query_vectors(spark, sf_dir), K,
-            metric="l2", impl="kernel", id_col="vec_id", vector_col="embedding",
+            metric="l2", id_col="vec_id", vector_col="embedding",
         )
     )
 

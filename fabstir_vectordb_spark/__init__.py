@@ -4,19 +4,23 @@ Spark-first (DataFrame/SQL/Catalyst/MLlib), plus the LLM-training-data
 pipeline operators (dedup, similarity search, text analysis, multimodal
 columns) such an engine needs at 100 TB scale.
 
-Design notes (vs the Rust reference at /root/reference):
+Design notes (vs the Rust reference, Fabstir/fabstir-vectordb):
 - One vectors table (id, vector, metadata, ts, deleted, cluster_id),
-  partitioned by cluster_id — not two pointer-chasing indices.  Recent vs
-  historical routing (reference src/hybrid/core.rs:357-417) becomes a `ts`
-  predicate; HNSW (src/hnsw/core.rs) is deliberately not ported — its
-  observable contract (approximate top-k, high recall) is served by IVF
-  partition pruning + a brute-force exact path.
+  partitioned by cluster_id.  Recent vs historical routing (reference
+  src/hybrid/core.rs:357-417) becomes a `ts` predicate.  IVF search is
+  partition pruning over that table; HNSW (src/hnsw/core.rs) is a graph
+  table of neighbour lists, built and searched per graph in Arrow kernels
+  (operators/hnsw.py).
 - Filters are compiled from the reference's MongoDB dialect
   (src/core/metadata_filter.rs) into Catalyst Column predicates and pushed
   BELOW ranking — exact, unlike the reference's k*3 oversampling
   (src/hybrid/core.rs:513-549).
-- All distance math is JVM-side column expressions (whole-stage codegen)
-  with an Arrow/numpy mapInPandas kernel for the bulk multi-query path.
+- Vector ranking runs in Arrow-batched numpy kernels (mapInArrow /
+  applyInArrow), one plan per query location: queries held on the
+  driver are broadcast into one map-only partial top-k pass
+  (operators/knn.py `partial_knn`), queries held in a DataFrame cogroup
+  with vector blocks.  Column-expression distances (functions/distance.py)
+  serve SQL and per-pair scoring.
 """
 
 __version__ = "0.1.0"

@@ -94,26 +94,6 @@ def similarity_score(distance: Column | str) -> Column:
     return F.lit(1.0) / (F.lit(1.0) + _c(distance))
 
 
-DISTANCE_EXPRS = {
-    "l2": l2_distance,
-    "euclidean": l2_distance,
-    "cosine": cosine_distance,
-    "angular": angular_distance,
-}
-
-SIMILARITY_EXPRS = {
-    "dot": dot,
-    "cosine": cosine_similarity,
-}
-
-
-def distance_expr(metric: str, a: Column | str, b: Column | str) -> Column:
-    try:
-        return DISTANCE_EXPRS[metric](a, b)
-    except KeyError:
-        raise ValueError(f"unknown distance metric {metric!r}; one of {sorted(DISTANCE_EXPRS)}")
-
-
 # --- scalar quantization (optional feature, vector_ops.rs:349-387) -----------
 
 def quantize_u8(a: Column | str, lo: Column | str, hi: Column | str) -> Column:

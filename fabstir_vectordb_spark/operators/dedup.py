@@ -672,7 +672,7 @@ def _embedding_near_dup_kernel(
     """Map-only exact all-pairs: broadcast the (small-side) matrix, each
     partition BLAS-multiplies its row block against the full matrix and
     emits only pairs over threshold — zero shuffle, no N^2 row
-    materialization.  Same small-side assumption as knn_kernel; the
+    materialization.  Same small-side assumption as brute_force_knn; the
     cluster method is the unbounded-N path."""
     import numpy as np
     import pandas as pd

@@ -179,7 +179,7 @@ def hybrid_retrieval(
     else:
         knn = brute_force_knn(
             vectors, vector_queries, depth,
-            metric="cosine", impl="kernel",
+            metric="cosine",
             id_col=vec_id_col, vector_col=vector_col,
             query_id_col=query_id_col, query_vector_col=query_vector_col,
         )

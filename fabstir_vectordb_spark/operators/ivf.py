@@ -12,19 +12,24 @@ Parity targets (reference):
                                       src/ivf/core.rs:50-60
 
 Spark-first shape: the "inverted lists" are a vectors table augmented
-with a ``cluster_id`` column (MLlib KMeans assignment) and written
-``partitionBy("cluster_id")``.  Search computes each query's n_probe
-nearest centroids driver-side (centroids are tiny), then scans ONLY the
-probed partitions: a ``cluster_id IN (...)`` predicate gives Catalyst
-partition pruning, and a broadcast (query, cluster) pair join restricts
-each query to exactly its own probe set — the reference's list-probing
-semantics, executed as a pruned scan.
+with a ``cluster_id`` column (nearest-centroid assignment) and written
+``partitionBy("cluster_id")``.  Search ranks each query's n_probe
+nearest centroids (centroids are tiny) and scans ONLY the probed
+partitions: a ``cluster_id IN (...)`` predicate gives Catalyst
+partition pruning, and each query is ranked against the rows of its own
+probe set only — the reference's list-probing semantics, executed as a
+pruned scan.  One plan per query location:
 
-The HNSW graph is deliberately NOT ported (pointer-chasing ⟂ BSP); its
-observable contract — approximate top-k with high recall — is served by
-this operator, with ``probe_all`` (n_probe = n_clusters) exactly equal
-to brute force, which is both the reference's own ground-truth trick and
-our oracle hook.
+- driver-held queries (``search``): the queries and their probe sets
+  are broadcast into ``knn.partial_knn``, one map-only Arrow pass over
+  the probed clusters, merged by ``topk_per_query``;
+- queries held in a DataFrame (``search_bulk``): ``probe_pairs`` ranks
+  the probes in a map-only Arrow pass and the probe rows cogroup with
+  the clustered table on cluster id.
+
+With ``n_probe = n_clusters`` both are exactly brute force, which is
+both the reference's own ground-truth trick and our oracle hook.  The
+HNSW graph index is a separate operator (operators/hnsw.py).
 
 Small-data mode: below ``min_training_size`` (reference: 10,
 src/hybrid/core.rs:262-269) no clustering happens and search degrades to
@@ -44,9 +49,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fabstir_vectordb_spark.functions import distance as D
 from fabstir_vectordb_spark.operators import _arrow
-from fabstir_vectordb_spark.operators.knn import brute_force_knn
+from fabstir_vectordb_spark.operators.knn import (
+    brute_force_knn,
+    check_metric,
+    cogroup_block_knn,
+    knn_bulk,
+    partial_knn,
+)
 from fabstir_vectordb_spark.operators.topk import topk_per_query
 
 DEFAULT_N_CLUSTERS = 256  # src/ivf/core.rs:50-60
@@ -188,32 +198,16 @@ class IVFIndex:
 
     # --------------------------------------------------------------- search
 
-    def _probes_from_rows(self, rows: list, n_probe: int) -> list[tuple]:
-        out = []
-        for r in rows:
-            q = np.asarray(r[1], dtype=np.float64)
-            for cid in _probe_order(self.centroids, q, n_probe):
-                out.append((r[0], int(cid)))
-        return out
-
     def probes_by_cluster(self, Q: np.ndarray, n_probe: int) -> dict[int, np.ndarray]:
-        """{cluster id: positions in ``Q`` of the queries probing it}, in
-        the ranking of ``_probes_from_rows``: the ``probes`` argument of
+        """{cluster id: positions in ``Q`` of the queries probing it}: each
+        query probes its ``n_probe`` nearest centroids in ``_probe_order``
+        (ivf/core.rs:645-656).  The ``probes`` argument of
         ``knn.partial_knn`` and ``pq.partial_adc``."""
         by_cluster: dict[int, list[int]] = {}
-        for pos, cid in self._probes_from_rows(
-            list(enumerate(Q)), min(n_probe, self.n_clusters)
-        ):
-            by_cluster.setdefault(cid, []).append(pos)
+        for pos, q in enumerate(Q):
+            for cid in _probe_order(self.centroids, q, n_probe):
+                by_cluster.setdefault(int(cid), []).append(pos)
         return {c: np.asarray(p, dtype=np.int64) for c, p in by_cluster.items()}
-
-    def probes_for(self, queries: DataFrame, n_probe: int, query_id_col="query_id",
-                   query_vector_col="vector") -> list[tuple]:
-        """Driver-side: rank centroids per query, take n_probe
-        (ivf/core.rs:645-656). Centroids are tiny — this is the same
-        'broadcast the small side' decision the reference hard-codes."""
-        rows = queries.select(query_id_col, query_vector_col).collect()
-        return self._probes_from_rows(rows, n_probe)
 
     def search(
         self,
@@ -228,9 +222,11 @@ class IVFIndex:
     ) -> DataFrame:
         """Probe n_probe clusters per query, exact top-k within the probe set.
 
-        Plan shape: `cluster_id IN (union probes)` prunes partitions at the
-        scan, then a broadcast hash join on (cluster_id) fans each surviving
-        row out only to the queries that probed its cluster.
+        Plan shape: the queries are collected once; their probe sets
+        (``probes_by_cluster``) and vectors are broadcast into
+        ``partial_knn``, whose `cluster_id IN (union probes)` prunes
+        partitions at the scan and whose kernel ranks each row only
+        against the queries that probed its cluster.
         """
         if self.centroids is None:
             # brute-force mode (below training threshold)
@@ -239,41 +235,23 @@ class IVFIndex:
                 id_col=self.id_col, vector_col=self.vector_col,
                 query_id_col=query_id_col, query_vector_col=query_vector_col,
             )
-        n_probe = min(n_probe, self.n_clusters)
-        spark = vectors_with_cluster.sparkSession
-        # ONE query-set collect serves both the probe ranking and the
-        # broadcast (query, cluster, vector) table
+        check_metric(metric)
         qrows = queries.select(query_id_col, query_vector_col).collect()
-        pairs = self._probes_from_rows(qrows, n_probe)
-        probe_union = sorted({cid for _, cid in pairs})
-
-        # NOTE (r11 optimization round): an attach-vectors-by-in-plan-join
-        # variant (createDataFrame of (qid, cid) pairs only, broadcast
-        # join against `queries` for the vectors) was measured 1.26x
-        # SLOWER in an interleaved A/B at sf0.1 — the join adds a scan +
-        # join stage inside the broadcast build that costs more than
-        # re-serializing the (tiny, <= Q) query vectors through
-        # createDataFrame.  Kept as the direct local relation.
-        qvecs = {r[0]: r[1] for r in qrows}
-        probes = spark.createDataFrame(
-            [(qid, cid, qvecs[qid]) for qid, cid in pairs],
-            schema=queries.select(
-                F.col(query_id_col).alias("query_id"),
-                F.lit(0).alias("cluster_id"),
-                F.col(query_vector_col).alias("__qvec"),
-            ).schema,
+        Q = np.asarray([r[1] for r in qrows], dtype=np.float64)
+        partials = partial_knn(
+            vectors_with_cluster.select(
+                self.id_col, self.vector_col, F.col(cluster_col).alias("cluster_id")
+            ),
+            [r[0] for r in qrows],
+            Q,
+            queries.schema[query_id_col].dataType,
+            k,
+            metric,
+            id_col=self.id_col,
+            vector_col=self.vector_col,
+            probes=self.probes_by_cluster(Q, n_probe),
         )
-        pruned = vectors_with_cluster.filter(F.col(cluster_col).isin(probe_union))
-        joined = pruned.join(
-            F.broadcast(probes),
-            pruned[cluster_col] == probes["cluster_id"],
-            "inner",
-        )
-        dist = D.distance_expr(metric, F.col(self.vector_col), F.col("__qvec"))
-        scored = joined.select(
-            "query_id", F.col(self.id_col).alias("id"), dist.alias("distance")
-        )
-        return topk_per_query(scored, k)
+        return topk_per_query(partials, k)
 
     def search_bulk(
         self,
@@ -306,11 +284,11 @@ class IVFIndex:
         for each query of a batch and emits the n_probe nearest as
         (query, cluster) rows — distributed probe selection with the
         exact ranking arithmetic of the driver path
-        (``_probes_from_rows``).  The probe table (Q x
-        n_probe rows) then COGROUPS with the clustered table on
-        cluster_id, and each cluster runs one vectorized GEMM kernel
-        emitting <= k rows per (query, cluster) — the same block-partial
-        shape as knn_bulk, with the IVF cluster as the block.  (Both a
+        (``probes_by_cluster``; both rank with ``_probe_order``).  The
+        probe table (Q x n_probe rows) then COGROUPS with the clustered
+        table on cluster_id, and each cluster runs one vectorized GEMM
+        kernel emitting <= k rows per (query, cluster) — the same
+        block-partial shape as knn_bulk, with the IVF cluster as the block.  (Both a
         plain join + distance expression and a crossJoin + window over
         centroids leave the distance in interpreted higher-order
         functions — HOFs never enter whole-stage codegen — which
@@ -320,8 +298,7 @@ class IVFIndex:
         At n_probe = n_clusters this is exactly brute force — the same
         oracle hook as ``search``.
         """
-        from fabstir_vectordb_spark.operators.knn import cogroup_block_knn, knn_bulk
-
+        check_metric(metric)
         if self.centroids is None:
             return knn_bulk(
                 vectors_with_cluster, queries, k, metric=metric,
@@ -368,8 +345,8 @@ class IVFIndex:
         """Distributed probe selection: (query_id, __blk, __qv) rows, one
         per probed cluster — a map-only Arrow kernel over the broadcast
         centroids with the exact ranking order of the driver path
-        (``_probes_from_rows``).  Shared by ``search_bulk`` and the
-        IVFPQ composition (operators/ivfpq.py)."""
+        (``probes_by_cluster``; both rank with ``_probe_order``).  Shared
+        by ``search_bulk`` and the IVFPQ composition (operators/ivfpq.py)."""
         if self.centroids is None:
             raise ValueError(
                 "index is untrained (brute-force mode): no centroids to probe"

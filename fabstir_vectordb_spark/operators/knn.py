@@ -7,26 +7,24 @@ search path (the reference's "HNSW-only mode" below the IVF training
 threshold, src/hybrid/core.rs:262-269) and the correctness oracle for the
 approximate IVF path.
 
-Two physical strategies, same semantics:
+Two plans, one per query location, the same Arrow-batched numpy kernel
+(``_batch_topk_rows``) under both:
 
-``impl="expr"`` — vectors ⋈ broadcast(queries) cross join, distance as a
-whole-stage-codegen column expression, windowed top-k.  Simple, fully
-declarative; the cross-join output is Q*N rows, so use it when Q is tiny
-or a metadata pre-filter makes N small.
+Driver-held queries (``brute_force_knn``, ``IVFIndex.search``, the
+session's point searches): ``partial_knn`` broadcasts the query matrix
+into one map-only ``mapInArrow`` pass.  Each input batch computes
+distances for all queries with BLAS and emits only its top-k per query
+(a map-side partial reduction — no Q*N shuffle); a final window over
+the Q * batches * k partial rows (``topk_per_query``) or a sort on the
+driver picks the exact global top-k.  With ``probes`` the pass reads
+only the probed IVF clusters and ranks each query against its own.
 
-``impl="kernel"`` — Arrow-batched numpy kernel via ``mapInArrow``: each
-input batch computes distances for all queries with BLAS and emits only
-its top-k per query (a map-side partial reduction — no Q*N shuffle).  A
-final window over the Q * batches * k partial rows picks the exact global
-top-k.  This is the 100 TB path: the only shuffle is the tiny
-partial-result set.  The partial pass is ``partial_knn``, the one kernel
-body for driver-held queries: ``knn_kernel`` merges it with
-``topk_per_query``, and the session's point searches (session.py) run it
-over the probed clusters of an IVF table with the metadata carried along
-and merge it on the driver, with no exchange at all.
+Queries held in a DataFrame (``knn_bulk``, ``IVFIndex.search_bulk``):
+``cogroup_block_knn`` cogroups vector blocks with the query rows, so
+the query set is never collected.
 
-Both strategies rank by (round(distance, 6), id) — see operators/topk.py
-for why that makes results deterministic across engines.
+Both rank by (round(distance, 6), id) — see operators/topk.py for why
+that makes results deterministic across engines.
 """
 
 from __future__ import annotations
@@ -45,6 +43,14 @@ from fabstir_vectordb_spark.operators import _arrow
 from fabstir_vectordb_spark.operators.topk import ROUND_DECIMALS, topk_per_query
 
 _METRICS = ("l2", "cosine", "dot")
+
+
+def check_metric(metric: str) -> None:
+    """The one metric check of the kernel searches, run on the driver
+    before any plan or job: a metric ``_batch_topk_rows`` cannot rank
+    fails here, not inside a Python task."""
+    if metric not in _METRICS:
+        raise ValueError(f"unknown metric {metric!r}; one of {_METRICS}")
 
 
 def _distance_column(metric: str, a, b) -> Column:
@@ -172,31 +178,6 @@ def _batch_topk_rows(
     return np.concatenate(out_q), np.concatenate(out_v), np.concatenate(out_d)
 
 
-def knn_join(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int,
-    metric: str = "l2",
-    id_col: str = "id",
-    vector_col: str = "vector",
-    query_id_col: str = "query_id",
-    query_vector_col: str = "vector",
-) -> DataFrame:
-    """Declarative cross-join kNN (impl="expr")."""
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vector_col).alias("__qvec"),
-    )
-    joined = vectors.crossJoin(F.broadcast(q))
-    dist = _distance_column(metric, F.col(vector_col), F.col("__qvec"))
-    scored = joined.select(
-        "query_id",
-        F.col(id_col).alias("id"),
-        dist.alias("distance"),
-    )
-    return topk_per_query(scored, k)
-
-
 def partial_knn(
     vectors: DataFrame,
     qids: list,
@@ -225,8 +206,7 @@ def partial_knn(
     re-attaches them.
 
     Output: (query_id, id, distance, *carry)."""
-    if metric not in _METRICS:
-        raise ValueError(f"unknown metric {metric!r}; one of {_METRICS}")
+    check_metric(metric)
     bc = vectors.sparkSession.sparkContext.broadcast(
         (pa.array(qids, to_arrow_type(qid_type)), Q, probes)
     )
@@ -297,51 +277,6 @@ def _probed_topk_rows(
     return np.concatenate(out_q), np.concatenate(out_v), np.concatenate(out_d)
 
 
-def knn_kernel(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int,
-    metric: str = "l2",
-    id_col: str = "id",
-    vector_col: str = "vector",
-    query_id_col: str = "query_id",
-    query_vector_col: str = "vector",
-    query_rows: list | None = None,
-) -> DataFrame:
-    """Partial-reduction numpy kNN (impl="kernel"): ``partial_knn`` merged
-    by ``topk_per_query``.
-
-    Queries are collected to the driver (they are the small side — the
-    same assumption the expr path's broadcast makes) and broadcast to the
-    kernel.  ``query_rows`` optionally supplies that collect's result
-    (rows of (query_id, vector), the exact shape
-    `queries.select(query_id_col, query_vector_col)` yields): a caller
-    constructing several kernel searches can run the collects
-    concurrently (guide §2.6 — overlap independent driver jobs) instead
-    of paying one sequential driver job per search.
-    """
-    if metric not in _METRICS:
-        raise ValueError(f"unknown metric {metric!r}; one of {_METRICS}")
-    qrows = (
-        query_rows
-        if query_rows is not None
-        else queries.select(query_id_col, query_vector_col).collect()
-    )
-    if not qrows:
-        raise ValueError("empty query set")
-    partials = partial_knn(
-        vectors,
-        [r[0] for r in qrows],
-        np.asarray([r[1] for r in qrows], dtype=np.float64),
-        queries.schema[query_id_col].dataType,
-        k,
-        metric,
-        id_col=id_col,
-        vector_col=vector_col,
-    )
-    return topk_per_query(partials, k)
-
-
 def knn_bulk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -358,8 +293,8 @@ def knn_bulk(
     parallel_search, src/hybrid/search_integration.rs:125-211, whose
     clients loop per query; this is the set-at-a-time version).
 
-    Block-parallel shape (the two-big-tables path the kernel/expr
-    variants lack): vectors are hashed into `vector_blocks` blocks and
+    Block-parallel shape (the two-big-tables path ``brute_force_knn``
+    lacks): vectors are hashed into `vector_blocks` blocks and
     shuffled ONCE; the query table is replicated per block (Q x VB rows
     — queries are usually the smaller side, and VB is a knob).  A
     cogrouped applyInArrow computes each (vector-block x all-queries)
@@ -369,8 +304,7 @@ def knn_bulk(
 
     Output: (query_id, id, distance) ascending, k rows per query.
     """
-    if metric not in _METRICS:
-        raise ValueError(f"unknown metric {metric!r}; one of {_METRICS}")
+    check_metric(metric)
     spark = vectors.sparkSession
     if vector_blocks is not None:
         VB = vector_blocks
@@ -446,19 +380,45 @@ def brute_force_knn(
     queries: DataFrame,
     k: int,
     metric: str = "l2",
-    impl: str = "kernel",
-    **cols,
+    *,
+    id_col: str = "id",
+    vector_col: str = "vector",
+    query_id_col: str = "query_id",
+    query_vector_col: str = "vector",
+    query_rows: list | None = None,
 ) -> DataFrame:
-    """Exact top-k similarity join.  Output: (query_id, id, distance) asc.
+    """Exact top-k similarity join: ``partial_knn`` merged by
+    ``topk_per_query``.  Output: (query_id, id, distance) asc.
+
+    Queries are collected to the driver (they are the small side) and
+    broadcast to the kernel.  ``query_rows`` optionally supplies that
+    collect's result (rows of (query_id, vector), the exact shape
+    `queries.select(query_id_col, query_vector_col)` yields): a caller
+    constructing several searches can run the collects concurrently
+    (overlap independent driver jobs) instead of paying one sequential
+    driver job per search.
 
     Apply metadata predicates to ``vectors`` BEFORE calling — the filter
     then reaches the parquet scan (pushdown), which supersedes the
     reference's k*3 oversampling post-filter (src/hybrid/core.rs:513-549).
     """
-    fn = {"kernel": knn_kernel, "expr": knn_join}.get(impl)
-    if fn is None:
-        raise ValueError(f"unknown impl {impl!r}")
-    return fn(vectors, queries, k, metric=metric, **cols)
+    check_metric(metric)
+    qrows = (
+        query_rows
+        if query_rows is not None
+        else queries.select(query_id_col, query_vector_col).collect()
+    )
+    partials = partial_knn(
+        vectors,
+        [r[0] for r in qrows],
+        np.asarray([r[1] for r in qrows], dtype=np.float64),
+        queries.schema[query_id_col].dataType,
+        k,
+        metric,
+        id_col=id_col,
+        vector_col=vector_col,
+    )
+    return topk_per_query(partials, k)
 
 
 def range_search(

@@ -106,7 +106,7 @@ def test_rerank_full_oversample_equals_exact(spark):
     exact = sorted(
         (r["query_id"], r["id"], round(r["distance"], 6))
         for r in brute_force_knn(
-            df, queries, 10, metric="l2", impl="kernel",
+            df, queries, 10, metric="l2",
             id_col="vec_id", vector_col="embedding",
         ).collect()
     )
@@ -130,7 +130,7 @@ def test_recall_floor_on_clustered_data(spark):
     )
     got = sk.hamming_knn(sigs, queries, 10, rerank_vectors=df, oversample=8)
     exact = brute_force_knn(
-        df, queries, 10, metric="l2", impl="kernel",
+        df, queries, 10, metric="l2",
         id_col="vec_id", vector_col="embedding",
     )
     hit = got.select("query_id", "id").join(
@@ -210,7 +210,7 @@ def test_k_zero_harmonized_across_ann_kernels(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("vector")
     )
     assert brute_force_knn(
-        df, q, 0, id_col="vec_id", vector_col="embedding", impl="kernel"
+        df, q, 0, id_col="vec_id", vector_col="embedding"
     ).count() == 0
     assert knn_bulk(
         df, q, 0, id_col="vec_id", vector_col="embedding"

@@ -664,7 +664,7 @@ def test_multi_assignment_recovers_routed_recall(spark):
         F.col("id").alias("query_id"), F.col("vector").alias("vector")
     )
     exact = brute_force_knn(
-        vec, q, 10, id_col="id", vector_col="vector", impl="kernel"
+        vec, q, 10, id_col="id", vector_col="vector"
     )
     truth = {}
     for r in exact.collect():

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fabstir_vectordb_spark.operators.ivf import IVFIndex, read_clustered, write_clustered
-from fabstir_vectordb_spark.operators.knn import brute_force_knn
+from fabstir_vectordb_spark.operators.knn import brute_force_knn, knn_bulk
 
 K = 10
 N_CLUSTERS = 8
@@ -100,23 +100,72 @@ def test_retrain_changes_k(index, embeddings):
     assert idx2.n_clusters == 4
 
 
-def test_search_bulk_matches_search(spark):
-    import numpy as np
-    from fabstir_vectordb_spark.operators.ivf import IVFIndex
-
+@pytest.mark.parametrize("metric", ["l2", "cosine", "dot"])
+def test_search_bulk_matches_search(spark, metric):
     rows = [(i, [float((i * 7) % 13), float((i * 3) % 5), float(i % 2)]) for i in range(80)]
+    # id 80 repeats the vector of query 3: an exact distance tie for it
+    rows.append((80, rows[3][1]))
     vecs = spark.createDataFrame(rows, "id bigint, vector array<float>")
     idx = IVFIndex.fit(vecs, n_clusters=4, seed=1)
     assigned = idx.assign(vecs).cache()
-    queries = vecs.filter("id < 10").selectExpr("id as query_id", "vector")
+    queries = vecs.filter("id < 10").selectExpr("concat('q', id) as query_id", "vector")
 
     key = lambda r: (r["query_id"], r["id"], round(r["distance"], 6))
     for n_probe in (2, 4):
-        bulk = idx.search_bulk(assigned, queries, 5, n_probe=n_probe)
-        point = idx.search(assigned, queries, 5, n_probe=n_probe)
+        bulk = idx.search_bulk(assigned, queries, 5, n_probe=n_probe, metric=metric)
+        point = idx.search(assigned, queries, 5, n_probe=n_probe, metric=metric)
         assert sorted(map(key, bulk.collect())) == sorted(map(key, point.collect()))
     # sub-block splitting (the giant-cluster memory knob) must not change
     # results: top-k over block partials is exact for any partitioning
-    split = idx.search_bulk(assigned, queries, 5, n_probe=4, sub_blocks=3)
-    point = idx.search(assigned, queries, 5, n_probe=4)
-    assert sorted(map(key, split.collect())) == sorted(map(key, point.collect()))
+    split = idx.search_bulk(assigned, queries, 5, n_probe=4, sub_blocks=3, metric=metric)
+    point = idx.search(assigned, queries, 5, n_probe=4, metric=metric)
+    got = sorted(map(key, point.collect()))
+    assert sorted(map(key, split.collect())) == got
+    # probing every cluster is brute force, ties and string ids included
+    exact = brute_force_knn(assigned, queries, 5, metric=metric)
+    assert got == sorted(map(key, exact.collect()))
+
+
+def _entry_points(index, assigned):
+    untrained = IVFIndex(None, "vec_id", "embedding")
+    cols = dict(id_col="vec_id", vector_col="embedding")
+    return {
+        "search": lambda q, m: index.search(assigned, q, K, n_probe=2, metric=m),
+        "search_untrained": lambda q, m: untrained.search(assigned, q, K, metric=m),
+        "search_bulk": lambda q, m: index.search_bulk(assigned, q, K, n_probe=2, metric=m),
+        "brute_force_knn": lambda q, m: brute_force_knn(assigned, q, K, metric=m, **cols),
+        "knn_bulk": lambda q, m: knn_bulk(assigned, q, K, metric=m, **cols),
+    }
+
+
+@pytest.mark.parametrize("entry", ["search", "search_bulk", "brute_force_knn", "knn_bulk"])
+@pytest.mark.parametrize("metric", ["angular", "euclidean"])
+def test_unknown_metric_fails_on_the_driver(spark, index, assigned, queries, entry, metric):
+    """A metric the kernels cannot rank raises at construction, before the
+    query set is collected or any plan runs."""
+    fn = _entry_points(index, assigned)[entry]
+    sc = spark.sparkContext
+    group = f"bad_metric_{entry}_{metric}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(
+            ValueError, match=rf"unknown metric '{metric}'; one of \('l2', 'cosine', 'dot'\)"
+        ):
+            fn(queries, metric)
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+@pytest.mark.parametrize(
+    "entry", ["search", "search_untrained", "search_bulk", "brute_force_knn", "knn_bulk"]
+)
+def test_zero_queries_give_zero_rows(spark, index, assigned, entry):
+    empty = spark.createDataFrame([], "query_id string, vector array<float>")
+    out = _entry_points(index, assigned)[entry](empty, "l2")
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("query_id", "string"),
+        ("id", assigned.schema["vec_id"].dataType.simpleString()),
+        ("distance", "double"),
+    ]
+    assert out.collect() == []

@@ -82,7 +82,7 @@ def test_partial_probe_dominance(idx, encoded, embeddings, queries):
         encoded, queries, k, n_probe=2, oversample=4, rerank_vectors=embeddings
     )
     exact = brute_force_knn(
-        embeddings, queries, k, metric="l2", impl="kernel",
+        embeddings, queries, k, metric="l2",
         id_col="vec_id", vector_col="embedding",
     )
 
@@ -429,7 +429,7 @@ def test_fit_recall_target_overrides_and_threads_defaults(spark, embeddings):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("vector")
     )
     exact = brute_force_knn(
-        embeddings, q, 10, metric="l2", impl="kernel",
+        embeddings, q, 10, metric="l2",
         id_col="vec_id", vector_col="embedding",
     )
     got = tuned.search_bulk(enc, q, 10, rerank_vectors=embeddings)

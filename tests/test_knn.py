@@ -1,4 +1,5 @@
-"""kNN correctness: kernel impl == expr impl == numpy oracle."""
+"""kNN correctness: the partial top-k kernel (``brute_force_knn``) and the
+bulk cogroup kernel (``knn_bulk``) against a numpy oracle and each other."""
 
 import numpy as np
 import pytest
@@ -44,7 +45,7 @@ def test_kernel_matches_oracle(spark, embeddings, queries, metric):
         K,
     )
     got = brute_force_knn(
-        embeddings, queries, K, metric=metric, impl="kernel",
+        embeddings, queries, K, metric=metric,
         id_col="vec_id", vector_col="embedding",
     ).collect()
     by_q = {}
@@ -55,15 +56,6 @@ def test_kernel_matches_oracle(spark, embeddings, queries, metric):
         assert [i for i, _ in by_q[q]] == [i for i, _ in oracle[q]], f"q={q} {metric}"
         for (_, d_got), (_, d_exp) in zip(by_q[q], oracle[q]):
             assert d_got == pytest.approx(d_exp, abs=1e-6)
-
-
-def test_expr_matches_kernel(spark, embeddings, queries):
-    kw = dict(id_col="vec_id", vector_col="embedding")
-    a = brute_force_knn(embeddings, queries, K, impl="kernel", **kw)
-    b = brute_force_knn(embeddings, queries, K, impl="expr", **kw)
-    ra = sorted((r["query_id"], r["id"], round(r["distance"], 6)) for r in a.collect())
-    rb = sorted((r["query_id"], r["id"], round(r["distance"], 6)) for r in b.collect())
-    assert ra == rb
 
 
 def test_k_contract(spark, embeddings, queries):
@@ -86,7 +78,7 @@ def test_knn_bulk_matches_kernel(spark):
     vecs = spark.createDataFrame(rows, "id bigint, vector array<float>")
     queries = vecs.filter("id < 20").selectExpr("id as query_id", "vector")
     bulk = knn_bulk(vecs, queries, 5, metric="l2", vector_blocks=4)
-    kernel = brute_force_knn(vecs, queries, 5, metric="l2", impl="kernel")
+    kernel = brute_force_knn(vecs, queries, 5, metric="l2")
     key = lambda r: (r["query_id"], r["id"], round(r["distance"], 6))
     assert sorted(map(key, bulk.collect())) == sorted(map(key, kernel.collect()))
 

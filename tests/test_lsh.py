@@ -23,7 +23,7 @@ def test_lsh_topk_recall(vecs):
     queries = vecs.filter("id < 6").selectExpr("id as query_id", "vector")
     idx = LSHIndex.fit(vecs, bucket_length=4.0, num_hash_tables=4, seed=7)
     ann = idx.search(vecs, queries, 5, threshold=20.0)
-    exact = brute_force_knn(vecs, queries, 5, metric="l2", impl="kernel")
+    exact = brute_force_knn(vecs, queries, 5, metric="l2")
 
     ann_rows = ann.collect()
     per_query = {}

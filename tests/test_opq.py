@@ -103,7 +103,7 @@ def test_opq_adc_rerank_equals_exact(spark):
         codes, queries, 10, rerank_vectors=df, oversample=30,  # 300 rows: all
     )
     exact = brute_force_knn(
-        df, queries, 10, metric="l2", impl="kernel",
+        df, queries, 10, metric="l2",
         id_col="vec_id", vector_col="embedding",
     )
     assert _ranked(got) == _ranked(exact)
@@ -181,7 +181,7 @@ def test_ivfpq_opq_full_probe_equals_exact(spark):
         enc, queries, 10, n_probe=4, oversample=40, rerank_vectors=df
     )
     exact = brute_force_knn(
-        df, queries, 10, metric="l2", impl="kernel",
+        df, queries, 10, metric="l2",
         id_col="vec_id", vector_col="embedding",
     )
     assert _ranked(got) == _ranked(exact)

@@ -677,9 +677,10 @@ def test_mg_frequent_items_pure_jvm_bounded_exchanges(spark):
 
 
 def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings, monkeypatch):
-    """knn_bulk, IVF assign / search_bulk, PQ decode and the ADC searches,
-    IVFPQ encode, both IVFPQ search_bulk plans (broadcast, and the
-    cogroup fallback above the query byte cap), and the HNSW build,
+    """brute_force_knn, knn_bulk, IVF assign / search / search_bulk, PQ
+    decode and the ADC searches, IVFPQ encode, both IVFPQ search_bulk
+    plans (broadcast, and the cogroup fallback above the query byte
+    cap), and the HNSW build,
     insert, compaction and mean routers of a hash build run their Python
     kernels through mapInArrow / applyInArrow: a plan that slides back to
     the pandas boundary fails here."""
@@ -689,7 +690,7 @@ def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings, monkeypatch)
     from fabstir_vectordb_spark.operators.hnsw import HNSWIndex
     from fabstir_vectordb_spark.operators.ivf import IVFIndex
     from fabstir_vectordb_spark.operators.ivfpq import IVFPQIndex
-    from fabstir_vectordb_spark.operators.knn import knn_bulk
+    from fabstir_vectordb_spark.operators.knn import brute_force_knn, knn_bulk
     from fabstir_vectordb_spark.operators.pq import ProductQuantizer
 
     emb = embeddings.select("vec_id", "embedding")
@@ -703,10 +704,14 @@ def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings, monkeypatch)
     ivfpq = IVFPQIndex(ivf, pq)
     codes = ivfpq.encode(emb)
     plans = {
+        "brute_force_knn": brute_force_knn(
+            emb, queries, 5, id_col="vec_id", vector_col="embedding"
+        ),
         "knn_bulk": knn_bulk(
             emb, queries, 5, id_col="vec_id", vector_col="embedding"
         ),
         "assign": ivf.assign(emb),
+        "search": ivf.search(ivf.assign(emb), queries, 5, n_probe=2),
         "search_bulk": ivf.search_bulk(ivf.assign(emb), queries, 5, n_probe=2),
         "ivfpq_encode": codes,
         "pq_decode": pq.decode(codes),
@@ -728,6 +733,8 @@ def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings, monkeypatch)
     plans["hnsw_insert"] = hnsw.insert(graph, emb.filter(F.col("vec_id") % 2 == 1))
     plans["hnsw_compact_graph"] = hnsw.compact_graph(graph)
     plans["hnsw_graph_routers"] = hnsw.graph_routers(graph)
+    # the IVF point search ranks in the kernel: no (query, cluster) pair join
+    assert "BroadcastHashJoin" not in _executed(plans["search"])
     for name, df in plans.items():
         plan = _executed(df)
         assert "InArrow" in plan, name

@@ -6,6 +6,7 @@ queries: same ids, same order, distances equal with ``==``.
 
 import datetime as dt
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -173,7 +174,7 @@ def test_search_batch_is_one_job(spark, trained):
     qs = [(q, [v[0] + 0.05] + v[1:]) for q, v in QUERIES]
     # the three queries' nearest clusters, which every probe set leads with,
     # differ
-    nearest = {trained._index._probes_from_rows([(q, v)], 1)[0][1] for q, v in qs}
+    nearest = trained._index.probes_by_cluster(np.asarray([v for _, v in qs]), 1)
     assert len(nearest) == 3
     batch = [{"id": q, "vector": v} for q, v in qs]
     assert _jobs_for(spark, "pt_batch", lambda: trained.search_batch(batch, k=K)) == 1

@@ -166,7 +166,7 @@ def test_tune_hnsw_plan_reaches_target_on_clusterable(spark):
     )
     truth = {}
     for r in brute_force_knn(vec, q, 10, id_col="id",
-                             vector_col="vector", impl="kernel").collect():
+                             vector_col="vector").collect():
         truth.setdefault(r["query_id"], set()).add(r["id"])
     got = {}
     # the plan's OWN ef — the test must exercise the knobs it certifies

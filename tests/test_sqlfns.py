@@ -45,7 +45,7 @@ def test_sql_functions_match_dataframe_kernels(spark, embeddings, sql_ready):
 
 
 def test_sql_knn_end_to_end(spark, embeddings, sql_ready):
-    """A pure-SQL top-k query: same result as the DataFrame expr path."""
+    """A pure-SQL top-k query: same result as the DataFrame kernel path."""
     from fabstir_vectordb_spark.operators.knn import brute_force_knn
 
     queries = embeddings.filter(F.col("vec_id") < 2).select(
@@ -54,7 +54,7 @@ def test_sql_knn_end_to_end(spark, embeddings, sql_ready):
     df_res = {
         (r["query_id"], r["id"])
         for r in brute_force_knn(
-            embeddings, queries, 5, metric="l2", impl="expr",
+            embeddings, queries, 5, metric="l2",
             id_col="vec_id", vector_col="embedding",
         ).collect()
     }
