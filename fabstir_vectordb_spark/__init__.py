@@ -18,8 +18,10 @@ Design notes (vs the Rust reference, Fabstir/fabstir-vectordb):
 - Vector ranking runs in Arrow-batched numpy kernels (mapInArrow /
   applyInArrow), one plan per query location: queries held on the
   driver are broadcast into one map-only partial top-k pass
-  (operators/knn.py `partial_knn`), queries held in a DataFrame cogroup
-  with vector blocks.  Column-expression distances (functions/distance.py)
+  (operators/knn.py `partial_knn`; a small session point search pulls
+  its candidate rows to the driver and runs the same per-batch body
+  there, `driver_knn`), queries held in a DataFrame cogroup with
+  vector blocks.  Column-expression distances (functions/distance.py)
   serve SQL and per-pair scoring.
 """
 

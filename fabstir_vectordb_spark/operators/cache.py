@@ -6,10 +6,15 @@ stats.  This is a driver-side memo of *collected* results — the Spark
 analogue of the reference's in-process cache.  For distributed reuse of
 a hot DataFrame use .cache()/persist; this class is for the session API
 hot path where the same (query, k) repeats.
+
+A value is stored as a private deep copy and every hit returns a fresh
+copy, so a caller that edits the result it was handed cannot change what
+the next hit returns.
 """
 
 from __future__ import annotations
 
+import copy
 import hashlib
 import struct
 from collections import OrderedDict
@@ -39,11 +44,12 @@ class QueryResultCache:
     def get(self, key: str):
         if key in self._store:
             self.hits += 1
-            return self._store[key]
+            return copy.deepcopy(self._store[key])
         self.misses += 1
         return None
 
     def put(self, key: str, value: Any) -> None:
+        value = copy.deepcopy(value)
         if key in self._store:
             self._store[key] = value
             return

@@ -11,13 +11,17 @@ Two plans, one per query location, the same Arrow-batched numpy kernel
 (``_batch_topk_rows``) under both:
 
 Driver-held queries (``brute_force_knn``, ``IVFIndex.search``, the
-session's point searches): ``partial_knn`` broadcasts the query matrix
-into one map-only ``mapInArrow`` pass.  Each input batch computes
-distances for all queries with BLAS and emits only its top-k per query
-(a map-side partial reduction — no Q*N shuffle); a final window over
-the Q * batches * k partial rows (``topk_per_query``) or a sort on the
-driver picks the exact global top-k.  With ``probes`` the pass reads
-only the probed IVF clusters and ranks each query against its own.
+session's point searches on a large table): ``partial_knn`` broadcasts
+the query matrix into one map-only ``mapInArrow`` pass.  Each input
+batch computes distances for all queries with BLAS and emits only its
+top-k per query (``_topk_batch``, a map-side partial reduction — no
+Q*N shuffle); a final window over the Q * batches * k partial rows
+(``topk_per_query``) or a sort on the driver picks the exact global
+top-k.  With ``probes`` the pass reads only the probed IVF clusters and
+ranks each query against its own.  The session's point searches on a
+small table run ``driver_knn`` instead: one JVM-only ``toArrow()`` of
+the same candidate rows, bounded by the session's byte cap, ranked on
+the driver by the same ``_topk_batch`` — no Python task.
 
 Queries held in a DataFrame (``knn_bulk``, ``IVFIndex.search_bulk``):
 ``cogroup_block_knn`` cogroups vector blocks with the query rows, so
@@ -195,15 +199,12 @@ def partial_knn(
 
     ``qids`` and the ``(nq, dim)`` float64 matrix ``Q`` are broadcast.
     Each Arrow batch emits its top-k per query under the (round(distance,
-    6), id) order, so the union of the partials holds the exact global
-    top-k; the caller merges them (``topk_per_query``, or a sort on the
-    driver).  ``probes`` ({cluster id: positions in ``Q`` of the queries
-    probing it}) reads only the probed clusters and restricts each query
-    to its own: a batch's rows are grouped by their ``cluster_id`` and
-    each group ranks only the queries that probed it (``_probed_topk_rows``,
-    the grouping ``pq.partial_adc`` shares).  ``carry``
-    columns ride along, taken by position from the batch, so no join
-    re-attaches them.
+    6), id) order (``_topk_batch``), so the union of the partials holds
+    the exact global top-k; the caller merges them (``topk_per_query``, or
+    a sort on the driver).  ``probes`` ({cluster id: positions in ``Q`` of
+    the queries probing it}) reads only the probed clusters and restricts
+    each query to its own.  ``carry`` columns ride along, taken by
+    position from the batch, so no join re-attaches them.
 
     Output: (query_id, id, distance, *carry)."""
     check_metric(metric)
@@ -213,36 +214,98 @@ def partial_knn(
     out_schema = _arrow.topk_schema(qid_type, vectors.schema[id_col].dataType)
     for c in carry:
         out_schema.add(vectors.schema[c])
-    cols = list(dict.fromkeys([id_col, vector_col, *carry]))
-    if probes is not None:
-        # only probed clusters are read: on a partitionBy(cluster_id)
-        # layout the IN list prunes whole directories at the scan
-        vectors = vectors.filter(F.col("cluster_id").isin(sorted(probes)))
-        cols.append("cluster_id")
 
     def partial_topk(batches):
         qids_l, Q_l, probes_l = bc.value
         for b in batches:
             if b.num_rows == 0:
                 continue
-            V = _arrow.matrix(b.column(vector_col), vector_col)
-            ids = b.column(id_col)
-            keys = _arrow.sort_keys(ids)
-            if probes_l is None:
-                qpos, vpos, d = _batch_topk_rows(metric, V, keys, Q_l, k)
-            else:
-                qpos, vpos, d = _probed_topk_rows(
-                    b.column("cluster_id"), probes_l,
-                    lambda cid, rows, qidx: _batch_topk_rows(
-                        metric, V[rows], keys[rows], Q_l[qidx], k
-                    ),
-                )
-            t = _arrow.topk_table(qids_l, qpos, ids, vpos, d)
-            for c in carry:
-                t = t.append_column(c, b.column(c).take(vpos))
+            t = _topk_batch(b, qids_l, Q_l, k, metric, id_col, vector_col, probes_l, carry)
             yield from t.to_batches()
 
-    return vectors.select(*cols).mapInArrow(partial_topk, out_schema)
+    return _topk_input(vectors, id_col, vector_col, probes, carry).mapInArrow(
+        partial_topk, out_schema
+    )
+
+
+def driver_knn(
+    vectors: DataFrame,
+    qids: list,
+    Q: np.ndarray,
+    qid_type: T.DataType,
+    k: int,
+    metric: str = "l2",
+    id_col: str = "id",
+    vector_col: str = "vector",
+    probes: dict[int, np.ndarray] | None = None,
+    carry: tuple[str, ...] | list[str] = (),
+) -> pa.Table:
+    """``partial_knn`` ranked on the driver: ONE JVM-only ``toArrow()``
+    pull of the rows ``partial_knn`` would stream (only the probed
+    clusters when ``probes`` is given), ranked by the same per-batch body
+    as one batch.  No Python task runs, so a small candidate set skips
+    the fixed cost of a Python job; the caller bounds the pull, since
+    every candidate row crosses to the driver.
+
+    Output: the Arrow table of ``partial_knn(...).toArrow()`` —
+    (query_id, id, distance, *carry) — already the exact top-k per
+    query."""
+    check_metric(metric)
+    rows = _topk_input(vectors, id_col, vector_col, probes, carry).toArrow()
+    qids_a = pa.array(qids, to_arrow_type(qid_type))
+    return _topk_batch(rows, qids_a, Q, k, metric, id_col, vector_col, probes, carry)
+
+
+def _topk_input(
+    vectors: DataFrame,
+    id_col: str,
+    vector_col: str,
+    probes: dict[int, np.ndarray] | None,
+    carry: tuple[str, ...] | list[str],
+) -> DataFrame:
+    """The columns ``_topk_batch`` reads; with ``probes``, only the probed
+    clusters' rows (on a partitionBy(cluster_id) layout the IN list
+    prunes whole directories at the scan)."""
+    cols = list(dict.fromkeys([id_col, vector_col, *carry]))
+    if probes is not None:
+        vectors = vectors.filter(F.col("cluster_id").isin(sorted(probes)))
+        cols.append("cluster_id")
+    return vectors.select(*cols)
+
+
+def _topk_batch(
+    b: pa.RecordBatch | pa.Table,
+    qids: pa.Array,
+    Q: np.ndarray,
+    k: int,
+    metric: str,
+    id_col: str,
+    vector_col: str,
+    probes: dict[int, np.ndarray] | None,
+    carry: tuple[str, ...] | list[str],
+) -> pa.Table:
+    """The one per-batch ranking body, run by ``partial_knn``'s executors
+    and by ``driver_knn`` on the driver: the top-k per query of the batch
+    ``b`` as (query_id, id, distance, *carry) rows.  With ``probes`` the
+    batch's rows are grouped by their ``cluster_id`` and each group ranks
+    only the queries that probed it (``_probed_topk_rows``, the grouping
+    ``pq.partial_adc`` shares)."""
+    V = _arrow.matrix(b.column(vector_col), vector_col)
+    ids = b.column(id_col)
+    keys = _arrow.sort_keys(ids)
+    if probes is None or b.num_rows == 0:  # no rows: no cluster to group
+        qpos, vpos, d = _batch_topk_rows(metric, V, keys, Q, k)
+    else:
+        qpos, vpos, d = _probed_topk_rows(
+            b.column("cluster_id"), probes,
+            lambda cid, rows, qidx: _batch_topk_rows(
+                metric, V[rows], keys[rows], Q[qidx], k
+            ),
+        )
+    t = _arrow.topk_table(qids, qpos, ids, vpos, d)
+    for c in carry:
+        t = t.append_column(c, b.column(c).take(vpos))
+    return t
 
 
 def _probed_topk_rows(

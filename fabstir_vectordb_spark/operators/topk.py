@@ -23,14 +23,30 @@ __spark_entry__.py stays hash-stable.
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Context, Decimal
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 ROUND_DECIMALS = 6
 
+# wide enough for any finite double at any decimals this module rounds to
+_WIDE = Context(prec=400)
+
 
 def rounded(col: Column | str, decimals: int = ROUND_DECIMALS) -> Column:
     return F.round(F.col(col) if isinstance(col, str) else col, decimals)
+
+
+def round_like_spark(x: float, decimals: int = ROUND_DECIMALS) -> float:
+    """``rounded`` of one Python float, on the driver: Spark's ``round``
+    of a double is HALF_UP of its shortest decimal string, so a driver
+    sort by this key orders rows exactly as ``topk_per_query`` does."""
+    if not math.isfinite(x):
+        return x
+    q = Decimal(repr(x)).quantize(Decimal(1).scaleb(-decimals), ROUND_HALF_UP, _WIDE)
+    return float(q)
 
 
 def topk_per_query(

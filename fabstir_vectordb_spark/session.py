@@ -38,14 +38,18 @@ count and logs the events; `vacuum` is the compaction.
 One candidate choice, two plans split by where the queries live.  Every
 search ranks the rows ``_candidates`` picks: the clustered table, probed,
 when an index is trained and no filter is given, else the filtered live
-rows, exactly.  search and search_batch hold their queries on the driver,
-so they broadcast them into ONE map-only Arrow pass (``partial_knn``)
-that streams only the probed clusters, carries each row's metadata along
-and emits <= k rows per (query, batch); the driver keeps the first k.
-That is one Spark job and no exchange per call.  search_dataframe's
-queries are an uncollected DataFrame, so it returns ``_ranked``:
-IVFIndex.search_bulk or knn_bulk over the same rows.  Both plans return
-the same rows.
+rows, exactly.  search and search_batch hold their queries on the driver
+and run ONE Spark job per call, with no exchange.  When the live table
+is small (``_ranks_on_driver``, a byte cap on the kept live count) that
+job is a JVM-only Arrow collect of the candidate rows — only the probed
+clusters — ranked on the driver (``driver_knn``): this bounded collect
+is where a small search skips the ~200 ms fixed cost of a Python job.
+A larger table broadcasts the queries into one map-only Arrow pass
+(``partial_knn``) that emits <= k rows per (query, batch).  Both carry
+each row's metadata along, run the same per-batch kernel, and the
+driver keeps the first k.  search_dataframe's queries are an uncollected
+DataFrame, so it returns ``_ranked``: IVFIndex.search_bulk or knn_bulk
+over the same rows.  Both plans return the same rows.
 """
 
 from __future__ import annotations
@@ -61,6 +65,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.conversion import ArrowTableToRowsConversion
 
 from fabstir_vectordb_spark.functions import distance as D
 from fabstir_vectordb_spark.functions.filters import compile_filter
@@ -68,12 +73,17 @@ from fabstir_vectordb_spark.functions.schema import MetadataSchema
 from fabstir_vectordb_spark.operators import _arrow
 from fabstir_vectordb_spark.operators.cache import QueryResultCache
 from fabstir_vectordb_spark.operators.ivf import IVFIndex
-from fabstir_vectordb_spark.operators.knn import knn_bulk, partial_knn
-from fabstir_vectordb_spark.operators.topk import rounded
+from fabstir_vectordb_spark.operators.knn import driver_knn, knn_bulk, partial_knn
+from fabstir_vectordb_spark.operators.topk import round_like_spark
 from fabstir_vectordb_spark.plans.tuning import plan_search
 
 RECENCY_DAYS = 7  # src/hybrid/core.rs:77
 FORMAT_VERSION = 3  # mirrors MANIFEST_VERSION (src/core/chunk.rs:30)
+# the live-table bytes up to which a point search ranks on the driver
+# (``VectorDbSession._ranks_on_driver``): below the measured crossover of
+# the two paths, about 38k live rows of 384 dims (58 MB) on a 4-core box
+# (plans/driver_rank/crossover.log)
+_DRIVER_RANK_MAX_BYTES = 48 << 20
 
 
 class VectorDbError(ValueError):
@@ -94,8 +104,9 @@ def _row_to_plain(v: Any) -> Any:
     return v
 
 
-def _result_item(r: Row, include_vectors: bool) -> dict:
-    """One search result as the session API returns it."""
+def _result_item(r: Row | dict, include_vectors: bool) -> dict:
+    """One search result as the session API returns it, from a row with
+    id, distance, score, metadata (and vector) fields."""
     item = {
         "id": r["id"],
         "distance": r["distance"],
@@ -566,6 +577,18 @@ class VectorDbSession:
         res = res.withColumn("score", D.similarity_score("distance"))
         return res if threshold is None else res.filter(F.col("score") >= threshold)
 
+    def _ranks_on_driver(self) -> bool:
+        """Whether a point search pulls its candidate rows to the driver and
+        ranks them there (``driver_knn``) instead of in ``partial_knn``'s
+        Python job.  Decided with no job, from what the session keeps: the
+        live rows' float32 vectors plus a per-row allowance for the id,
+        metadata and cluster must fit ``_DRIVER_RANK_MAX_BYTES``.  An
+        uncounted table (a bulk load before train_index) keeps
+        ``partial_knn``."""
+        if self._live_count is None or self._dim is None:
+            return False
+        return self._live_count * (self._dim * 4 + 64) <= _DRIVER_RANK_MAX_BYTES
+
     def _search_points(
         self,
         queries: list[tuple[str, list[float]]],
@@ -580,15 +603,24 @@ class VectorDbSession:
     ) -> dict[str, list[dict]]:
         """The search of driver-held queries: ONE Spark job.
 
-        The queries are broadcast into ``partial_knn``, which streams the
-        ``_candidates`` rows once (on the IVF path only the probed
+        The ``_candidates`` rows (on the IVF path only the probed
         clusters, the probes ranked here by ``IVFIndex.probes_by_cluster``)
-        and emits <= k rows per (query, batch) with the metadata (and
-        vector) taken from the batch itself.  The driver keeps the first
-        k of each query by (round(distance, 6), id) — the rounded key from
-        Spark's ``round`` in the collected projection, the same key as
-        ``topk_per_query`` — then applies ``threshold``.  Rows equal those
-        of ``_ranked`` over the same queries."""
+        are ranked with the metadata (and vector) taken from the ranked
+        rows themselves, in one of two places:
+
+        - a small live table (``_ranks_on_driver``) is pulled to the
+          driver by one JVM-only Arrow collect and ranked there by
+          ``driver_knn``: no Python task, whose fixed cost is most of a
+          small search;
+        - a larger one stays on the executors: the queries are broadcast
+          into ``partial_knn``, one map-only Arrow pass that emits <= k
+          rows per (query, batch), collected as Arrow.
+
+        Both run the same per-batch kernel, and one merge on the driver
+        keeps the first k of each query by (round(distance, 6), id) —
+        rounded as Spark's ``round``, the key of ``topk_per_query`` — then
+        applies ``threshold``.  Rows equal those of ``_ranked`` over the
+        same queries."""
         for _, vec in queries:
             if self._dim is not None and len(vec) != self._dim:
                 raise VectorDbError(
@@ -606,24 +638,36 @@ class VectorDbSession:
             None if n_probe is None else self._index.probes_by_cluster(Q, n_probe)
         )
         carry = ["metadata"] + (["vector"] if include_vectors else [])
-        partials = partial_knn(
-            rows, qids, Q, T.StringType(), k, probes=probes, carry=carry
-        ).select(
-            "*",
-            rounded("distance").alias("__rd"),
-            D.similarity_score("distance").alias("score"),
-        )
-        per_query: dict[str, list[Row]] = {qid: [] for qid in qids}
-        for r in partials.collect():
-            per_query[r["query_id"]].append(r)
+        args = (rows, qids, Q, T.StringType(), k)
+        if self._ranks_on_driver():
+            ranked = driver_knn(*args, probes=probes, carry=carry)
+        else:
+            ranked = partial_knn(*args, probes=probes, carry=carry).toArrow()
+        ids = ranked.column("id").to_pylist()
+        dist = ranked.column("distance").to_pylist()
+        per_query: dict[str, list[int]] = {qid: [] for qid in qids}
+        for i, qid in sorted(
+            enumerate(ranked.column("query_id").to_pylist()),
+            key=lambda p: (round_like_spark(dist[p[0]]), ids[p[0]]),
+        ):
+            if len(per_query[qid]) < k:
+                per_query[qid].append(i)
+        # the carried columns of the kept rows as Spark Rows, exactly what
+        # a collect of them returns
+        keep = [i for pos in per_query.values() for i in pos]
+        carried = iter(ArrowTableToRowsConversion.convert(
+            ranked.select(carry).take(keep),
+            T.StructType([rows.schema[c] for c in carry]),
+        ))
         out: dict[str, list[dict]] = {}
-        for qid, rs in per_query.items():
-            rs.sort(key=lambda r: (r["__rd"], r["id"]))
-            out[qid] = [
-                _result_item(r, include_vectors)
-                for r in rs[:k]
-                if threshold is None or r["score"] >= threshold
-            ]
+        for qid, pos in per_query.items():
+            out[qid] = []
+            for i in pos:
+                # the score of D.similarity_score, in the same double arithmetic
+                r = {"id": ids[i], "distance": dist[i], "score": 1.0 / (1.0 + dist[i])}
+                r.update(next(carried).asDict())
+                if threshold is None or r["score"] >= threshold:
+                    out[qid].append(_result_item(r, include_vectors))
         return out
 
     def search(

@@ -98,6 +98,24 @@ def test_vocab_stats_from_postings_and_docs(spark):
     assert got2 == got
 
 
+def test_postings_are_id_term_unique(spark):
+    # bm25_search and vocab_stats take a term's document frequency as its
+    # postings row count, so a document repeating a term must still give
+    # that term ONE posting, with the repeats in tf
+    docs = spark.createDataFrame(
+        [(0, "to be or not to be"), (1, "  be be\tbe "), (2, "Not TO worry")],
+        "doc_id long, text string",
+    )
+    post = build_postings(docs).collect()
+    pairs = [(r["id"], r["term"]) for r in post]
+    assert len(pairs) == len(set(pairs))
+    assert {(r["id"], r["term"]): (r["tf"], r["dl"]) for r in post} == {
+        (0, "to"): (2, 6), (0, "be"): (2, 6), (0, "or"): (1, 6), (0, "not"): (1, 6),
+        (1, "be"): (3, 3),
+        (2, "not"): (1, 3), (2, "to"): (1, 3), (2, "worry"): (1, 3),
+    }
+
+
 # ------------------------------------------------------- phrase search
 
 

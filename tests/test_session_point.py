@@ -1,7 +1,9 @@
-"""The point search path: search() and search_batch() run as one map-only
-Spark job over driver-held queries, and return exactly the rows of the
-DataFrame plan (``_ranked``, behind search_dataframe) over the same
-queries: same ids, same order, distances equal with ``==``.
+"""The point search path: search() and search_batch() run as one Spark job
+over driver-held queries, and return exactly the rows of the DataFrame
+plan (``_ranked``, behind search_dataframe) over the same queries: same
+ids, same order, distances equal with ``==``.  Both places a point search
+ranks are pinned: on the driver after one JVM-only Arrow collect (a small
+live table) and in ``partial_knn``'s map-only pass (the cap set to 0).
 """
 
 import datetime as dt
@@ -10,7 +12,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from fabstir_vectordb_spark import session as session_mod
 from fabstir_vectordb_spark.operators.ivf import IVFIndex
+from fabstir_vectordb_spark.operators.topk import round_like_spark, rounded
 from fabstir_vectordb_spark.session import VectorDbError, VectorDbSession, _result_item
 
 K = 5
@@ -61,6 +65,34 @@ def trained(spark):
     return _session(spark, trained=True)
 
 
+@pytest.fixture
+def path(request, monkeypatch):
+    """The place a test's point searches must rank, checked when it ends:
+    the driver for a small live table, or ``partial_knn`` for the
+    ``*_in_partial_knn`` copies of a test, which set the cap to 0 bytes.
+    The fixture sessions' query caches are dropped, so no answer of the
+    other path is served."""
+    want = (
+        "partial_knn"
+        if request.node.originalname.endswith("_in_partial_knn")
+        else "driver_knn"
+    )
+    if want == "partial_knn":
+        monkeypatch.setattr(session_mod, "_DRIVER_RANK_MAX_BYTES", 0)
+    calls = {"driver_knn": 0, "partial_knn": 0}
+    for name in calls:
+        def counted(*a, _name=name, _fn=getattr(session_mod, name), **kw):
+            calls[_name] += 1
+            return _fn(*a, **kw)
+
+        monkeypatch.setattr(session_mod, name, counted)
+    for name in ("exact", "trained"):
+        request.getfixturevalue(name)._cache.invalidate()
+    yield want
+    other = next(n for n in calls if n != want)
+    assert calls[want] > 0 and calls[other] == 0, calls
+
+
 def _jobs_for(spark, group, fn):
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
@@ -103,7 +135,7 @@ CASES = [
 
 @pytest.mark.parametrize("which", ["exact", "trained"])
 @pytest.mark.parametrize("kw", CASES, ids=lambda kw: ",".join(kw) or "plain")
-def test_search_equals_ranked_plan(request, which, kw):
+def test_search_equals_ranked_plan(request, path, which, kw):
     s = request.getfixturevalue(which)
     want = _via_ranked(s, QUERIES, K, threshold=0.0, **kw)
     for qid, vec in QUERIES:
@@ -113,7 +145,7 @@ def test_search_equals_ranked_plan(request, which, kw):
 
 
 @pytest.mark.parametrize("which", ["exact", "trained"])
-def test_search_batch_equals_ranked_plan(request, which):
+def test_search_batch_equals_ranked_plan(request, path, which):
     s = request.getfixturevalue(which)
     for kw in ({}, {"filter": {"lang": "de"}}):
         got = s.search_batch([{"id": q, "vector": v} for q, v in QUERIES], k=K, **kw)
@@ -121,7 +153,7 @@ def test_search_batch_equals_ranked_plan(request, which):
 
 
 @pytest.mark.parametrize("which", ["exact", "trained"])
-def test_threshold_cuts_inside_top_k(request, which):
+def test_threshold_cuts_inside_top_k(request, path, which):
     s = request.getfixturevalue(which)
     qid, vec = QUERIES[1]
     full = s.search(vec, k=K)
@@ -133,13 +165,30 @@ def test_threshold_cuts_inside_top_k(request, which):
 
 
 @pytest.mark.parametrize("which", ["exact", "trained"])
-def test_tie_at_kth_distance_breaks_by_id(request, which):
+def test_tie_at_kth_distance_breaks_by_id(request, path, which):
     s = request.getfixturevalue(which)
     qid, vec = QUERIES[0]
     got = s.search(vec, k=K, n_probe=6)
     # v04, a-dup and z-dup sit at the same 5th distance: the smallest id wins
     assert [r["id"] for r in got] == ["v00", "v01", "v02", "v03", "a-dup"]
     assert got == _via_ranked(s, [(qid, vec)], K, threshold=0.0, n_probe=6)[qid]
+
+
+# the same tests with every point search ranked in partial_knn (``path``
+# reads the name), so both places must give these rows, the tie included
+test_search_equals_ranked_plan_in_partial_knn = test_search_equals_ranked_plan
+test_search_batch_equals_ranked_plan_in_partial_knn = test_search_batch_equals_ranked_plan
+test_threshold_cuts_inside_top_k_in_partial_knn = test_threshold_cuts_inside_top_k
+test_tie_at_kth_distance_breaks_by_id_in_partial_knn = test_tie_at_kth_distance_breaks_by_id
+
+
+def test_driver_merge_key_is_sparks_round(spark):
+    rng = np.random.default_rng(3)
+    xs = [0.1234565, 0.0000005, 2.5e-7, 1.0000005, 1e22 + 1.0, 0.0, 123.4567895]
+    xs += rng.random(200).tolist() + (rng.random(200) * 1e4).tolist()
+    df = spark.createDataFrame([(x,) for x in xs], "d double")
+    got = [r[0] for r in df.select(rounded("d")).collect()]
+    assert [round_like_spark(x) for x in xs] == got
 
 
 def test_wrong_dimension_raises_before_any_job(spark, trained):
@@ -156,28 +205,100 @@ def _no_assign(self, *a, **kw):
     raise AssertionError("the session re-assigned its rows after train_index")
 
 
-def test_point_search_is_one_job(spark, trained, exact, monkeypatch):
+def test_point_search_is_one_job(spark, path, trained, exact, monkeypatch):
     # the table is clustered from train_index on: no search assigns
     assert "cluster_id" in trained._df.columns
     monkeypatch.setattr(IVFIndex, "assign", _no_assign)
-    assert _jobs_for(spark, "pt_ivf", lambda: trained.search([3.3, 0.1, 1.0, 0.0], k=K)) == 1
+    assert _jobs_for(spark, f"pt_ivf_{path}", lambda: trained.search([3.3, 0.1, 1.0, 0.0], k=K)) == 1
     assert _jobs_for(
-        spark, "pt_filtered",
+        spark, f"pt_filtered_{path}",
         lambda: trained.search([3.3, 0.1, 1.0, 0.0], k=K, filter={"lang": "en"}),
     ) == 1
-    assert _jobs_for(spark, "pt_exact", lambda: exact.search([4.4, 0.1, 1.0, 0.0], k=K)) == 1
+    assert _jobs_for(spark, f"pt_exact_{path}", lambda: exact.search([4.4, 0.1, 1.0, 0.0], k=K)) == 1
     # a repeat is a cache hit
-    assert _jobs_for(spark, "pt_hit", lambda: trained.search([3.3, 0.1, 1.0, 0.0], k=K)) == 0
+    assert _jobs_for(spark, f"pt_hit_{path}", lambda: trained.search([3.3, 0.1, 1.0, 0.0], k=K)) == 0
 
 
-def test_search_batch_is_one_job(spark, trained):
+def _operators(df):
+    """The node names of the physical plan ``df`` executes; a cached
+    table's scan is a leaf, so the plan that once computed it is not
+    among them."""
+    names, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
+def test_python_pass_in_collected_plan(path, trained, monkeypatch):
+    plans = []
+    to_arrow = type(trained._df).toArrow
+
+    def recorded(df):
+        plans.append(_operators(df))
+        return to_arrow(df)
+
+    monkeypatch.setattr(type(trained._df), "toArrow", recorded)
+    trained.search([3.3, 0.1, 1.0, 0.0], k=K)
+    trained.search([3.3, 0.1, 1.0, 0.0], k=K, filter={"lang": "en"})
+    assert len(plans) == 2
+    assert all("InMemoryTableScan" in p for p in plans)
+    python_pass = [any("MapInArrow" in n for n in p) for p in plans]
+    assert python_pass == [path == "partial_knn"] * 2
+
+
+test_python_pass_in_collected_plan_in_partial_knn = test_python_pass_in_collected_plan
+
+
+def test_uncounted_bulk_load_falls_back_to_partial_knn(spark, exact, monkeypatch):
+    items = _items()
+    df = spark.createDataFrame(
+        [(it["id"], it["vector"], it["metadata"]) for it in items],
+        "id string, vector array<float>, metadata struct<lang:string,rank:bigint>",
+    )
+    bulk = VectorDbSession.from_dataframe(df, metadata_col="metadata")
+    assert bulk._live_count is None
+    want = {qid: exact.search(vec, k=K) for qid, vec in QUERIES}
+
+    def no_driver_rank(*a, **kw):
+        raise AssertionError("an uncounted table was ranked on the driver")
+
+    monkeypatch.setattr(session_mod, "driver_knn", no_driver_rank)
+    for qid, vec in QUERIES:
+        got = bulk.search(vec, k=K)
+        assert got == want[qid]
+        assert got == _via_ranked(bulk, [(qid, vec)], K, threshold=0.0)[qid]
+
+
+def test_cached_answer_is_not_the_callers_list(exact):
+    vec = QUERIES[2][1]
+    first = exact.search(vec, k=K)
+    want = [dict(r, metadata=dict(r["metadata"])) for r in first]
+    first.pop()
+    first[0]["metadata"]["lang"] = "X"
+    hit = exact.search(vec, k=K)
+    assert hit == want
+    hit[0]["metadata"]["lang"] = "Y"
+    assert exact.search(vec, k=K) == want
+    assert exact._cache.stats()["hits"] >= 2
+
+
+def test_search_batch_is_one_job(spark, path, trained):
     qs = [(q, [v[0] + 0.05] + v[1:]) for q, v in QUERIES]
     # the three queries' nearest clusters, which every probe set leads with,
     # differ
     nearest = trained._index.probes_by_cluster(np.asarray([v for _, v in qs]), 1)
     assert len(nearest) == 3
     batch = [{"id": q, "vector": v} for q, v in qs]
-    assert _jobs_for(spark, "pt_batch", lambda: trained.search_batch(batch, k=K)) == 1
+    assert _jobs_for(spark, f"pt_batch_{path}", lambda: trained.search_batch(batch, k=K)) == 1
+
+
+test_point_search_is_one_job_in_partial_knn = test_point_search_is_one_job
+test_search_batch_is_one_job_in_partial_knn = test_search_batch_is_one_job
 
 
 def test_loaded_session_reuses_saved_layout(tmp_path, spark, trained, monkeypatch):
