@@ -953,8 +953,9 @@ def q_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_ivf_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bulk IVF search: Q=500 queries as a DataFrame, distributed probe
-    selection, no driver collect (operators/ivf.py:search_bulk).  Run at
+    """Bulk IVF search: Q=500 queries as a DataFrame; a query set this
+    small is collected once and merged on the driver, a larger one takes
+    distributed probe selection (operators/ivf.py:search_bulk).  Run at
     n_probe = n_clusters, where IVF is exactly brute force — so the
     oracle is the exact bulk-kNN SQL."""
     _, idx, assigned = _assigned_ivf(spark, sf_dir)
@@ -2641,6 +2642,28 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name).select("fp").distinct()
 
 
+def _plans_run(spark: SparkSession, build) -> str:
+    """The physical plans of the DataFrame ``build()`` returns and of every
+    DataFrame pulled through ``toArrow`` while it is built: a bounded IVF
+    search ranks in a pass collected that way and returns a local
+    relation, so the pass's plan is among the pulled ones."""
+    cls = type(spark.range(0))  # the session's concrete DataFrame class
+    to_arrow = cls.toArrow
+    plans = []
+
+    def recorded(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return to_arrow(df)
+
+    cls.toArrow = recorded
+    try:
+        df = build()
+    finally:
+        cls.toArrow = to_arrow
+    plans.append(df._jdf.queryExecution().executedPlan().toString())
+    return "\n".join(plans)
+
+
 def q_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-maintenance surface in one certified row (SURVEY §2.4 rows
     40-42, §2.6 rows 57/61/62; ivf/operations.rs:148-289,422-564):
@@ -2717,10 +2740,7 @@ def q_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         round(r["distance"], 6)
         for r in ann_sql(spark, stmt, cat, n_probe=16).collect()
     )
-    probe_plan = (
-        ann_sql(spark, stmt, cat, n_probe=2)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    probe_plan = _plans_run(spark, lambda: ann_sql(spark, stmt, cat, n_probe=2))
     sql_ann_ok = bool(
         explain_rewrite(cat, stmt) == "ivf"
         and ann_d == exact_d
@@ -2744,10 +2764,7 @@ def q_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r["vec_id"], round(r["distance"], 6))
         for r in ann_sql(spark, stmt_w, cat, n_probe=16).collect()
     )
-    where_plan = (
-        ann_sql(spark, stmt_w, cat, n_probe=2)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    where_plan = _plans_run(spark, lambda: ann_sql(spark, stmt_w, cat, n_probe=2))
     sql_where_ok = bool(
         explain_rewrite(cat, stmt_w) == "ivf"
         and ann_w == exact_w
@@ -5839,7 +5856,8 @@ _HY_NQ = _NORM.format(a="vq.qv")
 _HY_DOT = _DOT.format(a="e.embedding", b="vq.qv")
 _ORACLES["keyword_bm25"] = f"""
 WITH t AS (
-  SELECT doc_id AS id, list_transform({_TOKS}, tk -> lower(tk)) AS toks
+  SELECT doc_id AS id,
+         list_transform(list_filter({_TOKS}, tk -> tk <> ''), tk -> lower(tk)) AS toks
   FROM documents
 ), p0 AS (
   SELECT id, len(toks) AS dl, unnest(toks) AS term FROM t

@@ -16,12 +16,12 @@ Design notes (vs the Rust reference, Fabstir/fabstir-vectordb):
   BELOW ranking — exact, unlike the reference's k*3 oversampling
   (src/hybrid/core.rs:513-549).
 - Vector ranking runs in Arrow-batched numpy kernels (mapInArrow /
-  applyInArrow), one plan per query location: queries held on the
-  driver are broadcast into one map-only partial top-k pass
-  (operators/knn.py `partial_knn`; a small session point search pulls
-  its candidate rows to the driver and runs the same per-batch body
-  there, `driver_knn`), queries held in a DataFrame cogroup with
-  vector blocks.  Column-expression distances (functions/distance.py)
+  applyInArrow), two plans split by the size of the query set: a
+  bounded one is collected and broadcast into one map-only partial
+  top-k pass whose partial rows merge on the driver (operators/knn.py
+  `partial_knn`; a small session point search pulls its candidate rows
+  to the driver and runs the same per-batch body there, `driver_knn`),
+  a larger one stays a DataFrame and cogroups with vector blocks.  Column-expression distances (functions/distance.py)
   serve SQL and per-pair scoring.
 """
 

@@ -19,11 +19,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 
-def matrix(col: pa.Array | pa.ChunkedArray, name: str, dtype=np.float64) -> np.ndarray:
+def matrix(
+    col: pa.Array | pa.ChunkedArray, name: str, dtype=np.float64, rows: np.ndarray | None = None
+) -> np.ndarray:
     """A list column as an ``(n, dim)`` array of ``dtype``: a writable copy
-    of the flat value buffer.  Raises ``ValueError`` naming ``name`` on a
-    null vector, a null element, or a vector whose length differs from the
-    first one's."""
+    of the flat value buffer, or with ``rows`` of the rows at those
+    positions, gathered in the column's own type before the one
+    conversion.  Raises ``ValueError`` naming ``name`` on a null vector, a
+    null element, or a vector whose length differs from the first one's."""
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     n = len(col)
@@ -39,7 +42,10 @@ def matrix(col: pa.Array | pa.ChunkedArray, name: str, dtype=np.float64) -> np.n
     flat = col.flatten()
     if flat.null_count:
         raise ValueError(f"column {name!r}: null element inside a vector")
-    return np.array(flat.to_numpy(zero_copy_only=False), dtype=dtype).reshape(n, dim)
+    values = flat.to_numpy(zero_copy_only=False).reshape(n, dim)
+    if rows is None:
+        return np.array(values, dtype=dtype)
+    return values[rows].astype(dtype, copy=False)
 
 
 def sort_keys(col: pa.Array | pa.ChunkedArray) -> np.ndarray:

@@ -18,14 +18,19 @@ nearest centroids (centroids are tiny) and scans ONLY the probed
 partitions: a ``cluster_id IN (...)`` predicate gives Catalyst
 partition pruning, and each query is ranked against the rows of its own
 probe set only — the reference's list-probing semantics, executed as a
-pruned scan.  One plan per query location:
+pruned scan.  ``search`` and ``search_bulk`` share two plans, split by
+the size of the query set:
 
-- driver-held queries (``search``): the queries and their probe sets
-  are broadcast into ``knn.partial_knn``, one map-only Arrow pass over
-  the probed clusters, merged by ``topk_per_query``;
-- queries held in a DataFrame (``search_bulk``): ``probe_pairs`` ranks
-  the probes in a map-only Arrow pass and the probe rows cogroup with
-  the clustered table on cluster id.
+- a bounded query set (``knn._driver_queries``: one collect, capped
+  before it runs, of float64 query vectors within
+  ``knn._MAX_DRIVER_QUERY_BYTES`` and Q * k * scan partitions partial
+  rows within ``knn._MAX_DRIVER_PARTIAL_ROWS``): the queries and their probe
+  sets, ranked on the driver, are broadcast into ``knn.partial_knn``,
+  one map-only Arrow pass over the probed clusters, and its partial rows
+  merge on the driver into a local relation — no exchange;
+- a larger one stays a DataFrame: ``probe_pairs`` ranks the probes in a
+  map-only Arrow pass and the probe rows cogroup with the clustered
+  table on cluster id, merged by ``topk_per_query``.
 
 With ``n_probe = n_clusters`` both are exactly brute force, which is
 both the reference's own ground-truth trick and our oracle hook.  The
@@ -50,12 +55,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fabstir_vectordb_spark.operators import _arrow
+from fabstir_vectordb_spark.operators._plan import scan_partitions
 from fabstir_vectordb_spark.operators.knn import (
+    _driver_queries,
+    _knn_on_driver,
     brute_force_knn,
     check_metric,
     cogroup_block_knn,
     knn_bulk,
-    partial_knn,
 )
 from fabstir_vectordb_spark.operators.topk import topk_per_query
 
@@ -220,38 +227,13 @@ class IVFIndex:
         query_id_col: str = "query_id",
         query_vector_col: str = "vector",
     ) -> DataFrame:
-        """Probe n_probe clusters per query, exact top-k within the probe set.
-
-        Plan shape: the queries are collected once; their probe sets
-        (``probes_by_cluster``) and vectors are broadcast into
-        ``partial_knn``, whose `cluster_id IN (union probes)` prunes
-        partitions at the scan and whose kernel ranks each row only
-        against the queries that probed its cluster.
-        """
-        if self.centroids is None:
-            # brute-force mode (below training threshold)
-            return brute_force_knn(
-                vectors_with_cluster, queries, k, metric=metric,
-                id_col=self.id_col, vector_col=self.vector_col,
-                query_id_col=query_id_col, query_vector_col=query_vector_col,
-            )
-        check_metric(metric)
-        qrows = queries.select(query_id_col, query_vector_col).collect()
-        Q = np.asarray([r[1] for r in qrows], dtype=np.float64)
-        partials = partial_knn(
-            vectors_with_cluster.select(
-                self.id_col, self.vector_col, F.col(cluster_col).alias("cluster_id")
-            ),
-            [r[0] for r in qrows],
-            Q,
-            queries.schema[query_id_col].dataType,
-            k,
-            metric,
-            id_col=self.id_col,
-            vector_col=self.vector_col,
-            probes=self.probes_by_cluster(Q, n_probe),
+        """Probe n_probe clusters per query, exact top-k within the probe
+        set: the plans of ``search_bulk``, whose bounded one collects the
+        queries once and merges on the driver."""
+        return self.search_bulk(
+            vectors_with_cluster, queries, k, n_probe, metric, cluster_col,
+            query_id_col, query_vector_col,
         )
-        return topk_per_query(partials, k)
 
     def search_bulk(
         self,
@@ -265,38 +247,47 @@ class IVFIndex:
         query_vector_col: str = "vector",
         sub_blocks: int = 1,
     ) -> DataFrame:
-        """IVF probe search with the QUERY SET as a DataFrame — no driver
-        collect anywhere, the bulk companion to ``search`` (reference
+        """IVF probe search over a query set held in a DataFrame (reference
         analogue: parallel_search, src/hybrid/search_integration.rs:125-211,
         which loops per query; this is set-at-a-time).
 
-        ``sub_blocks``: the cogroup loads ONE block's vectors into one
-        task's Arrow frame, so a block must fit task memory.  With S > 1
-        each cluster splits into S hash sub-blocks (probes replicate per
-        sub-block — an S-fold fanout of the tiny probe table, the same
-        deliberate small-side cost as knn_bulk's vector_blocks knob);
-        size S so cluster_rows/S * dim * 8B fits an executor task.  The
-        merge is unchanged: top-k over block-local partials is exact for
-        any partitioning of the same probed row set.
+        Bounded plan: a query set that passes ``knn._driver_queries`` (one
+        collect, capped before it runs by the centroids' dim, of float64
+        query vectors within ``knn._MAX_DRIVER_QUERY_BYTES`` and Q * k *
+        scan partitions partial rows within
+        ``knn._MAX_DRIVER_PARTIAL_ROWS``)
+        has its probes ranked on the driver (``probes_by_cluster``) and is
+        broadcast with them into one ``knn.partial_knn`` pass over the
+        probed clusters; the partial rows merge on the driver and the
+        result is a local relation.  No exchange runs.
 
-        Plan: centroids (tiny, driver-held by construction) broadcast
-        into a map-only Arrow kernel (``probe_pairs``) that ranks them
-        for each query of a batch and emits the n_probe nearest as
-        (query, cluster) rows — distributed probe selection with the
-        exact ranking arithmetic of the driver path
-        (``probes_by_cluster``; both rank with ``_probe_order``).  The
-        probe table (Q x n_probe rows) then COGROUPS with the clustered
-        table on cluster_id, and each cluster runs one vectorized GEMM
-        kernel emitting <= k rows per (query, cluster) — the same
-        block-partial shape as knn_bulk, with the IVF cluster as the block.  (Both a
+        Cogroup plan, above the caps: centroids (tiny, driver-held by
+        construction) broadcast into a map-only Arrow kernel
+        (``probe_pairs``) that ranks them for each query of a batch and
+        emits the n_probe nearest as (query, cluster) rows — distributed
+        probe selection with the exact ranking arithmetic of the driver
+        path (both rank with ``_probe_order``).  The probe table (Q x
+        n_probe rows) then COGROUPS with the clustered table on
+        cluster_id, and each cluster runs one vectorized GEMM kernel
+        emitting <= k rows per (query, cluster) — the same block-partial
+        shape as knn_bulk, with the IVF cluster as the block.  (Both a
         plain join + distance expression and a crossJoin + window over
         centroids leave the distance in interpreted higher-order
         functions — HOFs never enter whole-stage codegen — which
         measured ~10x slower at Q=8 and ~100s at Q=2000 when the query
         side sat on one post-limit partition.)
 
-        At n_probe = n_clusters this is exactly brute force — the same
-        oracle hook as ``search``.
+        ``sub_blocks`` (cogroup plan): the cogroup loads ONE block's
+        vectors into one task's Arrow frame, so a block must fit task
+        memory.  With S > 1 each cluster splits into S hash sub-blocks
+        (probes replicate per sub-block — an S-fold fanout of the tiny
+        probe table, the same deliberate small-side cost as knn_bulk's
+        vector_blocks knob); size S so cluster_rows/S * dim * 8B fits an
+        executor task.  The merge is unchanged: top-k over block-local
+        partials is exact for any partitioning of the same probed row set.
+
+        At n_probe = n_clusters this is exactly brute force — the
+        reference's own ground-truth trick and our oracle hook.
         """
         check_metric(metric)
         if self.centroids is None:
@@ -304,6 +295,20 @@ class IVFIndex:
                 vectors_with_cluster, queries, k, metric=metric,
                 id_col=self.id_col, vector_col=self.vector_col,
                 query_id_col=query_id_col, query_vector_col=query_vector_col,
+            )
+        qid_type = queries.schema[query_id_col].dataType
+        bounded = _driver_queries(
+            queries, query_id_col, query_vector_col,
+            k * scan_partitions(vectors_with_cluster), self.centroids.shape[1],
+        )
+        if bounded is not None:
+            qids, Q = bounded
+            return _knn_on_driver(
+                vectors_with_cluster.select(
+                    self.id_col, self.vector_col, F.col(cluster_col).alias("cluster_id")
+                ),
+                qids, Q, qid_type, k, metric, self.id_col, self.vector_col,
+                probes=self.probes_by_cluster(Q, n_probe),
             )
         spark = vectors_with_cluster.sparkSession
         probes = self.probe_pairs(
@@ -330,7 +335,7 @@ class IVFIndex:
             )
         partials = cogroup_block_knn(
             v, probes, k, metric,
-            qid_type=queries.schema[query_id_col].dataType,
+            qid_type=qid_type,
             id_type=vectors_with_cluster.schema[self.id_col].dataType,
         )
         return topk_per_query(partials, k)

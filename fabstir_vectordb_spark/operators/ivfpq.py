@@ -13,14 +13,20 @@ codes with M table lookups per row (no full-width math, no decode), and
 the full-precision vectors are touched ONLY for the Q x k x oversample
 re-rank rows.
 
-Plan shape per search: a bounded query set and its probes (ranked on the
-driver over the centroids) are broadcast into ONE map-only ADC pass over
-the probed clusters' codes (``pq.partial_adc``), then the exact re-rank
-join.  A larger query set stays a DataFrame: a map-only probe-selection
-kernel (Q x n_probe rows), then a cogroup of the probed clusters' codes
-with their probing queries (``pq.cogroup_block_adc``).  Shuffle volume:
-Q x n_probe x k*oversample partial rows — never raw vectors, and on the
-broadcast plan never codes.
+Plan shape per search: a bounded query set (``knn._driver_queries``: one
+collect, capped before it runs, of float64 query vectors within
+``knn._MAX_DRIVER_QUERY_BYTES`` and Q * fetch * scan partitions partial
+rows within ``knn._MAX_DRIVER_PARTIAL_ROWS``) and its
+probes (ranked on the driver over the centroids) are broadcast into ONE
+map-only ADC pass over the probed clusters' codes (``pq.partial_adc``);
+its partial rows merge on the driver, and the re-rank pulls only the
+candidates' vectors (one broadcast join, no Python task) and ranks them
+on the driver: no exchange, and the result is a local relation.  A
+larger query set stays a DataFrame: a map-only probe-selection kernel
+(Q x n_probe rows), then a cogroup of the probed clusters' codes with
+their probing queries (``pq.cogroup_block_adc``) and the exact re-rank
+join.  Shuffle volume there: Q x n_probe x k*oversample partial rows —
+never raw vectors.
 
 Reference parity: composes SURVEY §2.4 (IVF probe search,
 ivf/core.rs:622-681) with §2.1 PQ (vector_ops.rs:390-578); the reference
@@ -36,20 +42,24 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from fabstir_vectordb_spark.operators import _arrow
+from fabstir_vectordb_spark.operators._plan import scan_partitions
 from fabstir_vectordb_spark.operators.ivf import IVFIndex, _nearest
+from fabstir_vectordb_spark.operators.knn import (
+    _driver_queries,
+    _first_k_rows,
+    _merged_on_driver,
+)
 from fabstir_vectordb_spark.operators.pq import (
     ProductQuantizer,
     _pq_codes,
+    _rerank_on_driver,
     _top_candidates,
     cogroup_block_adc,
     partial_adc,
 )
-
-# search_bulk collects the query set and broadcasts it while the query
-# vectors fit this many float64 bytes: 65,536 queries at dim 384
-_MAX_BROADCAST_QUERY_BYTES = 65_536 * 384 * 8
 
 
 class IVFPQIndex:
@@ -199,16 +209,23 @@ class IVFPQIndex:
         Two plans, identical rows: both rank with ``pq._adc_topk_rows``
         under the (round(6), id) order, and a row of a query's global
         top-fetch is in the top-fetch of its own block.
-        - A query set whose float64 vectors fit
-          ``_MAX_BROADCAST_QUERY_BYTES`` (192 MiB: 65,536 queries at dim
-          384) is collected once, its probes are ranked on the driver
-          (``IVFIndex.probes_by_cluster``, the exact ranking twin of
-          ``probe_pairs``), and both are broadcast into one
-          ``partial_adc`` pass over the probed clusters' codes: the codes
-          are never shuffled, only Q x n_probe x fetch partial rows move
-          (guide §8: decide with small rows, move big rows once).
+        - A bounded query set (``knn._driver_queries``: float64 query
+          vectors within ``knn._MAX_DRIVER_QUERY_BYTES`` and Q x fetch x
+          scan partitions partial rows within
+          ``knn._MAX_DRIVER_PARTIAL_ROWS``, capped before the pull) is
+          collected once, its
+          probes are ranked on the driver (``IVFIndex.probes_by_cluster``,
+          the exact ranking twin of ``probe_pairs``), and both are
+          broadcast into one ``partial_adc`` pass over the probed
+          clusters' codes; its partial rows merge on the driver.  With
+          ``rerank_vectors`` the candidates' vectors are pulled by one
+          broadcast join with the candidate ids (``pq._rerank_on_driver``)
+          and re-ranked in numpy.  Nothing is shuffled and the result is
+          a local relation (guide §8: decide with small rows, move big
+          rows once).
         - A larger one stays a DataFrame end-to-end: ``probe_pairs``, then
-          ``cogroup_block_adc`` with each probed cluster as the block.
+          ``cogroup_block_adc`` with each probed cluster as the block,
+          ``topk_per_query`` and the ``exact_rerank`` join.
 
         ``prune_scan=True`` (cogroup plan): collect the DISTINCT probed
         cluster ids (<= n_clusters ints) and filter ``encoded`` with a
@@ -217,7 +234,7 @@ class IVFPQIndex:
         scan as PartitionFilters — only n_probe/n_clusters of the files
         are read, the 100 TB I/O claim of this module's header.  Default
         off: the in-memory path doesn't need the extra tiny job.  The
-        broadcast plan always applies the filter: its probed ids are
+        bounded plan always applies the filter: its probed ids are
         already on the driver."""
         if n_probe is None:
             n_probe = self.tuned.n_probe if self.tuned is not None else 4
@@ -238,35 +255,48 @@ class IVFPQIndex:
         fetch = k * (oversample if rerank_vectors is not None else 1)
         qid_type = queries.schema[query_id_col].dataType
         cents = self.ivf.centroids if self.residual else None
-        max_bq = _MAX_BROADCAST_QUERY_BYTES // (8 * self.ivf.centroids.shape[1])
-        t = queries.select(query_id_col, query_vector_col).limit(max_bq + 1).toArrow()
-        if 0 < t.num_rows <= max_bq:
-            Q = _arrow.matrix(t.column(1), query_vector_col)
-            partials = partial_adc(
-                encoded, t.column(0).to_pylist(), Q, qid_type, fetch, self.pq,
+        bounded = _driver_queries(
+            queries, query_id_col, query_vector_col,
+            fetch * scan_partitions(encoded), self.ivf.centroids.shape[1],
+            vectors_per_query=1 + (fetch if rerank_vectors is not None else 0),
+        )
+        if bounded is not None:
+            qids, Q = bounded
+            spark = encoded.sparkSession
+            schema = _arrow.topk_schema(qid_type, encoded.schema[id_col].dataType)
+            if not qids:
+                return spark.createDataFrame([], schema)
+            cand = partial_adc(
+                encoded, qids, Q, qid_type, fetch, self.pq,
                 id_col=id_col, code_col=code_col,
                 probes=self.ivf.probes_by_cluster(Q, n_probe),
                 centroids=cents, cluster_col=cluster_col,
-            )
-        else:
-            probes = self.ivf.probe_pairs(
-                queries, n_probe,
-                query_id_col=query_id_col, query_vector_col=query_vector_col,
-            )
-            if prune_scan:
-                probed = sorted(
-                    r[0] for r in probes.select("__blk").distinct().collect()
+            ).toArrow()
+            if rerank_vectors is not None:
+                qids_a = pa.array(qids, to_arrow_type(qid_type))
+                cand = _rerank_on_driver(
+                    _first_k_rows(cand, qids_a, fetch), qids_a, Q, rerank_vectors,
+                    schema, id_col, self.ivf.vector_col,
                 )
-                encoded = encoded.filter(F.col(cluster_col).isin(probed))
-            v = encoded.select(
-                F.col(id_col).alias("id"),
-                F.col(code_col).alias("__codes"),
-                F.col(cluster_col).cast("int").alias("__blk"),
+            return _merged_on_driver(spark, cand, qids, schema, k)
+        probes = self.ivf.probe_pairs(
+            queries, n_probe,
+            query_id_col=query_id_col, query_vector_col=query_vector_col,
+        )
+        if prune_scan:
+            probed = sorted(
+                r[0] for r in probes.select("__blk").distinct().collect()
             )
-            partials = cogroup_block_adc(
-                v, probes, fetch, self.pq, qid_type,
-                encoded.schema[id_col].dataType, centroids=cents,
-            )
+            encoded = encoded.filter(F.col(cluster_col).isin(probed))
+        v = encoded.select(
+            F.col(id_col).alias("id"),
+            F.col(code_col).alias("__codes"),
+            F.col(cluster_col).cast("int").alias("__blk"),
+        )
+        partials = cogroup_block_adc(
+            v, probes, fetch, self.pq, qid_type,
+            encoded.schema[id_col].dataType, centroids=cents,
+        )
         return _top_candidates(
             partials, fetch, k, queries, rerank_vectors,
             id_col=id_col, rerank_vector_col=self.ivf.vector_col,

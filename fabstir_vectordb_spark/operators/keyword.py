@@ -28,7 +28,9 @@ from fabstir_vectordb_spark.operators.dedup import _parallelize
 
 
 def _terms(text_col, lower: bool = True):
-    toks = whitespace_tokens(text_col)
+    # splitting "" yields [""]: the filter keeps an empty or all-whitespace
+    # document at zero tokens, so it has no postings and dl 0
+    toks = F.filter(whitespace_tokens(text_col), lambda t: t != "")
     return F.transform(toks, lambda t: F.lower(t)) if lower else toks
 
 

@@ -7,25 +7,32 @@ search path (the reference's "HNSW-only mode" below the IVF training
 threshold, src/hybrid/core.rs:262-269) and the correctness oracle for the
 approximate IVF path.
 
-Two plans, one per query location, the same Arrow-batched numpy kernel
-(``_batch_topk_rows``) under both:
+Two plans, the same Arrow-batched numpy kernel (``_batch_topk_rows``)
+under both:
 
-Driver-held queries (``brute_force_knn``, ``IVFIndex.search``, the
-session's point searches on a large table): ``partial_knn`` broadcasts
-the query matrix into one map-only ``mapInArrow`` pass.  Each input
-batch computes distances for all queries with BLAS and emits only its
-top-k per query (``_topk_batch``, a map-side partial reduction — no
-Q*N shuffle); a final window over the Q * batches * k partial rows
-(``topk_per_query``) or a sort on the driver picks the exact global
-top-k.  With ``probes`` the pass reads only the probed IVF clusters and
-ranks each query against its own.  The session's point searches on a
-small table run ``driver_knn`` instead: one JVM-only ``toArrow()`` of
-the same candidate rows, bounded by the session's byte cap, ranked on
-the driver by the same ``_topk_batch`` — no Python task.
+Bounded query sets (``knn_bulk``, ``brute_force_knn``, ``IVFIndex.search``
+and ``search_bulk``, the session's point searches on a large table):
+``partial_knn`` broadcasts the query matrix into one map-only
+``mapInArrow`` pass.  Each task computes distances for all queries with
+BLAS and keeps a running top-k per query across its Arrow batches
+(``_topk_batch``, a map-side partial reduction — no Q*N shuffle), so it
+emits at most Q * k rows.  The bulk searches decide with one bounded
+collect (``_driver_queries``): they pull at most ``cap + 1`` query rows,
+the cap set before the pull so that the queries' float64 vectors fit
+``_MAX_DRIVER_QUERY_BYTES`` and the partial rows (Q * k * scan
+partitions) fit ``_MAX_DRIVER_PARTIAL_ROWS``; when they fit, the partial
+rows are collected as Arrow and merged on the driver
+(``_merged_on_driver``, ``topk.first_k_per_query``) into a local
+relation: no exchange anywhere.  With ``probes`` the pass
+reads only the probed IVF clusters and ranks each query against its own.
+The session's point searches on a small table run ``driver_knn``
+instead: one JVM-only ``toArrow()`` of the same candidate rows, bounded
+by the session's byte cap, ranked on the driver by the same
+``_topk_batch`` — no Python task.
 
-Queries held in a DataFrame (``knn_bulk``, ``IVFIndex.search_bulk``):
-``cogroup_block_knn`` cogroups vector blocks with the query rows, so
-the query set is never collected.
+Larger query sets (``knn_bulk`` and ``IVFIndex.search_bulk`` above the
+caps): ``cogroup_block_knn`` cogroups vector blocks with the query rows,
+so the query set is never collected, and ``topk_per_query`` merges.
 
 Both rank by (round(distance, 6), id) — see operators/topk.py for why
 that makes results deterministic across engines.
@@ -37,6 +44,7 @@ from collections.abc import Callable
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,9 +52,27 @@ from pyspark.sql.pandas.types import to_arrow_type
 
 from fabstir_vectordb_spark.functions import distance as D
 from fabstir_vectordb_spark.operators import _arrow
-from fabstir_vectordb_spark.operators.topk import ROUND_DECIMALS, topk_per_query
+from fabstir_vectordb_spark.operators._plan import scan_partitions
+from fabstir_vectordb_spark.operators.topk import (
+    ROUND_DECIMALS,
+    first_k_per_query,
+    topk_per_query,
+)
 
 _METRICS = ("l2", "cosine", "dot")
+
+# A bulk search ranks in one broadcast pass merged on the driver while the
+# float64 vectors it holds there fit the first cap (16,384 queries at dim
+# 384; IVFPQ's re-rank adds its fetch candidates to each query: 160k of
+# them, for 4,000 queries, overran a 1 GB driver heap) and its
+# partial rows, queries x fetch x scan partitions, the second.  Both come
+# from timing the two plans on a 3,000 x 384 corpus over 4 partitions
+# (4 cores): the bounded plan won or tied up to 16,000 queries and 2M
+# partial rows, and only tied at 4M, where the driver merge took 4.2 s.
+# A query set over the cap costs its cogroup plus the rejected pull
+# (0.7 s at the cap, against about 10 s for the search).
+_MAX_DRIVER_QUERY_BYTES = 16_384 * 384 * 8
+_MAX_DRIVER_PARTIAL_ROWS = 1 << 21
 
 
 def check_metric(metric: str) -> None:
@@ -198,10 +224,12 @@ def partial_knn(
     ``mapInArrow`` pass over ``vectors``, no exchange.
 
     ``qids`` and the ``(nq, dim)`` float64 matrix ``Q`` are broadcast.
-    Each Arrow batch emits its top-k per query under the (round(distance,
-    6), id) order (``_topk_batch``), so the union of the partials holds
-    the exact global top-k; the caller merges them (``topk_per_query``, or
-    a sort on the driver).  ``probes`` ({cluster id: positions in ``Q`` of
+    Each Arrow batch ranks its top-k per query under the (round(distance,
+    6), id) order (``_topk_batch``) and a task keeps the running top-k of
+    its batches (``_running_topk``), so it emits at most k rows per query
+    and the union of the partials holds the exact global top-k; the caller
+    merges them (``_merged_on_driver``, ``topk_per_query``, or the
+    session's sort).  ``probes`` ({cluster id: positions in ``Q`` of
     the queries probing it}) reads only the probed clusters and restricts
     each query to its own.  ``carry`` columns ride along, taken by
     position from the batch, so no join re-attaches them.
@@ -217,11 +245,15 @@ def partial_knn(
 
     def partial_topk(batches):
         qids_l, Q_l, probes_l = bc.value
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            t = _topk_batch(b, qids_l, Q_l, k, metric, id_col, vector_col, probes_l, carry)
-            yield from t.to_batches()
+        yield from _running_topk(
+            (
+                _topk_batch(b, qids_l, Q_l, k, metric, id_col, vector_col, probes_l, carry)
+                for b in batches
+                if b.num_rows
+            ),
+            qids_l,
+            k,
+        )
 
     return _topk_input(vectors, id_col, vector_col, probes, carry).mapInArrow(
         partial_topk, out_schema
@@ -289,18 +321,21 @@ def _topk_batch(
     ``b`` as (query_id, id, distance, *carry) rows.  With ``probes`` the
     batch's rows are grouped by their ``cluster_id`` and each group ranks
     only the queries that probed it (``_probed_topk_rows``, the grouping
-    ``pq.partial_adc`` shares)."""
-    V = _arrow.matrix(b.column(vector_col), vector_col)
+    ``pq.partial_adc`` shares), so a query has up to k rows per probed
+    cluster: sorted by cluster once, each cluster ranks a contiguous slice
+    of the one float64 copy of the vectors."""
     ids = b.column(id_col)
     keys = _arrow.sort_keys(ids)
     if probes is None or b.num_rows == 0:  # no rows: no cluster to group
+        V = _arrow.matrix(b.column(vector_col), vector_col)
         qpos, vpos, d = _batch_topk_rows(metric, V, keys, Q, k)
     else:
+        order, runs = _cluster_runs(b.column("cluster_id"))
+        V = _arrow.matrix(b.column(vector_col), vector_col, rows=order)
+        skeys = keys[order]
         qpos, vpos, d = _probed_topk_rows(
-            b.column("cluster_id"), probes,
-            lambda cid, rows, qidx: _batch_topk_rows(
-                metric, V[rows], keys[rows], Q[qidx], k
-            ),
+            order, runs, probes,
+            lambda cid, s, e, qidx: _batch_topk_rows(metric, V[s:e], skeys[s:e], Q[qidx], k),
         )
     t = _arrow.topk_table(qids, qpos, ids, vpos, d)
     for c in carry:
@@ -308,36 +343,156 @@ def _topk_batch(
     return t
 
 
-def _probed_topk_rows(
-    clusters: pa.Array,
-    probes: dict[int, np.ndarray],
-    rank: Callable[[int, np.ndarray, np.ndarray], tuple[np.ndarray, np.ndarray, np.ndarray]],
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """The per-cluster grouping of one batch, shared by ``partial_knn`` and
-    ``pq.partial_adc``: the batch's rows are grouped by ``clusters`` (a
-    batch may span clusters) and each group ranks only the queries that
-    probe its cluster.  ``rank(cluster id, rows, qidx)`` ranks the batch
-    rows ``rows`` against the queries at positions ``qidx`` and returns
-    (position in ``qidx``, position in ``rows``, distance); the result maps
-    them back to (query position, batch row position, distance)."""
+def _cluster_runs(clusters: pa.Array) -> tuple[np.ndarray, list[tuple[int, int, int]]]:
+    """A batch's row positions sorted by ``clusters`` (stably, so each
+    cluster keeps its batch order) and the (cluster id, start, end) runs
+    of that order."""
     blk = clusters.to_numpy(zero_copy_only=False)
     order = np.argsort(blk, kind="stable")
     blk_s = blk[order]
     starts = np.flatnonzero(np.r_[True, blk_s[1:] != blk_s[:-1]])
     ends = np.r_[starts[1:], len(blk_s)]
+    return order, [(int(blk_s[s]), s, e) for s, e in zip(starts, ends)]
+
+
+def _probed_topk_rows(
+    order: np.ndarray,
+    runs: list[tuple[int, int, int]],
+    probes: dict[int, np.ndarray],
+    rank: Callable[[int, int, int, np.ndarray], tuple[np.ndarray, np.ndarray, np.ndarray]],
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The per-cluster grouping of one batch, shared by ``partial_knn`` and
+    ``pq.partial_adc``: over the ``_cluster_runs`` of the batch, each
+    cluster ranks only the queries that probe it.  ``rank(cluster id,
+    start, end, qidx)`` ranks the sorted rows ``order[start:end]`` (the
+    caller holds its arrays in that order) against the queries at
+    positions ``qidx`` and returns (position in ``qidx``, position in the
+    slice, distance); the result maps them back to (query position, batch
+    row position, distance)."""
     empty = np.empty(0, dtype=np.int64)
     out_q, out_v, out_d = [empty], [empty], [np.empty(0)]
-    for s, e in zip(starts, ends):
-        cid = int(blk_s[s])
+    for cid, s, e in runs:
         qidx = probes.get(cid)
         if qidx is None:
             continue  # no query probes this cluster
-        rows = order[s:e]
-        qp, vp, d = rank(cid, rows, qidx)
+        qp, vp, d = rank(cid, s, e, qidx)
         out_q.append(qidx[qp])
-        out_v.append(rows[vp])
+        out_v.append(order[s + vp])
         out_d.append(d)
     return np.concatenate(out_q), np.concatenate(out_v), np.concatenate(out_d)
+
+
+def _query_positions(col: pa.Array | pa.ChunkedArray, qids: pa.Array) -> np.ndarray:
+    """The position in ``qids`` of each query id of ``col`` (of a repeated
+    id, its first)."""
+    return pc.index_in(col, value_set=qids.cast(col.type)).to_numpy(zero_copy_only=False)
+
+
+def _first_k_rows(t: pa.Table, qids: pa.Array, k: int) -> pa.Table:
+    """The first ``k`` rows of each query of the (query_id, id, distance,
+    ...) table ``t`` by (round(distance, 6), id), ordered so; queries are
+    grouped by value, through ``_query_positions``."""
+    keep = first_k_per_query(
+        _query_positions(t.column("query_id"), qids),
+        t.column("distance").to_numpy(),
+        _arrow.sort_keys(t.column("id")),
+        k,
+    )
+    return t.take(keep)
+
+
+def _running_topk(tables, qids: pa.Array, k: int) -> list[pa.RecordBatch]:
+    """The running top-``k`` per query over a task's per-batch partial
+    ``tables``, emitted once: a task's output stays at most k rows per
+    query however many Arrow batches, and with probes clusters, it
+    reads (a probed batch holds k rows per query and cluster)."""
+    acc = None
+    for t in tables:
+        acc = _first_k_rows(t if acc is None else pa.concat_tables([acc, t]), qids, k)
+    return [] if acc is None else acc.to_batches()
+
+
+def _driver_queries(
+    queries: DataFrame,
+    query_id_col: str,
+    query_vector_col: str,
+    rows_per_query: int,
+    dim: int | None,
+    vectors_per_query: int = 1,
+) -> tuple[list, np.ndarray] | None:
+    """The one bounded-query check of the bulk searches: the query ids and
+    the ``(nq, dim)`` float64 query matrix, pulled by one
+    ``limit(cap + 1).toArrow()``, or None when the queries do not fit.
+    The cap is set before the pull and bounds both the partial rows,
+    ``rows_per_query`` per query (fetch x scan partitions), by
+    ``_MAX_DRIVER_PARTIAL_ROWS`` and the float64 vectors the search
+    holds on the driver, ``vectors_per_query`` per query (the query, and
+    for IVFPQ's re-rank its fetch candidates), by
+    ``_MAX_DRIVER_QUERY_BYTES``.  ``dim`` is the queries' dimension where
+    the caller knows it (an index's centroids); None reads it from one
+    query row first, a one-row job.  The pull fails in the JVM on a query
+    of another length or a null one, so no more than the cap's bytes
+    reach the driver.
+    On a one-partition query set the pull reads no exchange (over several,
+    the limit gathers them through one single-partition exchange of the
+    query rows)."""
+    vec = F.col(query_vector_col)
+    if dim is None:
+        first = queries.select(F.size(vec)).head()
+        if first is None:
+            return [], np.empty((0, 0))
+        dim = first[0]
+        if dim is None or dim < 0:
+            raise ValueError(f"column {query_vector_col!r}: null query vector")
+    cap = min(
+        _MAX_DRIVER_PARTIAL_ROWS // max(1, rows_per_query),
+        _MAX_DRIVER_QUERY_BYTES // (8 * max(1, dim) * vectors_per_query),
+    )
+    checked = F.when(F.size(vec) == dim, vec).otherwise(
+        F.raise_error(
+            F.lit(f"column {query_vector_col!r}: null query vector or one of length other than {dim}")
+        )
+    )
+    t = queries.select(query_id_col, checked.alias(query_vector_col)).limit(cap + 1).toArrow()
+    if t.num_rows > cap:
+        return None
+    return t.column(0).to_pylist(), _arrow.matrix(t.column(1), query_vector_col)
+
+
+def _merged_on_driver(
+    spark, partials: pa.Table, qids: list, schema: T.StructType, k: int
+) -> DataFrame:
+    """The final merge of a bounded search: the first ``k`` rows per query
+    of the collected ``partials`` as a local relation of ``schema``
+    (``_arrow.topk_schema``)."""
+    qids_a = pa.array(qids, to_arrow_type(schema["query_id"].dataType))
+    top = _first_k_rows(partials, qids_a, k).select(["query_id", "id", "distance"])
+    return spark.createDataFrame(top, schema)
+
+
+def _knn_on_driver(
+    vectors: DataFrame,
+    qids: list,
+    Q: np.ndarray,
+    qid_type: T.DataType,
+    k: int,
+    metric: str,
+    id_col: str,
+    vector_col: str,
+    probes: dict[int, np.ndarray] | None = None,
+) -> DataFrame:
+    """The bounded plan of the exact and IVF searches: one ``partial_knn``
+    pass, collected as Arrow, merged on the driver
+    (``_merged_on_driver``)."""
+    spark = vectors.sparkSession
+    schema = _arrow.topk_schema(qid_type, vectors.schema[id_col].dataType)
+    if not qids:
+        return spark.createDataFrame([], schema)
+    partials = partial_knn(
+        vectors, qids, Q, qid_type, k, metric, id_col=id_col, vector_col=vector_col,
+        probes=probes,
+    ).toArrow()
+    return _merged_on_driver(spark, partials, qids, schema, k)
 
 
 def knn_bulk(
@@ -351,24 +506,37 @@ def knn_bulk(
     query_vector_col: str = "vector",
     vector_blocks: int | None = None,
 ) -> DataFrame:
-    """Bulk exact similarity join: BOTH sides are DataFrames — no driver
-    collect, no broadcast of the query set (reference analogue:
-    parallel_search, src/hybrid/search_integration.rs:125-211, whose
-    clients loop per query; this is the set-at-a-time version).
+    """Bulk exact similarity join over a query set held in a DataFrame
+    (reference analogue: parallel_search,
+    src/hybrid/search_integration.rs:125-211, whose clients loop per
+    query; this is the set-at-a-time version).
 
-    Block-parallel shape (the two-big-tables path ``brute_force_knn``
-    lacks): vectors are hashed into `vector_blocks` blocks and
-    shuffled ONCE; the query table is replicated per block (Q x VB rows
-    — queries are usually the smaller side, and VB is a knob).  A
-    cogrouped applyInArrow computes each (vector-block x all-queries)
-    GEMM and emits only block-local top-k, so the final shuffle is
-    Q * VB * k partial rows, never Q * N.  Size VB so one block's
-    vectors fit a task's memory (N/VB * dim * 8B).
+    A bounded query set (``_driver_queries``: float64 query vectors
+    within ``_MAX_DRIVER_QUERY_BYTES`` and Q * k * scan partitions partial
+    rows within ``_MAX_DRIVER_PARTIAL_ROWS``, the dim read from one query
+    row before the pull) is collected once and ranked in one broadcast
+    ``partial_knn`` pass whose partial rows merge on the driver; the
+    result is a local relation and no exchange runs.
+
+    Above the caps both sides stay DataFrames, in a block-parallel shape:
+    vectors are hashed into `vector_blocks` blocks and shuffled ONCE; the
+    query table is replicated per block (Q x VB rows — queries are usually
+    the smaller side, and VB is a knob).  A cogrouped applyInArrow
+    computes each (vector-block x all-queries) GEMM and emits only
+    block-local top-k, so the final shuffle is Q * VB * k partial rows,
+    never Q * N.  Size VB so one block's vectors fit a task's memory
+    (N/VB * dim * 8B).
 
     Output: (query_id, id, distance) ascending, k rows per query.
     """
     check_metric(metric)
     spark = vectors.sparkSession
+    qid_type = queries.schema[query_id_col].dataType
+    bounded = _driver_queries(
+        queries, query_id_col, query_vector_col, k * scan_partitions(vectors), None
+    )
+    if bounded is not None:
+        return _knn_on_driver(vectors, *bounded, qid_type, k, metric, id_col, vector_col)
     if vector_blocks is not None:
         VB = vector_blocks
     else:
@@ -381,8 +549,6 @@ def knn_bulk(
         # paying for cores-many blocks (replicating the query set per
         # block) it cannot fill.  Block count does not affect results:
         # per-block top-k partials always cover the global top-k.
-        from fabstir_vectordb_spark.operators._plan import scan_partitions
-
         VB = max(
             1,
             min(
@@ -402,7 +568,7 @@ def knn_bulk(
     ).crossJoin(blocks)
     partials = cogroup_block_knn(
         v, qrep, k, metric,
-        qid_type=queries.schema[query_id_col].dataType,
+        qid_type=qid_type,
         id_type=vectors.schema[id_col].dataType,
     )
     return topk_per_query(partials, k)
@@ -450,38 +616,37 @@ def brute_force_knn(
     query_vector_col: str = "vector",
     query_rows: list | None = None,
 ) -> DataFrame:
-    """Exact top-k similarity join: ``partial_knn`` merged by
-    ``topk_per_query``.  Output: (query_id, id, distance) asc.
+    """Exact top-k similarity join.  Output: (query_id, id, distance) asc.
 
-    Queries are collected to the driver (they are the small side) and
-    broadcast to the kernel.  ``query_rows`` optionally supplies that
-    collect's result (rows of (query_id, vector), the exact shape
-    `queries.select(query_id_col, query_vector_col)` yields): a caller
-    constructing several searches can run the collects concurrently
-    (overlap independent driver jobs) instead of paying one sequential
-    driver job per search.
+    The plans of ``knn_bulk``: a bounded query set is collected once and
+    merged on the driver, a larger one cogroups.  ``query_rows``
+    optionally supplies the query collect's result (rows of (query_id,
+    vector), the exact shape `queries.select(query_id_col,
+    query_vector_col)` yields): a caller constructing several searches can
+    run the collects concurrently (overlap independent driver jobs)
+    instead of paying one sequential driver job per search.  Rows already
+    on the driver always take the bounded plan.
 
     Apply metadata predicates to ``vectors`` BEFORE calling — the filter
     then reaches the parquet scan (pushdown), which supersedes the
     reference's k*3 oversampling post-filter (src/hybrid/core.rs:513-549).
     """
     check_metric(metric)
-    qrows = (
-        query_rows
-        if query_rows is not None
-        else queries.select(query_id_col, query_vector_col).collect()
-    )
-    partials = partial_knn(
+    if query_rows is None:
+        return knn_bulk(
+            vectors, queries, k, metric, id_col=id_col, vector_col=vector_col,
+            query_id_col=query_id_col, query_vector_col=query_vector_col,
+        )
+    return _knn_on_driver(
         vectors,
-        [r[0] for r in qrows],
-        np.asarray([r[1] for r in qrows], dtype=np.float64),
+        [r[0] for r in query_rows],
+        np.asarray([r[1] for r in query_rows], dtype=np.float64),
         queries.schema[query_id_col].dataType,
         k,
         metric,
-        id_col=id_col,
-        vector_col=vector_col,
+        id_col,
+        vector_col,
     )
-    return topk_per_query(partials, k)
 
 
 def range_search(

@@ -20,7 +20,9 @@ against a set of per-query lookup tables, and two wrappers run it —
 (``adc_knn``, IVFPQ's broadcast plan), and ``cogroup_block_adc``, an
 ``applyInArrow`` cogroup for a query set that stays a DataFrame
 (``adc_knn_bulk``, IVFPQ's fallback).  Every path ends in
-``topk_per_query`` and, with re-rank vectors, ``exact_rerank``.
+``topk_per_query`` and, with re-rank vectors, ``exact_rerank`` — except
+IVFPQ's bounded plan, which merges on the driver and re-ranks there
+(``_rerank_on_driver``).
 """
 
 from __future__ import annotations
@@ -38,7 +40,12 @@ from pyspark.sql.pandas.types import to_arrow_type
 from fabstir_vectordb_spark.functions import distance as D
 from fabstir_vectordb_spark.operators import _arrow
 from fabstir_vectordb_spark.operators._kmeans import kmeans_fit as _kmeans_fit
-from fabstir_vectordb_spark.operators.knn import _probed_topk_rows
+from fabstir_vectordb_spark.operators.knn import (
+    _cluster_runs,
+    _probed_topk_rows,
+    _query_positions,
+    _running_topk,
+)
 from fabstir_vectordb_spark.operators.topk import ROUND_DECIMALS, topk_per_query
 
 # partial_adc builds the raw-mode (nq, M, K) float64 LUT set once on the
@@ -184,13 +191,15 @@ def partial_adc(
     """The ADC partial top-``fetch`` over driver-held queries: one map-only
     ``mapInArrow`` pass over ``codes_df``, no exchange — the shape of
     ``knn.partial_knn`` with the ADC body.  ``qids`` and the ``(nq, dim)``
-    float64 matrix ``Q`` are broadcast; each Arrow batch emits its
-    top-``fetch`` per query, and the caller merges the partials with
-    ``topk_per_query``.  ``probes`` ({cluster id: positions in ``Q`` of
-    the queries probing it}) reads only the probed clusters — an IN
-    filter on ``cluster_col``, which prunes a partitionBy(cluster_id)
-    layout at the scan — and ranks each cluster group of a batch against
-    only its probing queries (``knn._probed_topk_rows``).
+    float64 matrix ``Q`` are broadcast; each Arrow batch ranks its
+    top-``fetch`` per query, a task keeps the running top-``fetch`` of its
+    batches and emits it once, and the caller merges the partials
+    (``topk_per_query``, or on the driver).  ``probes`` ({cluster id:
+    positions in ``Q`` of the queries probing it}) reads only the probed
+    clusters — an IN filter on ``cluster_col``, which prunes a
+    partitionBy(cluster_id) layout at the scan — and ranks each cluster
+    group of a batch against only its probing queries
+    (``knn._probed_topk_rows``).
 
     ``centroids`` marks codes of the residual x - c (IVFADC): a cluster's
     LUTs are built from q - c, since ||x - q|| == ||(x - c) - (q - c)||,
@@ -231,22 +240,24 @@ def partial_adc(
             # row views, not a copy of the probing queries' tables
             return luts_l if qidx is None else [luts_l[i] for i in qidx]
 
-        for b in batches:
-            if b.num_rows == 0:
-                continue
+        def batch_topk(b):
             codes = _code_matrix(b.column(code_col), code_col, M, K)
             ids = b.column(id_col)
             keys = _arrow.sort_keys(ids)
             if probes_l is None:
                 qpos, vpos, d = _adc_topk_rows(luts_for(None, None), codes, keys, fetch, scratch)
             else:
+                order, runs = _cluster_runs(b.column(cluster_col))
+                codes, keys = codes[order], keys[order]
                 qpos, vpos, d = _probed_topk_rows(
-                    b.column(cluster_col), probes_l,
-                    lambda cid, rows, qidx: _adc_topk_rows(
-                        luts_for(cid, qidx), codes[rows], keys[rows], fetch, scratch
+                    order, runs, probes_l,
+                    lambda cid, s, e, qidx: _adc_topk_rows(
+                        luts_for(cid, qidx), codes[s:e], keys[s:e], fetch, scratch
                     ),
                 )
-            yield from _arrow.topk_table(qids_l, qpos, ids, vpos, d).to_batches()
+            return _arrow.topk_table(qids_l, qpos, ids, vpos, d)
+
+        yield from _running_topk((batch_topk(b) for b in batches if b.num_rows), qids_l, fetch)
 
     return codes_df.select(*cols).mapInArrow(adc_topk, out_schema)
 
@@ -330,6 +341,44 @@ def exact_rerank(
         )
     )
     return topk_per_query(exact, k)
+
+
+def _rerank_on_driver(
+    cand: pa.Table,
+    qids: pa.Array,
+    Q: np.ndarray,
+    rerank_vectors: DataFrame,
+    schema: T.StructType,
+    id_col: str,
+    rerank_vector_col: str,
+) -> pa.Table:
+    """The exact distances of driver-held candidates, the rows
+    ``exact_rerank`` ranks: the (query_id, id) rows of ``cand`` (of the
+    ``_arrow.topk_schema`` ``schema``) as a local relation,
+    broadcast-joined with ``rerank_vectors`` on id and pulled by one
+    JVM-only ``toArrow()``; then true L2 to each row's query (the row of
+    ``Q`` at its position in ``qids``) in numpy.  The squared differences
+    are summed in index order, the sequential fold of ``D.l2_distance``,
+    so each distance equals the Spark plan's bit for bit."""
+    pairs = rerank_vectors.sparkSession.createDataFrame(
+        cand.select(["query_id", "id"]), T.StructType([schema["query_id"], schema["id"]])
+    )
+    t = (
+        rerank_vectors.select(F.col(id_col).alias("id"), F.col(rerank_vector_col).alias("__v"))
+        .join(F.broadcast(pairs), "id")
+        .toArrow()
+    )
+    qcol = t.column("query_id")
+    diff = _arrow.matrix(t.column("__v"), rerank_vector_col) - Q[_query_positions(qcol, qids)]
+    diff *= diff
+    acc = np.zeros(len(diff))
+    for j in range(diff.shape[1]):
+        acc += diff[:, j]
+    return pa.table({
+        "query_id": qcol,
+        "id": t.column("id"),
+        "distance": pa.array(np.sqrt(acc), pa.float64()),
+    })
 
 
 def _top_candidates(

@@ -26,6 +26,7 @@ from __future__ import annotations
 import math
 from decimal import ROUND_HALF_UP, Context, Decimal
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -47,6 +48,41 @@ def round_like_spark(x: float, decimals: int = ROUND_DECIMALS) -> float:
         return x
     q = Decimal(repr(x)).quantize(Decimal(1).scaleb(-decimals), ROUND_HALF_UP, _WIDE)
     return float(q)
+
+
+def _rounded_like_spark(d: np.ndarray) -> np.ndarray:
+    """``round_like_spark`` of every value of ``d``, vectorized.
+
+    ``np.round`` scales by 10^6, rounds half to even and scales back; it
+    equals Spark's HALF_UP of the shortest decimal string except where the
+    scaled value sits within floating error of a half (an exact tie, or a
+    magnitude past 2^52 where every double is an integer): those few
+    values, and the non-finite ones, go through ``round_like_spark``."""
+    r = np.round(d, ROUND_DECIMALS)
+    y = d * 10.0**ROUND_DECIMALS
+    with np.errstate(invalid="ignore"):
+        clear = np.abs(y - np.floor(y) - 0.5) > 1e-6 + np.abs(y) * 1e-15
+    near = np.flatnonzero(~clear)
+    if len(near):
+        r[near] = [round_like_spark(float(x)) for x in d[near]]
+    return r
+
+
+def first_k_per_query(
+    query: np.ndarray, distance: np.ndarray, keys: np.ndarray, k: int
+) -> np.ndarray:
+    """Positions of the first ``k`` rows of each ``query`` value by
+    (round(distance, 6) as Spark rounds it, key) — the rows and order of
+    ``topk_per_query`` as one sort, for a merge that runs in a kernel or
+    on the driver.  The positions come ordered by (query, rounded
+    distance, key); ``keys`` are ``_arrow.sort_keys`` of the ids."""
+    order = np.lexsort((keys, _rounded_like_spark(np.asarray(distance, np.float64)), query))
+    if len(order) == 0:
+        return order
+    q = query[order]
+    pos = np.arange(len(q))
+    first = np.maximum.accumulate(np.where(np.r_[True, q[1:] != q[:-1]], pos, 0))
+    return order[pos - first < k]
 
 
 def topk_per_query(

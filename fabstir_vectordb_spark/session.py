@@ -47,9 +47,10 @@ is where a small search skips the ~200 ms fixed cost of a Python job.
 A larger table broadcasts the queries into one map-only Arrow pass
 (``partial_knn``) that emits <= k rows per (query, batch).  Both carry
 each row's metadata along, run the same per-batch kernel, and the
-driver keeps the first k.  search_dataframe's queries are an uncollected
+driver keeps the first k.  search_dataframe's queries arrive as a
 DataFrame, so it returns ``_ranked``: IVFIndex.search_bulk or knn_bulk
-over the same rows.  Both plans return the same rows.
+over the same rows, which collect a bounded query set once and merge on
+the driver, and cogroup a larger one.  Both plans return the same rows.
 """
 
 from __future__ import annotations
@@ -73,8 +74,12 @@ from fabstir_vectordb_spark.functions.schema import MetadataSchema
 from fabstir_vectordb_spark.operators import _arrow
 from fabstir_vectordb_spark.operators.cache import QueryResultCache
 from fabstir_vectordb_spark.operators.ivf import IVFIndex
-from fabstir_vectordb_spark.operators.knn import driver_knn, knn_bulk, partial_knn
-from fabstir_vectordb_spark.operators.topk import round_like_spark
+from fabstir_vectordb_spark.operators.knn import (
+    _first_k_rows,
+    driver_knn,
+    knn_bulk,
+    partial_knn,
+)
 from fabstir_vectordb_spark.plans.tuning import plan_search
 
 RECENCY_DAYS = 7  # src/hybrid/core.rs:77
@@ -564,8 +569,9 @@ class VectorDbSession:
         search_historical: bool = True,
     ) -> DataFrame:
         """The search plan over a DataFrame of queries: (query_id, id,
-        distance, score), <= k rows per query, nothing collected —
-        ``IVFIndex.search_bulk`` or ``knn_bulk`` over ``_candidates``.
+        distance, score), <= k rows per query — ``IVFIndex.search_bulk``
+        or ``knn_bulk`` over ``_candidates`` (a bounded query set is
+        collected once by their ``knn._driver_queries`` check).
         ``threshold`` keeps score >= threshold."""
         rows, n_probe = self._candidates(
             k, filter, n_probe, search_recent, search_historical
@@ -616,10 +622,10 @@ class VectorDbSession:
           into ``partial_knn``, one map-only Arrow pass that emits <= k
           rows per (query, batch), collected as Arrow.
 
-        Both run the same per-batch kernel, and one merge on the driver
-        keeps the first k of each query by (round(distance, 6), id) —
-        rounded as Spark's ``round``, the key of ``topk_per_query`` — then
-        applies ``threshold``.  Rows equal those of ``_ranked`` over the
+        Both run the same per-batch kernel, and one vectorized merge on
+        the driver (``topk.first_k_per_query``) keeps the first k of each
+        query by (round(distance, 6), id) — rounded as Spark's ``round``,
+        the key of ``topk_per_query`` — then applies ``threshold``.  Rows equal those of ``_ranked`` over the
         same queries."""
         for _, vec in queries:
             if self._dim is not None and len(vec) != self._dim:
@@ -643,31 +649,24 @@ class VectorDbSession:
             ranked = driver_knn(*args, probes=probes, carry=carry)
         else:
             ranked = partial_knn(*args, probes=probes, carry=carry).toArrow()
-        ids = ranked.column("id").to_pylist()
-        dist = ranked.column("distance").to_pylist()
-        per_query: dict[str, list[int]] = {qid: [] for qid in qids}
-        for i, qid in sorted(
-            enumerate(ranked.column("query_id").to_pylist()),
-            key=lambda p: (round_like_spark(dist[p[0]]), ids[p[0]]),
-        ):
-            if len(per_query[qid]) < k:
-                per_query[qid].append(i)
+        kept = _first_k_rows(ranked, pa.array(qids, pa.string()), k)
         # the carried columns of the kept rows as Spark Rows, exactly what
         # a collect of them returns
-        keep = [i for pos in per_query.values() for i in pos]
-        carried = iter(ArrowTableToRowsConversion.convert(
-            ranked.select(carry).take(keep),
-            T.StructType([rows.schema[c] for c in carry]),
-        ))
-        out: dict[str, list[dict]] = {}
-        for qid, pos in per_query.items():
-            out[qid] = []
-            for i in pos:
-                # the score of D.similarity_score, in the same double arithmetic
-                r = {"id": ids[i], "distance": dist[i], "score": 1.0 / (1.0 + dist[i])}
-                r.update(next(carried).asDict())
-                if threshold is None or r["score"] >= threshold:
-                    out[qid].append(_result_item(r, include_vectors))
+        carried = ArrowTableToRowsConversion.convert(
+            kept.select(carry), T.StructType([rows.schema[c] for c in carry])
+        )
+        out: dict[str, list[dict]] = {qid: [] for qid in qids}
+        for qid, i, d, extra in zip(
+            kept.column("query_id").to_pylist(),
+            kept.column("id").to_pylist(),
+            kept.column("distance").to_pylist(),
+            carried,
+        ):
+            # the score of D.similarity_score, in the same double arithmetic
+            r = {"id": i, "distance": d, "score": 1.0 / (1.0 + d)}
+            r.update(extra.asDict())
+            if threshold is None or r["score"] >= threshold:
+                out[qid].append(_result_item(r, include_vectors))
         return out
 
     def search(
@@ -758,13 +757,13 @@ class VectorDbSession:
         query_id_col: str = "query_id",
         query_vector_col: str = "vector",
     ) -> DataFrame:
-        """DataFrame -> DataFrame bulk search — the pipeline surface: the
-        query set is never collected, so it runs ``_ranked`` (a cogroup
-        over the same ``_candidates`` rows search() ranks) and returns it
-        uncollected — a DataFrame of (query_id, id, distance, score),
-        <= k rows per query, the same rows search_batch returns — the
-        two-big-tables similarity join a 100 TB corpus-vs-corpus job
-        needs."""
+        """DataFrame -> DataFrame bulk search — the pipeline surface: it
+        runs ``_ranked`` over the same ``_candidates`` rows search() ranks
+        and returns a DataFrame of (query_id, id, distance, score), <= k
+        rows per query, the same rows search_batch returns.  A bounded
+        query set is collected once and merged on the driver; a larger
+        one stays uncollected in a cogroup — the two-big-tables
+        similarity join a 100 TB corpus-vs-corpus job needs."""
         if self._df is None:
             raise VectorDbError("session has no vectors")
         qdf = queries.select(

@@ -1,0 +1,187 @@
+"""The two plans of the bulk searches: a bounded query set ranks in one
+broadcast, map-only Python pass merged on the driver (a local relation),
+a larger one takes the cogroup plan.  Exact (``knn_bulk``), IVF
+(``IVFIndex.search_bulk``) and HNSW (``HNSWIndex.search_bulk``) must give
+the same rows on both, with string query ids and an exact distance tie at
+the k-th place.  The IVFPQ twin is ``test_ivfpq``'s
+``test_cogroup_fallback_matches_broadcast``.
+"""
+
+import pytest
+
+from fabstir_vectordb_spark.operators import knn as knn_mod
+from fabstir_vectordb_spark.operators.hnsw import HNSWIndex
+from fabstir_vectordb_spark.operators.ivf import IVFIndex
+from fabstir_vectordb_spark.operators.knn import knn_bulk
+
+K = 5
+DIM = 4
+
+
+@pytest.fixture(scope="module")
+def vectors(spark):
+    # points along the first axis; "a-dup" and "z-dup" copy v04's vector,
+    # so for qa all three tie at the 5th distance and "a-dup" wins by id
+    rows = [(f"v{i:02d}", [i * 0.5, (i % 3) * 0.1, 1.0, 0.0]) for i in range(48)]
+    rows += [(d, [2.0, 0.1, 1.0, 0.0]) for d in ("z-dup", "a-dup")]
+    # three partitions and no shuffle in the cached plan
+    return spark.createDataFrame(rows, "id string, vector array<double>").coalesce(3).cache()
+
+
+@pytest.fixture(scope="module")
+def queries(spark):
+    # one partition: the limit of the query pull gathers without an exchange
+    return spark.createDataFrame(
+        [
+            ("qa", [0.0, 0.0, 1.0, 0.0]),
+            ("qb", [9.7, 0.2, 1.0, 0.0]),
+            ("qc", [19.6, 0.1, 0.9, 0.3]),
+            ("qd", [5.1, 0.0, 1.0, 0.1]),
+        ],
+        "query_id string, vector array<double>",
+    ).coalesce(1)
+
+
+@pytest.fixture(scope="module")
+def searches(vectors):
+    ivf = IVFIndex.fit(vectors, n_clusters=4, seed=3)
+    assigned = ivf.assign(vectors).cache()
+    hnsw = HNSWIndex(M=64, M0=64, ef_construction=64, num_graphs=3)
+    graph = hnsw.build(vectors).cache()
+    return {
+        "exact": lambda q: knn_bulk(vectors, q, K),
+        "ivf": lambda q: ivf.search_bulk(assigned, q, K, n_probe=4),
+        "hnsw": lambda q: hnsw.search_bulk(graph, q, K, ef=64),
+    }
+
+
+def _rows(df):
+    return sorted(
+        (r["query_id"], r["id"], r["distance"])
+        for r in df.select("query_id", "id", "distance").collect()
+    )
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("cap", ["query_bytes", "partial_rows"])
+@pytest.mark.parametrize("tier", ["exact", "ivf", "hnsw"])
+def test_cogroup_fallback_matches_bounded(monkeypatch, searches, queries, tier, cap):
+    search = searches[tier]
+    bounded = search(queries)
+    assert "LocalTableScan" in _executed(bounded)
+    want = _rows(bounded)
+    assert len(want) == 4 * K
+    qa = [i for q, i, _ in want if q == "qa"]
+    assert sorted(qa)[-1] == "v03" and "a-dup" in qa and "z-dup" not in qa
+    # room for 2 of the 4 queries
+    if cap == "query_bytes":
+        monkeypatch.setattr(knn_mod, "_MAX_DRIVER_QUERY_BYTES", 2 * DIM * 8)
+    else:
+        # K rows per query from each of 3 partitions (or graphs)
+        monkeypatch.setattr(knn_mod, "_MAX_DRIVER_PARTIAL_ROWS", 2 * K * 3)
+    fallback = search(queries)
+    assert "FlatMapCoGroupsInArrow" in _executed(fallback)
+    assert _rows(fallback) == want
+
+
+def _stage_counts(spark, group, fn):
+    """The stage count of every job ``fn`` runs, in its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    st = sc.statusTracker()
+    return [len(st.getJobInfo(j).stageIds) for j in st.getJobIdsForGroup(group)]
+
+
+@pytest.mark.parametrize("tier", ["exact", "ivf", "hnsw"])
+def test_bounded_search_is_one_python_pass(spark, monkeypatch, searches, queries, tier):
+    """Under the caps a search runs one-stage jobs only: the JVM-only
+    query pull and one Python pass, collected as Arrow, after a one-row
+    read of the query dimension where the index does not hold it (exact,
+    HNSW); the merge on the driver runs none.  HNSW's pass shuffles the
+    graph rows once into their groups."""
+    search = searches[tier]
+    search(queries)  # warm: scan_partitions' memo
+    plans = []
+    to_arrow = type(queries).toArrow
+
+    def recorded(df):
+        plans.append(_executed(df))
+        return to_arrow(df)
+
+    monkeypatch.setattr(type(queries), "toArrow", recorded)
+    stages = _stage_counts(spark, f"bounded_{tier}", lambda: search(queries).collect())
+    python = [p for p in plans if "InArrow" in p]
+    assert len(python) == 1
+    if tier == "hnsw":
+        assert "FlatMapGroupsInArrow" in python[0]
+    else:
+        assert "MapInArrow" in python[0] and "Exchange" not in python[0]
+        assert stages == ([1, 1, 1] if tier == "exact" else [1, 1])
+
+
+def test_query_pull_is_bounded_before_it_runs(spark, monkeypatch):
+    """With k=1 on one vector partition the partial-row cap admits
+    millions of queries, so the query bytes alone bound the pull: a query
+    set over that cap pulls at most cap + 1 rows, then cogroups."""
+    vec = spark.createDataFrame(
+        [(i, [float(i), 0.0, 1.0, 0.0]) for i in range(8)], "id long, vector array<double>"
+    ).coalesce(1)
+    q = spark.createDataFrame(
+        [(i, [i + 0.2, 0.0, 1.0, 0.0]) for i in range(40)],
+        "query_id long, vector array<double>",
+    ).coalesce(1)
+    monkeypatch.setattr(knn_mod, "_MAX_DRIVER_QUERY_BYTES", 3 * DIM * 8)
+    pulled = []
+    to_arrow = type(q).toArrow
+
+    def recorded(df):
+        t = to_arrow(df)
+        pulled.append(t.num_rows)
+        return t
+
+    monkeypatch.setattr(type(q), "toArrow", recorded)
+    res = knn_bulk(vec, q, 1)
+    assert pulled == [4]
+    assert "FlatMapCoGroupsInArrow" in _executed(res)
+    assert sorted(r["id"] for r in res.collect()) == sorted(min(7, round(i + 0.2)) for i in range(40))
+
+
+def test_query_pull_fails_on_a_bad_query_vector(spark, searches):
+    q = spark.createDataFrame(
+        [("qa", [0.0, 0.0, 1.0, 0.0]), ("qb", [0.0] * 400)],
+        "query_id string, vector array<double>",
+    ).coalesce(1)
+    for tier in ("exact", "ivf"):
+        with pytest.raises(Exception, match="or one of length other than 4"):
+            searches[tier](q)
+    # a null first query: the dim read itself fails
+    null_first = spark.createDataFrame(
+        [("qa", None), ("qb", [0.0, 0.0, 1.0, 0.0])], "query_id string, vector array<double>"
+    ).coalesce(1)
+    with pytest.raises(ValueError, match="null query vector"):
+        searches["exact"](null_first)
+
+
+def test_zero_queries_give_zero_rows_on_every_tier(spark, searches):
+    empty = spark.createDataFrame([], "query_id string, vector array<double>")
+    for tier, search in searches.items():
+        out = search(empty)
+        assert out.collect() == [], tier
+        assert [f.name for f in out.schema.fields] == ["query_id", "id", "distance"]
+
+
+def test_unknown_graph_count_takes_the_cogroup_plan(spark, vectors, queries, searches):
+    # a loaded graph's index does not know G, so the partial rows are unbounded
+    idx = HNSWIndex(M=64, M0=64, ef_construction=64, num_graphs=3)
+    graph = idx.build(vectors).cache()
+    unpinned = HNSWIndex(M=64, M0=64, ef_construction=64)
+    res = unpinned.search_bulk(graph.select("*"), queries, K, ef=64)
+    assert "FlatMapCoGroupsInArrow" in _executed(res)
+    assert _rows(res) == _rows(searches["hnsw"](queries))

@@ -130,7 +130,7 @@ def test_cogroup_fallback_matches_broadcast(request, monkeypatch, embeddings, qu
     (distributed probe selection); its rows equal the broadcast plan's.
     With residual codes the cogroup shifts each cluster's queries by its
     centroid, the broadcast plan builds per-cluster LUTs: same rows."""
-    import fabstir_vectordb_spark.operators.ivfpq as ivfpq_mod
+    import fabstir_vectordb_spark.operators.knn as knn_mod
 
     prefix = "residual_" if residual else ""
     idx = request.getfixturevalue(prefix + "idx")
@@ -152,9 +152,10 @@ def test_cogroup_fallback_matches_broadcast(request, monkeypatch, embeddings, qu
     )
     broadcast = search()
     assert not calls
-    # room for 2 of the 6 query vectors
+    # room for 2 of the 6 query vectors (for none once the re-rank's
+    # candidate vectors count too)
     dim = idx.ivf.centroids.shape[1]
-    monkeypatch.setattr(ivfpq_mod, "_MAX_BROADCAST_QUERY_BYTES", 2 * dim * 8)
+    monkeypatch.setattr(knn_mod, "_MAX_DRIVER_QUERY_BYTES", 2 * dim * 8)
     fallback = search()
     assert calls
     assert len(broadcast) == 6 * 10

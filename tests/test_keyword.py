@@ -116,6 +116,26 @@ def test_postings_are_id_term_unique(spark):
     }
 
 
+def test_empty_documents_have_no_postings(spark):
+    # an empty or all-whitespace document has zero tokens: no postings, and
+    # nothing added to the token total behind avgdl, where it still counts
+    # in N
+    docs = spark.createDataFrame(
+        [(0, "big data"), (1, ""), (2, " \t  "), (3, "data")],
+        "doc_id long, text string",
+    )
+    post = build_postings(docs).collect()
+    assert sorted((r["id"], r["term"], r["tf"], r["dl"]) for r in post) == [
+        (0, "big", 1, 2), (0, "data", 1, 2), (3, "data", 1, 1),
+    ]
+    queries = spark.createDataFrame([("q", "big")], "query_id string, query string")
+    [row] = bm25_search(docs, queries, k=10).collect()
+    n, df, tf, dl, avgdl, k1, b = 4, 1, 1, 2, 3 / 4, 1.2, 0.75
+    idf = math.log(1 + (n - df + 0.5) / (df + 0.5))
+    want = idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl))
+    assert (row["id"], row["score"]) == (0, pytest.approx(round(want, 6), abs=2e-6))
+
+
 # ------------------------------------------------------- phrase search
 
 

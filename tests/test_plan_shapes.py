@@ -126,11 +126,13 @@ def test_decontaminate_broadcasts_benchmark_and_never_shuffles_text(spark):
         assert "text#" not in seg.split("\n")[0]
 
 
-def test_sql_ann_rewrite_prunes_and_delegates(spark, tmp_path, embeddings):
+def test_sql_ann_rewrite_prunes_and_delegates(spark, tmp_path, embeddings, monkeypatch):
     """The SQL-surface rewrite's two contracts as plan assertions: a
     matching statement over a registered persisted layout reaches the
     scan with PartitionFilters; a non-matching statement's plan is the
-    ordinary full-scan sort (delegation)."""
+    ordinary full-scan sort (delegation).  The rewritten search ranks its
+    one query in a pass collected through ``toArrow`` and returns a local
+    relation, so the plan handed to ``toArrow`` is the scan checked."""
     from fabstir_vectordb_spark.functions.sqlfns import register_sql_functions
     from fabstir_vectordb_spark.operators.ivf import IVFIndex, write_clustered
     from fabstir_vectordb_spark.plans.sql_ann import AnnCatalog, ann_sql
@@ -149,7 +151,17 @@ def test_sql_ann_rewrite_prunes_and_delegates(spark, tmp_path, embeddings):
     qsql = "array(" + ", ".join(f"CAST({float(x)} AS FLOAT)" for x in qv) + ")"
     stmt = (f"SELECT vec_id, vec_l2(embedding, {qsql}) AS distance "
             f"FROM sqlann_view ORDER BY distance LIMIT 5")
-    plan = _executed(ann_sql(spark, stmt, cat, n_probe=1))
+    pulled = []
+    to_arrow = type(emb).toArrow
+
+    def recorded(df):
+        pulled.append(_executed(df))
+        return to_arrow(df)
+
+    monkeypatch.setattr(type(emb), "toArrow", recorded)
+    res = ann_sql(spark, stmt, cat, n_probe=1)
+    assert "LocalTableScan" in _executed(res)
+    [plan] = [p for p in pulled if "InArrow" in p]
     assert "PartitionFilters" in plan
     assert "cluster_id" in plan.split("PartitionFilters")[1][:200]
     # delegation: un-rewritable SQL runs verbatim
@@ -679,19 +691,42 @@ def test_mg_frequent_items_pure_jvm_bounded_exchanges(spark):
 def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings, monkeypatch):
     """brute_force_knn, knn_bulk, IVF assign / search / search_bulk, PQ
     decode and the ADC searches, IVFPQ encode, both IVFPQ search_bulk
-    plans (broadcast, and the cogroup fallback above the query byte
-    cap), and the HNSW build,
-    insert, compaction and mean routers of a hash build run their Python
-    kernels through mapInArrow / applyInArrow: a plan that slides back to
-    the pandas boundary fails here."""
+    plans (bounded, and the cogroup fallback above the query byte cap),
+    and the HNSW build, insert, compaction, mean routers and search_bulk
+    run their Python kernels through mapInArrow / applyInArrow: a plan
+    that slides back to the pandas boundary fails here.
+
+    A bounded search returns a local relation: the Python pass it ran
+    was collected through ``toArrow``, so the plan handed to ``toArrow``
+    is the one checked."""
     import numpy as np
 
-    import fabstir_vectordb_spark.operators.ivfpq as ivfpq_mod
+    import fabstir_vectordb_spark.operators.knn as knn_mod
     from fabstir_vectordb_spark.operators.hnsw import HNSWIndex
     from fabstir_vectordb_spark.operators.ivf import IVFIndex
     from fabstir_vectordb_spark.operators.ivfpq import IVFPQIndex
     from fabstir_vectordb_spark.operators.knn import brute_force_knn, knn_bulk
     from fabstir_vectordb_spark.operators.pq import ProductQuantizer
+
+    pulled = []
+    to_arrow = type(embeddings).toArrow
+
+    def recorded(df):
+        pulled.append(_executed(df))
+        return to_arrow(df)
+
+    monkeypatch.setattr(type(embeddings), "toArrow", recorded)
+
+    def ran(df):
+        """The plan of the Python pass behind ``df``: the one a bounded
+        search collected while it was built, else ``df``'s own."""
+        passes = [p for p in pulled if "InArrow" in p]
+        pulled.clear()
+        assert len(passes) <= 1
+        if passes:
+            assert "LocalTableScan" in _executed(df)
+            return passes[0]
+        return _executed(df)
 
     emb = embeddings.select("vec_id", "embedding")
     dim = len(emb.first()["embedding"])
@@ -703,40 +738,50 @@ def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings, monkeypatch)
     pq = ProductQuantizer(4, 8, dim, rng.normal(size=(4, 8, dim // 4)))
     ivfpq = IVFPQIndex(ivf, pq)
     codes = ivfpq.encode(emb)
+    pulled.clear()
     plans = {
-        "brute_force_knn": brute_force_knn(
+        "brute_force_knn": ran(brute_force_knn(
             emb, queries, 5, id_col="vec_id", vector_col="embedding"
-        ),
-        "knn_bulk": knn_bulk(
+        )),
+        "knn_bulk": ran(knn_bulk(
             emb, queries, 5, id_col="vec_id", vector_col="embedding"
-        ),
-        "assign": ivf.assign(emb),
-        "search": ivf.search(ivf.assign(emb), queries, 5, n_probe=2),
-        "search_bulk": ivf.search_bulk(ivf.assign(emb), queries, 5, n_probe=2),
-        "ivfpq_encode": codes,
-        "pq_decode": pq.decode(codes),
-        "adc_knn": pq.adc_knn(codes, queries, 5),
-        "adc_knn_bulk": pq.adc_knn_bulk(codes, queries, 5),
-        "ivfpq_search_bulk": ivfpq.search_bulk(codes, queries, 5, n_probe=2),
+        )),
+        "assign": ran(ivf.assign(emb)),
+        "search": ran(ivf.search(ivf.assign(emb), queries, 5, n_probe=2)),
+        "search_bulk": ran(ivf.search_bulk(ivf.assign(emb), queries, 5, n_probe=2)),
+        "ivfpq_encode": ran(codes),
+        "pq_decode": ran(pq.decode(codes)),
+        "adc_knn": ran(pq.adc_knn(codes, queries, 5)),
+        "adc_knn_bulk": ran(pq.adc_knn_bulk(codes, queries, 5)),
+        "ivfpq_search_bulk": ran(ivfpq.search_bulk(codes, queries, 5, n_probe=2)),
+        "ivfpq_search_bulk_rerank": ran(ivfpq.search_bulk(
+            codes, queries, 5, n_probe=2, oversample=2, rerank_vectors=emb
+        )),
     }
     # room for one of the four query vectors: the cogroup fallback
-    monkeypatch.setattr(ivfpq_mod, "_MAX_BROADCAST_QUERY_BYTES", dim * 8)
-    plans["ivfpq_search_bulk_fallback"] = ivfpq.search_bulk(codes, queries, 5, n_probe=2)
-    assert "FlatMapCoGroupsInArrow" in _executed(plans["ivfpq_search_bulk_fallback"])
+    with monkeypatch.context() as m:
+        m.setattr(knn_mod, "_MAX_DRIVER_QUERY_BYTES", dim * 8)
+        plans["ivfpq_search_bulk_fallback"] = ran(
+            ivfpq.search_bulk(codes, queries, 5, n_probe=2)
+        )
+    assert "FlatMapCoGroupsInArrow" in plans["ivfpq_search_bulk_fallback"]
     hnsw = HNSWIndex(M=4, M0=8, ef_construction=8, num_graphs=2,
                      id_col="vec_id", vector_col="embedding")
     graph = hnsw.build(
         emb.filter(F.col("vec_id") % 2 == 0).withColumn("dead", F.col("vec_id") % 3 == 0),
         deleted_col="dead",
     )
-    plans["hnsw_build"] = graph
-    plans["hnsw_insert"] = hnsw.insert(graph, emb.filter(F.col("vec_id") % 2 == 1))
-    plans["hnsw_compact_graph"] = hnsw.compact_graph(graph)
-    plans["hnsw_graph_routers"] = hnsw.graph_routers(graph)
-    # the IVF point search ranks in the kernel: no (query, cluster) pair join
-    assert "BroadcastHashJoin" not in _executed(plans["search"])
-    for name, df in plans.items():
-        plan = _executed(df)
+    plans["hnsw_build"] = ran(graph)
+    plans["hnsw_insert"] = ran(hnsw.insert(graph, emb.filter(F.col("vec_id") % 2 == 1)))
+    plans["hnsw_compact_graph"] = ran(hnsw.compact_graph(graph))
+    plans["hnsw_graph_routers"] = ran(hnsw.graph_routers(graph))
+    plans["hnsw_search_bulk"] = ran(hnsw.search_bulk(graph, queries, 5))
+    # the bounded searches rank in the kernel: no (query, cluster) pair
+    # join, no exchange before or after the pass
+    assert "BroadcastHashJoin" not in plans["search"]
+    for name in ("brute_force_knn", "knn_bulk", "search", "search_bulk", "ivfpq_search_bulk"):
+        assert "MapInArrow" in plans[name] and "Exchange" not in plans[name], name
+    for name, plan in plans.items():
         assert "InArrow" in plan, name
         assert "MapInPandas" not in plan, name
         assert "FlatMapGroupsInPandas" not in plan, name

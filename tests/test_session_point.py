@@ -14,7 +14,12 @@ from pyspark.sql import functions as F
 
 from fabstir_vectordb_spark import session as session_mod
 from fabstir_vectordb_spark.operators.ivf import IVFIndex
-from fabstir_vectordb_spark.operators.topk import round_like_spark, rounded
+from fabstir_vectordb_spark.operators.topk import (
+    _rounded_like_spark,
+    first_k_per_query,
+    round_like_spark,
+    rounded,
+)
 from fabstir_vectordb_spark.session import VectorDbError, VectorDbSession, _result_item
 
 K = 5
@@ -182,13 +187,48 @@ test_threshold_cuts_inside_top_k_in_partial_knn = test_threshold_cuts_inside_top
 test_tie_at_kth_distance_breaks_by_id_in_partial_knn = test_tie_at_kth_distance_breaks_by_id
 
 
-def test_driver_merge_key_is_sparks_round(spark):
+def _merge_key_doubles():
     rng = np.random.default_rng(3)
     xs = [0.1234565, 0.0000005, 2.5e-7, 1.0000005, 1e22 + 1.0, 0.0, 123.4567895]
-    xs += rng.random(200).tolist() + (rng.random(200) * 1e4).tolist()
+    return xs + rng.random(200).tolist() + (rng.random(200) * 1e4).tolist()
+
+
+def test_driver_merge_key_is_sparks_round(spark):
+    xs = _merge_key_doubles()
     df = spark.createDataFrame([(x,) for x in xs], "d double")
     got = [r[0] for r in df.select(rounded("d")).collect()]
     assert [round_like_spark(x) for x in xs] == got
+
+
+def test_vectorized_merge_key_is_sparks_round(spark):
+    """The key ``first_k_per_query`` sorts by equals Spark's round(d, 6) on
+    the doubles above and on exact half-way decimals (shortest form ending
+    in a 5 at the 7th place, where np.round's half-even scaled product
+    and Spark's HALF_UP part), negatives, large and non-finite values."""
+    rng = np.random.default_rng(11)
+    halves = [0.1234565, 2.0000005, 0.0000015, 7.9999995, 1234.5678905]
+    halves += [
+        float(f"{a}.{b:06d}5")
+        for a, b in zip(rng.integers(0, 3000, 150), rng.integers(0, 10**6, 150))
+    ]
+    xs = _merge_key_doubles() + halves
+    xs += [-x for x in halves[:40]] + [1e15 + 0.5, 2.0**52 + 1.0, 9.0e9 + 0.0000005]
+    xs += [float("inf"), float("-inf")]
+    df = spark.createDataFrame([(x,) for x in xs], "d double")
+    want = [r[0] for r in df.select(rounded("d")).collect()]
+    got = _rounded_like_spark(np.asarray(xs))
+    assert got.tolist() == want
+    # np.round alone parts from Spark on the half-way values
+    assert np.round(np.asarray(halves), 6).tolist() != got[-len(halves) - 45 : -45].tolist()
+
+
+def test_first_k_per_query_orders_like_the_window():
+    q = np.array([1, 0, 1, 0, 1, 0, 2])
+    d = np.array([0.1234565, 0.5, 0.123457, 0.5, 0.2, 0.1, 3.0])
+    keys = np.array(["b", "z", "a", "a", "c", "y", "q"])
+    # query 1: 0.1234565 rounds up to 0.123457 and ties with "a"
+    assert first_k_per_query(q, d, keys, 2).tolist() == [5, 3, 2, 0, 6]
+    assert first_k_per_query(q[:0], d[:0], keys[:0], 2).tolist() == []
 
 
 def test_wrong_dimension_raises_before_any_job(spark, trained):

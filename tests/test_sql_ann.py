@@ -54,10 +54,32 @@ def test_full_probe_rewrite_equals_exact_sql(spark, setup):
     assert sorted(ann) == sorted(exact)
 
 
-def test_rewrite_plan_prunes(spark, setup):
+def _pass_plan(spark, monkeypatch, build):
+    """``build()``'s result and the plan of the Python pass it ran: the
+    rewritten search ranks its one query in a pass collected through
+    ``toArrow`` and returns a local relation, so the plan handed to
+    ``toArrow`` is the one that reads the scan."""
+    cls = type(spark.table("vecs"))
+    to_arrow = cls.toArrow
+    pulled = []
+
+    def recorded(df):
+        pulled.append(df._jdf.queryExecution().executedPlan().toString())
+        return to_arrow(df)
+
+    with monkeypatch.context() as m:
+        m.setattr(cls, "toArrow", recorded)
+        out = build()
+    assert "LocalTableScan" in out._jdf.queryExecution().executedPlan().toString()
+    [plan] = [p for p in pulled if "InArrow" in p]
+    return out, plan
+
+
+def test_rewrite_plan_prunes(spark, setup, monkeypatch):
     cat, qsql = setup
-    out = ann_sql(spark, _stmt(qsql), cat, n_probe=1)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    out, plan = _pass_plan(
+        spark, monkeypatch, lambda: ann_sql(spark, _stmt(qsql), cat, n_probe=1)
+    )
     # the probe filter reaches the scan: an InMemory/parquet relation
     # filtered on cluster_id IN (...), never a full-corpus distance sort
     assert "cluster_id" in plan
@@ -65,7 +87,7 @@ def test_rewrite_plan_prunes(spark, setup):
     assert 0 < len(rows) <= 10
 
 
-def test_rewrite_plan_prunes_parquet_partitions(spark, setup, tmp_path):
+def test_rewrite_plan_prunes_parquet_partitions(spark, setup, tmp_path, monkeypatch):
     """Over the persisted clustered layout the probe must show up as a
     PartitionFilters entry — the lazy-chunk-load property on raw SQL."""
     cat, qsql = setup
@@ -76,8 +98,9 @@ def test_rewrite_plan_prunes_parquet_partitions(spark, setup, tmp_path):
     disk = spark.read.parquet(path)
     cat2 = AnnCatalog()
     cat2.register("vecs", cat.lookup("vecs").index, disk, n_rows=400)
-    out = ann_sql(spark, _stmt(qsql), cat2, n_probe=1)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    _, plan = _pass_plan(
+        spark, monkeypatch, lambda: ann_sql(spark, _stmt(qsql), cat2, n_probe=1)
+    )
     assert "PartitionFilters" in plan
     assert "cluster_id" in plan.split("PartitionFilters")[1][:200]
 
@@ -201,7 +224,7 @@ def test_where_bad_predicate_delegates(spark, setup):
         ann_sql(spark, sql, cat).collect()  # same failure surface as spark.sql
 
 
-def test_where_plan_pushes_predicate_and_prunes(spark, setup, tmp_path):
+def test_where_plan_pushes_predicate_and_prunes(spark, setup, tmp_path, monkeypatch):
     """The composed plan must reach the parquet scan with BOTH the
     cluster probe filter (PartitionFilters) and the metadata predicate
     (PushedFilters) — filter below the probe scan, the 100 TB shape."""
@@ -220,10 +243,7 @@ def test_where_plan_pushes_predicate_and_prunes(spark, setup, tmp_path):
         f"SELECT id, vec_l2(vector, {qsql}) AS distance "
         f"FROM vecs_disk WHERE id < 200 ORDER BY distance LIMIT 5"
     )
-    plan = (
-        ann_sql(spark, sql, cat, n_probe=1)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    _, plan = _pass_plan(spark, monkeypatch, lambda: ann_sql(spark, sql, cat, n_probe=1))
     assert "PartitionFilters" in plan
     assert "cluster_id" in plan.split("PartitionFilters")[1][:200]
     assert "PushedFilters" in plan

@@ -118,7 +118,8 @@ def main() -> int:
     times["ivf_probe8"] = round(time.time() - t0, 2)
     _log(f"ivf_probe8 {times['ivf_probe8']}s")
 
-    # bulk paths: query set as a DataFrame (Q=2000), no driver collect
+    # bulk paths: query set as a DataFrame (Q=2000), collected once and
+    # merged on the driver while it fits the bounded-query caps
     bulk_queries = vec.limit(2000).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("vector")
     )
