@@ -75,24 +75,30 @@ def ragged(lengths, values: pa.Array) -> pa.ListArray:
     return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values)
 
 
-def topk_schema(qid_type: T.DataType, id_type: T.DataType) -> T.StructType:
-    """The ``(query_id, id, distance)`` schema every top-k kernel emits."""
+def topk_schema(
+    qid_type: T.DataType, id_type: T.DataType, distance_type: T.DataType = T.DoubleType()
+) -> T.StructType:
+    """The ``(query_id, id, distance)`` schema every top-k kernel emits
+    (a Hamming distance is a ``LongType`` count)."""
     return (
         T.StructType()
         .add("query_id", qid_type, False)
         .add("id", id_type, False)
-        .add("distance", T.DoubleType(), False)
+        .add("distance", distance_type, False)
     )
 
 
-def topk_table(qids, qpos: np.ndarray, ids, vpos: np.ndarray, dist: np.ndarray) -> pa.Table:
+def topk_table(
+    qids, qpos: np.ndarray, ids, vpos: np.ndarray, dist: np.ndarray,
+    distance_type: pa.DataType = pa.float64(),
+) -> pa.Table:
     """``(query_id, id, distance)`` rows: query ``qids[qpos[i]]``, id
     ``ids[vpos[i]]`` at ``dist[i]``, both taken from their Arrow columns."""
     return pa.table(
         {
             "query_id": qids.take(qpos),
             "id": ids.take(vpos),
-            "distance": pa.array(dist, pa.float64()),
+            "distance": pa.array(dist, distance_type),
         }
     )
 

@@ -31,12 +31,21 @@ certification):
 Distances are integers (no rounding discipline needed anywhere); ties
 break on id exactly like every other kNN path in the package.
 
-Scale shape: encode is one Arrow-batched map pass (the PQ-encode
-pattern); point search broadcasts the collected query signatures into a
-partial-top-k kernel (<= k rows per partition per query cross the
-shuffle); bulk search is the cogrouped block kernel of knn_bulk /
-adc_knn_bulk.  No reference counterpart (vector_ops.rs has scalar u8 +
-PQ only); extension-axis.
+Scale shape: encode is one map-only ``mapInArrow`` pass.  Search
+(``hamming_knn``, alias ``hamming_knn_bulk``) takes the one decision of
+the bulk searches, ``knn._driver_queries``: a query set whose float64
+vectors (with a re-rank, each query's fetch candidates too) fit
+``knn._MAX_DRIVER_QUERY_BYTES`` and whose partial rows (Q x fetch x scan
+partitions) fit ``knn._MAX_DRIVER_PARTIAL_ROWS`` is collected once,
+capped before the pull, packed on the driver, and broadcast into one
+map-only ``mapInArrow`` pass that keeps a running top-fetch per query;
+the partial rows are finished on the driver (``pq._top_candidates_on_driver``)
+into a local relation; nothing is shuffled.  A larger query set stays a
+DataFrame: the signatures hash into blocks, an ``applyInArrow`` cogroup
+ranks each against the replicated packed queries, and
+``pq._top_candidates`` merges and re-ranks.  Both plans rank with one
+body, ``_hamming_topk_rows``.  No reference counterpart (vector_ops.rs
+has scalar u8 + PQ only); extension-axis.
 """
 
 from __future__ import annotations
@@ -45,10 +54,21 @@ import json
 import os
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
+
+from fabstir_vectordb_spark.operators import _arrow
+from fabstir_vectordb_spark.operators._plan import scan_partitions
+from fabstir_vectordb_spark.operators.knn import (
+    _driver_queries,
+    _first_k,
+    _hash_blocks,
+    _running_topk,
+)
+from fabstir_vectordb_spark.operators.pq import _top_candidates, _top_candidates_on_driver
 
 __all__ = ["BinarySketch"]
 
@@ -83,6 +103,42 @@ def _pack_words(
     ).astype(np.uint32)
 
 
+def _sig_matrix(col: pa.Array | pa.ChunkedArray, name: str, words: int) -> np.ndarray:
+    """A signature column as an ``(n, words)`` uint32 matrix.  Raises
+    ``ValueError`` naming ``name`` on a null or ragged signature
+    (``_arrow.matrix``), a row of other than ``words`` words, or a word
+    outside ``[0, 2**32)``, which a uint32 cast would silently wrap."""
+    sig = _arrow.matrix(col, name, np.int64)
+    if sig.shape[1] != words:
+        raise ValueError(
+            f"column {name!r}: {sig.shape[1]} words per signature, the sketch has {words}"
+        )
+    lo, hi = sig.min(), sig.max()
+    if lo < 0 or hi >= 1 << _WORD:
+        raise ValueError(f"column {name!r}: word {lo if lo < 0 else hi} outside [0, 2**32)")
+    return sig.astype(np.uint32)
+
+
+def _hamming_topk_rows(
+    Qw: np.ndarray, Vw: np.ndarray, keys: np.ndarray, fetch: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The one Hamming top-``fetch`` selection: every packed query row of
+    ``Qw`` against the ``(n, W)`` uint32 signatures ``Vw`` of one block,
+    each query keeping its first ``fetch`` rows by (distance, key)
+    (``knn._first_k``).  Returns (query position, row position, int64
+    distance) arrays, one entry per output row; ``keys`` (sort keys) only
+    break distance ties."""
+    empty = np.empty(0, dtype=np.int64)
+    out_q, out_v, out_d = [empty], [empty], [empty]
+    for j, qw in enumerate(Qw):
+        d = _popcount(np.bitwise_xor(Vw, qw[None, :]))
+        cand = _first_k(d, keys, fetch)
+        out_q.append(np.full(len(cand), j, dtype=np.int64))
+        out_v.append(cand)
+        out_d.append(d[cand])
+    return np.concatenate(out_q), np.concatenate(out_v), np.concatenate(out_d)
+
+
 class BinarySketch:
     """``planes``: (bits, dim) int8 matrix of +-1 hyperplane signs."""
 
@@ -109,34 +165,23 @@ class BinarySketch:
 
     # ----------------------------------------------------------- encode
 
-    def _sign_words(self, V: np.ndarray) -> np.ndarray:
-        """(n, dim) floats -> (n, W) uint32 packed sign words."""
-        return _pack_words(V, self.planes, self.scale)
-
     def encode(
         self, df: DataFrame, vector_col: str = "embedding", sig_col: str = "sig"
     ) -> DataFrame:
         """Input columns + ``sig_col`` array<bigint> of packed words."""
         bc = df.sparkSession.sparkContext.broadcast((self.planes, self.scale))
-
-        out_schema = T.StructType(
-            list(df.schema) + [T.StructField(sig_col, T.ArrayType(T.LongType()), True)]
-        )
+        out_schema = T.StructType(list(df.schema)).add(sig_col, T.ArrayType(T.LongType()))
 
         def kernel(batches):
             planes, scale = bc.value
-            for pdf in batches:
-                if pdf.empty:
+            for b in batches:
+                if b.num_rows == 0:
                     continue
-                V = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vector_col]]
-                )
-                packed = _pack_words(V, planes, scale)
-                yield pdf.assign(
-                    **{sig_col: [w.astype(np.int64).tolist() for w in packed]}
-                )
+                V = _arrow.matrix(b.column(vector_col), vector_col)
+                words = _pack_words(V, planes, scale).astype(np.int64)
+                yield _arrow.append(b, sig_col, _arrow.lists(words))
 
-        return df.mapInPandas(kernel, out_schema)
+        return df.mapInArrow(kernel, out_schema)
 
     # ----------------------------------------------------------- search
 
@@ -153,187 +198,104 @@ class BinarySketch:
         rerank_vector_col: str = "embedding",
         oversample: int | None = None,
     ) -> DataFrame:
-        """Top-k by Hamming distance over the signature table (query set
-        collected, the adc_knn pattern).  With ``rerank_vectors`` the
-        Hamming scan over-fetches k*oversample and exact float L2
-        re-ranks — coarse integer scan, exact math on the shortlist.
-        ``oversample=None`` consumes the planner default
-        (plans/tuning.tune_binary — 4, the certified depth)."""
-        from fabstir_vectordb_spark.operators.pq import exact_rerank
-        from fabstir_vectordb_spark.operators.topk import topk_per_query
+        """Top-k by Hamming distance over the signature table, as
+        (query_id, id, distance) with the raw Hamming ``distance`` a
+        bigint.  With ``rerank_vectors`` the Hamming scan over-fetches
+        k*oversample and exact float L2 re-ranks — coarse integer scan,
+        exact math on the shortlist.  ``oversample=None`` consumes the
+        planner default (plans/tuning.tune_binary — 4, the certified
+        depth).
 
+        Two plans, identical rows (both rank with ``_hamming_topk_rows``).
+        Under the caps of ``knn._driver_queries`` (float64 query vectors,
+        plus each query's fetch candidates when re-ranking, within
+        ``knn._MAX_DRIVER_QUERY_BYTES``; Q x fetch x scan partitions
+        partial rows within ``knn._MAX_DRIVER_PARTIAL_ROWS``) the queries
+        are collected once, capped before the pull, packed on the driver
+        and broadcast into one map-only ``mapInArrow`` pass whose partial
+        rows are finished on the driver (``pq._top_candidates_on_driver``)
+        into a local relation; nothing is shuffled.  Above them the queries
+        are packed by ``encode`` and cogrouped with hash blocks of the
+        signatures, then ``pq._top_candidates``.  ``hamming_knn_bulk`` is
+        the same search."""
         if oversample is None:
             from fabstir_vectordb_spark.plans.tuning import tune_binary
 
             oversample = tune_binary(self.dim, k).oversample
-
-        if rerank_vectors is not None:
-            cand = self.hamming_knn(
-                sigs, queries, k * oversample,
-                id_col=id_col, sig_col=sig_col,
-                query_id_col=query_id_col, query_vector_col=query_vector_col,
-            )
-            return exact_rerank(
-                cand, queries, rerank_vectors, k,
-                id_col=id_col, rerank_vector_col=rerank_vector_col,
-                query_id_col=query_id_col, query_vector_col=query_vector_col,
-            )
-
-        spark = sigs.sparkSession
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", queries.schema[query_id_col].dataType, False),
-                T.StructField("id", sigs.schema[id_col].dataType, False),
-                T.StructField("distance", T.LongType(), False),
-            ]
+        fetch = k * (oversample if rerank_vectors is not None else 1)
+        qid_type = queries.schema[query_id_col].dataType
+        id_type = sigs.schema[id_col].dataType
+        partial_schema = _arrow.topk_schema(qid_type, id_type, T.LongType())
+        words = self.words
+        bounded = _driver_queries(
+            queries, query_id_col, query_vector_col, fetch * scan_partitions(sigs), self.dim,
+            vectors_per_query=1 + (fetch if rerank_vectors is not None else 0),
         )
-        qrows = queries.select(query_id_col, query_vector_col).collect()
-        if not qrows:  # 0-row matmul has no shape — and no work either
-            return spark.createDataFrame([], out_schema)
-        qids = [r[0] for r in qrows]
-        Q = self._sign_words(
-            np.asarray([np.asarray(r[1], dtype=np.float64) for r in qrows])
-        )
-        bc = spark.sparkContext.broadcast((qids, Q))
+        if bounded is not None:
+            qids, Q = bounded
+            spark = sigs.sparkSession
+            schema = partial_schema
+            if rerank_vectors is not None:
+                schema = _arrow.topk_schema(qid_type, id_type)
+            if not qids:
+                return spark.createDataFrame([], schema)
+            bc = spark.sparkContext.broadcast(
+                (pa.array(qids, to_arrow_type(qid_type)), _pack_words(Q, self.planes, self.scale))
+            )
 
-        def kernel(batches):
-            qids_l, Qw = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                Vw = np.asarray(
-                    [np.asarray(s, dtype=np.uint32) for s in pdf[sig_col]]
+            def hamming_topk(batches):
+                qids_l, Qw = bc.value
+
+                def batch_topk(b):
+                    ids = b.column(id_col)
+                    qpos, vpos, d = _hamming_topk_rows(
+                        Qw, _sig_matrix(b.column(sig_col), sig_col, words),
+                        _arrow.sort_keys(ids), fetch,
+                    )
+                    return _arrow.topk_table(qids_l, qpos, ids, vpos, d, pa.int64())
+
+                yield from _running_topk(
+                    (batch_topk(b) for b in batches if b.num_rows), qids_l, fetch
                 )
-                ids = pdf["__id"].to_numpy()
-                if ids.dtype == object:
-                    ids = ids.astype(str)
-                out_q, out_id, out_d = [], [], []
-                for j, qid in enumerate(qids_l):
-                    d = _popcount(np.bitwise_xor(Vw, Qw[j][None, :]))
-                    # argpartition shortlist (the bulk kernel's shape):
-                    # O(n) select of the k-th distance, then lexsort only
-                    # the <=thresh tie set instead of the whole partition
-                    if len(d) > k > 0:
-                        part = np.argpartition(d, k - 1)
-                        thresh = d[part[:k]].max()
-                        cand = np.flatnonzero(d <= thresh)
-                        cand = cand[np.lexsort((ids[cand], d[cand]))][:k]
-                    else:
-                        cand = np.lexsort((ids, d))[:k]
-                    out_q.extend([qid] * len(cand))
-                    out_id.extend(ids[cand].tolist())
-                    out_d.extend(d[cand].astype(np.int64).tolist())
-                yield pd.DataFrame({"query_id": out_q, "id": out_id, "distance": out_d})
 
-        partials = sigs.select(
-            F.col(id_col).alias("__id"), F.col(sig_col).alias(sig_col)
-        ).mapInPandas(kernel, out_schema)
-        return topk_per_query(partials, k)
-
-    def hamming_knn_bulk(
-        self,
-        sigs: DataFrame,
-        queries: DataFrame,
-        k: int,
-        id_col: str = "vec_id",
-        sig_col: str = "sig",
-        query_id_col: str = "query_id",
-        query_vector_col: str = "vector",
-        vector_blocks: int | None = None,
-        rerank_vectors: DataFrame | None = None,
-        rerank_vector_col: str = "embedding",
-        oversample: int | None = None,
-    ) -> DataFrame:
-        """Bulk companion (query set stays a DataFrame end-to-end) — the
-        knn_bulk / adc_knn_bulk cogroup-block shape, identical per-pair
-        math and (distance, id) tie order as ``hamming_knn``.
-        ``oversample=None`` consumes the planner default
-        (plans/tuning.tune_binary)."""
-        from fabstir_vectordb_spark.operators.pq import exact_rerank
-        from fabstir_vectordb_spark.operators.topk import topk_per_query
-
-        if oversample is None:
-            from fabstir_vectordb_spark.plans.tuning import tune_binary
-
-            oversample = tune_binary(self.dim, k).oversample
-
-        if rerank_vectors is not None:
-            cand = self.hamming_knn_bulk(
-                sigs, queries, k * oversample,
-                id_col=id_col, sig_col=sig_col,
-                query_id_col=query_id_col, query_vector_col=query_vector_col,
-                vector_blocks=vector_blocks,
-            )
-            return exact_rerank(
-                cand, queries, rerank_vectors, k,
-                id_col=id_col, rerank_vector_col=rerank_vector_col,
-                query_id_col=query_id_col, query_vector_col=query_vector_col,
+            cand = sigs.select(id_col, sig_col).mapInArrow(hamming_topk, partial_schema).toArrow()
+            return _top_candidates_on_driver(
+                spark, cand, qids, Q, fetch, k, schema, rerank_vectors, id_col, rerank_vector_col
             )
 
-        spark = sigs.sparkSession
-        VB = vector_blocks or spark.sparkContext.defaultParallelism
+        def block_hamming(vt: pa.Table, qt: pa.Table) -> pa.Table:
+            if vt.num_rows == 0 or qt.num_rows == 0:
+                return pa.table({})  # a cogroup side may arrive with no columns
+            ids = vt.column("id")
+            qpos, vpos, d = _hamming_topk_rows(
+                _sig_matrix(qt.column("__qsig"), "__qsig", words),
+                _sig_matrix(vt.column("__sig"), sig_col, words),
+                _arrow.sort_keys(ids), fetch,
+            )
+            return _arrow.topk_table(qt.column("query_id"), qpos, ids, vpos, d, pa.int64())
 
-        v = sigs.select(
-            F.col(id_col).alias("id"),
-            F.col(sig_col).alias("__sig"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(VB)).cast("int").alias("__blk"),
-        )
-        blocks = spark.range(VB).select(F.col("id").cast("int").alias("__blk"))
-        # encode queries ONCE (one map pass over Q rows), then replicate
-        # only the packed words across blocks: 2-8 longs per (query,
-        # block) row instead of the raw float vector, and the per-block
-        # kernel skips VB-fold re-projection of every query
+        # packed once (one map pass over the queries), so a block
+        # replicates W longs per query, not its float vector
         qsigs = self.encode(
             queries.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(query_vector_col).alias("__qv"),
+                F.col(query_id_col).alias("query_id"), F.col(query_vector_col).alias("__qv")
             ),
             vector_col="__qv",
             sig_col="__qsig",
         ).select("query_id", "__qsig")
-        qrep = qsigs.crossJoin(blocks)
-
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", queries.schema[query_id_col].dataType, False),
-                T.StructField("id", sigs.schema[id_col].dataType, False),
-                T.StructField("distance", T.LongType(), False),
-            ]
-        )
-
-        def block_scan(vpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-            if vpdf.empty or qpdf.empty:
-                return pd.DataFrame({"query_id": [], "id": [], "distance": []})
-            Vw = np.asarray([np.asarray(s, dtype=np.uint32) for s in vpdf["__sig"]])
-            ids = vpdf["id"].to_numpy()
-            if ids.dtype == object:
-                ids = ids.astype(str)
-            out_q, out_id, out_d = [], [], []
-            for qid, qsig in zip(qpdf["query_id"], qpdf["__qsig"]):
-                qw = np.asarray(qsig, dtype=np.uint32)
-                d = _popcount(np.bitwise_xor(Vw, qw[None, :]))
-                # `> k > 0`: at k=0 the shortlist's d[part[:0]].max()
-                # would raise on the empty slice; the else branch's
-                # lexsort[:0] returns empty instead (same guard as the
-                # point kernel above — harmonized, ADVICE r8)
-                if len(d) > k > 0:
-                    part = np.argpartition(d, k - 1)
-                    thresh = d[part[:k]].max()
-                    cand = np.flatnonzero(d <= thresh)
-                    cand = cand[np.lexsort((ids[cand], d[cand]))][:k]
-                else:
-                    cand = np.lexsort((ids, d))[:k]
-                out_q.extend([qid] * len(cand))
-                out_id.extend(ids[cand].tolist())
-                out_d.extend(d[cand].astype(np.int64).tolist())
-            return pd.DataFrame({"query_id": out_q, "id": out_id, "distance": out_d})
-
+        v, qrep = _hash_blocks(sigs, id_col, F.col(sig_col).alias("__sig"), qsigs)
         partials = (
             v.groupBy("__blk")
             .cogroup(qrep.groupBy("__blk"))
-            .applyInPandas(block_scan, out_schema)
+            .applyInArrow(block_hamming, partial_schema)
         )
-        return topk_per_query(partials, k)
+        return _top_candidates(
+            partials, fetch, k, queries, rerank_vectors,
+            id_col=id_col, rerank_vector_col=rerank_vector_col,
+            query_id_col=query_id_col, query_vector_col=query_vector_col,
+        )
+
+    hamming_knn_bulk = hamming_knn
 
     # ------------------------------------------------------ persistence
 

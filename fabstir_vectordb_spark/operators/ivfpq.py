@@ -19,8 +19,8 @@ collect, capped before it runs, of float64 query vectors within
 rows within ``knn._MAX_DRIVER_PARTIAL_ROWS``) and its
 probes (ranked on the driver over the centroids) are broadcast into ONE
 map-only ADC pass over the probed clusters' codes (``pq.partial_adc``);
-its partial rows merge on the driver, and the re-rank pulls only the
-candidates' vectors (one broadcast join, no Python task) and ranks them
+its partial rows merge on the driver, and the re-rank pulls each distinct
+candidate's vector once (one broadcast join, no Python task) and ranks them
 on the driver: no exchange, and the result is a local relation.  A
 larger query set stays a DataFrame: a map-only probe-selection kernel
 (Q x n_probe rows), then a cogroup of the probed clusters' codes with
@@ -42,21 +42,16 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_type
 
 from fabstir_vectordb_spark.operators import _arrow
 from fabstir_vectordb_spark.operators._plan import scan_partitions
 from fabstir_vectordb_spark.operators.ivf import IVFIndex, _nearest
-from fabstir_vectordb_spark.operators.knn import (
-    _driver_queries,
-    _first_k_rows,
-    _merged_on_driver,
-)
+from fabstir_vectordb_spark.operators.knn import _driver_queries
 from fabstir_vectordb_spark.operators.pq import (
     ProductQuantizer,
     _pq_codes,
-    _rerank_on_driver,
     _top_candidates,
+    _top_candidates_on_driver,
     cogroup_block_adc,
     partial_adc,
 )
@@ -217,10 +212,11 @@ class IVFPQIndex:
           probes are ranked on the driver (``IVFIndex.probes_by_cluster``,
           the exact ranking twin of ``probe_pairs``), and both are
           broadcast into one ``partial_adc`` pass over the probed
-          clusters' codes; its partial rows merge on the driver.  With
-          ``rerank_vectors`` the candidates' vectors are pulled by one
-          broadcast join with the candidate ids (``pq._rerank_on_driver``)
-          and re-ranked in numpy.  Nothing is shuffled and the result is
+          clusters' codes; its partial rows are finished on the driver
+          (``pq._top_candidates_on_driver``, the tail of ``adc_knn``):
+          with ``rerank_vectors`` the distinct candidates' vectors are
+          pulled once by one broadcast join and re-ranked in numpy.
+          Nothing is shuffled and the result is
           a local relation (guide §8: decide with small rows, move big
           rows once).
         - A larger one stays a DataFrame end-to-end: ``probe_pairs``, then
@@ -245,7 +241,7 @@ class IVFPQIndex:
             # small-data bypass: no coarse partition exists — plain ADC
             # over all codes (same graceful degradation as
             # IVFIndex.search_bulk's brute-force fallback)
-            return self.pq.adc_knn_bulk(
+            return self.pq.adc_knn(
                 encoded, queries, k,
                 id_col=id_col, code_col=code_col,
                 query_id_col=query_id_col, query_vector_col=query_vector_col,
@@ -272,13 +268,10 @@ class IVFPQIndex:
                 probes=self.ivf.probes_by_cluster(Q, n_probe),
                 centroids=cents, cluster_col=cluster_col,
             ).toArrow()
-            if rerank_vectors is not None:
-                qids_a = pa.array(qids, to_arrow_type(qid_type))
-                cand = _rerank_on_driver(
-                    _first_k_rows(cand, qids_a, fetch), qids_a, Q, rerank_vectors,
-                    schema, id_col, self.ivf.vector_col,
-                )
-            return _merged_on_driver(spark, cand, qids, schema, k)
+            return _top_candidates_on_driver(
+                spark, cand, qids, Q, fetch, k, schema,
+                rerank_vectors, id_col, self.ivf.vector_col,
+            )
         probes = self.ivf.probe_pairs(
             queries, n_probe,
             query_id_col=query_id_col, query_vector_col=query_vector_col,

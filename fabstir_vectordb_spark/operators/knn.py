@@ -192,20 +192,24 @@ def _batch_topk_rows(
             cand = np.flatnonzero(row <= band)
             d = _kernel_distances(metric, V[cand], Qc[j])  # exact, original form
             dr = np.round(d, ROUND_DECIMALS)
-            cids = ids[cand]
-            # `> k > 0`: k=0 must fall to the empty lexsort[:0] branch,
-            # not an argpartition shortlist whose empty-slice max raises
-            if len(d) > k > 0:
-                part = np.argpartition(dr, k - 1)
-                thresh = dr[part[:k]].max()
-                keep = np.flatnonzero(dr <= thresh)
-                keep = keep[np.lexsort((cids[keep], dr[keep]))][:k]
-            else:
-                keep = np.lexsort((cids, dr))[:k]
+            keep = _first_k(dr, ids[cand], k)
             out_q.append(np.full(len(keep), qs + j, dtype=np.int64))
             out_v.append(cand[keep])
             out_d.append(d[keep])
     return np.concatenate(out_q), np.concatenate(out_v), np.concatenate(out_d)
+
+
+def _first_k(d: np.ndarray, keys: np.ndarray, k: int) -> np.ndarray:
+    """Positions of the first ``k`` entries of ``d`` by (d, key), in that
+    order: an O(n) argpartition select of the k-th value, then a lexsort
+    of only the ties-inclusive shortlist.  The one selection of every
+    kernel (exact, ADC, Hamming); ``len(d) > k > 0`` sends k=0 to the
+    empty ``lexsort[:0]``, since the shortlist's empty-slice max raises."""
+    if len(d) > k > 0:
+        part = np.argpartition(d, k - 1)
+        cand = np.flatnonzero(d <= d[part[:k]].max())
+        return cand[np.lexsort((keys[cand], d[cand]))][:k]
+    return np.lexsort((keys, d))[:k]
 
 
 def partial_knn(
@@ -518,60 +522,62 @@ def knn_bulk(
     ``partial_knn`` pass whose partial rows merge on the driver; the
     result is a local relation and no exchange runs.
 
-    Above the caps both sides stay DataFrames, in a block-parallel shape:
-    vectors are hashed into `vector_blocks` blocks and shuffled ONCE; the
-    query table is replicated per block (Q x VB rows — queries are usually
-    the smaller side, and VB is a knob).  A cogrouped applyInArrow
-    computes each (vector-block x all-queries) GEMM and emits only
+    Above the caps both sides stay DataFrames: vectors hash into
+    ``vector_blocks`` blocks (``_hash_blocks``) and shuffle ONCE, the
+    queries replicate per block, and a cogrouped applyInArrow emits only
     block-local top-k, so the final shuffle is Q * VB * k partial rows,
-    never Q * N.  Size VB so one block's vectors fit a task's memory
-    (N/VB * dim * 8B).
+    never Q * N.
 
     Output: (query_id, id, distance) ascending, k rows per query.
     """
     check_metric(metric)
-    spark = vectors.sparkSession
     qid_type = queries.schema[query_id_col].dataType
     bounded = _driver_queries(
         queries, query_id_col, query_vector_col, k * scan_partitions(vectors), None
     )
     if bounded is not None:
         return _knn_on_driver(vectors, *bounded, qid_type, k, metric, id_col, vector_col)
-    if vector_blocks is not None:
-        VB = vector_blocks
-    else:
-        # scale-adaptive block count: one block per vector-scan split,
-        # capped at the cluster's parallelism.  A scan split is already
-        # sized to task memory (spark.sql.files.maxPartitionBytes), so
-        # block-per-split keeps the per-task GEMM working set at split
-        # size; at corpus scale splits >> cores and this reduces to the
-        # former defaultParallelism constant, while a small input stops
-        # paying for cores-many blocks (replicating the query set per
-        # block) it cannot fill.  Block count does not affect results:
-        # per-block top-k partials always cover the global top-k.
-        VB = max(
-            1,
-            min(
-                spark.sparkContext.defaultParallelism,
-                scan_partitions(vectors),
-            ),
-        )
-    v = vectors.select(
-        F.col(id_col).alias("id"),
-        F.col(vector_col).alias("__v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(VB)).cast("int").alias("__blk"),
+    v, qrep = _hash_blocks(
+        vectors, id_col, F.col(vector_col).alias("__v"),
+        queries.select(
+            F.col(query_id_col).alias("query_id"),
+            F.col(query_vector_col).alias("__qv"),
+        ),
+        vector_blocks,
     )
-    blocks = spark.range(VB).select(F.col("id").cast("int").alias("__blk"))
-    qrep = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vector_col).alias("__qv"),
-    ).crossJoin(blocks)
     partials = cogroup_block_knn(
         v, qrep, k, metric,
         qid_type=qid_type,
         id_type=vectors.schema[id_col].dataType,
     )
     return topk_per_query(partials, k)
+
+
+def _hash_blocks(
+    vectors: DataFrame,
+    id_col: str,
+    value: Column,
+    queries: DataFrame,
+    blocks: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The two sides of a hash-block cogroup (``knn_bulk``, and the ADC
+    and Hamming searches above the caps): ``vectors`` as (id, ``value``,
+    __blk = pmod(xxhash64(id), VB)), and the rows of ``queries``
+    replicated once per block.  VB is ``blocks`` or one block per scan
+    split (a split is sized to task memory), capped at the parallelism,
+    so a small input pays for no copies of the queries it cannot fill.
+    Per-block top-k partials cover the global top-k for any VB."""
+    spark = vectors.sparkSession
+    VB = blocks or max(
+        1, min(spark.sparkContext.defaultParallelism, scan_partitions(vectors))
+    )
+    v = vectors.select(
+        F.col(id_col).alias("id"),
+        value,
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(VB)).cast("int").alias("__blk"),
+    )
+    replicas = spark.range(VB).select(F.col("id").cast("int").alias("__blk"))
+    return v, queries.crossJoin(replicas)
 
 
 def cogroup_block_knn(

@@ -15,14 +15,21 @@ only thing that moves (M bytes/vector vs 4*dim).  All of them cross the
 Python boundary through operators/_arrow.py (flat buffers, no pandas).
 
 ADC ranking is written once: ``_adc_topk_rows`` ranks a block of codes
-against a set of per-query lookup tables, and two wrappers run it —
-``partial_adc``, one map-only ``mapInArrow`` pass for driver-held queries
-(``adc_knn``, IVFPQ's broadcast plan), and ``cogroup_block_adc``, an
-``applyInArrow`` cogroup for a query set that stays a DataFrame
-(``adc_knn_bulk``, IVFPQ's fallback).  Every path ends in
-``topk_per_query`` and, with re-rank vectors, ``exact_rerank`` — except
-IVFPQ's bounded plan, which merges on the driver and re-ranks there
-(``_rerank_on_driver``).
+against a set of per-query lookup tables.  ``adc_knn`` (alias
+``adc_knn_bulk``) and ``IVFPQIndex.search_bulk`` take one decision,
+``knn._driver_queries``: a query set whose float64 vectors (with a
+re-rank, each query's fetch candidates too) fit
+``knn._MAX_DRIVER_QUERY_BYTES`` and whose partial rows (Q x fetch x scan
+partitions) fit ``knn._MAX_DRIVER_PARTIAL_ROWS`` is collected once,
+capped before the pull.  It is broadcast into ``partial_adc``, one
+map-only ``mapInArrow`` pass whose partial rows are collected and
+finished on the driver (``_top_candidates_on_driver``: the first fetch
+rows, the re-rank of their vectors, pulled once each, then the first k),
+so the result is a local relation and nothing is shuffled.  A larger
+query set stays a DataFrame: ``cogroup_block_adc``, an ``applyInArrow``
+cogroup, then ``_top_candidates`` (``topk_per_query`` and, with re-rank
+vectors, the ``exact_rerank`` join).  The binary sketch
+(operators/binary.py) shares both tails.
 """
 
 from __future__ import annotations
@@ -32,6 +39,7 @@ import os
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -40,8 +48,14 @@ from pyspark.sql.pandas.types import to_arrow_type
 from fabstir_vectordb_spark.functions import distance as D
 from fabstir_vectordb_spark.operators import _arrow
 from fabstir_vectordb_spark.operators._kmeans import kmeans_fit as _kmeans_fit
+from fabstir_vectordb_spark.operators._plan import scan_partitions
 from fabstir_vectordb_spark.operators.knn import (
     _cluster_runs,
+    _driver_queries,
+    _first_k,
+    _first_k_rows,
+    _hash_blocks,
+    _merged_on_driver,
     _probed_topk_rows,
     _query_positions,
     _running_topk,
@@ -142,8 +156,8 @@ def _adc_topk_rows(
     ``luts`` (rows of ``_adc_tables``) against the ``(n, M)`` int64
     ``codes`` of one block.  A row's distance is sqrt(sum_m lut[m*K +
     code_m]); each query keeps its first ``fetch`` rows by
-    (round(distance, 6), key) — an argpartition shortlist, then lexsort
-    — so per-block partials always hold the global top-``fetch``.
+    (round(distance, 6), key) (``knn._first_k``), so per-block partials
+    always hold the global top-``fetch``.
 
     Returns (position in ``luts``, row position, distance) arrays, one
     entry per output row; ``keys`` (sort keys) only break distance ties."""
@@ -159,16 +173,7 @@ def _adc_topk_rows(
         np.take(lut, flat_idx, out=g)
         np.sum(g, axis=1, out=dv)
         d = np.sqrt(dv, out=dv)
-        dr = np.round(d, ROUND_DECIMALS, out=rv)
-        # `n > fetch > 0`: fetch=0 falls to the empty lexsort[:0] branch
-        # (the shortlist's empty-slice max would raise)
-        if n > fetch > 0:
-            part = np.argpartition(dr, fetch - 1)
-            thresh = dr[part[:fetch]].max()
-            cand = np.flatnonzero(dr <= thresh)
-            cand = cand[np.lexsort((keys[cand], dr[cand]))][:fetch]
-        else:
-            cand = np.lexsort((keys, dr))[:fetch]
+        cand = _first_k(np.round(d, ROUND_DECIMALS, out=rv), keys, fetch)
         out_q.append(np.full(len(cand), j, dtype=np.int64))
         out_v.append(cand)
         out_d.append(d[cand])
@@ -193,8 +198,8 @@ def partial_adc(
     ``knn.partial_knn`` with the ADC body.  ``qids`` and the ``(nq, dim)``
     float64 matrix ``Q`` are broadcast; each Arrow batch ranks its
     top-``fetch`` per query, a task keeps the running top-``fetch`` of its
-    batches and emits it once, and the caller merges the partials
-    (``topk_per_query``, or on the driver).  ``probes`` ({cluster id:
+    batches and emits it once, and the caller merges the partials on
+    the driver (``_top_candidates_on_driver``).  ``probes`` ({cluster id:
     positions in ``Q`` of the queries probing it}) reads only the probed
     clusters — an IN filter on ``cluster_col``, which prunes a
     partitionBy(cluster_id) layout at the scan — and ranks each cluster
@@ -276,10 +281,10 @@ def cogroup_block_adc(
     __qv, __blk) on __blk; each group builds its queries' LUTs and runs
     ``_adc_topk_rows`` — the shape of ``knn.cogroup_block_knn`` with the
     ADC body.  The caller defines what a block is — a hash bucket
-    (``adc_knn_bulk``) or an IVF cluster (``IVFPQIndex.search_bulk``) —
-    and applies the global top-``fetch``.  ``centroids`` marks residual
-    codes, as in ``partial_adc``: each block's queries shift by its
-    centroid."""
+    (``adc_knn`` above the caps) or an IVF cluster
+    (``IVFPQIndex.search_bulk``) — and applies the global top-``fetch``.
+    ``centroids`` marks residual codes, as in ``partial_adc``: each
+    block's queries shift by its centroid."""
     bc = v.sparkSession.sparkContext.broadcast((pq.codebooks, pq.rotation, centroids))
     M, K, _ = pq.codebooks.shape
     scratch = _Scratch()
@@ -353,32 +358,56 @@ def _rerank_on_driver(
     rerank_vector_col: str,
 ) -> pa.Table:
     """The exact distances of driver-held candidates, the rows
-    ``exact_rerank`` ranks: the (query_id, id) rows of ``cand`` (of the
+    ``exact_rerank`` ranks: the distinct ids of ``cand`` (of the
     ``_arrow.topk_schema`` ``schema``) as a local relation,
-    broadcast-joined with ``rerank_vectors`` on id and pulled by one
-    JVM-only ``toArrow()``; then true L2 to each row's query (the row of
-    ``Q`` at its position in ``qids``) in numpy.  The squared differences
-    are summed in index order, the sequential fold of ``D.l2_distance``,
-    so each distance equals the Spark plan's bit for bit."""
-    pairs = rerank_vectors.sparkSession.createDataFrame(
-        cand.select(["query_id", "id"]), T.StructType([schema["query_id"], schema["id"]])
+    broadcast-joined with ``rerank_vectors`` and pulled by one JVM-only
+    ``toArrow()``, each vector once however many queries kept it; then
+    true L2 from each row's vector, gathered by position, to its query
+    (the row of ``Q`` at its position in ``qids``) in numpy.  A
+    candidate without a vector drops, as in the join.  The squared
+    differences are summed in index order, the sequential fold of
+    ``D.l2_distance``, so each distance equals the Spark plan's."""
+    ids = rerank_vectors.sparkSession.createDataFrame(
+        pa.table({"id": pc.unique(cand.column("id"))}), T.StructType([schema["id"]])
     )
     t = (
         rerank_vectors.select(F.col(id_col).alias("id"), F.col(rerank_vector_col).alias("__v"))
-        .join(F.broadcast(pairs), "id")
+        .join(F.broadcast(ids), "id")
         .toArrow()
     )
-    qcol = t.column("query_id")
-    diff = _arrow.matrix(t.column("__v"), rerank_vector_col) - Q[_query_positions(qcol, qids)]
+    pos = pc.index_in(cand.column("id"), value_set=t.column("id").combine_chunks())
+    if pos.null_count:
+        cand, pos = cand.filter(pc.is_valid(pos)), pos.drop_null()
+    V = _arrow.matrix(t.column("__v"), rerank_vector_col)
+    qcol = cand.column("query_id")
+    diff = V[pos.to_numpy()] - Q[_query_positions(qcol, qids)]
     diff *= diff
     acc = np.zeros(len(diff))
     for j in range(diff.shape[1]):
         acc += diff[:, j]
     return pa.table({
         "query_id": qcol,
-        "id": t.column("id"),
+        "id": cand.column("id"),
         "distance": pa.array(np.sqrt(acc), pa.float64()),
     })
+
+
+def _top_candidates_on_driver(
+    spark, cand: pa.Table, qids: list, Q: np.ndarray, fetch: int, k: int, schema: T.StructType,
+    rerank_vectors: DataFrame | None, id_col: str, rerank_vector_col: str,
+) -> DataFrame:
+    """``_top_candidates`` of a bounded search, on the driver: of the
+    collected partial rows ``cand``, with ``rerank_vectors`` the first
+    ``fetch`` per query re-ranked exactly (``_rerank_on_driver``), then
+    the first ``k`` per query as a local relation of ``schema``
+    (``_merged_on_driver``)."""
+    if rerank_vectors is not None:
+        qids_a = pa.array(qids, to_arrow_type(schema["query_id"].dataType))
+        cand = _rerank_on_driver(
+            _first_k_rows(cand, qids_a, fetch), qids_a, Q, rerank_vectors,
+            schema, id_col, rerank_vector_col,
+        )
+    return _merged_on_driver(spark, cand, qids, schema, k)
 
 
 def _top_candidates(
@@ -389,10 +418,10 @@ def _top_candidates(
     rerank_vectors: DataFrame | None,
     **cols: str,
 ) -> DataFrame:
-    """The tail of every ADC search: the global top-``fetch`` of the
-    partials, then, with ``rerank_vectors``, their exact re-rank to the
-    top ``k`` (``exact_rerank``, which takes ``cols``); without them
-    ``fetch == k``."""
+    """The tail of every search above the caps: the global top-``fetch``
+    of the partials, then, with ``rerank_vectors``, their exact re-rank
+    to the top ``k`` (``exact_rerank``, which takes ``cols``); without
+    them ``fetch == k``."""
     cand = topk_per_query(partials, fetch)
     if rerank_vectors is None:
         return cand
@@ -561,76 +590,56 @@ class ProductQuantizer:
     ) -> DataFrame:
         """Asymmetric-distance kNN over PQ codes: per query, precompute the
         (M, K) subspace distance table, then each row's approximate squared
-        L2 is M table lookups — no vector decode, no full-width math.  The
-        queries are collected and broadcast into one ``partial_adc`` pass,
-        merged by ``topk_per_query``.
-
+        L2 is M table lookups — no vector decode, no full-width math.
         With `rerank_vectors` (the full-precision table), ADC over-fetches
-        k*oversample candidates and re-ranks them exactly — the standard
-        PQ accuracy recovery: the expensive full-width math runs on only
-        Q*k*oversample rows, never the whole table."""
+        k*oversample candidates and re-ranks only those exactly.
+
+        Two plans, identical rows.  Under the caps of
+        ``knn._driver_queries`` (float64 query vectors, plus each query's
+        fetch candidates when re-ranking, within
+        ``knn._MAX_DRIVER_QUERY_BYTES``; Q x fetch x scan partitions
+        partial rows within ``knn._MAX_DRIVER_PARTIAL_ROWS``) the queries
+        are collected once, capped before the pull, and broadcast into one
+        ``partial_adc`` pass whose partial rows are finished on the driver
+        into a local relation; nothing is shuffled.  Above them the codes
+        hash into blocks cogrouped with the replicated queries
+        (``cogroup_block_adc``), then ``_top_candidates``.
+        ``adc_knn_bulk`` is the same search."""
+        fetch = k * (oversample if rerank_vectors is not None else 1)
         qid_type = queries.schema[query_id_col].dataType
-        t = queries.select(query_id_col, query_vector_col).toArrow()
-        if t.num_rows == 0:  # np.stack over zero query LUTs has no shape
-            return codes_df.sparkSession.createDataFrame(
-                [], _arrow.topk_schema(qid_type, codes_df.schema[id_col].dataType)
+        id_type = codes_df.schema[id_col].dataType
+        M, _, sub = self.codebooks.shape
+        bounded = _driver_queries(
+            queries, query_id_col, query_vector_col, fetch * scan_partitions(codes_df), M * sub,
+            vectors_per_query=1 + (fetch if rerank_vectors is not None else 0),
+        )
+        if bounded is not None:
+            qids, Q = bounded
+            spark = codes_df.sparkSession
+            schema = _arrow.topk_schema(qid_type, id_type)
+            if not qids:  # no query LUTs to stack
+                return spark.createDataFrame([], schema)
+            cand = partial_adc(
+                codes_df, qids, Q, qid_type, fetch, self, id_col=id_col, code_col=code_col
+            ).toArrow()
+            return _top_candidates_on_driver(
+                spark, cand, qids, Q, fetch, k, schema, rerank_vectors, id_col, rerank_vector_col
             )
-        fetch = k * (oversample if rerank_vectors is not None else 1)
-        partials = partial_adc(
-            codes_df, t.column(0).to_pylist(), _arrow.matrix(t.column(1), query_vector_col),
-            qid_type, fetch, self, id_col=id_col, code_col=code_col,
+        v, qrep = _hash_blocks(
+            codes_df, id_col, F.col(code_col).alias("__codes"),
+            queries.select(
+                F.col(query_id_col).alias("query_id"),
+                F.col(query_vector_col).alias("__qv"),
+            ),
         )
+        partials = cogroup_block_adc(v, qrep, fetch, self, qid_type, id_type)
         return _top_candidates(
             partials, fetch, k, queries, rerank_vectors,
             id_col=id_col, rerank_vector_col=rerank_vector_col,
             query_id_col=query_id_col, query_vector_col=query_vector_col,
         )
 
-    def adc_knn_bulk(
-        self,
-        codes_df: DataFrame,
-        queries: DataFrame,
-        k: int,
-        id_col: str = "vec_id",
-        code_col: str = "pq_codes",
-        query_id_col: str = "query_id",
-        query_vector_col: str = "vector",
-        vector_blocks: int | None = None,
-        rerank_vectors: DataFrame | None = None,
-        rerank_vector_col: str = "embedding",
-        oversample: int = 4,
-    ) -> DataFrame:
-        """ADC kNN with the QUERY SET as a DataFrame — no driver collect,
-        the bulk companion to ``adc_knn`` (the same two-big-tables shape
-        as operators/knn.knn_bulk: codes hash into blocks and shuffle
-        once, queries replicate per block, ``cogroup_block_adc`` gathers
-        block-local top-k, the final shuffle is Q x blocks x k rows).
-
-        Identical per-pair arithmetic and (round(6), id) tie-breaks as
-        ``adc_knn``, so both paths return the same rows for the same
-        fitted quantizer."""
-        spark = codes_df.sparkSession
-        VB = vector_blocks or spark.sparkContext.defaultParallelism
-        v = codes_df.select(
-            F.col(id_col).alias("id"),
-            F.col(code_col).alias("__codes"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(VB)).cast("int").alias("__blk"),
-        )
-        blocks = spark.range(VB).select(F.col("id").cast("int").alias("__blk"))
-        qrep = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vector_col).alias("__qv"),
-        ).crossJoin(blocks)
-        fetch = k * (oversample if rerank_vectors is not None else 1)
-        partials = cogroup_block_adc(
-            v, qrep, fetch, self,
-            queries.schema[query_id_col].dataType, codes_df.schema[id_col].dataType,
-        )
-        return _top_candidates(
-            partials, fetch, k, queries, rerank_vectors,
-            id_col=id_col, rerank_vector_col=rerank_vector_col,
-            query_id_col=query_id_col, query_vector_col=query_vector_col,
-        )
+    adc_knn_bulk = adc_knn
 
     # -------------------------------------------------------- persistence
 

@@ -5,13 +5,20 @@ silently reorder neighbours, so every kernel built on the boundary must
 fail loudly, naming the column, on a null vector, a null element, or a
 vector whose length differs from its batch's dim.  The ADC kernels
 likewise reject a PQ code outside [0, K), which the flat lookup-table
-gather would otherwise read from the wrong subspace or wrap."""
+gather would otherwise read from the wrong subspace or wrap, and the
+Hamming kernels a signature word outside [0, 2**32) or a signature of
+another word count, which a uint32 cast would wrap or numpy would fail
+on deep inside the kernel."""
 
 import numpy as np
 import pyarrow as pa
 import pytest
 
+from pyspark.sql import functions as F
+
 from fabstir_vectordb_spark.operators import _arrow
+from fabstir_vectordb_spark.operators import knn as knn_mod
+from fabstir_vectordb_spark.operators.binary import BinarySketch
 from fabstir_vectordb_spark.operators.ivf import IVFIndex
 from fabstir_vectordb_spark.operators.ivfpq import IVFPQIndex
 from fabstir_vectordb_spark.operators.knn import knn_bulk
@@ -59,13 +66,30 @@ def _knn_bulk(df):
     return knn_bulk(df, q, 3, vector_blocks=1)
 
 
+def _binary_encode(df):
+    return BinarySketch.fit(dim=DIM, bits=32).encode(df, vector_col="vector")
+
+
+def _hamming_knn(df):
+    """The re-rank reads the raw vectors: every row of ``df`` carries a
+    valid all-zero signature, and a fetch of every row makes the bad one
+    a candidate, whose vector the driver pulls."""
+    q = df.sparkSession.createDataFrame([(0, [0.0] * DIM)], "query_id long, vector array<double>")
+    sigs = df.select("id", F.array(F.lit(0).cast("long")).alias("sig"))
+    return BinarySketch.fit(dim=DIM, bits=32).hamming_knn(
+        sigs, q, 3, id_col="id", rerank_vectors=df, rerank_vector_col="vector", oversample=5
+    )
+
+
 @pytest.mark.parametrize("what", list(BAD))
-@pytest.mark.parametrize("op", [_assign, _encode, _knn_bulk])
+@pytest.mark.parametrize("op", [_assign, _encode, _knn_bulk, _binary_encode, _hamming_knn])
 def test_kernels_fail_loudly_on_bad_vectors(spark, op, what):
     with pytest.raises(Exception) as err:
         op(_vectors(spark, BAD[what])).collect()
     msg = str(err.value)
-    assert "ValueError: column '" in msg and what in msg
+    # a kernel raises in a Python worker; the bounded re-rank on the driver
+    assert "ValueError: column '" in msg or (err.type is ValueError and "column '" in msg)
+    assert what in msg
 
 
 K = 2  # codewords per subspace of the quantizer below
@@ -95,7 +119,10 @@ def _adc_knn(codes):
 
 
 def _adc_knn_bulk(codes):
-    return _pq().adc_knn_bulk(codes, _queries(codes), 3, vector_blocks=1)
+    """The cogroup plan: the query byte cap holds no query."""
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(knn_mod, "_MAX_DRIVER_QUERY_BYTES", 0)
+        return _pq().adc_knn_bulk(codes, _queries(codes), 3)
 
 
 def _ivfpq_search_bulk(codes):
@@ -110,3 +137,31 @@ def test_adc_kernels_fail_loudly_on_out_of_range_codes(spark, op, code):
         op(_codes(spark, code)).collect()
     msg = str(err.value)
     assert "ValueError: column '" in msg and f"code {code} outside [0, {K})" in msg
+
+
+def _sigs(spark, bad_sig):
+    rows = [(i, [i]) for i in range(12)] + [(99, bad_sig)]
+    # one partition: the bad row shares its Arrow batch with good rows
+    return spark.createDataFrame(rows, "vec_id long, sig array<bigint>").coalesce(1)
+
+
+@pytest.mark.parametrize(
+    "bits, bad_sig, what",
+    [
+        (32, [1 << 32], "column 'sig': word 4294967296 outside [0, 2**32)"),
+        (32, [-1], "column 'sig': word -1 outside [0, 2**32)"),
+        (32, [0, 0], "column 'sig': vector of length 2 in a batch of dim 1"),
+        (64, [0], "column 'sig': 1 words per signature, the sketch has 2"),
+    ],
+)
+@pytest.mark.parametrize("plan", ["bounded", "cogroup"])
+def test_hamming_kernels_fail_loudly_on_bad_signatures(
+    spark, monkeypatch, plan, bits, bad_sig, what
+):
+    if plan == "cogroup":
+        monkeypatch.setattr(knn_mod, "_MAX_DRIVER_QUERY_BYTES", 0)
+    sigs = _sigs(spark, bad_sig)
+    with pytest.raises(Exception) as err:
+        BinarySketch.fit(dim=DIM, bits=bits).hamming_knn(sigs, _queries(sigs), 3).collect()
+    msg = str(err.value)
+    assert "ValueError: " + what in msg

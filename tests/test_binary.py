@@ -1,11 +1,12 @@
 """Binary sign-bit sketch (operators/binary.py): packing contract,
-point/bulk equivalence, Hamming-approximates-angle behavior, rerank
+bounded/cogroup plan equivalence, Hamming-approximates-angle behavior, rerank
 exactness, and persistence."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from fabstir_vectordb_spark.operators import knn as knn_mod
 from fabstir_vectordb_spark.operators.binary import BinarySketch, _popcount
 
 
@@ -43,7 +44,9 @@ def test_encode_packing_contract(spark):
             assert got == expect, (i, b)
 
 
-def test_point_equals_bulk(spark):
+def test_bounded_equals_cogroup(spark, monkeypatch):
+    """The bounded plan and the cogroup plan, forced by a query byte cap
+    that holds no query, return the same rows."""
     rng = np.random.RandomState(2)
     X = rng.normal(size=(300, 16))
     sk = BinarySketch.fit(dim=16, bits=128, seed=3)
@@ -51,15 +54,16 @@ def test_point_equals_bulk(spark):
     queries = _df(spark, X[:5]).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("vector")
     )
-    point = sorted(
-        (r["query_id"], r["id"], r["distance"])
-        for r in sk.hamming_knn(sigs, queries, 10).collect()
-    )
-    bulk = sorted(
-        (r["query_id"], r["id"], r["distance"])
-        for r in sk.hamming_knn_bulk(sigs, queries, 10).collect()
-    )
-    assert point == bulk
+
+    def rows():
+        return sorted(
+            (r["query_id"], r["id"], r["distance"])
+            for r in sk.hamming_knn(sigs, queries, 10).collect()
+        )
+
+    bounded = rows()
+    monkeypatch.setattr(knn_mod, "_MAX_DRIVER_QUERY_BYTES", 0)
+    assert rows() == bounded
 
 
 def test_self_distance_zero_and_angle_monotone(spark):

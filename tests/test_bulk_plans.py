@@ -1,21 +1,27 @@
 """The two plans of the bulk searches: a bounded query set ranks in one
 broadcast, map-only Python pass merged on the driver (a local relation),
 a larger one takes the cogroup plan.  Exact (``knn_bulk``), IVF
-(``IVFIndex.search_bulk``) and HNSW (``HNSWIndex.search_bulk``) must give
-the same rows on both, with string query ids and an exact distance tie at
-the k-th place.  The IVFPQ twin is ``test_ivfpq``'s
-``test_cogroup_fallback_matches_broadcast``.
+(``IVFIndex.search_bulk``), HNSW (``HNSWIndex.search_bulk``), PQ
+(``ProductQuantizer.adc_knn``) and binary (``BinarySketch.hamming_knn``),
+the last two raw and re-ranked, must give the same rows on both, with
+string query ids and an exact distance tie at the k-th place.  The IVFPQ
+twin is ``test_ivfpq``'s ``test_cogroup_fallback_matches_broadcast``.
 """
 
+import pyarrow as pa
 import pytest
 
 from fabstir_vectordb_spark.operators import knn as knn_mod
+from fabstir_vectordb_spark.operators.binary import BinarySketch
 from fabstir_vectordb_spark.operators.hnsw import HNSWIndex
 from fabstir_vectordb_spark.operators.ivf import IVFIndex
 from fabstir_vectordb_spark.operators.knn import knn_bulk
+from fabstir_vectordb_spark.operators.pq import ProductQuantizer
 
 K = 5
 DIM = 4
+OVERSAMPLE = 4  # the re-ranked tiers fetch 20 of the 50 vectors per query
+TIERS = ["exact", "ivf", "hnsw", "pq", "pq_rerank", "binary", "binary_rerank"]
 
 
 @pytest.fixture(scope="module")
@@ -48,10 +54,19 @@ def searches(vectors):
     assigned = ivf.assign(vectors).cache()
     hnsw = HNSWIndex(M=64, M0=64, ef_construction=64, num_graphs=3)
     graph = hnsw.build(vectors).cache()
+    pq = ProductQuantizer.fit(vectors, n_subspaces=2, n_centroids=8, vector_col="vector")
+    codes = pq.encode(vectors, vector_col="vector").cache()
+    sk = BinarySketch.fit(dim=DIM, bits=64, seed=3)
+    sigs = sk.encode(vectors, vector_col="vector").cache()
+    rerank = dict(rerank_vectors=vectors, rerank_vector_col="vector", oversample=OVERSAMPLE)
     return {
         "exact": lambda q: knn_bulk(vectors, q, K),
         "ivf": lambda q: ivf.search_bulk(assigned, q, K, n_probe=4),
         "hnsw": lambda q: hnsw.search_bulk(graph, q, K, ef=64),
+        "pq": lambda q: pq.adc_knn(codes, q, K, id_col="id"),
+        "pq_rerank": lambda q: pq.adc_knn(codes, q, K, id_col="id", **rerank),
+        "binary": lambda q: sk.hamming_knn(sigs, q, K, id_col="id"),
+        "binary_rerank": lambda q: sk.hamming_knn(sigs, q, K, id_col="id", **rerank),
     }
 
 
@@ -67,16 +82,22 @@ def _executed(df) -> str:
 
 
 @pytest.mark.parametrize("cap", ["query_bytes", "partial_rows"])
-@pytest.mark.parametrize("tier", ["exact", "ivf", "hnsw"])
+@pytest.mark.parametrize("tier", TIERS)
 def test_cogroup_fallback_matches_bounded(monkeypatch, searches, queries, tier, cap):
     search = searches[tier]
     bounded = search(queries)
     assert "LocalTableScan" in _executed(bounded)
     want = _rows(bounded)
     assert len(want) == 4 * K
-    qa = [i for q, i, _ in want if q == "qa"]
-    assert sorted(qa)[-1] == "v03" and "a-dup" in qa and "z-dup" not in qa
-    # room for 2 of the 4 queries
+    for q in "abcd":
+        # "a-dup", "v04" and "z-dup" share a vector, so every tier ranks
+        # them at one distance, ordered by id
+        ids = {i for p, i, _ in want if p == f"q{q}"}
+        assert ("z-dup" not in ids or "v04" in ids) and ("v04" not in ids or "a-dup" in ids)
+    if tier in ("exact", "ivf", "hnsw"):
+        qa = [i for q, i, _ in want if q == "qa"]
+        assert sorted(qa)[-1] == "v03" and "a-dup" in qa and "z-dup" not in qa
+    # room for at most 2 of the 4 queries
     if cap == "query_bytes":
         monkeypatch.setattr(knn_mod, "_MAX_DRIVER_QUERY_BYTES", 2 * DIM * 8)
     else:
@@ -99,13 +120,15 @@ def _stage_counts(spark, group, fn):
     return [len(st.getJobInfo(j).stageIds) for j in st.getJobIdsForGroup(group)]
 
 
-@pytest.mark.parametrize("tier", ["exact", "ivf", "hnsw"])
+@pytest.mark.parametrize("tier", TIERS)
 def test_bounded_search_is_one_python_pass(spark, monkeypatch, searches, queries, tier):
-    """Under the caps a search runs one-stage jobs only: the JVM-only
-    query pull and one Python pass, collected as Arrow, after a one-row
-    read of the query dimension where the index does not hold it (exact,
-    HNSW); the merge on the driver runs none.  HNSW's pass shuffles the
-    graph rows once into their groups."""
+    """Under the caps a search runs one Python pass, collected as Arrow.
+    Without a re-rank it runs one-stage jobs only: the JVM-only query
+    pull and the pass, after a one-row read of the query dimension where
+    the index does not hold it (exact, HNSW); the merge on the driver
+    runs none.  A re-rank adds the JVM-only pull of its candidates'
+    vectors.  HNSW's pass shuffles the graph rows once into their
+    groups."""
     search = searches[tier]
     search(queries)  # warm: scan_partitions' memo
     plans = []
@@ -123,7 +146,33 @@ def test_bounded_search_is_one_python_pass(spark, monkeypatch, searches, queries
         assert "FlatMapGroupsInArrow" in python[0]
     else:
         assert "MapInArrow" in python[0] and "Exchange" not in python[0]
-        assert stages == ([1, 1, 1] if tier == "exact" else [1, 1])
+        if not tier.endswith("_rerank"):
+            assert stages == ([1, 1, 1] if tier == "exact" else [1, 1])
+
+
+@pytest.mark.parametrize("tier", ["pq_rerank", "binary_rerank"])
+def test_rerank_pulls_each_candidate_vector_once(monkeypatch, searches, queries, tier):
+    """The bounded re-rank pulls the vector of each distinct candidate id
+    once, however many queries kept it: fewer rows than the Q x fetch
+    (query, candidate) pairs of the fixture, whose queries share
+    candidates."""
+    pulled = []
+    to_arrow = type(queries).toArrow
+
+    def recorded(df):
+        t = to_arrow(df)
+        pulled.append((_executed(df), t))
+        return t
+
+    monkeypatch.setattr(type(queries), "toArrow", recorded)
+    searches[tier](queries)
+    (partials,) = [t for p, t in pulled if "MapInArrow" in p]
+    (vectors,) = [t for _, t in pulled if "__v" in t.column_names]
+    fetch = K * OVERSAMPLE
+    qids = pa.array(["qa", "qb", "qc", "qd"])
+    cand = knn_mod._first_k_rows(partials, qids, fetch)
+    assert cand.num_rows == 4 * fetch
+    assert vectors.num_rows == len(set(cand.column("id").to_pylist())) < 4 * fetch
 
 
 def test_query_pull_is_bounded_before_it_runs(spark, monkeypatch):

@@ -4,7 +4,7 @@ The contracts, in dependency order: the learned rotation is orthonormal
 (so it preserves distances exactly); fitting with opq=True is never
 worse than plain PQ on the training sample (auto-fallback by
 construction) and strictly better on a correlated fixture (the case it
-exists for); every search path (driver-collect ADC, bulk cogroup ADC,
+exists for); every search path (bounded ADC, cogroup ADC,
 IVFPQ cluster ADC, residual mode) builds its LUT in rotated space and
 therefore keeps the full-probe/rerank exactness theorems; and the
 rotation survives save/load (codes without their rotation are garbage).
@@ -14,6 +14,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from fabstir_vectordb_spark.operators import knn as knn_mod
 from fabstir_vectordb_spark.operators.opq import (
     fit_rotation,
     pca_balanced_rotation,
@@ -109,8 +110,9 @@ def test_opq_adc_rerank_equals_exact(spark):
     assert _ranked(got) == _ranked(exact)
 
 
-def test_opq_bulk_equals_point(spark):
-    """adc_knn_bulk must stay row-identical to adc_knn when a rotation
+def test_opq_cogroup_equals_bounded(spark, monkeypatch):
+    """The cogroup plan of adc_knn (forced by a query byte cap that holds
+    no query) must stay row-identical to the bounded plan when a rotation
     is active (both kernels rotate the query the same way)."""
     X = _correlated(n=300, seed=2)
     df = _df(spark, X)
@@ -119,9 +121,9 @@ def test_opq_bulk_equals_point(spark):
     queries = df.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("vector")
     )
-    assert _ranked(pq.adc_knn_bulk(codes, queries, 10)) == _ranked(
-        pq.adc_knn(codes, queries, 10)
-    )
+    bounded = _ranked(pq.adc_knn(codes, queries, 10))
+    monkeypatch.setattr(knn_mod, "_MAX_DRIVER_QUERY_BYTES", 0)
+    assert _ranked(pq.adc_knn(codes, queries, 10)) == bounded
 
 
 def test_opq_save_load_roundtrip(spark, tmp_path):

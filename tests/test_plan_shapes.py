@@ -332,7 +332,7 @@ def test_binary_encode_is_map_only(spark, embeddings):
     sk = BinarySketch.fit(dim=64, bits=64)
     plan = _executed(sk.encode(embeddings.select("vec_id", "embedding")))
     assert "Exchange" not in plan
-    assert "ArrowEvalPython" in plan or "MapInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 def test_normalize_unicode_is_map_only(spark):
@@ -692,9 +692,11 @@ def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings, monkeypatch)
     """brute_force_knn, knn_bulk, IVF assign / search / search_bulk, PQ
     decode and the ADC searches, IVFPQ encode, both IVFPQ search_bulk
     plans (bounded, and the cogroup fallback above the query byte cap),
-    and the HNSW build, insert, compaction, mean routers and search_bulk
-    run their Python kernels through mapInArrow / applyInArrow: a plan
-    that slides back to the pandas boundary fails here.
+    binary encode and both Hamming search plans (bounded, raw and
+    re-ranked, and the cogroup fallback), and the HNSW build, insert,
+    compaction, mean routers and search_bulk run their Python kernels
+    through mapInArrow / applyInArrow: a plan that slides back to the
+    pandas boundary fails here.
 
     A bounded search returns a local relation: the Python pass it ran
     was collected through ``toArrow``, so the plan handed to ``toArrow``
@@ -702,6 +704,7 @@ def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings, monkeypatch)
     import numpy as np
 
     import fabstir_vectordb_spark.operators.knn as knn_mod
+    from fabstir_vectordb_spark.operators.binary import BinarySketch
     from fabstir_vectordb_spark.operators.hnsw import HNSWIndex
     from fabstir_vectordb_spark.operators.ivf import IVFIndex
     from fabstir_vectordb_spark.operators.ivfpq import IVFPQIndex
@@ -758,13 +761,20 @@ def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings, monkeypatch)
             codes, queries, 5, n_probe=2, oversample=2, rerank_vectors=emb
         )),
     }
+    sk = BinarySketch.fit(dim=dim, bits=64)
+    sigs = sk.encode(emb)
+    plans["binary_encode"] = ran(sigs)
+    plans["hamming_knn"] = ran(sk.hamming_knn(sigs, queries, 5))
+    plans["hamming_knn_rerank"] = ran(sk.hamming_knn(sigs, queries, 5, rerank_vectors=emb))
     # room for one of the four query vectors: the cogroup fallback
     with monkeypatch.context() as m:
         m.setattr(knn_mod, "_MAX_DRIVER_QUERY_BYTES", dim * 8)
         plans["ivfpq_search_bulk_fallback"] = ran(
             ivfpq.search_bulk(codes, queries, 5, n_probe=2)
         )
-    assert "FlatMapCoGroupsInArrow" in plans["ivfpq_search_bulk_fallback"]
+        plans["hamming_knn_fallback"] = ran(sk.hamming_knn(sigs, queries, 5))
+    for name in ("ivfpq_search_bulk_fallback", "hamming_knn_fallback"):
+        assert "FlatMapCoGroupsInArrow" in plans[name], name
     hnsw = HNSWIndex(M=4, M0=8, ef_construction=8, num_graphs=2,
                      id_col="vec_id", vector_col="embedding")
     graph = hnsw.build(
@@ -779,7 +789,10 @@ def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings, monkeypatch)
     # the bounded searches rank in the kernel: no (query, cluster) pair
     # join, no exchange before or after the pass
     assert "BroadcastHashJoin" not in plans["search"]
-    for name in ("brute_force_knn", "knn_bulk", "search", "search_bulk", "ivfpq_search_bulk"):
+    for name in (
+        "brute_force_knn", "knn_bulk", "search", "search_bulk", "ivfpq_search_bulk",
+        "adc_knn", "hamming_knn", "binary_encode",
+    ):
         assert "MapInArrow" in plans[name] and "Exchange" not in plans[name], name
     for name, plan in plans.items():
         assert "InArrow" in plan, name

@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from fabstir_vectordb_spark.operators import knn as knn_mod
 from fabstir_vectordb_spark.operators.knn import brute_force_knn
 from fabstir_vectordb_spark.operators.pq import ProductQuantizer
 
@@ -92,25 +93,26 @@ def test_adc_knn_recall(pq, embeddings, spark):
     assert len(e & rr) >= len(e & a)  # re-rank never hurts
 
 
-def test_adc_knn_bulk_matches_point_path(pq, embeddings):
-    """adc_knn_bulk (DataFrame queries, cogrouped kernel) returns exactly
-    the rows of driver-collect adc_knn — raw ADC and reranked."""
+def test_adc_knn_cogroup_matches_bounded(pq, embeddings, monkeypatch):
+    """The cogroup plan of adc_knn (DataFrame queries, forced by a query
+    byte cap that holds no query) returns exactly the rows of the bounded
+    plan — raw ADC and reranked."""
     queries = embeddings.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("vector")
     )
     codes = pq.encode(embeddings)
+
+    def rows(**kwargs):
+        return sorted(
+            (r["query_id"], r["id"], round(r["distance"], 6))
+            for r in pq.adc_knn(codes, queries, 10, **kwargs).collect()
+        )
+
     for kwargs in ({}, {"rerank_vectors": embeddings, "oversample": 4}):
-        point = pq.adc_knn(codes, queries, 10, **kwargs)
-        bulk = pq.adc_knn_bulk(codes, queries, 10, **kwargs)
-        p = sorted(
-            (r["query_id"], r["id"], round(r["distance"], 6))
-            for r in point.collect()
-        )
-        b = sorted(
-            (r["query_id"], r["id"], round(r["distance"], 6))
-            for r in bulk.collect()
-        )
-        assert p == b
+        bounded = rows(**kwargs)
+        with monkeypatch.context() as m:
+            m.setattr(knn_mod, "_MAX_DRIVER_QUERY_BYTES", 0)
+            assert rows(**kwargs) == bounded
 
 
 def test_save_load_roundtrip(pq, tmp_path):
