@@ -4930,9 +4930,9 @@ def q_pq_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         rerank computes TRUE distances on the ADC-oversampled candidate
         set, so at every rank the PQ distance >= the exact distance, and
         cardinality is exactly k per query
-      bulk_equiv    — the former pq_bulk_invariant row: adc_knn_bulk
-        (cogrouped block-gather kernel, no driver collect) returns
-        EXACTLY the driver-collect adc_knn rows for the same model
+      bulk_equiv    — the former pq_bulk_invariant row: adc_knn's
+        cogroup plan (forced by a zero driver query byte cap) returns
+        EXACTLY its bounded plan's rows for the same model
 
     Round 6 adds the OPQ rotation (operators/opq.py, Ge et al. CVPR
     2013) as two more parts:
@@ -4989,13 +4989,19 @@ def q_pq_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pq_bulk_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bulk-path equivalence for PQ: adc_knn_bulk (query set stays a
-    DataFrame, cogrouped block-gather kernel, no driver collect) must
-    return EXACTLY the rows of the driver-collect adc_knn for the same
-    fitted quantizer — same id and same round(6) distance at every rank.
-    Holds for ANY model; certified as the bulk_equiv part of
-    q_pq_adc_knn."""
+    """Plan equivalence for PQ: the cogroup plan of adc_knn (query set
+    stays a DataFrame, codes hashed into blocks and cogrouped with the
+    replicated queries, then merged and re-ranked) must return EXACTLY
+    the rows of its bounded plan (queries collected and broadcast into
+    one map-only pass, merged on the driver) for the same fitted
+    quantizer — same id and same round(6) distance at every rank.  The
+    cogroup side is forced the way the tests force it: the driver query
+    byte cap is 0 while that side is constructed (the choice is made at
+    construction).  Holds for ANY model; certified as the bulk_equiv part
+    of q_pq_adc_knn."""
     from pyspark.sql import Window
+
+    from fabstir_vectordb_spark.operators import knn as knn_mod
 
     emb = _t(spark, sf_dir, "embeddings")
     pq = _pq_model(spark, sf_dir)
@@ -5009,9 +5015,14 @@ def q_pq_bulk_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("id"), F.round("distance", 6).alias("d"),
         )
 
-    bulk = _rk(
-        pq.adc_knn_bulk(codes, queries, K, rerank_vectors=emb, oversample=4)
-    )
+    cap = knn_mod._MAX_DRIVER_QUERY_BYTES
+    knn_mod._MAX_DRIVER_QUERY_BYTES = 0
+    try:
+        bulk = _rk(
+            pq.adc_knn_bulk(codes, queries, K, rerank_vectors=emb, oversample=4)
+        )
+    finally:
+        knn_mod._MAX_DRIVER_QUERY_BYTES = cap
     point = _rk(
         pq.adc_knn(codes, queries, K, rerank_vectors=emb, oversample=4)
     )

@@ -6,10 +6,16 @@ call: that call builds the physical plan and crosses py4j (~60 ms
 measured at sf0.1), and per-search construction re-derives the SAME
 select over the same memoized table handle every time.  The analyzed
 plan's semanticHash (~15 ms) keys a memo holding the previously probed
-count.  The memo stores plan METADATA (an int), never data or results;
-within a session Spark's own InMemoryFileIndex already caches the file
-listing behind the same plans, so this introduces no new staleness
-class.
+count, for the life of the application.
+
+The memo stores plan METADATA (an int), never data or results, and it
+can be stale: the key does not see the files behind a path, so after a
+parquet path is rewritten mid-application (say from 1 file to 4) a fresh
+`spark.read.parquet` of it scans 4 partitions while `scan_partitions`
+still returns the memoized 1.  Callers may therefore use the count only
+to steer a plan choice whose every branch returns the same rows — the
+dedup/text operators' conditional repartition (`dedup._parallelize`) and
+the bulk searches' driver-pull caps — never to shape a result.
 """
 
 from __future__ import annotations

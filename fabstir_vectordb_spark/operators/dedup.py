@@ -7,16 +7,24 @@ Four families, each a different cost/recall point:
   ngram_jaccard_pairs  inverted-index self-join on word shingles: only
                        docs SHARING a shingle ever meet (no N^2), then
                        exact Jaccard on the candidate pairs.
-  minhash_lsh_pairs    MinHash signatures (H seeded xxhash64 mins) ->
-                       LSH banding -> bucket join -> exact-Jaccard verify.
-                       The classic sub-quadratic near-dup path; all
-                       hashing stays JVM-side (xxhash64 expressions).
+  minhash_lsh_pairs    MinHash signatures (H seeded re-hashes of xxhash64
+                       shingle hashes) -> LSH banding -> bucket join ->
+                       exact-Jaccard verify.  The classic sub-quadratic
+                       near-dup path.
   simhash64            64-bit SimHash per doc + banded Hamming-distance
                        pairing (bit_count(xor) <= radius).
 
 Plus embedding_near_dup: cosine-similarity pairs over an embedding
-column — brute within-block for exactness, or cluster-bucketed (IVF
-assignment) so only same-cluster pairs are compared at scale.
+column — brute against a broadcast matrix for exactness, or
+cluster-bucketed (IVF assignment) so only same-cluster pairs are
+compared at scale.
+
+The Python kernels cross the Arrow boundary (``mapInArrow`` /
+``applyInArrow``, no pandas): the MinHash signature and SimHash vote
+kernels read their ``list<bigint>`` hash column through one parse,
+``_hash_lists``, and the brute and cluster near-dup kernels emit pairs
+through one body, ``_cosine_pairs``, reading vectors through
+``_arrow.matrix`` (a null or ragged vector raises, naming the column).
 
 Scale notes: every operator here shuffles on a *derived small key*
 (hash, shingle, band, cluster) — never on raw text; skew from hot
@@ -26,16 +34,21 @@ standard stop-shingle trick.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from fabstir_vectordb_spark.functions import distance as D
 from fabstir_vectordb_spark.functions.text import (
     fingerprint,
     whitespace_tokens,
     word_shingles,
     word_shingles_from,
 )
+from fabstir_vectordb_spark.operators import _arrow
+from fabstir_vectordb_spark.operators.hnsw import _splitmix64
+
 
 def _parallelize(df: DataFrame) -> DataFrame:
     """Spread a low-partition-count input across the cluster.
@@ -229,17 +242,27 @@ def minhash_signature(
     )
 
 
-def _splitmix64(z):
-    """Vectorized splitmix64 finalizer over uint64 numpy arrays — a
-    well-distributed 64-bit hash family used ONLY for seeded re-hashing
-    of already-hashed (xxhash64) shingles, so it never has to match any
-    engine's hash function; the verify stage is exact Jaccard."""
-    import numpy as np
+def _hash_lists(batch: pa.RecordBatch):
+    """The one parse of the ``list<bigint>`` hash column ``__hs``, shared
+    by the MinHash signature and SimHash vote kernels: ``(rows, hashes,
+    starts, lens)``, where ``rows`` are the positions of the rows holding
+    at least one hash (a null or empty list is dropped here, so it emits
+    no row), ``hashes`` is their flat value buffer as ``uint64``, and row
+    ``rows[i]``'s hashes are ``hashes[starts[i]:starts[i] + lens[i]]`` —
+    the segments ``np.ufunc.reduceat`` folds per row."""
+    col = batch.column("__hs")
+    lens = col.value_lengths().fill_null(0).to_numpy().astype(np.int64)
+    rows = np.flatnonzero(lens)
+    lens = lens[rows]
+    # flatten() skips null rows' backing values and honours slicing
+    hashes = col.flatten().to_numpy().view(np.uint64)
+    return rows, hashes, np.cumsum(lens) - lens, lens
 
-    z = (z + np.uint64(0x9E3779B97F4A7C15))
-    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    return z ^ (z >> np.uint64(31))
+
+def _keyed_batch(ids: pa.Array, rows: np.ndarray, name: str, values: pa.Array) -> pa.RecordBatch:
+    """``(id, name)`` rows: the ids at ``rows`` taken from their Arrow
+    column (so they keep its type), beside ``values``."""
+    return pa.RecordBatch.from_arrays([ids.take(rows), values], names=["id", name])
 
 
 def minhash_lsh_pairs(
@@ -280,10 +303,6 @@ def minhash_lsh_pairs(
 
     Output matches ngram_jaccard_pairs: (a_id, b_id, jaccard).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     rows_per_band = num_hashes // bands
     base = _shingled(df, text_col, id_col, n)
     # hash each shingle string ONCE (JVM codegen), carry only fixed-width
@@ -292,38 +311,27 @@ def minhash_lsh_pairs(
         "id", F.transform("__shingles", lambda s: F.xxhash64(s)).alias("__hs")
     ).cache()
 
-    id_type = df.schema[id_col].dataType
     out_schema = T.StructType(
         [
-            T.StructField("id", id_type, False),
+            T.StructField("id", df.schema[id_col].dataType, False),
             T.StructField("buckets", T.ArrayType(T.LongType(), False), False),
         ]
     )
     seeds = _splitmix64(np.arange(1, num_hashes + 1, dtype=np.uint64))
 
     def sig_kernel(batches):
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            rows, h, starts, _ = _hash_lists(batch)
+            if not len(rows):
                 continue
-            lens = pdf["__hs"].map(len).to_numpy()
-            keep = lens > 0
-            if not keep.all():
-                pdf = pdf[keep]
-                lens = lens[keep]
-                if pdf.empty:
-                    continue
-            all_h = np.concatenate(
-                [np.asarray(h, dtype=np.int64) for h in pdf["__hs"]]
-            ).view(np.uint64)
-            offsets = np.concatenate(([0], np.cumsum(lens)[:-1]))
             # seeded re-hash + per-doc segmented min, one seed at a time:
             # the (total_shingles, H) matrix form allocates ~10 full-size
             # temporaries inside splitmix64 (hundreds of MB per batch);
             # the per-seed loop keeps the working set at one
             # shingle-count-sized column and is cache-resident
-            sig = np.empty((len(lens), len(seeds)), dtype=np.uint64)
+            sig = np.empty((len(rows), len(seeds)), dtype=np.uint64)
             for j, seed in enumerate(seeds):
-                sig[:, j] = np.minimum.reduceat(_splitmix64(all_h ^ seed), offsets)
+                sig[:, j] = np.minimum.reduceat(_splitmix64(h ^ seed), starts)
             # fold r consecutive min-hashes into one bucket id per band
             buckets = np.empty((len(sig), bands), dtype=np.uint64)
             for b in range(bands):
@@ -331,14 +339,14 @@ def minhash_lsh_pairs(
                 for r in range(rows_per_band):
                     acc = _splitmix64(acc ^ sig[:, b * rows_per_band + r])
                 buckets[:, b] = acc
-            yield pd.DataFrame(
-                {"id": pdf["id"], "buckets": list(buckets.view(np.int64))}
+            yield _keyed_batch(
+                batch.column("id"), rows, "buckets", _arrow.lists(buckets.view(np.int64))
             )
 
     # cache: the self-join below reads `banded` TWICE — without the cache
     # each side re-runs the signature kernel over the whole corpus
     banded = (
-        hashed.mapInPandas(sig_kernel, out_schema)
+        hashed.mapInArrow(sig_kernel, out_schema)
         .select("id", F.posexplode("buckets").alias("band", "bucket"))
         .cache()
     )
@@ -412,63 +420,49 @@ def simhash64_agg(
 ) -> DataFrame:
     """Distributed SimHash, MAP-ONLY: tokenize + hash each distinct token
     once JVM-side (transform + xxhash64, whole-stage codegen), then one
-    Arrow-batched kernel computes all 64 per-bit votes per doc.  Identical
-    output to the per-row `simhash64` expression (vote totals are
-    order-independent) with zero shuffle — no explode/groupBy re-group of
-    the token table, and no 64-aggregate column fan-out (which would blow
-    the codegen method limit and fall back to interpreted aggregation).
+    Arrow-batched kernel computes all 64 per-bit votes per doc.  For every
+    non-null text the output equals the per-row `simhash64` expression
+    (vote totals are order-independent); a null text has no tokens and
+    gives no row (the expression gives 0 for it).  Zero shuffle — no
+    explode/groupBy re-group of the token table, and no 64-aggregate
+    column fan-out (which would blow the codegen method limit and fall
+    back to interpreted aggregation).
 
     Output: (id, sim bigint)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     toks = F.array_distinct(
         F.split(F.trim(F.col(text_col)), r"\s+")
     )
     grouped = _parallelize(df.select(F.col(id_col).alias("id"), F.col(text_col))).select(
         "id", F.transform(toks, lambda t: F.xxhash64(t)).alias("__hs")
     )
-    id_type = df.schema[id_col].dataType
     out_schema = T.StructType(
         [
-            T.StructField("id", id_type, False),
+            T.StructField("id", df.schema[id_col].dataType, False),
             T.StructField("sim", T.LongType(), False),
         ]
     )
-    bitpos = np.arange(64, dtype=np.uint64)
-    powers = np.uint64(1) << bitpos
+    powers = np.uint64(1) << np.arange(64, dtype=np.uint64)
 
     def kernel(batches):
-        # fully vectorized over the batch: one (total_hashes x 64) bit
-        # matrix + a segmented sum (reduceat) — no per-doc Python loop
-        for pdf in batches:
-            if pdf.empty:
+        # fully vectorized over the batch: per bit, a segmented sum
+        # (reduceat) over the flat hashes — no per-doc Python loop
+        for batch in batches:
+            rows, h, starts, lens = _hash_lists(batch)
+            if not len(rows):
                 continue
-            lens = pdf["__hs"].map(len).to_numpy(dtype=np.int64)
-            keep = lens > 0
-            if not keep.all():
-                pdf = pdf[keep]
-                lens = lens[keep]
-                if pdf.empty:
-                    continue
-            all_h = np.concatenate(
-                [np.asarray(h, dtype=np.int64) for h in pdf["__hs"]]
-            ).view(np.uint64)
-            offsets = np.concatenate(([0], np.cumsum(lens)[:-1]))
             # per-bit column loop: the (hashes x 64) matrix form allocates
             # several hundred-MB temporaries per batch; one bit-column at
             # a time keeps the working set cache-resident (same fix as
             # the minhash signature kernel)
-            ones = np.empty((len(lens), 64), dtype=np.int64)
+            ones = np.empty((len(rows), 64), dtype=np.int64)
             for b in range(64):
-                col = (all_h >> np.uint64(b)) & np.uint64(1)
-                ones[:, b] = np.add.reduceat(col.view(np.int64), offsets)
+                col = (h >> np.uint64(b)) & np.uint64(1)
+                ones[:, b] = np.add.reduceat(col.view(np.int64), starts)
             votes = 2 * ones - lens[:, None]  # (+1/-1 votes summed)
             sims = (powers[None, :] * (votes > 0)).sum(axis=1, dtype=np.uint64)
-            yield pd.DataFrame({"id": pdf["id"], "sim": sims.view(np.int64)})
+            yield _keyed_batch(batch.column("id"), rows, "sim", pa.array(sims.view(np.int64)))
 
-    return grouped.mapInPandas(kernel, out_schema)
+    return grouped.mapInArrow(kernel, out_schema)
 
 
 def _prune_hot_buckets(
@@ -666,26 +660,8 @@ def canonicalize_pairs(
 # ------------------------------------------------- embedding near-dup
 
 
-def _embedding_near_dup_kernel(
-    df: DataFrame, threshold: float, id_col: str, vector_col: str
-) -> DataFrame:
-    """Map-only exact all-pairs: broadcast the (small-side) matrix, each
-    partition BLAS-multiplies its row block against the full matrix and
-    emits only pairs over threshold — zero shuffle, no N^2 row
-    materialization.  Same small-side assumption as brute_force_knn; the
-    cluster method is the unbounded-N path."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    rows = df.select(id_col, vector_col).collect()
-    ids_all = [r[0] for r in rows]
-    M = np.asarray([np.asarray(r[1], dtype=np.float64) for r in rows])
-    bc = spark.sparkContext.broadcast((ids_all, M))
-
-    id_type = df.schema[id_col].dataType
-    out_schema = T.StructType(
+def _pairs_schema(id_type: T.DataType) -> T.StructType:
+    return T.StructType(
         [
             T.StructField("a_id", id_type, False),
             T.StructField("b_id", id_type, False),
@@ -693,94 +669,89 @@ def _embedding_near_dup_kernel(
         ]
     )
 
-    def kernel(batches):
-        ids_l, M_l = bc.value
-        norms = np.linalg.norm(M_l, axis=1)
-        ids_arr = np.asarray(ids_l)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            V = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vector_col]]
-            )
-            vids = pdf[id_col].to_numpy()
-            vn = np.linalg.norm(V, axis=1)
-            denom = np.outer(vn, norms)
-            sims = np.divide(
-                V @ M_l.T, denom, out=np.zeros_like(denom), where=denom != 0.0
-            )
-            simr = np.round(sims, 6) + 0.0
-            a_out, b_out, c_out = [], [], []
-            for i in range(len(vids)):
-                mask = (ids_arr > vids[i]) & (simr[i] >= threshold)
-                js = np.flatnonzero(mask)
-                a_out.extend([vids[i]] * len(js))
-                b_out.extend(ids_arr[js].tolist())
-                c_out.extend(simr[i, js].tolist())
-            yield pd.DataFrame({"a_id": a_out, "b_id": b_out, "cosine": c_out})
 
-    return _parallelize(df.select(id_col, vector_col)).mapInPandas(kernel, out_schema)
+def _cosine_pairs(
+    A: np.ndarray, a_keys: np.ndarray, B: np.ndarray, b_keys: np.ndarray, threshold: float
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The one near-dup pair body of the brute and cluster kernels: every
+    row of ``A`` against every row of ``B`` by cosine — raw GEMM /
+    outer(norms), 0 where a norm is 0, rounded to 6 — keeping the pairs
+    whose ``b_keys`` entry is above the ``a_keys`` one (each unordered
+    pair once, never a row with itself) at a cosine of at least
+    ``threshold``.  Row-chunked, so the largest temporary is a
+    (chunk x len(B)) slab however many rows ``A`` holds.  Returns
+    (A position, B position, cosine) arrays, one entry per pair."""
+    na = np.linalg.norm(A, axis=1)
+    nb = np.linalg.norm(B, axis=1)
+    chunk = max(16, 4_000_000 // max(len(B), 1))
+    out_a, out_b, out_c = [np.empty(0, np.int64)], [np.empty(0, np.int64)], [np.empty(0)]
+    for s in range(0, len(A), chunk):
+        e = min(s + chunk, len(A))
+        denom = np.outer(na[s:e], nb)
+        sims = np.divide(A[s:e] @ B.T, denom, out=np.zeros_like(denom), where=denom != 0.0)
+        simr = np.round(sims, 6) + 0.0
+        i, j = np.nonzero((b_keys[None, :] > a_keys[s:e, None]) & (simr >= threshold))
+        out_a.append(i + s)
+        out_b.append(j)
+        out_c.append(simr[i, j])
+    return np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_c)
 
 
-def _cluster_pairs_gemm(
-    base: DataFrame, threshold: float, id_type
+def _pairs_table(a_ids: pa.Array, b_ids: pa.Array, i, j, cos: np.ndarray) -> dict:
+    """The ``(a_id, b_id, cosine)`` columns of ``_cosine_pairs``' output,
+    the ids taken from their Arrow columns."""
+    return {"a_id": a_ids.take(i), "b_id": b_ids.take(j), "cosine": pa.array(cos)}
+
+
+def _brute_pairs(
+    rows: DataFrame, pulled: pa.Table, threshold: float, id_col: str, vector_col: str
 ) -> DataFrame:
-    """Same-cluster cosine pairs via one GEMM per cluster group.
+    """Map-only exact all-pairs over the ``(id_col, vector_col)`` frame
+    ``rows``: ``pulled`` (``rows`` collected as one Arrow table, the small
+    side) is broadcast, and each Arrow batch of ``rows`` runs
+    ``_cosine_pairs`` against its whole matrix, emitting only pairs over
+    threshold — zero shuffle, no N^2 row materialization.  Same
+    small-side assumption as brute_force_knn; the cluster method is the
+    unbounded-N path."""
+    ids_all = pulled.column(0).combine_chunks()
+    bc = rows.sparkSession.sparkContext.broadcast(
+        (ids_all, _arrow.matrix(pulled.column(1), vector_col))
+    )
+
+    def kernel(batches):
+        ids_l, M = bc.value
+        keys_l = _arrow.sort_keys(ids_l)
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            ids = batch.column(id_col)
+            V = _arrow.matrix(batch.column(vector_col), vector_col)
+            pairs = _cosine_pairs(V, _arrow.sort_keys(ids), M, keys_l, threshold)
+            yield pa.RecordBatch.from_pydict(_pairs_table(ids, ids_l, *pairs))
+
+    return _parallelize(rows).mapInArrow(kernel, _pairs_schema(rows.schema[id_col].dataType))
+
+
+def _cluster_pairs(assigned: DataFrame, threshold: float, vector_col: str) -> DataFrame:
+    """Same-cluster cosine pairs: one ``applyInArrow`` task per cluster
+    runs ``_cosine_pairs`` of the cluster against itself.
 
     A declarative self-join would evaluate the cosine as an interpreted
     higher-order function per candidate pair (HOFs never enter
     whole-stage codegen) — measured ~300 s for 200k vectors / 45M
-    within-cluster pairs where this kernel takes seconds.  Row-chunked so
-    a giant cluster's similarity matrix never materializes whole: the
-    working set is a (chunk x m) slab, and only over-threshold pairs are
-    emitted.  Pair order (a_id < b_id) comes from the positional upper
-    triangle + a value min/max, so each unordered pair appears once.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    within-cluster pairs where this kernel takes seconds.  The pair body
+    is row-chunked, so a giant cluster's similarity matrix never
+    materializes whole."""
 
-    out_schema = T.StructType(
-        [
-            T.StructField("a_id", id_type, False),
-            T.StructField("b_id", id_type, False),
-            T.StructField("cosine", T.DoubleType(), False),
-        ]
+    def cluster_pairs(group: pa.Table) -> pa.Table:
+        ids = group.column("id").combine_chunks()
+        V = _arrow.matrix(group.column(vector_col), vector_col)
+        keys = _arrow.sort_keys(ids)
+        return pa.table(_pairs_table(ids, ids, *_cosine_pairs(V, keys, V, keys, threshold)))
+
+    return assigned.groupBy("cluster_id").applyInArrow(
+        cluster_pairs, _pairs_schema(assigned.schema["id"].dataType)
     )
-
-    def cluster_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        if m < 2:
-            return pd.DataFrame({"a_id": [], "b_id": [], "cosine": []})
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-        ids = pdf["id"].to_numpy()
-        if ids.dtype == object:
-            ids = ids.astype(str)
-        norms = np.linalg.norm(V, axis=1)
-        out_a, out_b, out_c = [], [], []
-        chunk = max(16, 4_000_000 // max(m, 1))
-        for s in range(0, m, chunk):
-            e = min(s + chunk, m)
-            # same arithmetic as the brute kernel: raw GEMM / outer(norms)
-            denom = np.outer(norms[s:e], norms)
-            sims = np.divide(
-                V[s:e] @ V.T, denom, out=np.zeros_like(denom), where=denom != 0.0
-            )
-            simr = np.round(sims, 6) + 0.0
-            for li in range(e - s):
-                p = s + li
-                js = np.flatnonzero(simr[li, p + 1 :] >= threshold) + p + 1
-                if len(js) == 0:
-                    continue
-                pa, pb = ids[p], ids[js]
-                lo = np.minimum(pa, pb)
-                hi = np.maximum(pa, pb)
-                out_a.extend(lo.tolist())
-                out_b.extend(hi.tolist())
-                out_c.extend(simr[li, js].tolist())
-        return pd.DataFrame({"a_id": out_a, "b_id": out_b, "cosine": out_c})
-
-    return base.groupBy("cluster_id").applyInPandas(cluster_pairs, out_schema)
 
 
 def embedding_near_dup(
@@ -794,63 +765,51 @@ def embedding_near_dup(
 ) -> DataFrame:
     """Cosine-similar pairs over an embedding column.
 
-    method="auto" (default): dispatch on table size — exact brute force
-    under `brute_force_limit` rows, cluster-pruned above it (fitting an
-    IVF index on a bounded sample if none is supplied).  The dispatch
-    exists so the exact path's driver-side matrix broadcast can never be
-    pointed at an unbounded table (VERDICT r1 item 6).
+    method="auto" (default): decide with one capped pull of the
+    ``(id, vector)`` rows, ``limit(brute_force_limit + 1).toArrow()`` —
+    at most ``brute_force_limit`` rows run exact brute force on the
+    pulled table, more run cluster-pruned (fitting an IVF index, sized
+    by one count, if none is supplied).  The cap exists so the exact
+    path's driver-side matrix broadcast can never be pointed at an
+    unbounded table.
     method="brute": exact all-pairs via the broadcast numpy kernel (use
     under ~100k rows; within that regime it is map-only — no shuffle).
-    method="brute_expr": same semantics as a pure Catalyst self-join
-    (the declarative fallback). method="cluster": prune with an IVFIndex
-    — only same-cluster pairs are compared (the 100 TB path; recall
-    depends on cluster granularity, measured by the recall harness).
+    method="cluster": prune with an IVFIndex — only same-cluster pairs
+    are compared (the 100 TB path; recall depends on cluster
+    granularity, measured by the recall harness).
+
+    Both kernels read vectors through ``_arrow.matrix``: a null vector,
+    a null element or a vector of another length raises ``ValueError``
+    naming ``vector_col``.
 
     Output: (a_id, b_id, cosine) with a_id < b_id, rounded 6.
     """
+    rows = df.select(id_col, vector_col)
     if method == "auto":
-        from fabstir_vectordb_spark.plans.tuning import plan_near_dup
-
-        n = df.count()
-        method = plan_near_dup(n, brute_force_limit)
-        if method == "cluster" and ivf_index is None:
+        pulled = rows.limit(brute_force_limit + 1).toArrow()
+        if pulled.num_rows <= brute_force_limit:
+            return _brute_pairs(rows, pulled, threshold, id_col, vector_col)
+        method = "cluster"
+        if ivf_index is None:
             import math
 
             from fabstir_vectordb_spark.operators.ivf import IVFIndex
 
             ivf_index = IVFIndex.fit(
                 df,
-                n_clusters=max(16, int(math.isqrt(n))),
+                n_clusters=max(16, int(math.isqrt(df.count()))),
                 seed=42,
                 id_col=id_col,
                 vector_col=vector_col,
             )
     if method == "brute":
-        return _embedding_near_dup_kernel(df, threshold, id_col, vector_col)
-    base = df.select(F.col(id_col).alias("id"), F.col(vector_col).alias("v"))
-    if method == "cluster":
-        if ivf_index is None:
-            raise ValueError("method='cluster' requires ivf_index")
-        assigned = ivf_index.assign(
-            df.select(F.col(id_col).alias("id"), F.col(vector_col).alias(vector_col)),
-        )
-        base = assigned.select("id", F.col(vector_col).alias("v"), "cluster_id")
-        return _cluster_pairs_gemm(base, threshold, df.schema[id_col].dataType)
-    elif method == "brute_expr":
-        join_cond = F.col("a.id") < F.col("b.id")
-    else:
+        return _brute_pairs(rows, rows.toArrow(), threshold, id_col, vector_col)
+    if method != "cluster":
         raise ValueError(f"unknown method {method!r}")
-    a, b = base.alias("a"), base.alias("b")
-    cos = D.cosine_similarity(F.col("a.v"), F.col("b.v"))
-    return (
-        a.join(b, join_cond)
-        .select(
-            F.col("a.id").alias("a_id"),
-            F.col("b.id").alias("b_id"),
-            (F.round(cos, 6) + F.lit(0.0)).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    if ivf_index is None:
+        raise ValueError("method='cluster' requires ivf_index")
+    assigned = ivf_index.assign(rows.withColumnRenamed(id_col, "id"))
+    return _cluster_pairs(assigned, threshold, vector_col)
 
 
 # ---------------------------------------------------------------------------

@@ -54,14 +54,6 @@ def tune_candidate_limit(k: int) -> int:
     return max(k * 3, 50)  # k*3 is the reference's oversampling constant
 
 
-def plan_near_dup(n_rows: int, brute_force_limit: int = 100_000) -> str:
-    """Physical strategy for embedding near-dup pairs: the exact kernel
-    broadcasts the full (id, vector) matrix to every task, so it is only
-    admissible under the limit; above it, cluster-pruned pairs (compare
-    within IVF cells only) is the scale path."""
-    return "brute" if n_rows <= brute_force_limit else "cluster"
-
-
 # Binary sign-bit tier boundary (operators/binary.py), from the
 # measured scan series (PERFORMANCE.md "Binary scan series extended to
 # 5M"): 20.2 ms/query at 2M vectors, 76.0 ms at 5M — the full Hamming

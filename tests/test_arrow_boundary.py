@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fabstir_vectordb_spark.operators import _arrow
+from fabstir_vectordb_spark.operators import dedup
 from fabstir_vectordb_spark.operators import knn as knn_mod
 from fabstir_vectordb_spark.operators.binary import BinarySketch
 from fabstir_vectordb_spark.operators.ivf import IVFIndex
@@ -81,13 +82,29 @@ def _hamming_knn(df):
     )
 
 
+def _near_dup_brute(df):
+    """The broadcast matrix is parsed on the driver."""
+    return dedup.embedding_near_dup(df, 0.9, id_col="id", vector_col="vector", method="brute")
+
+
+def _near_dup_cluster(df):
+    idx = IVFIndex(centroids=np.zeros((1, DIM)), id_col="id", vector_col="vector")
+    return dedup.embedding_near_dup(
+        df, 0.9, id_col="id", vector_col="vector", method="cluster", ivf_index=idx
+    )
+
+
 @pytest.mark.parametrize("what", list(BAD))
-@pytest.mark.parametrize("op", [_assign, _encode, _knn_bulk, _binary_encode, _hamming_knn])
+@pytest.mark.parametrize(
+    "op",
+    [_assign, _encode, _knn_bulk, _binary_encode, _hamming_knn, _near_dup_brute, _near_dup_cluster],
+)
 def test_kernels_fail_loudly_on_bad_vectors(spark, op, what):
     with pytest.raises(Exception) as err:
         op(_vectors(spark, BAD[what])).collect()
     msg = str(err.value)
-    # a kernel raises in a Python worker; the bounded re-rank on the driver
+    # a kernel raises in a Python worker; the bounded re-rank and the
+    # near-dup broadcast on the driver
     assert "ValueError: column '" in msg or (err.type is ValueError and "column '" in msg)
     assert what in msg
 

@@ -55,12 +55,18 @@ def test_minhash_lsh_matches_exact(docs):
         assert lsh[k] == pytest.approx(exact[k])
 
 
-def test_simhash_pairs(docs):
+def test_simhash_pairs(spark, docs):
+    # a null text and an all-whitespace one ride along with the fixture
+    docs = docs.unionByName(
+        spark.createDataFrame([(5, None), (6, " \t  ")], "doc_id bigint, text string")
+    )
     sims = {r["doc_id"]: r["s"] for r in
             docs.select("doc_id", DD.simhash64("text").alias("s")).collect()}
     assert sims[0] == sims[1]  # identical text => identical simhash
-    # distributed aggregate path computes the identical fingerprint
+    # distributed aggregate path computes the identical fingerprint for
+    # every non-null text; a null text has no tokens and gives no row
     agg = {r["id"]: r["sim"] for r in DD.simhash64_agg(docs).collect()}
+    del sims[5]
     assert agg == sims
     pairs = {(r["a_id"], r["b_id"]): r["hamming"] for r in
              DD.simhash_pairs(docs, max_hamming=8).collect()}
@@ -68,6 +74,7 @@ def test_simhash_pairs(docs):
     if (0, 2) in pairs:
         assert pairs[(0, 2)] <= 8
     assert (0, 3) not in pairs
+    assert all(5 not in p for p in pairs)
 
 
 def test_embedding_near_dup(spark):
@@ -96,6 +103,43 @@ def test_embedding_near_dup_cluster_path(spark, embeddings):
     assert len(c) >= len(b) * 0.3  # and a non-trivial fraction at 4 clusters
 
 
+@pytest.mark.parametrize("string_ids", [False, True])
+def test_one_cluster_path_equals_brute(spark, embeddings, string_ids):
+    """With every vector in one cluster the cluster path compares every
+    pair, so it returns exactly the brute path's rows and cosines, with
+    numeric and with string ids."""
+    import numpy as np
+
+    from fabstir_vectordb_spark.operators.ivf import IVFIndex
+
+    if string_ids:
+        embeddings = embeddings.withColumn("vec_id", F.concat(F.lit("v"), "vec_id"))
+    dim = len(embeddings.first()["embedding"])
+    idx = IVFIndex(np.zeros((1, dim)), id_col="vec_id", vector_col="embedding")
+    brute = DD.embedding_near_dup(embeddings, threshold=0.4, method="brute").collect()
+    clustered = DD.embedding_near_dup(
+        embeddings, threshold=0.4, method="cluster", ivf_index=idx
+    ).collect()
+    assert brute and sorted(map(tuple, clustered)) == sorted(map(tuple, brute))
+    assert all(r["a_id"] < r["b_id"] for r in clustered)
+
+
+def test_cluster_path_never_pairs_an_id_with_itself(spark):
+    """An id repeated within a cluster is one document: the a_id < b_id
+    contract holds, as on the brute path."""
+    import numpy as np
+
+    from fabstir_vectordb_spark.operators.ivf import IVFIndex
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (0, [1.0, 0.0]), (1, [1.0, 0.01])],
+        "vec_id bigint, embedding array<float>",
+    )
+    idx = IVFIndex(np.zeros((1, 2)), id_col="vec_id", vector_col="embedding")
+    got = DD.embedding_near_dup(df, threshold=0.9, method="cluster", ivf_index=idx).collect()
+    assert sorted((r["a_id"], r["b_id"]) for r in got) == [(0, 1), (0, 1)]
+
+
 def test_canonicalize_pairs(spark):
     nodes = spark.createDataFrame([(i,) for i in range(7)], "id bigint")
     # components: {0,1,2} (chain), {3,4}, singletons 5, 6
@@ -120,11 +164,11 @@ def test_near_dup_auto_dispatch(spark, monkeypatch):
     brute = DD.embedding_near_dup(df, threshold=0.99, method="brute")
     assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, brute.collect()))
 
-    # over the limit: the driver-collect kernel must NEVER run
+    # over the limit: the broadcast brute kernel must NEVER run
     def _boom(*a, **kw):
         raise AssertionError("brute kernel called above brute_force_limit")
 
-    monkeypatch.setattr(DD, "_embedding_near_dup_kernel", _boom)
+    monkeypatch.setattr(DD, "_brute_pairs", _boom)
     clustered = DD.embedding_near_dup(df, threshold=0.99, brute_force_limit=10)
     got = {(r["a_id"], r["b_id"]) for r in clustered.collect()}
     exact = {(r["a_id"], r["b_id"]) for r in brute.collect()}

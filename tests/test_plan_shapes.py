@@ -799,3 +799,33 @@ def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings, monkeypatch)
         assert "MapInPandas" not in plan, name
         assert "FlatMapGroupsInPandas" not in plan, name
         assert "FlatMapCoGroupsInPandas" not in plan, name
+
+
+def test_dedup_kernels_cross_the_arrow_boundary(spark, embeddings):
+    """The MinHash signature pass, simhash64_agg and both embedding
+    near-dup paths run their Python kernels through mapInArrow /
+    applyInArrow: a plan that slides back to the pandas boundary fails
+    here.  The MinHash pass sits in the cached band table, whose plan
+    the executed plan's in-memory scan prints."""
+    import numpy as np
+
+    from fabstir_vectordb_spark.operators import dedup as DD
+    from fabstir_vectordb_spark.operators.ivf import IVFIndex
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    emb = embeddings.select("vec_id", "embedding")
+    dim = len(emb.first()["embedding"])
+    one_cluster = IVFIndex(np.zeros((1, dim)), "vec_id", "embedding")
+    plans = {
+        "minhash_lsh_pairs": _executed(DD.minhash_lsh_pairs(docs, max_bucket_size=None)),
+        "simhash64_agg": _executed(DD.simhash64_agg(docs)),
+        "near_dup_brute": _executed(DD.embedding_near_dup(emb, method="brute")),
+        "near_dup_cluster": _executed(
+            DD.embedding_near_dup(emb, method="cluster", ivf_index=one_cluster)
+        ),
+    }
+    for name in ("minhash_lsh_pairs", "simhash64_agg", "near_dup_brute"):
+        assert "MapInArrow" in plans[name], name
+    assert "FlatMapGroupsInArrow" in plans["near_dup_cluster"]
+    for name, plan in plans.items():
+        assert "Pandas" not in plan, name
