@@ -62,7 +62,9 @@ def r6(c) -> F.Column:
 # pinned for the application's lifetime — rewriting a fixture parquet
 # mid-application would serve a stale handle.  Both are fine here (the
 # driver contract uses one session per process over immutable fixtures)
-# but are part of this memo's contract, not an accident.
+# but are part of this memo's contract, not an accident: only immutable
+# fixtures may be read through it (tests/test_plan_memo.py pins that a
+# rewritten fixture is served from the stale handle).
 _TABLE_HANDLES: dict[tuple[str, str, str], DataFrame] = {}
 
 

@@ -9,24 +9,28 @@ graph is perpendicular to BSP execution; this module implements the
 Spark-native shape instead:
 
 **Partition-local graphs.**  Vectors are hashed into ``num_graphs``
-disjoint graphs (``graph_id = pmod(xxhash64(id), G)``); each graph is
-built INDEPENDENTLY inside one ``applyInArrow`` task with the standard
-HNSW insertion algorithm (Malkov & Yashunin 2016, IEEE TPAMI 40(4) —
-public literature).  Build, insert and compaction all grow a graph
-through one body, ``_grow_graph``, and search and insert read a stored
-graph through one parse, ``_parse_graph``.  A query runs the multi-layer
-beam search (``_beam_topk``) on every graph in parallel and the
-per-graph top-k partials are merged — on the driver for a bounded query
-set, else by the same O(Q·G·k) window ``topk_per_query`` used by the
-exact kernel — the identical partial-reduction shape as
-operators/knn.py, so the global result is the union-best of G local
-searches.
+disjoint graphs (``graph_id = pmod(xxhash64(id), G)``); graph g is
+placed in partition g (``repartitionById``) and built INDEPENDENTLY
+inside that partition's ``mapInArrow`` task with the standard HNSW
+insertion algorithm (Malkov & Yashunin 2016, IEEE TPAMI 40(4) — public
+literature).  Build, insert and compaction all grow a graph through one
+body, ``_grow_graph``, and search and insert read a stored graph through
+one parse, ``_parse_graph``.  A query runs the multi-layer beam search
+(``_beam_topk``) on every graph in parallel and the per-graph top-k
+partials are merged — on the driver for a bounded query set, else by
+the same O(Q·G·k) window ``topk_per_query`` used by the exact kernel —
+the identical partial-reduction shape as operators/knn.py, so the
+global result is the union-best of G local searches.
 
 Why this is the right 100 TB shape: each graph is a bounded-size,
 memory-resident structure (size ≈ N/G nodes) that builds in one task
 with zero cross-partition chatter — construction is embarrassingly
-parallel, the one shuffle is the graph-id hash.  Search fans out to G
-tasks and shuffles only G·k candidate rows per query.  Recall: a global
+parallel, the one shuffle sends each row to its graph's partition, and
+with one graph per partition the heaviest task is one graph (a hash
+exchange of the graph ids can put several graphs in one task).  A
+bounded search over the table ``build`` returned is map-only: its
+partitions already are the graphs.  Search fans out to G tasks and
+brings back only G·k candidate rows per query.  Recall: a global
 top-k is the union of the per-graph top-k's, so partitioning LOSES
 nothing structurally — each local search just has a smaller haystack
 (the same argument as per-partition brute force); the only
@@ -56,7 +60,7 @@ from __future__ import annotations
 
 import heapq
 import math
-from typing import NamedTuple
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -337,6 +341,33 @@ def _grow_graph(old: _Graph | None, new: pa.Table, gid: int,
     )
 
 
+def _graph_tables(batches) -> Iterator[tuple[int, pa.Table]]:
+    """The rows of one placed partition as (graph_id, rows) per graph it
+    holds: one graph after ``repartitionById(G, "graph_id")``, more only
+    where graph ids exceed the partition count."""
+    batches = list(batches)
+    if not batches:
+        return
+    t = pa.Table.from_batches(batches)
+    gids = t.column("graph_id").to_numpy()
+    for gid in np.unique(gids).tolist():
+        yield gid, t.filter(pa.array(gids == gid))
+
+
+def _grow_placed(src: DataFrame, G: int, id_t, cfg: tuple) -> DataFrame:
+    """Graph g of the (id, __v, deleted, graph_id, __h) ``src`` rows
+    placed in partition g and grown from empty by ``_grow_graph`` in one
+    ``mapInArrow`` pass — build() and compact_graph(), so a compacted
+    graph is bit-identical to a fresh build of its survivors.  The output
+    keeps the placement: partition g holds graph g."""
+
+    def grow(batches):
+        for gid, rows in _graph_tables(batches):
+            yield from _grow_graph(None, rows, gid, *cfg).to_batches()
+
+    return src.repartitionById(G, "graph_id").mapInArrow(grow, _graph_schema(id_t))
+
+
 def _beam_topk(g: _Graph, Q: np.ndarray, k: int, ef: int,
                cosine: bool) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """The search body of one graph: the multi-layer beam search of every
@@ -413,6 +444,10 @@ class HNSWIndex:
             raise ValueError(f"unknown partitioner {partitioner!r}")
         self.partitioner = partitioner
         self._routers = None  # np.ndarray (G, dim) for kmeans builds
+        # the DataFrame build() returned: partition g holds graph g, so a
+        # bounded search over it needs no exchange (a DataFrame is
+        # immutable, so identity proves the layout)
+        self._graph = None
         # multi-assignment (kmeans only): insert each vector into its
         # `assign_graphs` nearest-router graphs — the public ANN "spill"
         # trick (cf. spill trees / SPANN's boundary replication).  A
@@ -503,24 +538,22 @@ class HNSWIndex:
             F.xxhash64(F.col(self.id_col), F.lit(self.seed)).alias("__h"),
         )
 
-    def _grow_from_empty(self):
-        """The groupBy(graph_id).applyInArrow kernel of build() and
-        compact_graph(): each graph grows from empty, so a compacted graph
-        is bit-identical to a fresh build of its survivors."""
-        cfg = (self.M, self.M0, self.ef_construction, self.m_l, self.seed)
-
-        def grow(key, new):
-            return _grow_graph(None, new, key[0].as_py(), *cfg)
-
-        return grow
+    @property
+    def _grow_cfg(self) -> tuple:
+        """The config arguments of ``_grow_graph``."""
+        return (self.M, self.M0, self.ef_construction, self.m_l, self.seed)
 
     # -- construction ----------------------------------------------------
     def build(self, vectors: DataFrame, deleted_col: str | None = None) -> DataFrame:
-        """One applyInArrow task per graph, each running _grow_graph from
-        an empty graph; the only shuffle is the graph-id hash partition.
-        Output columns: graph_id, id, level, neighbors
-        (array<array<id>>, layer-major), vector, deleted.  An id that
-        occurs twice in one graph raises ``ValueError``."""
+        """Graph g placed in partition g (``repartitionById``, the only
+        shuffle) and grown from empty by _grow_graph in that partition's
+        ``mapInArrow`` task, so each task builds one graph.  Output
+        columns: graph_id, id, level, neighbors (array<array<id>>,
+        layer-major), vector, deleted; the returned DataFrame keeps the
+        placement, and the index holds it, so a bounded ``search_bulk``
+        over it (or over its ``.cache()``, the same object) runs
+        map-only.  An id that occurs twice in one graph raises
+        ``ValueError``."""
         spark = vectors.sparkSession
         if self.num_graphs:
             G = int(self.num_graphs)
@@ -560,9 +593,8 @@ class HNSWIndex:
         else:
             graph_expr = self._hash_graph(G)
         src = self._new_rows(prep, graph_expr, deleted_col, id_t)
-        return src.groupBy("graph_id").applyInArrow(
-            self._grow_from_empty(), _graph_schema(id_t)
-        )
+        self._graph = _grow_placed(src, G, id_t, self._grow_cfg)
+        return self._graph
 
     def insert(
         self,
@@ -620,7 +652,7 @@ class HNSWIndex:
                 graph_expr = F.col("cluster_id").cast("int")
         new = self._new_rows(prep, graph_expr, deleted_col, id_t)
         cols = ["graph_id", "id", "level", "neighbors", "vector", "deleted"]
-        cfg = (self.M, self.M0, self.ef_construction, self.m_l, self.seed)
+        cfg = self._grow_cfg
 
         def merge_graph(key, ga: pa.Table, na: pa.Table) -> pa.Table:
             if na.num_rows == 0:
@@ -687,9 +719,9 @@ class HNSWIndex:
 
         Cost shape at scale: one tiny per-graph aggregate (G rows to
         the driver) picks the rebuild set; only those graphs' live rows
-        shuffle into the one-task-per-graph rebuild — graphs below the
-        threshold are never touched, so the cost tracks the tombstone
-        mass, not the corpus."""
+        shuffle into the rebuild, graph g into partition g as build()
+        places it — graphs below the threshold are never touched, so the
+        cost tracks the tombstone mass, not the corpus."""
         if not 0.0 < min_deleted_fraction <= 1.0:
             raise ValueError(
                 f"min_deleted_fraction must be in (0, 1], got {min_deleted_fraction}"
@@ -716,8 +748,8 @@ class HNSWIndex:
                 F.xxhash64(F.col("id"), F.lit(self.seed)).alias("__h"),
             )
         )
-        rebuilt = src.groupBy("graph_id").applyInArrow(
-            self._grow_from_empty(), _graph_schema(graph.schema["id"].dataType)
+        rebuilt = _grow_placed(
+            src, max(hot) + 1, graph.schema["id"].dataType, self._grow_cfg
         )
         return keep.unionByName(rebuilt)
 
@@ -741,11 +773,13 @@ class HNSWIndex:
         ``knn._MAX_DRIVER_PARTIAL_ROWS``, float64 query vectors within
         ``knn._MAX_DRIVER_QUERY_BYTES``, capped before the pull by the dim
         of one query row) is collected once and broadcast
-        into one ``groupBy(graph_id).applyInArrow`` pass over the node
-        table; the driver keeps each (query, id)'s min distance and the
-        first k per query, and the result is a local relation
-        (``_search_on_driver``).  The graph rows still shuffle once into
-        their groups; the queries and the partial rows do not.
+        into one ``mapInArrow`` pass over the node table, one graph per
+        partition; the driver keeps each (query, id)'s min distance and
+        the first k per query, and the result is a local relation
+        (``_search_on_driver``).  Over the table this index's ``build``
+        returned the pass is map-only; any other graph table (read back,
+        inserted into, compacted, filtered) takes one ``repartitionById``
+        first.  The queries and the partial rows never shuffle.
 
         Otherwise both sides stay DataFrames: queries are replicated per
         graph (Q x G rows — G is a knob, queries are the small side) and
@@ -853,10 +887,14 @@ class HNSWIndex:
     def _search_on_driver(self, graph: DataFrame, qids: list, Q: np.ndarray,
                           out_schema: T.StructType, k: int, ef: int) -> DataFrame:
         """The bounded plan of ``search_bulk``: the queries broadcast into
-        one ``groupBy(graph_id).applyInArrow`` pass, each graph emitting
-        its <= k rows per query; on the driver the partial rows keep the
-        min distance per (query, id) (spilled copies, as the cogroup plan
-        collapses them) and the first k per query."""
+        one ``mapInArrow`` pass, graph g in partition g, each graph
+        emitting its <= k rows per query; on the driver the partial rows
+        keep the min distance per (query, id) (spilled copies, as the
+        cogroup plan collapses them) and the first k per query.  The
+        table ``build`` returned is already placed, so its pass runs
+        map-only; any other table is placed by one ``repartitionById``
+        (a fixed G-way exchange, which adaptive execution does not
+        coalesce into tasks that run several graphs' beams in turn)."""
         spark = graph.sparkSession
         if not qids:
             return spark.createDataFrame([], out_schema)
@@ -864,22 +902,18 @@ class HNSWIndex:
         bc = spark.sparkContext.broadcast((qids_a, Q))
         cosine = self.metric == "cosine"
 
-        def graph_topk(ga: pa.Table) -> pa.Table:
+        def graph_topk(batches):
             qids_l, Q_l = bc.value
-            g = _parse_graph(ga)
-            qpos, vpos, d = _beam_topk(g, Q_l, k, ef, cosine)
-            return _arrow.topk_table(qids_l, qpos, g.ids, vpos, d)
+            for _, ga in _graph_tables(batches):
+                g = _parse_graph(ga)
+                qpos, vpos, d = _beam_topk(g, Q_l, k, ef, cosine)
+                yield from _arrow.topk_table(qids_l, qpos, g.ids, vpos, d).to_batches()
 
-        # a fixed G-way hash exchange: adaptive execution would coalesce
-        # the small graph shuffle into fewer tasks and run their beam
-        # searches one after another (1,000 queries over 4 graphs: 5.6 s
-        # against the cogroup plan's 4.6 s)
-        t = (
-            graph.repartition(int(self.num_graphs), "graph_id")
-            .groupBy("graph_id")
-            .applyInArrow(graph_topk, out_schema)
-            .toArrow()
+        placed = (
+            graph if graph is self._graph
+            else graph.repartitionById(int(self.num_graphs), "graph_id")
         )
+        t = placed.mapInArrow(graph_topk, out_schema).toArrow()
         q = _query_positions(t.column("query_id"), qids_a)
         keys = _arrow.sort_keys(t.column("id"))
         # per (query, id) the smallest distance comes first

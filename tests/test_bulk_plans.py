@@ -109,7 +109,9 @@ def test_cogroup_fallback_matches_bounded(monkeypatch, searches, queries, tier, 
 
 
 def _stage_counts(spark, group, fn):
-    """The stage count of every job ``fn`` runs, in its own job group."""
+    """The count of stages that ran tasks in every job ``fn`` runs, in its
+    own job group.  A stage skipped because its shuffle output already
+    exists (the exchange inside a cached table's plan) runs none."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
@@ -117,7 +119,10 @@ def _stage_counts(spark, group, fn):
     finally:
         sc.setJobGroup("", "")
     st = sc.statusTracker()
-    return [len(st.getJobInfo(j).stageIds) for j in st.getJobIdsForGroup(group)]
+    return [
+        sum(st.getStageInfo(s).numCompletedTasks > 0 for s in st.getJobInfo(j).stageIds)
+        for j in st.getJobIdsForGroup(group)
+    ]
 
 
 @pytest.mark.parametrize("tier", TIERS)
@@ -127,8 +132,8 @@ def test_bounded_search_is_one_python_pass(spark, monkeypatch, searches, queries
     pull and the pass, after a one-row read of the query dimension where
     the index does not hold it (exact, HNSW); the merge on the driver
     runs none.  A re-rank adds the JVM-only pull of its candidates'
-    vectors.  HNSW's pass shuffles the graph rows once into their
-    groups."""
+    vectors.  HNSW's pass runs map-only over the graph table its build
+    returned, whose partition g is graph g."""
     search = searches[tier]
     search(queries)  # warm: scan_partitions' memo
     plans = []
@@ -142,12 +147,15 @@ def test_bounded_search_is_one_python_pass(spark, monkeypatch, searches, queries
     stages = _stage_counts(spark, f"bounded_{tier}", lambda: search(queries).collect())
     python = [p for p in plans if "InArrow" in p]
     assert len(python) == 1
+    plan = python[0]
     if tier == "hnsw":
-        assert "FlatMapGroupsInArrow" in python[0]
-    else:
-        assert "MapInArrow" in python[0] and "Exchange" not in python[0]
-        if not tier.endswith("_rerank"):
-            assert stages == ([1, 1, 1] if tier == "exact" else [1, 1])
+        # the cached graph prints its build plan, placing exchange and
+        # all, below its scan; the search's own plan is above it
+        plan = plan.split("InMemoryRelation")[0]
+        assert "InMemoryTableScan" in plan
+    assert "MapInArrow" in plan and "Exchange" not in plan
+    if not tier.endswith("_rerank"):
+        assert stages == ([1, 1, 1] if tier in ("exact", "hnsw") else [1, 1])
 
 
 @pytest.mark.parametrize("tier", ["pq_rerank", "binary_rerank"])
@@ -233,4 +241,32 @@ def test_unknown_graph_count_takes_the_cogroup_plan(spark, vectors, queries, sea
     unpinned = HNSWIndex(M=64, M0=64, ef_construction=64)
     res = unpinned.search_bulk(graph.select("*"), queries, K, ef=64)
     assert "FlatMapCoGroupsInArrow" in _executed(res)
+    assert _rows(res) == _rows(searches["hnsw"](queries))
+
+
+def test_other_graph_tables_take_one_placing_exchange(spark, monkeypatch, tmp_path, vectors,
+                                                      queries, searches):
+    """A graph read back from parquet is not the table the index built,
+    so the bounded search places it with one direct-partition exchange
+    and returns the rows of the search over the built graph."""
+    from fabstir_vectordb_spark.operators.hnsw import read_graph, write_graph
+
+    idx = HNSWIndex(M=64, M0=64, ef_construction=64, num_graphs=3)
+    built = idx.build(vectors).cache()
+    write_graph(built, str(tmp_path / "graph"))
+    loaded = read_graph(spark, str(tmp_path / "graph"))
+    cols = ["graph_id", "id", "level", "neighbors", "vector", "deleted"]
+    assert sorted(loaded.select(cols).collect()) == sorted(built.select(cols).collect())
+    plans = []
+    to_arrow = type(queries).toArrow
+
+    def recorded(df):
+        plans.append(_executed(df))
+        return to_arrow(df)
+
+    monkeypatch.setattr(type(queries), "toArrow", recorded)
+    res = idx.search_bulk(loaded, queries, K, ef=64)
+    (python,) = [p for p in plans if "InArrow" in p]
+    assert "MapInArrow" in python
+    assert python.count("Exchange") == python.count("direct_shuffle_partition_id") == 1
     assert _rows(res) == _rows(searches["hnsw"](queries))

@@ -99,6 +99,20 @@ def test_build_is_deterministic(vectors):
         assert ra["neighbors"] == rb["neighbors"]
 
 
+@pytest.mark.parametrize("G", [4, 32])
+def test_build_places_graph_g_in_partition_g(vectors, G):
+    """Every row of graph g sits in partition g, so each build task grows
+    one graph (a hash exchange of the ids put graphs 0, 1 and 3 of 4 in
+    one task)."""
+    idx = HNSWIndex(M=4, M0=8, ef_construction=8, num_graphs=G,
+                    id_col="id", vector_col="vector")
+    graph = idx.build(vectors)
+    assert graph.rdd.getNumPartitions() == G
+    placed = graph.groupBy("graph_id", F.spark_partition_id().alias("p")).count().collect()
+    assert sum(r["count"] for r in placed) == 400
+    assert len(placed) == G and all(r["graph_id"] == r["p"] for r in placed)
+
+
 def test_soft_deleted_filtered_but_traversed(vectors, queries):
     # mark the exact top-1 of each query deleted: it must vanish from
     # results while the rest of the graph stays reachable through it

@@ -794,6 +794,13 @@ def test_vector_kernels_cross_the_arrow_boundary(spark, embeddings, monkeypatch)
         "adc_knn", "hamming_knn", "binary_encode",
     ):
         assert "MapInArrow" in plans[name] and "Exchange" not in plans[name], name
+    # HNSW grows graph g in partition g: one direct-partition-id exchange
+    # under the mapInArrow pass, no grouping by graph id
+    for name in ("hnsw_build", "hnsw_compact_graph"):
+        plan = plans[name]
+        assert "FlatMapGroupsInArrow" not in plan, name
+        under = plan[plan.index("MapInArrow"):]
+        assert "Exchange shufflepartitionidpassthrough(direct_shuffle_partition_id(graph_id" in under, name
     for name, plan in plans.items():
         assert "InArrow" in plan, name
         assert "MapInPandas" not in plan, name
