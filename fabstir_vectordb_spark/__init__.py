@@ -19,10 +19,11 @@ Design notes (vs the Rust reference, Fabstir/fabstir-vectordb):
   applyInArrow), two plans split by the size of the query set: a
   bounded one is collected and broadcast into one map-only partial
   top-k pass whose partial rows merge on the driver (operators/knn.py
-  `partial_knn`; a small session point search pulls its candidate rows
-  to the driver and runs the same per-batch body there, `driver_knn`),
-  a larger one stays a DataFrame and cogroups with vector blocks.  Column-expression distances (functions/distance.py)
-  serve SQL and per-pair scoring.
+  `partial_knn`; a small session holds its live rows on the driver and
+  runs the same per-batch body there, with no Spark job once they are
+  held), a larger one stays a DataFrame and cogroups with vector blocks.
+  Column-expression distances (functions/distance.py) serve SQL and
+  per-pair scoring.
 """
 
 import sys

@@ -125,8 +125,15 @@ class IVFIndex:
             if engine == "sample"
             else None
         )
-        # a sample short of train_size holds every row: its size is the count
-        n = len(X) if X is not None and len(X) < train_size else vectors.count()
+        # a sample short of train_size holds every row: its size is the
+        # count; a full one (n >= train_size) at least as large as both
+        # thresholds below decides them as the count would
+        n = (
+            len(X)
+            if X is not None
+            and (len(X) < train_size or len(X) >= max(MIN_TRAINING_SIZE, n_clusters))
+            else vectors.count()
+        )
         if n < MIN_TRAINING_SIZE:
             return cls(centroids=None, id_col=id_col, vector_col=vector_col)
         n_clusters = min(n_clusters, n)  # k-means needs >= k points (ivf/core.rs:252)

@@ -25,10 +25,11 @@ rows are collected as Arrow and merged on the driver
 (``_merged_on_driver``, ``topk.first_k_per_query``) into a local
 relation: no exchange anywhere.  With ``probes`` the pass
 reads only the probed IVF clusters and ranks each query against its own.
-The session's point searches on a small table run ``driver_knn``
-instead: one JVM-only ``toArrow()`` of the same candidate rows, bounded
-by the session's byte cap, ranked on the driver by the same
-``_topk_batch`` — no Python task.
+The session's point searches on a small table run the same
+``_topk_batch`` on the driver instead, over the live rows the session
+holds there (``session._HeldRows``, filled by one JVM-only ``toArrow()``
+per table version and bounded by the session's byte cap): no Python
+task, and no Spark job once the rows are held.
 
 Larger query sets (``knn_bulk`` and ``IVFIndex.search_bulk`` above the
 caps): ``cogroup_block_knn`` cogroups vector blocks with the query rows,
@@ -259,54 +260,13 @@ def partial_knn(
             k,
         )
 
-    return _topk_input(vectors, id_col, vector_col, probes, carry).mapInArrow(
-        partial_topk, out_schema
-    )
-
-
-def driver_knn(
-    vectors: DataFrame,
-    qids: list,
-    Q: np.ndarray,
-    qid_type: T.DataType,
-    k: int,
-    metric: str = "l2",
-    id_col: str = "id",
-    vector_col: str = "vector",
-    probes: dict[int, np.ndarray] | None = None,
-    carry: tuple[str, ...] | list[str] = (),
-) -> pa.Table:
-    """``partial_knn`` ranked on the driver: ONE JVM-only ``toArrow()``
-    pull of the rows ``partial_knn`` would stream (only the probed
-    clusters when ``probes`` is given), ranked by the same per-batch body
-    as one batch.  No Python task runs, so a small candidate set skips
-    the fixed cost of a Python job; the caller bounds the pull, since
-    every candidate row crosses to the driver.
-
-    Output: the Arrow table of ``partial_knn(...).toArrow()`` —
-    (query_id, id, distance, *carry) — already the exact top-k per
-    query."""
-    check_metric(metric)
-    rows = _topk_input(vectors, id_col, vector_col, probes, carry).toArrow()
-    qids_a = pa.array(qids, to_arrow_type(qid_type))
-    return _topk_batch(rows, qids_a, Q, k, metric, id_col, vector_col, probes, carry)
-
-
-def _topk_input(
-    vectors: DataFrame,
-    id_col: str,
-    vector_col: str,
-    probes: dict[int, np.ndarray] | None,
-    carry: tuple[str, ...] | list[str],
-) -> DataFrame:
-    """The columns ``_topk_batch`` reads; with ``probes``, only the probed
-    clusters' rows (on a partitionBy(cluster_id) layout the IN list
-    prunes whole directories at the scan)."""
     cols = list(dict.fromkeys([id_col, vector_col, *carry]))
     if probes is not None:
+        # on a partitionBy(cluster_id) layout the IN list prunes whole
+        # directories at the scan
         vectors = vectors.filter(F.col("cluster_id").isin(sorted(probes)))
         cols.append("cluster_id")
-    return vectors.select(*cols)
+    return vectors.select(*cols).mapInArrow(partial_topk, out_schema)
 
 
 def _topk_batch(
@@ -321,7 +281,8 @@ def _topk_batch(
     carry: tuple[str, ...] | list[str],
 ) -> pa.Table:
     """The one per-batch ranking body, run by ``partial_knn``'s executors
-    and by ``driver_knn`` on the driver: the top-k per query of the batch
+    and on the driver by the session's point search over its held rows
+    (``session.VectorDbSession._held_rows``): the top-k per query of the batch
     ``b`` as (query_id, id, distance, *carry) rows.  With ``probes`` the
     batch's rows are grouped by their ``cluster_id`` and each group ranks
     only the queries that probed it (``_probed_topk_rows``, the grouping

@@ -36,34 +36,40 @@ committed through one step that drops the query cache, keeps the live
 count and logs the events; `vacuum` is the compaction.
 
 One candidate choice, two plans split by where the queries live.  Every
-search ranks the rows ``_candidates`` picks: the clustered table, probed,
-when an index is trained and no filter is given, else the filtered live
-rows, exactly.  search and search_batch hold their queries on the driver
-and run ONE Spark job per call, with no exchange.  When the live table
-is small (``_ranks_on_driver``, a byte cap on the kept live count) that
-job is a JVM-only Arrow collect of the candidate rows — only the probed
-clusters — ranked on the driver (``driver_knn``): this bounded collect
-is where a small search skips the ~200 ms fixed cost of a Python job.
-A larger table broadcasts the queries into one map-only Arrow pass
-(``partial_knn``) that emits <= k rows per (query, batch).  Both carry
-each row's metadata along, run the same per-batch kernel, and the
-driver keeps the first k.  search_dataframe's queries arrive as a
-DataFrame, so it returns ``_ranked``: IVFIndex.search_bulk or knn_bulk
-over the same rows, which collect a bounded query set once and merge on
-the driver, and cogroup a larger one.  Both plans return the same rows.
+search ranks the rows ``_candidates`` picks: one predicate on the live
+rows (recency and filter, or none) and an IVF probe width, which probes
+the clustered table when an index is trained and no filter is given,
+else ranks the filtered live rows exactly.  search and search_batch hold
+their queries on the driver.  When the live table is small
+(``_ranks_on_driver``, a byte cap on the kept live count) the session
+holds its live rows on the driver too (``_HeldRows``): one JVM-only Arrow
+collect fills them the first time a table version is searched, and every
+later point search on that version ranks them there and runs no Spark
+job — an unfiltered one makes no py4j call, a filtered one selects its
+rows through a local relation the optimizer folds.  A larger table
+broadcasts the queries into one map-only Arrow pass (``partial_knn``)
+that emits <= k rows per (query, batch).  Both run the same per-batch
+kernel with each row's metadata carried along, and the driver keeps the
+first k.  search_dataframe's queries arrive as a DataFrame, so it
+returns ``_ranked``: IVFIndex.search_bulk or knn_bulk over the same
+rows, which collect a bounded query set once and merge on the driver,
+and cogroup a larger one.  All plans return the same rows.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import json
+import operator
 import os
 import uuid
+from functools import reduce
 from typing import Any
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Row, SparkSession
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.conversion import ArrowTableToRowsConversion
@@ -76,7 +82,7 @@ from fabstir_vectordb_spark.operators.cache import QueryResultCache
 from fabstir_vectordb_spark.operators.ivf import IVFIndex
 from fabstir_vectordb_spark.operators.knn import (
     _first_k_rows,
-    driver_knn,
+    _topk_batch,
     knn_bulk,
     partial_knn,
 )
@@ -84,11 +90,14 @@ from fabstir_vectordb_spark.plans.tuning import plan_search
 
 RECENCY_DAYS = 7  # src/hybrid/core.rs:77
 FORMAT_VERSION = 3  # mirrors MANIFEST_VERSION (src/core/chunk.rs:30)
-# the live-table bytes up to which a point search ranks on the driver
-# (``VectorDbSession._ranks_on_driver``): below the measured crossover of
-# the two paths, about 38k live rows of 384 dims (58 MB) on a 4-core box
-# (plans/driver_rank/crossover.log)
-_DRIVER_RANK_MAX_BYTES = 48 << 20
+# the live-table bytes up to which a session holds its live rows on the
+# driver and ranks point searches there (``VectorDbSession.
+# _ranks_on_driver``): about 21k live rows of 384 dims.  In the held
+# path's worst case, a write before every search so that each search
+# pulls the whole table again, it won at 20k rows and lost the unfiltered
+# search by 65-110 ms at 25k and 30k on a 4-core box; with no write
+# between searches it won at every size (plans/held_rows/crossover.log)
+_DRIVER_RANK_MAX_BYTES = 32 << 20
 
 
 class VectorDbError(ValueError):
@@ -151,6 +160,48 @@ def _mmr_select(results: list[dict], k: int, lam: float) -> list[dict]:
     return [dict(cand[i]) for i in selected]
 
 
+class _HeldRows:
+    """The live rows of one version of a session's table, held on the
+    driver as one Arrow table (id, vector, metadata, ts, and cluster_id
+    once an index is trained): the memo a driver-ranked point search
+    reads.
+
+    The memo is keyed by the identity of ``df``, the table the rows were
+    read from.  Every mutation, vacuum, train_index, the lineage
+    checkpoint and load make a new session table, so the rows of a
+    replaced table are never served and no invalidation call is needed.
+    A DataFrame is immutable, so the rows are ``df``'s rows as first read:
+    if the files under a loaded session are rewritten, they are as stale
+    as Spark's cache of them would be."""
+
+    def __init__(self, df: DataFrame, rows: pa.Table):
+        self.df = df
+        self.rows = rows
+        self._relation: DataFrame | None = None
+
+    def positions(self, pred: Column) -> np.ndarray:
+        """The positions in ``rows`` of the rows ``pred`` keeps.
+        Spark evaluates it over a local relation of the held (__pos, ts,
+        metadata), built at most once; the optimizer folds the filter into
+        that relation, so the collect runs no job."""
+        if self._relation is None:
+            t = self.rows
+            self._relation = self.df.sparkSession.createDataFrame(
+                pa.table({
+                    "__pos": pa.array(np.arange(t.num_rows, dtype=np.int32)),
+                    "ts": t.column("ts"),
+                    "metadata": t.column("metadata"),
+                }),
+                T.StructType([
+                    T.StructField("__pos", T.IntegerType(), False),
+                    self.df.schema["ts"],
+                    self.df.schema["metadata"],
+                ]),
+            )
+        kept = self._relation.filter(pred).select("__pos").collect()
+        return np.fromiter((r[0] for r in kept), np.int64, len(kept))
+
+
 class VectorDbSession:
     def __init__(self, spark: SparkSession, session_id: str | None = None):
         self.spark = spark
@@ -166,6 +217,9 @@ class VectorDbSession:
         # the one table this session cached (train_index's clustered
         # table); unpersisted when a re-train or vacuum replaces it
         self._cached: DataFrame | None = None
+        # the live rows a driver-ranked point search reads, held while
+        # ``_ranks_on_driver`` holds (``_held_rows``)
+        self._held: _HeldRows | None = None
         # query-result cache (search_integration.rs:554-624); invalidated
         # by every mutation
         self._cache = QueryResultCache(max_size=100)
@@ -524,23 +578,26 @@ class VectorDbSession:
         n_probe: int | None,
         search_recent: bool,
         search_historical: bool,
-    ) -> tuple[DataFrame, int | None]:
-        """The rows a search ranks, and the IVF probe width (None: rank
-        them exactly) — the one candidate choice of every search surface.
+    ) -> tuple[Column | None, int | None]:
+        """The predicate on the live rows a search ranks (None: all of
+        them), and the IVF probe width (None: rank them exactly) — the one
+        candidate choice of every search surface.
 
         The recency flags become one ``ts`` predicate against a 7-day
         cutoff.  A trained index with no metadata filter probes the
         clustered table, with the probe width from ``plan_search`` unless
         ``n_probe`` is given; anything else ranks the live rows exactly,
         pre-filtered BEFORE ranking (exact, superseding the reference's
-        k*3 oversampling, hybrid/core.rs:513-549)."""
-        cutoff = F.lit(_utcnow() - _dt.timedelta(days=RECENCY_DAYS))
-        recency = F.lit(True)
-        if not search_recent:
-            recency &= F.col("ts") < cutoff
-        if not search_historical:
-            recency &= F.col("ts") >= cutoff
-        rows = self._live().filter(recency)
+        k*3 oversampling, hybrid/core.rs:513-549).  No Column is built
+        when nothing restricts the rows, so the default search makes no
+        py4j call here."""
+        preds = []
+        if not (search_recent and search_historical):
+            cutoff = F.lit(_utcnow() - _dt.timedelta(days=RECENCY_DAYS))
+            if not search_recent:
+                preds.append(F.col("ts") < cutoff)
+            if not search_historical:
+                preds.append(F.col("ts") >= cutoff)
         if self._clustered and filter is None:
             if n_probe is None:
                 # planner heuristic (search_integration.rs:375-449): probe
@@ -550,12 +607,17 @@ class VectorDbSession:
                     self._live_count, k, self._index.n_clusters,
                     brute_force_threshold=0,
                 ).n_probe or self._index.n_clusters
-            return rows, n_probe
-        if filter is not None:
-            rows = rows.filter(
-                compile_filter(filter, rows.schema, metadata_col="metadata")
-            )
-        return rows, None
+        else:
+            n_probe = None
+            if filter is not None:
+                preds.append(
+                    compile_filter(filter, self._df.schema, metadata_col="metadata")
+                )
+        return (reduce(operator.and_, preds) if preds else None), n_probe
+
+    def _rows(self, pred: Column | None) -> DataFrame:
+        """The live rows ``pred`` keeps, as a DataFrame."""
+        return self._live() if pred is None else self._live().filter(pred)
 
     def _ranked(
         self,
@@ -570,12 +632,13 @@ class VectorDbSession:
     ) -> DataFrame:
         """The search plan over a DataFrame of queries: (query_id, id,
         distance, score), <= k rows per query — ``IVFIndex.search_bulk``
-        or ``knn_bulk`` over ``_candidates`` (a bounded query set is
-        collected once by their ``knn._driver_queries`` check).
+        or ``knn_bulk`` over the ``_candidates`` rows (a bounded query set
+        is collected once by their ``knn._driver_queries`` check).
         ``threshold`` keeps score >= threshold."""
-        rows, n_probe = self._candidates(
+        pred, n_probe = self._candidates(
             k, filter, n_probe, search_recent, search_historical
         )
+        rows = self._rows(pred)
         if n_probe is None:
             res = knn_bulk(rows, queries, k, metric="l2", id_col="id", vector_col="vector")
         else:
@@ -584,16 +647,38 @@ class VectorDbSession:
         return res if threshold is None else res.filter(F.col("score") >= threshold)
 
     def _ranks_on_driver(self) -> bool:
-        """Whether a point search pulls its candidate rows to the driver and
-        ranks them there (``driver_knn``) instead of in ``partial_knn``'s
-        Python job.  Decided with no job, from what the session keeps: the
-        live rows' float32 vectors plus a per-row allowance for the id,
-        metadata and cluster must fit ``_DRIVER_RANK_MAX_BYTES``.  An
-        uncounted table (a bulk load before train_index) keeps
-        ``partial_knn``."""
+        """Whether a point search ranks on the driver, over the live rows
+        the session holds there (``_held_rows``), instead of in
+        ``partial_knn``'s Python job.  Decided with no job, from what the
+        session keeps: the live rows' float32 vectors plus a per-row
+        allowance for the id, metadata, ts and cluster must fit
+        ``_DRIVER_RANK_MAX_BYTES``.  An uncounted table (a bulk load
+        before train_index) keeps ``partial_knn``."""
         if self._live_count is None or self._dim is None:
             return False
         return self._live_count * (self._dim * 4 + 64) <= _DRIVER_RANK_MAX_BYTES
+
+    def _held_rows(
+        self, pred: Column | None, probes: dict[int, np.ndarray] | None
+    ) -> pa.Table:
+        """The held live rows that ``pred`` keeps, only the probed clusters'
+        when ``probes`` is given.  The first call on a table version fills
+        the memo with one JVM-only ``toArrow()`` of the live rows
+        (``_HeldRows``); later calls run no Spark job.  ``pred`` is
+        evaluated by Spark over the held rows (``_HeldRows.positions``),
+        so the filter and recency semantics are those of ``_ranked``."""
+        if self._held is None or self._held.df is not self._df:
+            cols = ["id", "vector", "metadata", "ts"]
+            if self._clustered:
+                cols.append("cluster_id")
+            self._held = _HeldRows(self._df, self._live().select(*cols).toArrow())
+        rows = self._held.rows
+        if pred is not None:
+            rows = rows.take(self._held.positions(pred))
+        if probes is not None:
+            cid = rows.column("cluster_id")
+            rows = rows.filter(pc.is_in(cid, pa.array(sorted(probes), cid.type)))
+        return rows
 
     def _search_points(
         self,
@@ -607,53 +692,60 @@ class VectorDbSession:
         search_historical: bool = True,
         include_vectors: bool = False,
     ) -> dict[str, list[dict]]:
-        """The search of driver-held queries: ONE Spark job.
+        """The search of driver-held queries: at most ONE Spark job.
 
         The ``_candidates`` rows (on the IVF path only the probed
         clusters, the probes ranked here by ``IVFIndex.probes_by_cluster``)
         are ranked with the metadata (and vector) taken from the ranked
         rows themselves, in one of two places:
 
-        - a small live table (``_ranks_on_driver``) is pulled to the
-          driver by one JVM-only Arrow collect and ranked there by
-          ``driver_knn``: no Python task, whose fixed cost is most of a
-          small search;
+        - a small live table (``_ranks_on_driver``) is ranked on the
+          driver over the live rows the session holds (``_held_rows``):
+          the first search of a table version pulls them with one JVM-only
+          Arrow collect, and later ones run no Spark job;
         - a larger one stays on the executors: the queries are broadcast
           into ``partial_knn``, one map-only Arrow pass that emits <= k
           rows per (query, batch), collected as Arrow.
 
-        Both run the same per-batch kernel, and one vectorized merge on
-        the driver (``topk.first_k_per_query``) keeps the first k of each
-        query by (round(distance, 6), id) — rounded as Spark's ``round``,
-        the key of ``topk_per_query`` — then applies ``threshold``.  Rows equal those of ``_ranked`` over the
-        same queries."""
+        Both run the same per-batch kernel (``knn._topk_batch``), and one
+        vectorized merge on the driver (``topk.first_k_per_query``) keeps
+        the first k of each query by (round(distance, 6), id) — rounded as
+        Spark's ``round``, the key of ``topk_per_query`` — then applies
+        ``threshold``.  Rows equal those of ``_ranked`` over the same
+        queries."""
         for _, vec in queries:
             if self._dim is not None and len(vec) != self._dim:
                 raise VectorDbError(
                     f"query dimension {len(vec)} != index dimension {self._dim}"
                 )
         qids = [qid for qid, _ in queries]
+        qids_a = pa.array(qids, pa.string())
         # through float32, as an array<float> query column would hold them
         Q = np.asarray(
             [[float(x) for x in vec] for _, vec in queries], dtype=np.float32
         ).astype(np.float64)
-        rows, n_probe = self._candidates(
+        pred, n_probe = self._candidates(
             k, filter, n_probe, search_recent, search_historical
         )
         probes = (
             None if n_probe is None else self._index.probes_by_cluster(Q, n_probe)
         )
         carry = ["metadata"] + (["vector"] if include_vectors else [])
-        args = (rows, qids, Q, T.StringType(), k)
         if self._ranks_on_driver():
-            ranked = driver_knn(*args, probes=probes, carry=carry)
+            ranked = _topk_batch(
+                self._held_rows(pred, probes), qids_a, Q, k, "l2", "id", "vector",
+                probes, carry,
+            )
         else:
-            ranked = partial_knn(*args, probes=probes, carry=carry).toArrow()
-        kept = _first_k_rows(ranked, pa.array(qids, pa.string()), k)
+            self._held = None
+            ranked = partial_knn(
+                self._rows(pred), qids, Q, T.StringType(), k, probes=probes, carry=carry
+            ).toArrow()
+        kept = _first_k_rows(ranked, qids_a, k)
         # the carried columns of the kept rows as Spark Rows, exactly what
         # a collect of them returns
         carried = ArrowTableToRowsConversion.convert(
-            kept.select(carry), T.StructType([rows.schema[c] for c in carry])
+            kept.select(carry), T.StructType([self._df.schema[c] for c in carry])
         )
         out: dict[str, list[dict]] = {qid: [] for qid in qids}
         for qid, i, d, extra in zip(
@@ -681,8 +773,8 @@ class VectorDbSession:
         n_probe: int | None = None,
         diversify: float | None = None,
     ) -> list[dict]:
-        """Point search: the one-query case of ``_search_points`` (one
-        Spark job), memoized in the query-result cache until the next
+        """Point search: the one-query case of ``_search_points`` (at most
+        one Spark job), memoized in the query-result cache until the next
         mutation.
 
         ``diversify=lam`` (0..1] re-ranks with MMR (operators/
@@ -733,8 +825,8 @@ class VectorDbSession:
         filter: dict | None = None,
     ) -> dict[str, list[dict]]:
         """Bulk multi-query search: ``_search_points`` run ONCE for the
-        whole query batch — one Spark job, not a per-query round trip (the
-        reference has no batch search; its clients loop over
+        whole query batch — at most one Spark job, not a per-query round
+        trip (the reference has no batch search; its clients loop over
         session.search).
 
         `queries`: [{"id": qid, "vector": [...]}, ...]
@@ -1106,6 +1198,8 @@ class VectorDbSession:
     def train_index(self, n_clusters: int = 16, **fit_kw) -> None:
         if self._df is None:
             raise VectorDbError("nothing to train on")
+        # a new index probes other clusters: no answer of the old one stands
+        self._cache.invalidate()
         self._index = IVFIndex.fit(self._live(), n_clusters=n_clusters, **fit_kw)
         base = self._df.drop("cluster_id")
         if not self._clustered:

@@ -5,7 +5,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from fabstir_vectordb_spark.operators.ivf import IVFIndex, read_clustered, write_clustered
+from fabstir_vectordb_spark.operators.ivf import (
+    DEFAULT_MAX_ITER,
+    IVFIndex,
+    read_clustered,
+    write_clustered,
+)
 from fabstir_vectordb_spark.operators.knn import brute_force_knn, knn_bulk
 
 K = 10
@@ -71,6 +76,40 @@ def test_small_data_bypass(spark):
     q = spark.createDataFrame([(0, [1.2, 0.0])], "query_id int, vector array<float>")
     res = idx.search(idx.assign(tiny), q, 2)
     assert [r["id"] for r in res.collect()] == [1, 2]
+
+
+def _counted(monkeypatch, cls):
+    calls = []
+    count = cls.count
+
+    def counted(df):
+        calls.append(1)
+        return count(df)
+
+    monkeypatch.setattr(cls, "count", counted)
+    return calls
+
+
+def test_fit_counts_only_when_the_sample_cannot_decide(spark, monkeypatch):
+    from fabstir_vectordb_spark.operators._kmeans import kmeans_fit
+
+    rng = np.random.default_rng(5)
+    rows = [(i, rng.normal(size=4).tolist()) for i in range(300)]
+    df = spark.createDataFrame(rows, "id int, vector array<float>")
+    sample = np.asarray(
+        [r[1] for r in sorted(rows)[:128]], dtype=np.float32
+    ).astype(np.float64)
+    calls = _counted(monkeypatch, type(df))
+    # a full sample of 128 rows fixes n >= 128: no count, and the centroids
+    # of a fit that counted (min(8, 300) = 8 clusters over the same sample)
+    idx = IVFIndex.fit(df, n_clusters=8, train_size=128, seed=3)
+    assert calls == []
+    want = kmeans_fit(sample, 8, iters=DEFAULT_MAX_ITER, rng=np.random.RandomState(3))
+    assert np.array_equal(idx.centroids, want)
+    # a full sample below MIN_TRAINING_SIZE cannot tell: the count decides
+    idx = IVFIndex.fit(df, n_clusters=4, train_size=5, seed=3)
+    assert calls == [1]
+    assert idx.is_trained and idx.n_clusters == 4
 
 
 def test_cluster_stats(index, assigned, embeddings):

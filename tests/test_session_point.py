@@ -2,8 +2,9 @@
 over driver-held queries, and return exactly the rows of the DataFrame
 plan (``_ranked``, behind search_dataframe) over the same queries: same
 ids, same order, distances equal with ``==``.  Both places a point search
-ranks are pinned: on the driver after one JVM-only Arrow collect (a small
-live table) and in ``partial_knn``'s map-only pass (the cap set to 0).
+ranks are pinned: on the driver over the live rows the session holds there
+(a small live table; one JVM-only Arrow collect fills them per table
+version) and in ``partial_knn``'s map-only pass (the cap set to 0).
 """
 
 import datetime as dt
@@ -73,26 +74,30 @@ def trained(spark):
 @pytest.fixture
 def path(request, monkeypatch):
     """The place a test's point searches must rank, checked when it ends:
-    the driver for a small live table, or ``partial_knn`` for the
-    ``*_in_partial_knn`` copies of a test, which set the cap to 0 bytes.
-    The fixture sessions' query caches are dropped, so no answer of the
-    other path is served."""
+    on the driver over the held rows (``held``) for a small live table, or
+    ``partial_knn`` for the ``*_in_partial_knn`` copies of a test, which
+    set the cap to 0 bytes.  The fixture sessions' query caches and held
+    rows are dropped, so no answer of the other path is served and each
+    test's first driver-ranked search fills the held rows."""
     want = (
         "partial_knn"
         if request.node.originalname.endswith("_in_partial_knn")
-        else "driver_knn"
+        else "held"
     )
     if want == "partial_knn":
         monkeypatch.setattr(session_mod, "_DRIVER_RANK_MAX_BYTES", 0)
-    calls = {"driver_knn": 0, "partial_knn": 0}
-    for name in calls:
-        def counted(*a, _name=name, _fn=getattr(session_mod, name), **kw):
+    calls = {"held": 0, "partial_knn": 0}
+    # the driver runs the per-batch kernel itself only over held rows
+    for name, fn in (("held", "_topk_batch"), ("partial_knn", "partial_knn")):
+        def counted(*a, _name=name, _fn=getattr(session_mod, fn), **kw):
             calls[_name] += 1
             return _fn(*a, **kw)
 
-        monkeypatch.setattr(session_mod, name, counted)
+        monkeypatch.setattr(session_mod, fn, counted)
     for name in ("exact", "trained"):
-        request.getfixturevalue(name)._cache.invalidate()
+        s = request.getfixturevalue(name)
+        s._cache.invalidate()
+        s._held = None
     yield want
     other = next(n for n in calls if n != want)
     assert calls[want] > 0 and calls[other] == 0, calls
@@ -249,12 +254,16 @@ def test_point_search_is_one_job(spark, path, trained, exact, monkeypatch):
     # the table is clustered from train_index on: no search assigns
     assert "cluster_id" in trained._df.columns
     monkeypatch.setattr(IVFIndex, "assign", _no_assign)
+    # partial_knn runs one job a search; on the driver the first search of
+    # a table version pulls the held rows in one job, and later ones run none
+    later = 1 if path == "partial_knn" else 0
     assert _jobs_for(spark, f"pt_ivf_{path}", lambda: trained.search([3.3, 0.1, 1.0, 0.0], k=K)) == 1
     assert _jobs_for(
         spark, f"pt_filtered_{path}",
         lambda: trained.search([3.3, 0.1, 1.0, 0.0], k=K, filter={"lang": "en"}),
-    ) == 1
+    ) == later
     assert _jobs_for(spark, f"pt_exact_{path}", lambda: exact.search([4.4, 0.1, 1.0, 0.0], k=K)) == 1
+    assert _jobs_for(spark, f"pt_exact2_{path}", lambda: exact.search([5.4, 0.1, 1.0, 0.0], k=K)) == later
     # a repeat is a cache hit
     assert _jobs_for(spark, f"pt_hit_{path}", lambda: trained.search([3.3, 0.1, 1.0, 0.0], k=K)) == 0
 
@@ -275,20 +284,32 @@ def _operators(df):
 
 
 def test_python_pass_in_collected_plan(path, trained, monkeypatch):
-    plans = []
-    to_arrow = type(trained._df).toArrow
+    pulled, collected = [], []
+    cls = type(trained._df)
+    to_arrow, collect = cls.toArrow, cls.collect
 
     def recorded(df):
-        plans.append(_operators(df))
+        pulled.append(_operators(df))
         return to_arrow(df)
 
-    monkeypatch.setattr(type(trained._df), "toArrow", recorded)
+    def recorded_collect(df):
+        collected.append(_operators(df))
+        return collect(df)
+
+    monkeypatch.setattr(cls, "toArrow", recorded)
+    monkeypatch.setattr(cls, "collect", recorded_collect)
     trained.search([3.3, 0.1, 1.0, 0.0], k=K)
     trained.search([3.3, 0.1, 1.0, 0.0], k=K, filter={"lang": "en"})
-    assert len(plans) == 2
-    assert all("InMemoryTableScan" in p for p in plans)
-    python_pass = [any("MapInArrow" in n for n in p) for p in plans]
-    assert python_pass == [path == "partial_knn"] * 2
+    assert all("InMemoryTableScan" in p for p in pulled)
+    python_pass = [any("MapInArrow" in n for n in p) for p in pulled]
+    if path == "partial_knn":
+        assert python_pass == [True, True]
+        assert collected == []
+    else:
+        # one pull of the held rows; the filtered search selects among them
+        # through a local relation, which the collect reads with no job
+        assert python_pass == [False]
+        assert collected == [["LocalTableScan"]]
 
 
 test_python_pass_in_collected_plan_in_partial_knn = test_python_pass_in_collected_plan
@@ -307,11 +328,13 @@ def test_uncounted_bulk_load_falls_back_to_partial_knn(spark, exact, monkeypatch
     def no_driver_rank(*a, **kw):
         raise AssertionError("an uncounted table was ranked on the driver")
 
-    monkeypatch.setattr(session_mod, "driver_knn", no_driver_rank)
+    monkeypatch.setattr(session_mod, "_topk_batch", no_driver_rank)
     for qid, vec in QUERIES:
         got = bulk.search(vec, k=K)
         assert got == want[qid]
         assert got == _via_ranked(bulk, [(qid, vec)], K, threshold=0.0)[qid]
+    # an uncounted session never holds its rows
+    assert bulk._held is None
 
 
 def test_cached_answer_is_not_the_callers_list(exact):
@@ -335,10 +358,126 @@ def test_search_batch_is_one_job(spark, path, trained):
     assert len(nearest) == 3
     batch = [{"id": q, "vector": v} for q, v in qs]
     assert _jobs_for(spark, f"pt_batch_{path}", lambda: trained.search_batch(batch, k=K)) == 1
+    # once the rows are held, a batch on the driver runs no job
+    assert _jobs_for(spark, f"pt_batch2_{path}", lambda: trained.search_batch(batch, k=K)) == (
+        1 if path == "partial_knn" else 0
+    )
 
 
 test_point_search_is_one_job_in_partial_knn = test_point_search_is_one_job
 test_search_batch_is_one_job_in_partial_knn = test_search_batch_is_one_job
+
+
+def test_held_rows_serve_later_searches_with_no_job(spark):
+    """The held-rows memo: the first driver-ranked search of a table
+    version runs one job, the pull, and every later search of that version
+    runs none — unfiltered, filtered, recency-restricted or a batch."""
+    s = _session(spark, trained=True)
+    vec = QUERIES[0][1]
+    assert _jobs_for(spark, "held_fill", lambda: s.search(vec, k=K)) == 1
+    held = s._held
+    assert held.df is s._df
+    assert held.rows.num_rows == len(_items())
+    later = [
+        lambda: s.search(QUERIES[1][1], k=K),
+        lambda: s.search(vec, k=K, filter={"lang": "en"}),
+        lambda: s.search(vec, k=K, search_recent=False),
+        lambda: s.search(vec, k=K, search_historical=False, filter={"rank": {"$gte": 10}}),
+        lambda: s.search(vec, k=K, search_recent=False, n_probe=2),
+        lambda: s.search_batch([{"id": q, "vector": v} for q, v in QUERIES], k=K),
+    ]
+    for i, call in enumerate(later):
+        assert _jobs_for(spark, f"held_later_{i}", call) == 0, i
+    assert s._held is held
+
+
+def test_unfiltered_held_search_makes_no_py4j_call(spark, trained, monkeypatch):
+    """With no predicate, a search over held rows never calls into the JVM:
+    the probe filter and the ranking run on the held Arrow table."""
+    trained.search(QUERIES[0][1], k=K)
+    trained._cache.invalidate()
+    assert trained._held.df is trained._df
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    send = client.send_command
+
+    def recorded(*a, **kw):
+        sent.append(a)
+        return send(*a, **kw)
+
+    monkeypatch.setattr(client, "send_command", recorded)
+    trained.search(QUERIES[1][1], k=K)
+    trained.search_batch([{"id": q, "vector": v} for q, v in QUERIES], k=K)
+    unfiltered = len(sent)
+    trained.search(QUERIES[1][1], k=K, filter={"lang": "en"})
+    monkeypatch.undo()
+    assert unfiltered == 0
+    # the recorder sees the calls a predicate makes
+    assert len(sent) > 0
+
+
+def test_each_write_is_seen_by_the_next_held_search(spark):
+    """The memo needs no invalidation call: every write, vacuum and
+    train_index makes a new session table, so the next search pulls the
+    rows again, sees the write and equals the DataFrame plan."""
+    s = _session(spark, trained=True)
+    qid, vec = QUERIES[1]
+
+    def search():
+        got = s.search(vec, k=K)
+        assert s._held.df is s._df
+        assert got == _via_ranked(s, [(qid, vec)], K, threshold=0.0)[qid]
+        return got
+
+    before = search()
+    assert any(r["metadata"]["lang"] == "de" for r in before)
+    writes = [
+        ("add_vectors", lambda: s.add_vectors(
+            [{"id": "new", "vector": vec, "metadata": {"lang": "xx", "rank": -1}}]),
+         lambda got: got[0]["id"] == "new"),
+        ("batch_update_metadata", lambda: s.batch_update_metadata(
+            [("new", {"lang": "yy", "rank": -2})]),
+         lambda got: got[0] == dict(got[0], id="new", metadata={"lang": "yy", "rank": -2})),
+        ("batch_delete", lambda: s.batch_delete(["new"]),
+         lambda got: got == before),
+        ("delete_by_metadata", lambda: s.delete_by_metadata({"lang": "de"}),
+         lambda got: {r["metadata"]["lang"] for r in got} == {"en"}),
+        ("migrate_aged", lambda: s.migrate_aged(max_per_run=1000),
+         lambda got: "tier" in s._df.columns),
+        ("vacuum", s.vacuum,
+         lambda got: s._held.rows.num_rows == s.get_stats()["vectorCount"]),
+        ("train_index", lambda: s.train_index(n_clusters=3, seed=11),
+         lambda got: s._index.n_clusters == 3
+         and set(s._held.rows.column("cluster_id").to_pylist()) == {0, 1, 2}),
+    ]
+    for name, write, seen in writes:
+        held = s._held
+        write()
+        got = search()
+        assert s._held is not held, name
+        assert seen(got), name
+
+
+@pytest.mark.parametrize("which", ["exact", "trained"])
+def test_held_rows_rank_as_partial_knn(request, which, monkeypatch):
+    """Every search case and search_batch give the same rows over the held
+    rows as in ``partial_knn`` (the cap set to 0 bytes)."""
+    s = request.getfixturevalue(which)
+    batch = [{"id": q, "vector": v} for q, v in QUERIES]
+
+    def run():
+        s._cache.invalidate()
+        return (
+            [s.search(vec, k=K, **kw) for kw in CASES for _, vec in QUERIES],
+            [s.search_batch(batch, k=K, **kw) for kw in ({}, {"filter": {"lang": "de"}})],
+        )
+
+    s._held = None
+    held = run()
+    assert s._held is not None and s._held.df is s._df
+    monkeypatch.setattr(session_mod, "_DRIVER_RANK_MAX_BYTES", 0)
+    assert run() == held
+    assert s._held is None
 
 
 def test_loaded_session_reuses_saved_layout(tmp_path, spark, trained, monkeypatch):
