@@ -46,7 +46,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
@@ -93,6 +93,9 @@ class IVFIndex:
     id_col: str = "id"
     vector_col: str = "vector"
     training_error: float | None = None  # mean sq dist (ivf/core.rs:419-429)
+    # the row count of the table fit trained on, when fit saw it whole (a
+    # sample short of train_size) or counted it; None otherwise
+    row_count: int | None = field(default=None, compare=False)
 
     # ------------------------------------------------------------------ fit
 
@@ -128,14 +131,12 @@ class IVFIndex:
         # a sample short of train_size holds every row: its size is the
         # count; a full one (n >= train_size) at least as large as both
         # thresholds below decides them as the count would
-        n = (
-            len(X)
-            if X is not None
-            and (len(X) < train_size or len(X) >= max(MIN_TRAINING_SIZE, n_clusters))
-            else vectors.count()
-        )
+        whole = X is not None and len(X) < train_size
+        full = X is not None and not whole and len(X) >= max(MIN_TRAINING_SIZE, n_clusters)
+        n = len(X) if whole or full else vectors.count()
+        row_count = None if full else n  # a full sample only stands in for the count
         if n < MIN_TRAINING_SIZE:
-            return cls(centroids=None, id_col=id_col, vector_col=vector_col)
+            return cls(centroids=None, id_col=id_col, vector_col=vector_col, row_count=row_count)
         n_clusters = min(n_clusters, n)  # k-means needs >= k points (ivf/core.rs:252)
 
         if X is not None:
@@ -147,7 +148,7 @@ class IVFIndex:
             cents = kmeans_fit(
                 X, n_clusters, iters=max_iter, rng=np.random.RandomState(seed)
             )
-            idx = cls(centroids=cents, id_col=id_col, vector_col=vector_col)
+            idx = cls(centroids=cents, id_col=id_col, vector_col=vector_col, row_count=row_count)
             idx.training_error = training_error(X, cents)
             return idx
 
@@ -163,7 +164,7 @@ class IVFIndex:
         km = KMeans(k=n_clusters, maxIter=max_iter, seed=seed, featuresCol="features")
         model = km.fit(train)
         cents = np.array([np.asarray(c) for c in model.clusterCenters()], dtype=np.float64)
-        return cls(centroids=cents, id_col=id_col, vector_col=vector_col)
+        return cls(centroids=cents, id_col=id_col, vector_col=vector_col, row_count=row_count)
 
     @property
     def n_clusters(self) -> int:

@@ -8,6 +8,7 @@ mirrors bindings/node/test/e2e-crud.test.js.
 
 import pytest
 
+from fabstir_vectordb_spark import session as session_mod
 from fabstir_vectordb_spark.session import VectorDbError, VectorDbSession
 
 DIM = 3
@@ -192,3 +193,11 @@ def test_sustained_mutation_bounded_plan(spark):
     # least once and never exceed ~2 checkpoint windows' worth of plan
     assert min(depths[6:]) < max(depths[:6]) + 50
     assert max(depths) < 800, f"plan grew to {max(depths)} lines"
+
+
+def test_sustained_mutation_bounded_plan_above_the_cap(spark, monkeypatch):
+    """The same cycles on a session whose rows are not held (the cap at 0
+    bytes): each write rewrites the table's plan, and the periodic
+    localCheckpoint keeps it bounded."""
+    monkeypatch.setattr(session_mod, "_DRIVER_RANK_MAX_BYTES", 0)
+    test_sustained_mutation_bounded_plan(spark)

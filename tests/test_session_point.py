@@ -97,7 +97,7 @@ def path(request, monkeypatch):
     for name in ("exact", "trained"):
         s = request.getfixturevalue(name)
         s._cache.invalidate()
-        s._held = None
+        s._drop_held()
     yield want
     other = next(n for n in calls if n != want)
     assert calls[want] > 0 and calls[other] == 0, calls
@@ -369,14 +369,17 @@ test_search_batch_is_one_job_in_partial_knn = test_search_batch_is_one_job
 
 
 def test_held_rows_serve_later_searches_with_no_job(spark):
-    """The held-rows memo: the first driver-ranked search of a table
-    version runs one job, the pull, and every later search of that version
-    runs none — unfiltered, filtered, recency-restricted or a batch."""
+    """The held rows: train_index fills them with the pull that
+    materializes its cache, a session whose rows are not held pulls them in
+    its first search (one job), and every later search runs none —
+    unfiltered, filtered, recency-restricted or a batch."""
     s = _session(spark, trained=True)
     vec = QUERIES[0][1]
-    assert _jobs_for(spark, "held_fill", lambda: s.search(vec, k=K)) == 1
+    assert s._held is not None
+    assert _jobs_for(spark, "held_trained", lambda: s.search(vec, k=K)) == 0
+    s._drop_held()
+    assert _jobs_for(spark, "held_fill", lambda: s.search(QUERIES[2][1], k=K)) == 1
     held = s._held
-    assert held.df is s._df
     assert held.rows.num_rows == len(_items())
     later = [
         lambda: s.search(QUERIES[1][1], k=K),
@@ -396,7 +399,7 @@ def test_unfiltered_held_search_makes_no_py4j_call(spark, trained, monkeypatch):
     the probe filter and the ranking run on the held Arrow table."""
     trained.search(QUERIES[0][1], k=K)
     trained._cache.invalidate()
-    assert trained._held.df is trained._df
+    assert trained._held is not None
     client = spark.sparkContext._gateway._gateway_client
     sent = []
     send = client.send_command
@@ -417,15 +420,16 @@ def test_unfiltered_held_search_makes_no_py4j_call(spark, trained, monkeypatch):
 
 
 def test_each_write_is_seen_by_the_next_held_search(spark):
-    """The memo needs no invalidation call: every write, vacuum and
-    train_index makes a new session table, so the next search pulls the
-    rows again, sees the write and equals the DataFrame plan."""
+    """Every write, vacuum and train_index leaves the session new held
+    rows — applied on the driver, or pulled again by the next search after
+    migrate_aged, which drops them — so the next search sees the write and
+    equals the DataFrame plan."""
     s = _session(spark, trained=True)
     qid, vec = QUERIES[1]
 
     def search():
         got = s.search(vec, k=K)
-        assert s._held.df is s._df
+        assert s._held is not None
         assert got == _via_ranked(s, [(qid, vec)], K, threshold=0.0)[qid]
         return got
 
@@ -472,9 +476,9 @@ def test_held_rows_rank_as_partial_knn(request, which, monkeypatch):
             [s.search_batch(batch, k=K, **kw) for kw in ({}, {"filter": {"lang": "de"}})],
         )
 
-    s._held = None
+    s._drop_held()
     held = run()
-    assert s._held is not None and s._held.df is s._df
+    assert s._held is not None
     monkeypatch.setattr(session_mod, "_DRIVER_RANK_MAX_BYTES", 0)
     assert run() == held
     assert s._held is None

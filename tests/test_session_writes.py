@@ -19,6 +19,7 @@ from pyspark.errors import PySparkTypeError
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fabstir_vectordb_spark import session as session_mod
 from fabstir_vectordb_spark.operators.ivf import IVFIndex
 from fabstir_vectordb_spark.session import VectorDbError, VectorDbSession, _merge_struct
 
@@ -93,6 +94,11 @@ def _collected(df):
     return df.schema.simpleString(), [r.asDict(recursive=True) for r in df.collect()]
 
 
+def _batch(session, rows):
+    """A write batch as the Spark path appends it: one local partition."""
+    return session._parsed_batch(session._batch_table(rows)).coalesce(1)
+
+
 PARITY = {
     "nested_structs": [
         {"a": {"x": 1, "y": {"z": "q"}}, "n": 1},
@@ -108,14 +114,14 @@ PARITY = {
 def test_batch_builder_matches_python_rows(spark, mds):
     s = VectorDbSession(spark)
     rows = _rows(mds)
-    assert _collected(s._create_batch_df(rows)) == _collected(_reference_batch(s, rows))
+    assert _collected(_batch(s, rows)) == _collected(_reference_batch(s, rows))
 
 
 def test_batch_builder_string_field_values(spark):
     # int and bool in an otherwise-string field are stored as their JSON
     # text, as the Python-row builder stored them
     s = VectorDbSession(spark)
-    got = s._create_batch_df(_rows(PARITY["int_and_bool_in_string_field"]))
+    got = _batch(s, _rows(PARITY["int_and_bool_in_string_field"]))
     assert [r["metadata"]["a"] for r in got.collect()] == ["x", "1", "true"]
 
 
@@ -123,7 +129,7 @@ def test_batch_builder_declared_schema_merge(spark):
     s = VectorDbSession(spark)
     s.set_schema({"fields": {"score": {"type": "number"}, "lang": {"type": "string"}}})
     rows = _rows([{"score": 1.5, "lang": "en", "extra": 3}, {"score": None, "lang": "de"}])
-    got = _collected(s._create_batch_df(rows))
+    got = _collected(_batch(s, rows))
     assert got == _collected(_reference_batch(s, rows))
     assert "score:double" in got[0] and "extra:bigint" in got[0]
 
@@ -134,7 +140,7 @@ def test_batch_builder_vectors_and_timestamps(spark):
     s = VectorDbSession(spark)
     vecs = [[0.1, 1.0 / 3.0, 1e-40], [3.4028234663852886e38, -2.5, 7.0000001]]
     rows = _rows([{"a": 1}, {"a": 2}], vectors=vecs)
-    got = _collected(s._create_batch_df(rows))
+    got = _collected(_batch(s, rows))
     assert got == _collected(_reference_batch(s, rows))
     assert [r["ts"] for r in got[1]] == [T0, T0 + dt.timedelta(seconds=1)]
 
@@ -146,14 +152,14 @@ def test_batch_builder_deliberate_changes(spark):
     mixed = _rows([{"a": 1}, {"a": 1.5}])
     with pytest.raises(PySparkTypeError):
         _reference_batch(s, mixed).collect()
-    got = s._create_batch_df(mixed)
+    got = _batch(s, mixed)
     assert got.schema["metadata"].dataType.simpleString() == "struct<a:double>"
     assert [r["metadata"]["a"] for r in got.collect()] == [1.0, 1.5]
     # an int beyond int64: stored as decimal(20,0) (it raised)
     big = _rows([{"a": 10**19}])
     with pytest.raises(PySparkTypeError):
         _reference_batch(s, big).collect()
-    got = s._create_batch_df(big)
+    got = _batch(s, big)
     assert got.schema["metadata"].dataType.simpleString() == "struct<a:decimal(20,0)>"
     assert got.collect()[0]["metadata"]["a"] == Decimal(10**19)
     # an object or a large float in a string-inferred field: its JSON text
@@ -161,13 +167,13 @@ def test_batch_builder_deliberate_changes(spark):
     texts = _rows([{"a": "s"}, {"a": {"b": 1}}, {"a": 1.5e20}])
     old = [r["metadata"]["a"] for r in _reference_batch(s, texts).collect()]
     assert old == ["s", "{'b': 1}", "1.5e+20"]
-    new = [r["metadata"]["a"] for r in s._create_batch_df(texts).collect()]
+    new = [r["metadata"]["a"] for r in _batch(s, texts).collect()]
     assert new == ["s", '{"b":1}', "1.5E20"]
 
 
 def test_batch_is_one_local_partition(spark):
     s = VectorDbSession(spark)
-    batch = s._create_batch_df(_rows([{"a": i} for i in range(20)]))
+    batch = _batch(s, _rows([{"a": i} for i in range(20)]))
     assert batch.rdd.getNumPartitions() == 1
     plan = batch._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan and "PythonRDD" not in plan and "ExistingRDD" not in plan
@@ -236,7 +242,10 @@ def _write_cycle(s, start):
     s.delete_by_metadata({"lang": "de"})
 
 
-def test_writes_are_one_job_each(spark, trained):
+def test_writes_are_one_job_each(spark, trained, monkeypatch):
+    # rows not held (the cap at 0 bytes): each write is one job, its probe
+    monkeypatch.setattr(session_mod, "_DRIVER_RANK_MAX_BYTES", 0)
+    trained._drop_held()
     assert _jobs_for(
         spark, "w_add", lambda: trained.add_vectors([_item(i, prefix="n") for i in range(5)])
     ) == 1
@@ -246,7 +255,11 @@ def test_writes_are_one_job_each(spark, trained):
     ) == 1
 
 
-def test_search_after_writes_is_one_job(spark, trained):
+def test_search_after_writes_is_one_job(spark, trained, monkeypatch):
+    # rows not held (the cap at 0 bytes): the search is one job over the
+    # base table and the written batches
+    monkeypatch.setattr(session_mod, "_DRIVER_RANK_MAX_BYTES", 0)
+    trained._drop_held()
     base = trained._df.rdd.getNumPartitions()
     trained.add_vectors([_item(i, prefix="n") for i in range(5)])
     trained.batch_update_metadata([("n000", {"lang": "fr", "rank": 0})])
