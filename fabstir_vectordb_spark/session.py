@@ -43,14 +43,19 @@ session's working state: add, delete, update, delete_by_metadata, vacuum,
 get_stats, save and load act on it and run no Spark job, and the session
 table ``_df`` follows it — the cached base table with the touched ids
 anti-filtered out, unioned with one local relation of their rows, built
-only when a Spark plan asks for it.  This is the reference's in-process
-index that keeps recent rows apart and moves them in batches
-(hybrid/core.rs:551-649) and persists chunks with a manifest: ``save``
-writes the held rows with pyarrow in the layout Spark writes, and
-``load`` reads them back with pyarrow.  train_index fills the held rows
-with the pull that materializes its cache.  A larger session keeps its
-Spark plans: every write is a column rewrite of ``_df``, bounded by a
-periodic lineage checkpoint.
+only when a Spark plan asks for it.  Writes and filters make no py4j
+call: a batch whose metadata needs no type inference converts straight
+into the held Arrow type (``_held_metadata``; any other batch is parsed
+by Spark), and a Mongo filter is lowered to a mask over the held rows
+(``filters.filter_mask``) by the rules ``compile_filter`` lowers to a
+Column.  This is the reference's in-process index that keeps recent
+rows apart and moves them in batches (hybrid/core.rs:551-649) and
+persists chunks with a manifest: ``save`` writes the held rows with
+pyarrow in the layout Spark writes, and ``load`` reads them back with
+pyarrow.  train_index fills the held rows with the pull that
+materializes its cache.  A larger session keeps its Spark plans: every
+write is a column rewrite of ``_df``, bounded by a periodic lineage
+checkpoint.
 
 One candidate choice, two plans split by where the queries live.  Every
 search ranks the rows ``_predicate`` and ``_probe_width`` pick: one
@@ -58,28 +63,28 @@ predicate on the live rows (recency and filter, or none) and an IVF probe
 width, which probes the clustered table when an index is trained and no
 filter is given, else ranks the filtered live rows exactly.  search and
 search_batch hold their queries on the driver.  A small session ranks
-its held rows there and runs no Spark job — an unfiltered search makes no
-py4j call, and a filtered one selects its rows through a local relation
-the optimizer folds, its positions memoized per filter until the rows
-move.  A larger table broadcasts the queries into one map-only Arrow pass
-(``partial_knn``) that emits <= k rows per (query, batch).  Both run the
-same per-batch kernel with each row's metadata carried along, and the
-driver keeps the first k.  search_dataframe's queries arrive as a
-DataFrame, so it returns ``_ranked``: IVFIndex.search_bulk or knn_bulk
-over the same rows, which collect a bounded query set once and merge on
-the driver, and cogroup a larger one.  All plans return the same rows.
+its held rows there and makes no py4j call: the recency cutoff and the
+filter are masks over the held Arrow table.  A larger table broadcasts
+the queries into one map-only Arrow pass (``partial_knn``) that emits
+<= k rows per (query, batch).  Both run the same per-batch kernel with each
+row's metadata carried along, and the driver keeps the first k.
+search_dataframe's queries arrive as a DataFrame, so it returns
+``_ranked``: IVFIndex.search_bulk or knn_bulk over the same rows, which
+collect a bounded query set once and merge on the driver, and cogroup a
+larger one.  All plans return the same rows.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import json
+import math
 import operator
 import os
 import shutil
 import uuid
 from functools import reduce
-from typing import Any, Callable
+from typing import Any
 
 import numpy as np
 import pyarrow as pa
@@ -94,7 +99,7 @@ from pyspark.sql.conversion import ArrowTableToRowsConversion, LocalDataToArrowC
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from fabstir_vectordb_spark.functions import distance as D
-from fabstir_vectordb_spark.functions.filters import compile_filter
+from fabstir_vectordb_spark.functions.filters import compile_filter, filter_mask
 from fabstir_vectordb_spark.functions.schema import MetadataSchema
 from fabstir_vectordb_spark.operators import _arrow
 from fabstir_vectordb_spark.operators.cache import QueryResultCache
@@ -199,6 +204,11 @@ class _HeldRows:
     None, a local relation of all the rows.  So a scan of the session
     table runs at most the base's tasks plus one.
 
+    Nothing here calls into the JVM but ``read`` and ``frame``: a search
+    or a delete_by_metadata selects the rows by masks over ``rows``
+    (``VectorDbSession._held_keep``), and a write batch arrives already
+    in their Arrow types.
+
     What drops the held rows (``VectorDbSession._drop_held``, which makes
     ``frame`` the Spark-path table first): a write not applied here
     (migrate_aged, an add or update whose schema change needs a value
@@ -223,8 +233,6 @@ class _HeldRows:
         self.touched = touched
         self._frame: DataFrame | None = None
         self._live: pa.Table | None = None
-        self._relation: DataFrame | None = None
-        self._kept: dict[str, np.ndarray] = {}
 
     @classmethod
     def read(cls, df: DataFrame) -> "_HeldRows":
@@ -264,86 +272,50 @@ class _HeldRows:
             self._live = self.rows.filter(pc.invert(self.rows.column("deleted")))
         return self._live
 
-    def live_positions(self, ids) -> np.ndarray:
-        """The positions in ``rows`` of the live rows whose id is in ``ids``."""
+    def live_mask(self, ids) -> np.ndarray:
+        """Which of ``rows`` are live rows whose id is in ``ids``.  Rows are
+        picked by masks, never positions: ``Table.filter`` works chunk by
+        chunk, where ``take`` first concatenates every appended chunk of
+        every column."""
         hit = pc.and_(
             pc.is_in(self.rows.column("id"), pa.array(sorted(set(ids)), pa.string())),
             pc.invert(self.rows.column("deleted")),
         )
-        return np.flatnonzero(hit.to_numpy(zero_copy_only=False))
-
-    def positions(self, pred: Callable[[], Column], key: str | None) -> np.ndarray:
-        """The positions in ``rows`` of the rows, live or not, that the
-        predicate ``pred()`` keeps.  Spark evaluates it over a local
-        relation of the held (__pos, ts, metadata), built at most once for
-        rows in place; the optimizer folds the filter into that relation,
-        so the collect runs no job.  With a ``key`` (a filter's canonical
-        JSON; no recency cutoff, which moves with the clock) the positions
-        are memoized and a repeat compiles and collects nothing."""
-        if key is not None and key in self._kept:
-            return self._kept[key]
-        if self._relation is None:
-            t = self.rows
-            self._relation = self.spark.createDataFrame(
-                pa.table({
-                    "__pos": pa.array(np.arange(t.num_rows, dtype=np.int32)),
-                    "ts": t.column("ts"),
-                    "metadata": t.column("metadata"),
-                }),
-                T.StructType([
-                    T.StructField("__pos", T.IntegerType(), False),
-                    self.schema["ts"],
-                    self.schema["metadata"],
-                ]),
-            )
-        kept = self._relation.filter(pred()).select("__pos").collect()
-        pos = np.fromiter((r[0] for r in kept), np.int64, len(kept))
-        if key is not None:
-            self._kept[key] = pos
-        return pos
+        return hit.to_numpy(zero_copy_only=False)
 
     # ------------------------------------------------------------ writes
 
-    def _next(
-        self, rows: pa.Table, ids, schema: T.StructType | None = None, in_place: bool = False
-    ) -> "_HeldRows":
+    def _next(self, rows: pa.Table, ids, schema: T.StructType | None = None) -> "_HeldRows":
         """The instance after a write that changed the rows of ``ids``.  A
-        local relation this one built becomes the next one's base.  With
-        ``in_place`` (no row moved, no ts or metadata changed) the filter
-        relation and its memo stay valid and carry over."""
+        local relation this one built becomes the next one's base."""
         base = self.base if self.base is not None else self._frame
         touched = frozenset() if base is None else self.touched | frozenset(ids)
-        nxt = _HeldRows(self.spark, schema or self.schema, rows, base, touched)
-        if in_place:
-            nxt._relation, nxt._kept = self._relation, self._kept
-        return nxt
+        return _HeldRows(self.spark, schema or self.schema, rows, base, touched)
 
-    def flagged(self, pos: np.ndarray) -> "_HeldRows":
-        """The rows with the ones at ``pos`` soft-deleted."""
-        mask = np.zeros(self.rows.num_rows, dtype=bool)
-        mask[pos] = True
+    def flagged(self, mask: np.ndarray) -> "_HeldRows":
+        """The rows with the ones ``mask`` selects soft-deleted."""
         i = self.rows.schema.get_field_index("deleted")
         rows = self.rows.set_column(
             i, self.rows.schema.field(i), pc.or_(self.rows.column(i), pa.array(mask))
         )
-        return self._next(rows, self.rows.column("id").take(pos).to_pylist(), in_place=True)
+        return self._next(rows, self.rows.column("id").filter(mask).to_pylist())
 
     def appended(
         self, batch: pa.Table, schema: T.StructType, drop: np.ndarray | None = None
     ) -> "_HeldRows | None":
-        """The rows less those at ``drop``, with ``batch`` (of Spark schema
+        """The rows less those ``drop`` selects, with ``batch`` (of Spark schema
         ``schema``) appended as ``unionByName(allowMissingColumns=True)``
         would: columns and struct fields matched by name, a missing one
-        null.  None when that union needs a value cast."""
+        null.  None when that union needs a value cast.  A batch of the
+        held schema (``VectorDbSession._held_metadata``) is appended as it
+        is."""
         merged = _union_schema(self.spark, self.schema, schema)
         if merged is None:
             return None
         rows = self.rows
-        if drop is not None and len(drop):
-            keep = np.ones(rows.num_rows, dtype=bool)
-            keep[drop] = False
-            rows = rows.filter(pa.array(keep))
-        target = to_arrow_schema(merged)
+        if drop is not None and drop.any():
+            rows = rows.filter(pa.array(~drop))
+        target = rows.schema if merged == self.schema else to_arrow_schema(merged)
         rows = pa.concat_tables([_conform(rows, target), _conform(batch, target)])
         return self._next(rows, batch.column("id").to_pylist(), schema=merged)
 
@@ -353,10 +325,9 @@ class _HeldRows:
 
     def rebased(self) -> "_HeldRows":
         """The same rows on a local relation of their own: no Spark table
-        they were read from stays under them.  Nothing moved, so the
-        filter relation and its memo carry over."""
+        they were read from stays under them."""
         nxt = _HeldRows(self.spark, self.schema, self.rows)
-        nxt._live, nxt._relation, nxt._kept = self._live, self._relation, self._kept
+        nxt._live = self._live
         return nxt
 
 
@@ -422,15 +393,6 @@ def _conform_array(arr: pa.Array, typ: pa.DataType) -> pa.Array:
             mask=arr.is_null(),
         )
     return arr.cast(typ)
-
-
-def _filter_key(filter: dict | None) -> str | None:
-    """A filter's canonical JSON, the key its held positions are memoized
-    under; None when it has no JSON form."""
-    try:
-        return json.dumps(filter, sort_keys=True)
-    except (TypeError, ValueError):
-        return None
 
 
 class VectorDbSession:
@@ -612,7 +574,7 @@ class VectorDbSession:
         ``ids``, as a collect returns them — read from the held rows with
         no job, else one job bounded by the batch size."""
         if self._held is not None:
-            t = self._held.rows.take(self._held.live_positions(ids)).select(["id", *cols])
+            t = self._held.rows.select(["id", *cols]).filter(self._held.live_mask(ids))
             return ArrowTableToRowsConversion.convert(
                 t, T.StructType([self._held.schema[c] for c in t.column_names])
             )
@@ -672,7 +634,8 @@ class VectorDbSession:
         ``_infer_md_type`` reads from the same texts, so one JSON engine
         both infers and converts.  Declared schema fields take their
         declared types; undeclared extras keep inferred types (only
-        declared fields are checked — schema.rs:199-205)."""
+        declared fields are checked — schema.rs:199-205).  A ``tier``
+        column (an update after migrate_aged) is carried as it is."""
         texts = table.column("metadata").to_pylist()
         md_type = T.StructType()
         present = [t for t in texts if t is not None and t != "{}"]
@@ -682,8 +645,28 @@ class VectorDbSession:
                 names = md_type.fieldNames()
                 merged = _merge_struct(self._schema.spark_type(), md_type)
                 md_type = T.StructType([f for f in merged if f.name in names])
-        batch = self.spark.createDataFrame(table, self._batch_schema(T.StringType()))
+        schema = self._batch_schema(T.StringType())
+        if "tier" in table.column_names:
+            schema.add("tier", T.StringType(), True)
+        batch = self.spark.createDataFrame(table, schema)
         return batch.withColumn("metadata", F.from_json("metadata", md_type))
+
+    def _held_metadata(self, mds: list[dict | None]) -> pa.Array | None:
+        """A batch's metadata built straight in the held rows' Arrow type,
+        or None when Spark must parse it (``_parsed_batch``): the batch is
+        taken as it is only where ``_needs_no_inference`` proves that the
+        parse and its union with the held rows would give the held type
+        and these values, and no declared schema field types a carried
+        field otherwise."""
+        md_type = self._held.schema["metadata"].dataType
+        dicts = [m for m in mds if m is not None]
+        if not isinstance(md_type, T.StructType) or not _needs_no_inference(dicts, md_type):
+            return None
+        if self._schema is not None:
+            declared = {f.name: f.dataType for f in self._schema.spark_type()}
+            if any(k in declared and declared[k] != md_type[k].dataType for d in dicts for k in d):
+                return None
+        return pa.array(mds, type=self._held.rows.schema.field("metadata").type)
 
     def _held_batch(self, batch: DataFrame, table: pa.Table) -> pa.Table:
         """``batch`` (``_parsed_batch(table)``) as Arrow: ``table`` with its
@@ -697,14 +680,22 @@ class VectorDbSession:
         return table.set_column(i, pa.field("metadata", parsed.type), parsed)
 
     def _append(self, rows: list[dict], dim: int | None, now: _dt.datetime) -> None:
-        table = self._batch_table(rows)
-        batch = self._parsed_batch(table)
         ids = [r["id"] for r in rows]
         self._dim = dim
         # the rows are held, or the session is empty, and stay under the cap
-        if (self._held is not None or self._table is None) and self._fits(
+        holds = (self._held is not None or self._table is None) and self._fits(
             self._row_count + len(rows)
-        ):
+        )
+        md = None if not holds or self._held is None else self._held_metadata(
+            [r["metadata"] for r in rows]
+        )
+        if md is not None:
+            held = self._held.appended(self._batch_table(rows, md), self._held.schema)
+            self._commit_held(held, "Inserted", ids, now, live_delta=len(rows))
+            return
+        table = self._batch_table(rows)
+        batch = self._parsed_batch(table)
+        if holds:
             held = self._held_batch(batch, table)
             nxt = (
                 _HeldRows(self.spark, batch.schema, _conform(held, to_arrow_schema(batch.schema)))
@@ -868,12 +859,20 @@ class VectorDbSession:
             schema.add("cluster_id", T.IntegerType(), False)
         return schema
 
-    def _batch_table(self, rows: list[dict]) -> pa.Table:
+    def _batch_columns(self) -> list[str]:
+        """The columns of a write batch of the session table's rows
+        (``_parsed_batch``): ``tier`` is carried when the table has it."""
+        return ["id", "vector", "ts", "deleted", "metadata"] + (
+            ["cluster_id"] if self._clustered else []
+        ) + (["tier"] if "tier" in self._table_schema.fieldNames() else [])
+
+    def _batch_table(self, rows: list[dict], metadata: pa.Array | None = None) -> pa.Table:
         """A write batch as one Arrow table: vectors as ``list<float32>``,
         ``ts`` as UTC microseconds (the instant ``TimestampType`` stores,
-        under any process time zone), metadata as JSON text.  With a
-        trained index the batch carries ``cluster_id``: each vector's
-        nearest centroid, assigned here by ``IVFIndex.nearest``."""
+        under any process time zone), metadata as JSON text unless
+        ``metadata`` gives it.  With a trained index the batch carries
+        ``cluster_id``: each vector's nearest centroid, assigned here by
+        ``IVFIndex.nearest``."""
         vectors = pa.array([r["vector"] for r in rows], pa.list_(pa.float32()))
         ts = T.TimestampType()
         table = {
@@ -883,7 +882,7 @@ class VectorDbSession:
                 [ts.toInternal(r["ts"]) for r in rows], pa.timestamp("us", tz="UTC")
             ),
             "deleted": pa.array([r["deleted"] for r in rows], pa.bool_()),
-            "metadata": pa.array(
+            "metadata": metadata if metadata is not None else pa.array(
                 [None if r["metadata"] is None else json.dumps(r["metadata"]) for r in rows],
                 pa.string(),
             ),
@@ -994,6 +993,31 @@ class VectorDbSession:
             return False
         return self._fits(rows)
 
+    def _held_keep(
+        self, filter: dict | None, search_recent: bool, search_historical: bool
+    ) -> np.ndarray:
+        """The held rows ``_predicate`` keeps among the live ones, as a
+        mask over ``_HeldRows.rows``, evaluated on the driver with no py4j
+        call: the recency flags against the cutoff read as the instant
+        ``F.lit(cutoff)`` stands for (as get_stats reads it), and the filter
+        lowered to Arrow by the rules ``compile_filter`` lowers to a Column
+        (``filters.filter_mask``), so both mean what they mean in
+        ``_ranked``."""
+        rows = self._held.rows
+        keep = ~rows.column("deleted").to_numpy(zero_copy_only=False)
+        if not (search_recent and search_historical):
+            ts = rows.column("ts")
+            cutoff = pa.scalar(
+                T.TimestampType().toInternal(_utcnow() - _dt.timedelta(days=RECENCY_DAYS)), ts.type
+            )
+            if not search_recent:
+                keep &= pc.less(ts, cutoff).fill_null(False).to_numpy(zero_copy_only=False)
+            if not search_historical:
+                keep &= pc.greater_equal(ts, cutoff).fill_null(False).to_numpy(zero_copy_only=False)
+        if filter is not None:
+            keep &= filter_mask(filter, self._held.schema, rows, metadata_col="metadata")
+        return keep
+
     def _held_rows(
         self,
         filter: dict | None,
@@ -1001,31 +1025,20 @@ class VectorDbSession:
         search_historical: bool,
         probes: dict[int, np.ndarray] | None,
     ) -> pa.Table:
-        """The held live rows the search's predicate keeps, only the probed
-        clusters' when ``probes`` is given.  A session whose rows are not
-        held yet pulls them with one JVM-only ``toArrow()``; after that no
-        search runs a Spark job.  The predicate is evaluated by Spark over
-        the held rows (``_HeldRows.positions``), so the filter and recency
-        semantics are those of ``_ranked``; with the recency flags at their
-        defaults a filter's positions are memoized until the rows move."""
+        """The held live rows the search's predicate keeps (``_held_keep``),
+        only the probed clusters' when ``probes`` is given.  A session whose
+        rows are not held yet pulls them with one JVM-only ``toArrow()``;
+        after that no search makes a py4j call."""
         if self._held is None:
             self._held = _HeldRows.read(self._table)
         held = self._held
-        if filter is None and search_recent and search_historical:
-            if probes is None:
-                return held.live
-            # one filter copies only the probed clusters' live rows
-            rows, keep = held.rows, pc.invert(held.rows.column("deleted"))
-        else:
-            key = _filter_key(filter) if search_recent and search_historical else None
-            rows = held.rows.take(held.positions(
-                lambda: self._predicate(filter, search_recent, search_historical), key
-            ))
-            keep = pc.invert(rows.column("deleted"))
+        if filter is None and search_recent and search_historical and probes is None:
+            return held.live
+        keep = self._held_keep(filter, search_recent, search_historical)
         if probes is not None:
-            cid = rows.column("cluster_id")
-            keep = pc.and_(keep, pc.is_in(cid, pa.array(sorted(probes), cid.type)))
-        return rows.filter(keep)
+            cid = held.rows.column("cluster_id")
+            keep &= pc.is_in(cid, pa.array(sorted(probes), cid.type)).to_numpy(zero_copy_only=False)
+        return held.rows.filter(pa.array(keep))
 
     def _search_points(
         self,
@@ -1251,7 +1264,7 @@ class VectorDbSession:
                 errors.append(f"vector not found: {vid!r}")
         if hit and self._held is not None:
             self._commit_held(
-                self._held.flagged(self._held.live_positions(hit)),
+                self._held.flagged(self._held.live_mask(hit)),
                 "Deleted",
                 sorted(hit),
                 live_delta=-len(hit),
@@ -1342,14 +1355,10 @@ class VectorDbSession:
             )
         if self._held is not None:
             held = self._held
-            pos = held.positions(
-                lambda: compile_filter(filter, held.schema, metadata_col="metadata"),
-                _filter_key(filter),
-            )
-            pos = pos[~held.rows.column("deleted").take(pos).to_numpy(zero_copy_only=False)]
-            ids = sorted(held.rows.column("id").take(pos).to_pylist()) if return_ids else []
-            n = len(pos)
-            self._commit_held(held.flagged(pos), "Deleted", ids, live_delta=-n)
+            hit = self._held_keep(filter, True, True)
+            ids = sorted(held.rows.column("id").filter(hit).to_pylist()) if return_ids else []
+            n = int(hit.sum())
+            self._commit_held(held.flagged(hit), "Deleted", ids, live_delta=-n)
         else:
             pred = compile_filter(filter, self._df.schema, metadata_col="metadata")
             match = pred & ~F.col("deleted")
@@ -1416,18 +1425,16 @@ class VectorDbSession:
                 continue
             good.append(vid)
             want[vid] = md  # duplicate id: last update wins, as sequentially
-        # the touched live rows as a write batch, their metadata still the old
-        cols = ["id", "vector", "ts", "deleted", "metadata"] + (
-            ["cluster_id"] if self._clustered else []
-        )
-        pos = old = None
+        # the touched live rows, their metadata still the old: a write batch
+        # of the table's columns (``tier`` too, after migrate_aged)
+        hit = old = None
         if self._held is not None:
-            pos = self._held.live_positions(want)
-            old = self._held.rows.take(pos).select(cols)
+            hit = self._held.live_mask(want)
+            old = self._held.rows.filter(hit)
         elif self._table is not None and want:
             old = (
                 self._table.filter(F.col("id").isin(sorted(want)) & ~F.col("deleted"))
-                .select(*cols)
+                .select(*self._batch_columns())
                 .toArrow()
             )
         live = set() if old is None else set(old.column("id").to_pylist())
@@ -1437,16 +1444,24 @@ class VectorDbSession:
         errors.extend(f"vector not found: {vid!r}" for vid in good if vid not in live)
         if live:
             touched = sorted(live)
-            texts = [
-                None if want[v] is None else json.dumps(want[v])
-                for v in old.column("id").to_pylist()
-            ]
-            table = old.set_column(4, "metadata", pa.array(texts, pa.string()))
-            batch = self._parsed_batch(table)
-            nxt = (
-                None if pos is None
-                else self._held.appended(self._held_batch(batch, table), batch.schema, drop=pos)
-            )
+            mds = [want[v] for v in old.column("id").to_pylist()]
+            md = None if hit is None else self._held_metadata(mds)
+            if md is not None:
+                # the held rows whole, only their metadata replaced
+                i = old.schema.get_field_index("metadata")
+                nxt = self._held.appended(
+                    old.set_column(i, old.schema.field(i), md), self._held.schema, drop=hit
+                )
+            else:
+                texts = [None if m is None else json.dumps(m) for m in mds]
+                table = old.select(self._batch_columns()).set_column(
+                    4, "metadata", pa.array(texts, pa.string())
+                )
+                batch = self._parsed_batch(table)
+                nxt = (
+                    None if hit is None
+                    else self._held.appended(self._held_batch(batch, table), batch.schema, drop=hit)
+                )
             if nxt is not None:
                 self._commit_held(nxt, "Updated", touched)
             else:
@@ -1825,6 +1840,49 @@ def _infer_md_type(spark: SparkSession, texts: list[str]) -> T.StructType:
     arr = F.lit("[" + ",".join(texts) + "]")
     probe = spark.range(1).select(F.from_json(arr, F.schema_of_json(arr)).alias("m"))
     return probe.schema["m"].dataType.elementType
+
+
+# the Spark type JSON inference gives a value of each Python kind (an int
+# within int64, a finite float); no other kind converts straight
+_MD_KINDS = {
+    str: T.StringType, bool: T.BooleanType, int: T.LongType, float: T.DoubleType, dict: T.StructType,
+}
+
+
+def _needs_no_inference(dicts: list[dict], md_type: T.StructType, nested: bool = False) -> bool:
+    """Whether Spark's parse of these metadata objects (``_parsed_batch``),
+    unioned into rows whose metadata has type ``md_type``, keeps that type
+    and gives the values ``pa.array(dicts, type=<md_type in Arrow>)``
+    gives: every field the objects carry is a field of ``md_type``, has a
+    non-null value in some object, and every non-null value has the exact
+    Python kind of the field's type (``_MD_KINDS``), an object meeting the
+    same test against its struct, where it must carry a field (Spark's
+    inference drops a struct no object fills).  This does not infer
+    types: anything else — an array, a field only ever null, an int for a
+    double, NaN, an int beyond int64, a new field — is left to Spark."""
+    types = {f.name: f.dataType for f in md_type}
+    values: dict[str, list] = {}
+    for d in dicts:
+        for k, v in d.items():
+            if k not in types:
+                return False
+            seen = values.setdefault(k, [])
+            if v is None:
+                continue
+            kind = _MD_KINDS.get(type(v))
+            if kind is None or not isinstance(types[k], kind):
+                return False
+            if type(v) is int and not -(1 << 63) <= v < 1 << 63:
+                return False
+            if type(v) is float and not math.isfinite(v):
+                return False
+            seen.append(v)
+    for k, seen in values.items():
+        if not seen:
+            return False
+        if isinstance(types[k], T.StructType) and not _needs_no_inference(seen, types[k], True):
+            return False
+    return bool(values) or not nested
 
 
 def _merge_struct(a: T.StructType, b: T.StructType) -> T.StructType:

@@ -5,7 +5,8 @@ no Spark job.  The session table follows the held rows as the base table
 with the touched ids anti-filtered out, unioned with one local relation of
 their current state.  Pinned here: the job counts, the partition bound, the
 equality of the held rows with the session table after every write kind,
-and a held save equal to Spark's save of the same table.
+an update that keeps a migrated row's tier on either path, and a held save
+equal to Spark's save of the same table.
 """
 
 import datetime as dt
@@ -14,7 +15,6 @@ import os
 
 import pyarrow as pa
 import pytest
-from py4j import protocol as proto
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -151,6 +151,8 @@ def test_held_rows_equal_the_session_table_after_every_write(spark, trained):
             s.search([1.0, 0.0, 0.0, 1.0], k=3)
         _assert_held_is_table(s, name)
         assert s._live_count == s.get_stats()["vectorCount"], name
+        if name == "update after migrate":
+            assert _tier(s, "v006") == "historical"
     assert "tier" in s._held.schema.fieldNames()
     assert "color" in s._held.schema["metadata"].dataType.fieldNames()
 
@@ -219,42 +221,24 @@ def test_save_over_the_loaded_files_keeps_the_session(tmp_path, spark):
     assert again.deletion_stats() == loaded.deletion_stats() == {"deleted": 1, "active": 60}
 
 
-def test_filtered_positions_are_memoized_until_rows_move(spark, monkeypatch):
-    s = _session(spark)
-    q = [3.0, 1.0, 0.0, 1.0]
-    flt = {"lang": "en", "rank": {"$lt": 40}}
-    first = s.search(q, k=5, filter=flt)
-    client = spark.sparkContext._gateway._gateway_client
-    sent = []
-    send = client.send_command
-    # a JavaObject Python's GC frees sends a release command: not a call
-    release = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
+def _tier(s, vid):
+    return s._live_rows([vid], "tier")[0]["tier"]
 
-    def recorded(command, *a, **kw):
-        if not command.startswith(release):
-            sent.append(command)
-        return send(command, *a, **kw)
 
-    monkeypatch.setattr(client, "send_command", recorded)
-
-    def py4j_calls(call):
-        sent.clear()
-        s._cache.invalidate()
-        out = call()
-        return out, len(sent)
-
-    # a repeat, under another key order, compiles and collects nothing
-    again, n = py4j_calls(lambda: s.search(q, k=5, filter={"rank": {"$lt": 40}, "lang": "en"}))
-    assert n == 0 and again == first
-    # the recency cutoff moves with the clock: never memoized
-    assert py4j_calls(lambda: s.search(q, k=5, filter=flt, search_recent=False))[1] > 0
-    # a delete moves no row: the positions stand
-    s.batch_delete([first[0]["id"]])
-    got, n = py4j_calls(lambda: s.search(q, k=5, filter=flt))
-    assert n == 0 and got[:4] == first[1:]
-    # an add moves rows: the filter runs again
-    s.add_vectors([_item(1, prefix="a")])
-    assert py4j_calls(lambda: s.search(q, k=5, filter=flt))[1] > 0
+@pytest.mark.parametrize("held", [True, False], ids=["held", "spark"])
+def test_update_keeps_the_tier(spark, monkeypatch, held):
+    s = _session(spark, trained=False)
+    s.migrate_aged(max_per_run=5)
+    if held:
+        s.search([1.0, 0.0, 0.0, 1.0], k=3)  # pulls the rows again, with tier
+        assert s._held is not None
+    else:
+        monkeypatch.setattr(session_mod, "_DRIVER_RANK_MAX_BYTES", 0)
+    assert _tier(s, "v006") == "historical"
+    s.batch_update_metadata([("v006", {"lang": "pt", "rank": 6}), ("v001", {"lang": "pt"})])
+    assert (s._held is not None) == held
+    assert _tier(s, "v006") == "historical" and _tier(s, "v001") is None
+    assert s.get_vector("v006")["metadata"] == {"lang": "pt", "rank": 6}
 
 
 def test_stats_from_held_rows_equal_sparks(spark, monkeypatch):

@@ -11,6 +11,7 @@ import datetime as dt
 
 import numpy as np
 import pytest
+from py4j import protocol as proto
 from pyspark.sql import functions as F
 
 from fabstir_vectordb_spark import session as session_mod
@@ -307,9 +308,9 @@ def test_python_pass_in_collected_plan(path, trained, monkeypatch):
         assert collected == []
     else:
         # one pull of the held rows; the filtered search selects among them
-        # through a local relation, which the collect reads with no job
+        # with an Arrow mask and collects nothing
         assert python_pass == [False]
-        assert collected == [["LocalTableScan"]]
+        assert collected == []
 
 
 test_python_pass_in_collected_plan_in_partial_knn = test_python_pass_in_collected_plan
@@ -394,28 +395,52 @@ def test_held_rows_serve_later_searches_with_no_job(spark):
     assert s._held is held
 
 
-def test_unfiltered_held_search_makes_no_py4j_call(spark, trained, monkeypatch):
-    """With no predicate, a search over held rows never calls into the JVM:
-    the probe filter and the ranking run on the held Arrow table."""
-    trained.search(QUERIES[0][1], k=K)
-    trained._cache.invalidate()
-    assert trained._held is not None
+def test_unfiltered_held_search_makes_no_py4j_call(spark, monkeypatch):
+    """Over held rows nothing calls into the JVM: no search (the probe
+    filter, the recency cutoff and a Mongo filter are Arrow masks, a new
+    filter's first search after a write included), and no add, update,
+    delete or delete_by_metadata whose metadata converts straight into the
+    held type."""
+    s = _session(spark, trained=True)
+    s.search(QUERIES[0][1], k=K)
+    assert s._held is not None
     client = spark.sparkContext._gateway._gateway_client
     sent = []
     send = client.send_command
+    # a JavaObject Python's GC frees sends a release command: not a call
+    release = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
 
-    def recorded(*a, **kw):
-        sent.append(a)
-        return send(*a, **kw)
+    def recorded(command, *a, **kw):
+        if not command.startswith(release):
+            sent.append(command)
+        return send(command, *a, **kw)
 
     monkeypatch.setattr(client, "send_command", recorded)
-    trained.search(QUERIES[1][1], k=K)
-    trained.search_batch([{"id": q, "vector": v} for q, v in QUERIES], k=K)
-    unfiltered = len(sent)
-    trained.search(QUERIES[1][1], k=K, filter={"lang": "en"})
+    vec = QUERIES[1][1]
+    calls = [
+        ("search", lambda: s.search(vec, k=K)),
+        ("search_batch", lambda: s.search_batch([{"id": q, "vector": v} for q, v in QUERIES], k=K)),
+        ("filtered", lambda: s.search(vec, k=K, filter={"lang": "en"})),
+        ("recency", lambda: s.search(vec, k=K, search_recent=False, filter={"rank": {"$gt": 3}})),
+        ("add", lambda: s.add_vectors(
+            [{"id": f"n{i}", "vector": [i, 0.5, 1.0, 0.0], "metadata": {"lang": "fr", "rank": -i}}
+             for i in range(4)])),
+        ("filter after add", lambda: s.search(vec, k=K, filter={"$or": [{"lang": "fr"}, {"rank": 3}]})),
+        ("update", lambda: s.batch_update_metadata([("n1", {"lang": "it"}), ("v03", None)])),
+        ("filter after update", lambda: s.search(vec, k=K, filter={"lang": {"$in": ["it", "en"]}})),
+        ("delete", lambda: s.batch_delete(["n2", "v05"])),
+        ("delete_by_metadata", lambda: s.delete_by_metadata({"rank": {"$lte": 2}})),
+        ("filter after delete", lambda: s.search(vec, k=K, filter={"rank": {"$gte": 0}})),
+    ]
+    for name, call in calls:
+        s._cache.invalidate()
+        sent.clear()
+        call()
+        assert sent == [], name
+    assert s._held is not None and s.get_vector("n1")["metadata"] == {"lang": "it"}
+    # the recorder sees the calls a Spark plan makes
+    s.dataframe()
     monkeypatch.undo()
-    assert unfiltered == 0
-    # the recorder sees the calls a predicate makes
     assert len(sent) > 0
 
 
@@ -423,14 +448,19 @@ def test_each_write_is_seen_by_the_next_held_search(spark):
     """Every write, vacuum and train_index leaves the session new held
     rows — applied on the driver, or pulled again by the next search after
     migrate_aged, which drops them — so the next search sees the write and
-    equals the DataFrame plan."""
+    equals the DataFrame plan, filtered (the filter evaluated afresh over
+    the new rows) or not."""
     s = _session(spark, trained=True)
     qid, vec = QUERIES[1]
+    flt = {"lang": "en", "rank": {"$lt": 40}}
 
     def search():
         got = s.search(vec, k=K)
         assert s._held is not None
         assert got == _via_ranked(s, [(qid, vec)], K, threshold=0.0)[qid]
+        for kw in ({"filter": flt}, {"filter": flt, "search_recent": False}):
+            want = _via_ranked(s, [(qid, vec)], K, threshold=0.0, **kw)[qid]
+            assert s.search(vec, k=K, **kw) == want, kw
         return got
 
     before = search()

@@ -14,6 +14,7 @@ import json
 import os
 from decimal import Decimal
 
+import numpy as np
 import pytest
 from pyspark.errors import PySparkTypeError
 from pyspark.sql import functions as F
@@ -177,6 +178,100 @@ def test_batch_is_one_local_partition(spark):
     assert batch.rdd.getNumPartitions() == 1
     plan = batch._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan and "PythonRDD" not in plan and "ExistingRDD" not in plan
+
+
+# ------------------------------------- metadata in the held Arrow type
+
+
+def _held_session(spark, mds):
+    """A session holding rows whose metadata type Spark inferred from ``mds``."""
+    s = VectorDbSession(spark)
+    s.add_vectors(
+        [{"id": f"h{i}", "vector": [1.0, 0.0, float(i)], "metadata": md} for i, md in enumerate(mds)]
+    )
+    assert s._held is not None
+    return s
+
+
+# (the held rows' metadata, a batch's) whose conversion needs no inference
+STRAIGHT = {
+    **{k: (PARITY[k], PARITY[k]) for k in ("nested_structs", "null_fields")},
+    "fewer_fields": (
+        [{"a": {"x": 1, "y": {"z": "q"}}, "n": 1, "s": "t", "b": True}],
+        [{"n": 2}, {"a": {"y": {"z": "w"}}}, {"b": False, "s": "é"}],
+    ),
+    "null_and_empty_objects": (
+        [{"a": {"x": 1}, "n": 1}], [None, {}, {"a": None, "n": 2}, {"a": {"x": 3}}]
+    ),
+    "no_field_carried": ([{"a": 1}], [None, {}]),
+    "metadata_less": ([None], [None, {}]),
+    "number_bounds": (
+        [{"i": 1, "f": 0.5}],
+        [{"i": (1 << 63) - 1, "f": 1.7976931348623157e308}, {"i": -(1 << 63), "f": 5e-324},
+         {"i": 0, "f": -0.0}],
+    ),
+}
+NAN, INF = float("nan"), float("inf")
+# ... and those whose conversion Spark must infer
+PARSED = {
+    **{k: (PARITY[k], PARITY[k]) for k in ("arrays", "int_and_bool_in_string_field")},
+    "field_only_ever_null": ([{"a": 1, "b": "x"}], [{"a": None, "b": "y"}]),
+    "int_for_a_double": ([{"a": 1.5}], [{"a": 2}]),
+    "nan": ([{"a": 1.5}], [{"a": NAN}]),
+    "inf": ([{"a": 1.5}], [{"a": INF}]),
+    "minus_inf": ([{"a": 1.5}], [{"a": -INF}]),
+    "int_beyond_int64": ([{"a": 1}], [{"a": 1 << 63}]),
+    "new_field": ([{"a": 1}], [{"a": 2, "b": "x"}]),
+    "empty_nested_object": ([{"a": {"x": 1}}], [{"a": {}}]),
+    "nested_field_only_ever_null": ([{"a": {"x": 1, "y": "s"}}], [{"a": {"x": 2, "y": None}}]),
+    "numpy_float": ([{"a": 1.5}], [{"a": np.float64(2.5)}]),
+}
+
+
+@pytest.mark.parametrize("base,mds", STRAIGHT.values(), ids=list(STRAIGHT))
+def test_held_metadata_is_sparks_parse(spark, base, mds):
+    """Metadata built straight in the held type equals Spark's parse of the
+    batch unioned into the held rows: the same type and the same rows."""
+    s = _held_session(spark, base)
+    rows = _rows(mds, vectors=[[float(i), 2.0, 0.0] for i in range(len(mds))])
+    md = s._held_metadata([r["metadata"] for r in rows])
+    assert md is not None
+    union = s._df.unionByName(_batch(s, rows), allowMissingColumns=True)
+    held = s._held.appended(s._batch_table(rows, md), s._held.schema)
+    got = spark.createDataFrame(held.rows, held.schema)
+    assert _collected(got.orderBy("id")) == _collected(union.orderBy("id"))
+
+
+@pytest.mark.parametrize("write", ["add", "update"])
+@pytest.mark.parametrize("base,mds", PARSED.values(), ids=list(PARSED))
+def test_other_metadata_takes_sparks_parse(spark, monkeypatch, base, mds, write):
+    # as many held rows as the batch has, each of a base shape
+    s = _held_session(spark, [base[i % len(base)] for i in range(max(len(base), len(mds)))])
+    assert s._held_metadata(mds) is None
+    parsed = []
+    parse = VectorDbSession._parsed_batch
+
+    def counted(self, table):
+        parsed.append(table.num_rows)
+        return parse(self, table)
+
+    monkeypatch.setattr(VectorDbSession, "_parsed_batch", counted)
+    if write == "add":
+        s.add_vectors(
+            [{"id": f"r{i}", "vector": [0.0, 1.0, 2.0], "metadata": md} for i, md in enumerate(mds)]
+        )
+    else:
+        s.batch_update_metadata([(f"h{i}", md) for i, md in enumerate(mds)])
+    assert parsed == [len(mds)]
+
+
+def test_declared_type_other_than_the_held_one_takes_sparks_parse(spark):
+    # rank was inferred bigint; declared a number it parses as double
+    s = _held_session(spark, [{"rank": 1, "lang": "en"}])
+    assert s._held_metadata([{"rank": 2, "lang": "de"}]) is not None
+    s.set_schema({"fields": {"rank": {"type": "number"}, "lang": {"type": "string"}}})
+    assert s._held_metadata([{"rank": 2}]) is None
+    assert s._held_metadata([{"lang": "de"}]) is not None
 
 
 # ------------------------------------------------ non-dict metadata
