@@ -224,24 +224,6 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------- MinHash LSH
 
 
-def minhash_signature(
-    text: Column | str, num_hashes: int = 64, n: int = 3
-) -> Column:
-    """H seeded min-hashes over the shingle set, as one array<bigint>.
-
-    Seeding trick: xxhash64(seed_literal, shingle) — stays in codegen,
-    no Python, no UDF."""
-    sh = word_shingles(text, n)
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(sh, lambda s, i=i: F.xxhash64(F.lit(f"mh{i}"), s))
-            )
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def _hash_lists(batch: pa.RecordBatch):
     """The one parse of the ``list<bigint>`` hash column ``__hs``, shared
     by the MinHash signature and SimHash vote kernels: ``(rows, hashes,

@@ -16,6 +16,7 @@ sets, never the vector table.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -122,93 +123,47 @@ def mmr_rerank(
 
     Determinism: ties break on (round(score,6) desc, id asc) — the same
     contract as every ranking here.  Output: (query_id, id, mmr_score,
-    rank), rank 1..k in selection order.
+    rank), rank 1..k in selection order: `mmr_rerank_multi` at the one
+    lam, its `lam` column dropped.
     """
-    from pyspark.sql import types as T
-
-    cand = results.select(
-        F.col(query_col).alias("query_id"),
-        F.col(id_col).alias("id"),
-        F.col(score_col).cast("double").alias("__rel"),
-    ).join(
-        vectors.select(
-            F.col(vector_id_col).alias("id"), F.col(vector_col).alias("__v")
-        ),
-        "id",
-    )
-    id_t = results.schema[id_col].dataType
-    qid_t = results.schema[query_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", qid_t, False),
-            T.StructField("id", id_t, False),
-            T.StructField("mmr_score", T.DoubleType(), False),
-            T.StructField("rank", T.IntegerType(), False),
-        ]
-    )
-    import pandas as pd
-
-    k_i, lam_f = int(k), float(lam)
-
-    def per_query(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        return _mmr_frames(pdf, k_i, [lam_f])[0]
-
-    return cand.groupBy("query_id").applyInPandas(per_query, out_schema)
+    return mmr_rerank_multi(
+        results, vectors, k, [lam], score_col=score_col, query_col=query_col,
+        id_col=id_col, vector_id_col=vector_id_col, vector_col=vector_col,
+    ).drop("lam")
 
 
-def _mmr_frames(pdf, k_i: int, lams: list[float]):
-    """One MMR greedy selection per lam over ONE candidate frame: the
-    deterministic sort and the pairwise cosine matrix are computed once
-    and shared across lams.  Returns one output frame per lam, each
-    exactly what `mmr_rerank`'s kernel produced for that lam."""
-    import numpy as np
-    import pandas as pd
-
-    # deterministic candidate order
-    pdf = pdf.assign(__r6=pdf["__rel"].round(6)).sort_values(
-        ["__r6", "id"], ascending=[False, True], kind="mergesort"
-    ).reset_index(drop=True)
-    V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["__v"]])
+def mmr_select(vectors, rel, k: int, lams: list[float]) -> list[tuple[list[int], list[float]]]:
+    """The one MMR greedy selection, per lam, over one query's candidates:
+    ``vectors`` their vectors (cosine similarity: each row is normalized
+    here, a zero row left as is) and ``rel`` their relevances as a float
+    array, both in ranking order (rounded relevance desc, id asc) and the
+    relevances already rounded by the caller.  Returns, per lam, the
+    picked positions in selection order and each pick's unrounded MMR
+    value.  The pairwise similarity matrix is computed once for all lams.
+    Ties break on the value rounded to 6 places, then on the earlier
+    position — so on (relevance desc, id asc) as every ranking here."""
+    V = np.asarray(vectors, dtype=np.float64)
     norms = np.linalg.norm(V, axis=1)
     norms[norms == 0.0] = 1.0
     U = V / norms[:, None]
     sim = U @ U.T  # candidates are <= k', tiny
-    rel = pdf["__r6"].to_numpy()
-    n = len(pdf)
-    frames = []
-    for lam_f in lams:
+    out = []
+    for lam in lams:
         selected: list[int] = []
-        remaining = list(range(n))
-        scores = []
-        while remaining and len(selected) < k_i:
+        scores: list[float] = []
+        remaining = list(range(len(rel)))
+        while remaining and len(selected) < k:
             if not selected:
-                best = remaining[0]  # max relevance (sorted order)
-                mmr = lam_f * rel[best]
+                j, mmr = 0, lam * rel[remaining[0]]  # max relevance (sorted order)
             else:
                 red = sim[np.ix_(remaining, selected)].max(axis=1)
-                vals = lam_f * rel[remaining] - (1.0 - lam_f) * red
-                vr = np.round(vals, 6)
-                # ties: max value, then min id (candidate order is id-sorted
-                # within equal relevance, so first argmax is deterministic)
-                j = int(np.argmax(vr))
-                best, mmr = remaining[j], float(vals[j])
-            selected.append(best)
-            remaining.remove(best)
+                vals = lam * rel[remaining] - (1.0 - lam) * red
+                j = int(np.argmax(np.round(vals, 6)))
+                mmr = float(vals[j])
+            selected.append(remaining.pop(j))
             scores.append(mmr)
-        sel = pdf.iloc[selected]
-        frames.append(
-            pd.DataFrame(
-                {
-                    "query_id": sel["query_id"].to_numpy(),
-                    "id": sel["id"].to_numpy(),
-                    "mmr_score": np.round(scores, 6),
-                    "rank": np.arange(1, len(selected) + 1, dtype=np.int32),
-                }
-            )
-        )
-    return frames
+        out.append((selected, scores))
+    return out
 
 
 def mmr_rerank_multi(
@@ -263,9 +218,26 @@ def mmr_rerank_multi(
     def per_query(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
             return pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        frames = _mmr_frames(pdf, k_i, lam_fs)
-        for f, lam_f in zip(frames, lam_fs):
-            f["lam"] = lam_f
-        return pd.concat(frames, ignore_index=True)
+        # deterministic candidate order
+        pdf = pdf.assign(__r6=pdf["__rel"].round(6)).sort_values(
+            ["__r6", "id"], ascending=[False, True], kind="mergesort"
+        )
+        qids, ids = pdf["query_id"].to_numpy(), pdf["id"].to_numpy()
+        picks = mmr_select(list(pdf["__v"]), pdf["__r6"].to_numpy(), k_i, lam_fs)
+        return pd.concat(
+            [
+                pd.DataFrame(
+                    {
+                        "query_id": qids[sel],
+                        "id": ids[sel],
+                        "mmr_score": np.round(scores, 6),
+                        "rank": np.arange(1, len(sel) + 1, dtype=np.int32),
+                        "lam": lam_f,
+                    }
+                )
+                for (sel, scores), lam_f in zip(picks, lam_fs)
+            ],
+            ignore_index=True,
+        )
 
     return cand.groupBy("query_id").applyInPandas(per_query, out_schema)

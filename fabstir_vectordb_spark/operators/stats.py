@@ -94,12 +94,6 @@ def age_distribution(
     )
 
 
-def ts_range(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    return df.agg(
-        F.min(ts_col).alias("min_ts"), F.max(ts_col).alias("max_ts")
-    )
-
-
 def cluster_distribution(
     assigned: DataFrame, cluster_col: str = "cluster_id"
 ) -> DataFrame:

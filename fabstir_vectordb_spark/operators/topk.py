@@ -160,8 +160,3 @@ def weighted_merge(
     else:
         raise ValueError(f"unknown merge strategy {strategy!r}")
     return results.groupBy(query_col, id_col).agg(agg.alias(score_col))
-
-
-def apply_threshold(df: DataFrame, threshold: float, score_col: str = "score") -> DataFrame:
-    """Drop rows whose score is below threshold (session.rs:287-293)."""
-    return df.filter(F.col(score_col) >= threshold)

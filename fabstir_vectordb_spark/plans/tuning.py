@@ -49,11 +49,6 @@ def tune_n_probe(dataset_size: int, k: int, n_clusters: int) -> int:
     return min(n_clusters, base * scale)
 
 
-def tune_candidate_limit(k: int) -> int:
-    """Oversample factor for post-ranking steps (rerank, threshold)."""
-    return max(k * 3, 50)  # k*3 is the reference's oversampling constant
-
-
 # Binary sign-bit tier boundary (operators/binary.py), from the
 # measured scan series (PERFORMANCE.md "Binary scan series extended to
 # 5M"): 20.2 ms/query at 2M vectors, 76.0 ms at 5M — the full Hamming
@@ -111,7 +106,8 @@ def tune_binary(
 
 # Range-join density crossover (operators/temporal.range_join vs the
 # native equality-join + BETWEEN plan), from the measured series
-# (PERFORMANCE.md "range-join crossover", tools/range_join_compare.py):
+# (PERFORMANCE.md "Bucketed range join vs Spark's native plan", rerun
+# with `python tools/range_join_compare.py USERS PER_USER`):
 # at 3,000 points/key the native plan still wins (0.7x), at 30,000 the
 # bucketed plan wins 1.6x, and the gap grows with density (4.8x at
 # 400,000) — native enumerates points_k x intervals_k candidate pairs

@@ -110,6 +110,7 @@ from fabstir_vectordb_spark.operators.knn import (
     knn_bulk,
     partial_knn,
 )
+from fabstir_vectordb_spark.operators.scoring import mmr_select
 from fabstir_vectordb_spark.plans.tuning import plan_search
 
 RECENCY_DAYS = 7  # src/hybrid/core.rs:77
@@ -160,30 +161,16 @@ def _result_item(r: Row | dict, include_vectors: bool) -> dict:
 
 
 def _mmr_select(results: list[dict], k: int, lam: float) -> list[dict]:
-    """Driver-side MMR over an already-collected candidate list (the
-    point-API twin of operators/scoring.py:mmr_rerank — same greedy
-    selection, same rounded tie discipline)."""
+    """Driver-side MMR over an already-collected candidate list: the
+    greedy selection of operators/scoring.py:mmr_rerank
+    (``scoring.mmr_select``), its relevances rounded by Python ``round``."""
     if not results:
         return []
     cand = sorted(
         results, key=lambda r: (-round(r["score"], 6), r["id"])
     )
-    V = np.asarray([np.asarray(r["vector"], dtype=np.float64) for r in cand])
-    norms = np.linalg.norm(V, axis=1)
-    norms[norms == 0.0] = 1.0
-    U = V / norms[:, None]
-    sim = U @ U.T
     rel = np.asarray([round(r["score"], 6) for r in cand])
-    selected: list[int] = []
-    remaining = list(range(len(cand)))
-    while remaining and len(selected) < k:
-        if not selected:
-            j = 0
-        else:
-            red = sim[np.ix_(remaining, selected)].max(axis=1)
-            vals = np.round(lam * rel[remaining] - (1.0 - lam) * red, 6)
-            j = int(np.argmax(vals))
-        selected.append(remaining.pop(j))
+    [(selected, _)] = mmr_select([r["vector"] for r in cand], rel, k, [lam])
     return [dict(cand[i]) for i in selected]
 
 
@@ -1597,16 +1584,8 @@ class VectorDbSession:
         }
 
     def deletion_stats(self) -> dict:
-        if self._empty:
-            return {"deleted": 0, "active": 0}
-        if self._held is not None:
-            live = self._held.live.num_rows
-            return {"deleted": self._held.rows.num_rows - live, "active": live}
-        agg = self._df.agg(
-            F.count(F.when(F.col("deleted"), 1)).alias("d"),
-            F.count(F.when(~F.col("deleted"), 1)).alias("a"),
-        ).collect()[0]
-        return {"deleted": agg["d"], "active": agg["a"]}
+        s = self.get_stats()
+        return {"deleted": s["deletedCount"], "active": s["vectorCount"]}
 
     # --------------------------------------------------------------- schema
 
@@ -1810,15 +1789,15 @@ def verify_integrity(spark: SparkSession, path: str) -> dict:
         if not cs["ok"]:
             out["ok"] = False
             return out  # don't hand corrupt files to the reader
-    df = spark.read.parquet(os.path.join(path, "vectors"))
-    live = df.filter(~F.col("deleted")).count()
-    dead = df.filter(F.col("deleted")).count()
-    out["found_live"] = live
-    out["found_deleted"] = dead
+    row = spark.read.parquet(os.path.join(path, "vectors")).agg(
+        F.count(F.when(~F.col("deleted"), 1)).alias("live"),
+        F.count(F.when(F.col("deleted"), 1)).alias("dead"),
+    ).first()
+    out["found_live"], out["found_deleted"] = row["live"], row["dead"]
     out["ok"] = (
         out["ok"]
-        and live == manifest.get("total_vectors")
-        and dead == manifest.get("deleted_vectors")
+        and row["live"] == manifest.get("total_vectors")
+        and row["dead"] == manifest.get("deleted_vectors")
     )
     return out
 

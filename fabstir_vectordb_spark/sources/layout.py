@@ -35,7 +35,8 @@ scan must touch (pinned by test: z-ordered reads equal the unordered
 rows exactly).  ``zorder_stats`` reads the written footers (pyarrow)
 and reports, per clustering column, how many files a range predicate
 could prune — the honest, engine-independent measure of layout
-quality used by tools/zorder_datum.py.
+quality that PERFORMANCE.md's z-order datum reports and
+tests/test_layout.py pins.
 
 Reference parity: none (the reference has no storage-layout surface);
 extension-axis with sources/vectors.py's writers.

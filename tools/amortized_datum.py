@@ -9,55 +9,16 @@ Prints one JSON line: the amortized dict + cpus.
 from __future__ import annotations
 
 import json
-import os
-import sys
-import time
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+import _harness  # puts the checkout's root on sys.path
 
-from pyspark.sql import SparkSession  # noqa: E402
-
-import bench  # noqa: E402
+import bench
 
 
 def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("amortized_datum")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_mem)
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{driver_mem} -XX:+AlwaysPreTouch",
-        )
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5"))
-
-    def timed(fn) -> float:
-        samples = []
-        for _ in range(REPS):
-            t0 = time.time()
-            fn()
-            samples.append(time.time() - t0)
-        samples.sort()
-        return samples[len(samples) // 2] if REPS % 2 else (
-            samples[REPS // 2 - 1] + samples[REPS // 2]
-        ) / 2
-
-    out = bench._amortized(spark, sf_dir, timed)
-    out["cpus"] = int(cpus)
+    spark = _harness.bench_session("amortized_datum")
+    out = bench._amortized(spark, _harness.SF_DIR, _harness.timed)
+    out["cpus"] = int(_harness.CPUS)
     print(json.dumps(out))
     return 0
 

@@ -15,9 +15,8 @@ from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-import __spark_entry__ as entrymod  # noqa: E402
+import _harness  # puts the checkout's root on sys.path
+import __spark_entry__ as entrymod
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -35,23 +34,10 @@ def canonical(df_pandas):
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .appName("check_correctness")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _harness.session("check_correctness", 16, 16, "16g")
 
     con = duckdb.connect()
     for t in TABLES:

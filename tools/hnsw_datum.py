@@ -7,60 +7,24 @@ Usage: python tools/hnsw_datum.py   (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS)
 
 from __future__ import annotations
 
-import os
 import shutil
-import sys
 import tempfile
 import time
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+import _harness  # puts the checkout's root on sys.path
+from pyspark.sql import functions as F
 
-from pyspark.sql import SparkSession  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-import __spark_entry__ as E  # noqa: E402
-from fabstir_vectordb_spark.operators.hnsw import HNSWIndex  # noqa: E402
+import __spark_entry__ as E
+from fabstir_vectordb_spark.operators.hnsw import HNSWIndex
 
 
 def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("hnsw_datum")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_mem)
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{driver_mem} -XX:+AlwaysPreTouch",
-        )
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5"))
-
-    def timed(fn) -> float:
-        samples = []
-        for _ in range(REPS):
-            t0 = time.time()
-            fn()
-            samples.append(time.time() - t0)
-        samples.sort()
-        return samples[len(samples) // 2] if REPS % 2 else (
-            samples[REPS // 2 - 1] + samples[REPS // 2]
-        ) / 2
-
+    spark = _harness.bench_session("hnsw_datum")
+    cpus = _harness.CPUS
     REPLICAS = 50
     work = tempfile.mkdtemp(prefix="hnsw_datum_")
     try:
-        emb = E._t(spark, sf_dir, "embeddings")
+        emb = E._t(spark, _harness.SF_DIR, "embeddings")
         reps = spark.range(REPLICAS).select(F.col("id").cast("int").alias("__rep"))
         big = emb.crossJoin(reps).select(
             (F.col("vec_id") * REPLICAS + F.col("__rep")).alias("vec_id"),
@@ -92,7 +56,7 @@ def main() -> int:
             ).save()
 
         hnsw_search()  # warm
-        ms = timed(hnsw_search) * 1000.0 / 200
+        ms = _harness.timed(hnsw_search) * 1000.0 / 200
         print(
             f'{{"hnsw_build_s": {build_s:.2f}, "hnsw_ms_per_query": {ms:.3f}, '
             f'"vectors": {n_vectors}, "cpus": {cpus}}}'

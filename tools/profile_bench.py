@@ -9,44 +9,22 @@ Usage: python tools/profile_bench.py [query ...]
 
 from __future__ import annotations
 
-import os
+import statistics
 import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+import _harness  # puts the checkout's root on sys.path
+from pyspark.sql import functions as F
 
-from pyspark.sql import SparkSession  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-import __spark_entry__ as E  # noqa: E402
-import bench  # noqa: E402
+import __spark_entry__ as E
+import bench
 
 
 def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g")
+    sf_dir = _harness.SF_DIR
     only = set(sys.argv[1:])
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile_bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_mem)
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{driver_mem} -XX:+AlwaysPreTouch",
-        )
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _harness.bench_session("profile_bench")
 
     qs = E.queries()
     qs.update(
@@ -122,17 +100,10 @@ def main() -> int:
     if only:
         names = [n for n in names if n in only]
 
-    REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5"))
-
-    def med(xs):
-        xs = sorted(xs)
-        n = len(xs)
-        return xs[n // 2] if n % 2 else (xs[n // 2 - 1] + xs[n // 2]) / 2
-
     print(f"{'query':24s} {'construct':>10s} {'execute':>10s} {'total':>10s}")
     for name in names:
         cons, execs, tots = [], [], []
-        for _ in range(REPS):
+        for _ in range(_harness.REPS):
             t0 = time.time()
             df = qs[name](spark, sf_dir)
             t1 = time.time()
@@ -142,7 +113,8 @@ def main() -> int:
             execs.append(t2 - t1)
             tots.append(t2 - t0)
         print(
-            f"{name:24s} {med(cons):10.3f} {med(execs):10.3f} {med(tots):10.3f}"
+            f"{name:24s} {statistics.median(cons):10.3f} "
+            f"{statistics.median(execs):10.3f} {statistics.median(tots):10.3f}"
         )
     return 0
 

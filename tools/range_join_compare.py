@@ -23,31 +23,18 @@ from __future__ import annotations
 import json
 import sys
 import time
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-from pyspark.sql import SparkSession
+import _harness  # puts the checkout's root on sys.path
 from pyspark.sql import functions as F
+
+from fabstir_vectordb_spark.operators.temporal import range_join
 
 
 def main() -> int:
     users = int(sys.argv[1]) if len(sys.argv) > 1 else 200
     per_user = int(sys.argv[2]) if len(sys.argv) > 2 else 3000
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("range_join_compare")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    from fabstir_vectordb_spark.operators.temporal import range_join
+    spark = _harness.session("range_join_compare", 32, 64, "24g")
 
     base = 1_700_000_000
     n_pts = users * per_user
