@@ -25,15 +25,25 @@ def matrix(
     """A list column as an ``(n, dim)`` array of ``dtype``: a writable copy
     of the flat value buffer, or with ``rows`` of the rows at those
     positions, gathered in the column's own type before the one
-    conversion.  Raises ``ValueError`` naming ``name`` on a null vector, a
-    null element, or a vector whose length differs from the first one's."""
+    conversion.  Raises as ``values`` does."""
+    v = values(col, name)
+    if rows is None:
+        return np.array(v, dtype=dtype)
+    return v[rows].astype(dtype, copy=False)
+
+
+def values(col: pa.Array | pa.ChunkedArray, name: str) -> np.ndarray:
+    """A list column as a read-only ``(n, dim)`` view of its flat value
+    buffer, in the values' own type: no copy when the column is one chunk.
+    Raises ``ValueError`` naming ``name`` on a null vector, a null element,
+    or a vector whose length differs from the first one's."""
     if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
+        col = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
     n = len(col)
     if col.null_count:
         raise ValueError(f"column {name!r}: null vector")
     if n == 0:
-        return np.empty((0, 0), dtype=dtype)
+        return np.empty((0, 0), dtype=col.type.value_type.to_pandas_dtype())
     lengths = col.value_lengths().to_numpy(zero_copy_only=False)
     dim = int(lengths[0])
     if (lengths != dim).any():
@@ -42,10 +52,7 @@ def matrix(
     flat = col.flatten()
     if flat.null_count:
         raise ValueError(f"column {name!r}: null element inside a vector")
-    values = flat.to_numpy(zero_copy_only=False).reshape(n, dim)
-    if rows is None:
-        return np.array(values, dtype=dtype)
-    return values[rows].astype(dtype, copy=False)
+    return flat.to_numpy(zero_copy_only=False).reshape(n, dim)
 
 
 def sort_keys(col: pa.Array | pa.ChunkedArray) -> np.ndarray:

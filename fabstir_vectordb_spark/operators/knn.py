@@ -25,11 +25,16 @@ rows are collected as Arrow and merged on the driver
 (``_merged_on_driver``, ``topk.first_k_per_query``) into a local
 relation: no exchange anywhere.  With ``probes`` the pass
 reads only the probed IVF clusters and ranks each query against its own.
-The session's point searches on a small table run the same
-``_topk_batch`` on the driver instead, over the live rows the session
-holds there (``session._HeldRows``, filled by one JVM-only ``toArrow()``
-per table version and bounded by the session's byte cap): no Python
-task, and no Spark job once the rows are held.
+The session's point searches on a small table rank on the driver instead,
+with the same ``_batch_topk_rows`` and, on the IVF path, the same
+per-cluster grouping (``_probed_topk_rows``), over the rows the session
+holds there (``session._HeldRows``, bounded by the session's byte cap).
+They rank from a block index built once per table version
+(``_HeldRows.blocks``): one float32 view of the held vector buffer, the
+ids' sort keys, and each cluster's run of a stable cluster order.  A
+search's predicate picks row positions, a probed search only in its
+probed clusters' runs, and only the kept rows' columns are taken from
+Arrow: no Python task, and no Spark job once the rows are held.
 
 Larger query sets (``knn_bulk`` and ``IVFIndex.search_bulk`` above the
 caps): ``cogroup_block_knn`` cogroups vector blocks with the query rows,
@@ -280,9 +285,9 @@ def _topk_batch(
     probes: dict[int, np.ndarray] | None,
     carry: tuple[str, ...] | list[str],
 ) -> pa.Table:
-    """The one per-batch ranking body, run by ``partial_knn``'s executors
-    and on the driver by the session's point search over its held rows
-    (``session.VectorDbSession._held_rows``): the top-k per query of the batch
+    """The one per-batch ranking body of ``partial_knn``'s executors (the
+    session's held rows rank the same way from their block index,
+    ``session._HeldRows.first_k``): the top-k per query of the batch
     ``b`` as (query_id, id, distance, *carry) rows.  With ``probes`` the
     batch's rows are grouped by their ``cluster_id`` and each group ranks
     only the queries that probed it (``_probed_topk_rows``, the grouping
@@ -326,8 +331,9 @@ def _probed_topk_rows(
     probes: dict[int, np.ndarray],
     rank: Callable[[int, int, int, np.ndarray], tuple[np.ndarray, np.ndarray, np.ndarray]],
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """The per-cluster grouping of one batch, shared by ``partial_knn`` and
-    ``pq.partial_adc``: over the ``_cluster_runs`` of the batch, each
+    """The per-cluster grouping of one batch, shared by ``partial_knn``,
+    ``pq.partial_adc`` and the session's held rows (``order`` there is the
+    positions a search ranks): over the ``_cluster_runs`` of the batch, each
     cluster ranks only the queries that probe it.  ``rank(cluster id,
     start, end, qidx)`` ranks the sorted rows ``order[start:end]`` (the
     caller holds its arrays in that order) against the queries at

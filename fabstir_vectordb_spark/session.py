@@ -64,9 +64,12 @@ width, which probes the clustered table when an index is trained and no
 filter is given, else ranks the filtered live rows exactly.  search and
 search_batch hold their queries on the driver.  A small session ranks
 its held rows there and makes no py4j call: the recency cutoff and the
-filter are masks over the held Arrow table.  A larger table broadcasts
+filter are masks over the held Arrow table, and the rows are ranked from
+a block index built once per table version (``_HeldRows.blocks``: the
+held vectors viewed in place, and each cluster's run), so a probed search
+reads only its probed clusters' rows.  A larger table broadcasts
 the queries into one map-only Arrow pass (``partial_knn``) that emits
-<= k rows per (query, batch).  Both run the same per-batch kernel with each
+<= k rows per (query, batch).  Both rank with the same kernel with each
 row's metadata carried along, and the driver keeps the first k.
 search_dataframe's queries arrive as a DataFrame, so it returns
 ``_ranked``: IVFIndex.search_bulk or knn_bulk over the same rows, which
@@ -84,7 +87,7 @@ import os
 import shutil
 import uuid
 from functools import reduce
-from typing import Any
+from typing import Any, NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -105,12 +108,16 @@ from fabstir_vectordb_spark.operators import _arrow
 from fabstir_vectordb_spark.operators.cache import QueryResultCache
 from fabstir_vectordb_spark.operators.ivf import IVFIndex
 from fabstir_vectordb_spark.operators.knn import (
+    _batch_topk_rows,
+    _cluster_runs,
     _first_k_rows,
-    _topk_batch,
+    _probed_topk_rows,
+    _query_positions,
     knn_bulk,
     partial_knn,
 )
 from fabstir_vectordb_spark.operators.scoring import mmr_select
+from fabstir_vectordb_spark.operators.topk import first_k_per_query
 from fabstir_vectordb_spark.plans.tuning import plan_search
 
 RECENCY_DAYS = 7  # src/hybrid/core.rs:77
@@ -196,6 +203,12 @@ class _HeldRows:
     (``VectorDbSession._held_keep``), and a write batch arrives already
     in their Arrow types.
 
+    A search ranks from the instance's block index (``blocks``), built at
+    its first search and never by a write, so each write's new instance
+    starts without one and none is ever stale.  Building it combines the
+    chunks of ``rows`` (the writes append a chunk per batch), so the
+    vectors are held once, and the index views them in place.
+
     What drops the held rows (``VectorDbSession._drop_held``, which makes
     ``frame`` the Spark-path table first): a write not applied here
     (migrate_aged, an add or update whose schema change needs a value
@@ -219,7 +232,8 @@ class _HeldRows:
         self.base = base
         self.touched = touched
         self._frame: DataFrame | None = None
-        self._live: pa.Table | None = None
+        self._alive: np.ndarray | None = None
+        self._blocks: _Blocks | None = None
 
     @classmethod
     def read(cls, df: DataFrame) -> "_HeldRows":
@@ -254,10 +268,94 @@ class _HeldRows:
         return self._frame
 
     @property
-    def live(self) -> pa.Table:
-        if self._live is None:
-            self._live = self.rows.filter(pc.invert(self.rows.column("deleted")))
-        return self._live
+    def alive(self) -> np.ndarray:
+        """Which of ``rows`` are live (not soft-deleted)."""
+        if self._alive is None:
+            self._alive = ~self.rows.column("deleted").to_numpy()
+            self._alive.flags.writeable = False
+        return self._alive
+
+    @property
+    def live_count(self) -> int:
+        """The number of live rows."""
+        return int(np.count_nonzero(self.alive))
+
+    def blocks(self) -> "_Blocks":
+        """The block index of these rows, built once, at the first search
+        of this instance: ``rows`` become one chunk, and the index holds
+        views and positions into them (``_Blocks``)."""
+        if self._blocks is None:
+            self.rows = self.rows.combine_chunks()
+            order, runs = np.empty(0, dtype=np.int64), {}
+            if "cluster_id" in self.rows.column_names and self.rows.num_rows:
+                # a row with no cluster (-1) is in no probed run
+                cid = pc.fill_null(self.rows.column("cluster_id").chunk(0), -1)
+                order, cruns = _cluster_runs(cid)
+                runs = {c: (s, e) for c, s, e in cruns}
+            self._blocks = _Blocks(
+                _arrow.values(self.rows.column("vector"), "vector"),
+                _arrow.sort_keys(self.rows.column("id")),
+                order,
+                runs,
+            )
+        return self._blocks
+
+    def probed(self, keep: np.ndarray, probes: dict[int, np.ndarray]):
+        """The positions of the rows ``keep`` selects in the probed
+        clusters, cluster by cluster in ``probes``' id order, and the
+        ``(cluster id, start, end)`` run of each cluster among them."""
+        b = self.blocks()
+        parts, runs, n = [np.empty(0, dtype=np.int64)], [], 0
+        for cid in sorted(probes):
+            if cid not in b.runs:
+                continue
+            s, e = b.runs[cid]
+            p = b.order[s:e]
+            p = p[keep[p]]
+            if len(p):
+                parts.append(p)
+                runs.append((cid, n, n + len(p)))
+                n += len(p)
+        return np.concatenate(parts), runs
+
+    def first_k(
+        self,
+        pos: np.ndarray,
+        runs: list[tuple[int, int, int]] | None,
+        qids: pa.Array,
+        Q: np.ndarray,
+        k: int,
+        probes: dict[int, np.ndarray] | None,
+        carry: list[str],
+    ) -> pa.Table:
+        """The first ``k`` rows per query among the rows at ``pos``, as
+        ``knn._first_k_rows`` orders the (query_id, id, distance, *carry)
+        rows ``knn._topk_batch`` gives for a batch of them.  Their vectors
+        are ranked in float64 by ``knn._batch_topk_rows``: with the
+        ``runs`` of ``probed``, one cluster at a time, each against the
+        queries that probe it (``knn._probed_topk_rows``), so a search
+        converts only a cluster's rows at once.  The ranked rows are merged
+        by ``topk.first_k_per_query`` before any column is taken, so only
+        the kept rows' columns are taken from ``rows``."""
+        b = self.blocks()
+        keys = b.keys[pos]
+        if runs is None:
+            V = b.vectors[pos].astype(np.float64)
+            qpos, vpos, d = _batch_topk_rows("l2", V, keys, Q, k)
+            vpos = pos[vpos]
+        else:
+            qpos, vpos, d = _probed_topk_rows(
+                pos, runs, probes,
+                lambda cid, s, e, qidx: _batch_topk_rows(
+                    "l2", b.vectors[pos[s:e]].astype(np.float64), keys[s:e], Q[qidx], k
+                ),
+            )
+        # a repeated query id is one query, as ``_first_k_rows`` groups them
+        keep = first_k_per_query(_query_positions(qids, qids)[qpos], d, b.keys[vpos], k)
+        t = _arrow.topk_table(qids, qpos[keep], self.rows.column("id"), vpos[keep], d[keep])
+        for c in carry:
+            t = t.append_column(c, self.rows.column(c).take(vpos[keep]))
+        return t
 
     def live_mask(self, ids) -> np.ndarray:
         """Which of ``rows`` are live rows whose id is in ``ids``.  Rows are
@@ -308,14 +406,30 @@ class _HeldRows:
 
     def vacuumed(self) -> "_HeldRows":
         """The live rows alone; their base is a local relation of them."""
-        return _HeldRows(self.spark, self.schema, self.live)
+        return _HeldRows(self.spark, self.schema, self.rows.filter(pa.array(self.alive)))
 
     def rebased(self) -> "_HeldRows":
         """The same rows on a local relation of their own: no Spark table
         they were read from stays under them."""
         nxt = _HeldRows(self.spark, self.schema, self.rows)
-        nxt._live = self._live
+        nxt._alive, nxt._blocks = self._alive, self._blocks
         return nxt
+
+
+class _Blocks(NamedTuple):
+    """The block index of one ``_HeldRows`` instance, over its one-chunk
+    ``rows``: the reference's per-cluster inverted lists
+    (ivf/core.rs:565-620) as positions into the held table."""
+
+    # the ``(n, dim)`` vectors, a read-only view of the vector column's
+    # value buffer (float32 for an ``array<float>`` column)
+    vectors: np.ndarray
+    # the ids as ``_arrow.sort_keys`` orders them: they break distance ties
+    keys: np.ndarray
+    # the row positions sorted stably by cluster id (empty untrained)
+    order: np.ndarray
+    # {cluster id: (start, end)}: the cluster's run of ``order``
+    runs: dict[int, tuple[int, int]]
 
 
 def _union_schema(spark: SparkSession, a: T.StructType, b: T.StructType) -> T.StructType | None:
@@ -991,18 +1105,18 @@ class VectorDbSession:
         (``filters.filter_mask``), so both mean what they mean in
         ``_ranked``."""
         rows = self._held.rows
-        keep = ~rows.column("deleted").to_numpy(zero_copy_only=False)
+        keep = self._held.alive
         if not (search_recent and search_historical):
             ts = rows.column("ts")
             cutoff = pa.scalar(
                 T.TimestampType().toInternal(_utcnow() - _dt.timedelta(days=RECENCY_DAYS)), ts.type
             )
             if not search_recent:
-                keep &= pc.less(ts, cutoff).fill_null(False).to_numpy(zero_copy_only=False)
+                keep = keep & pc.less(ts, cutoff).fill_null(False).to_numpy(zero_copy_only=False)
             if not search_historical:
-                keep &= pc.greater_equal(ts, cutoff).fill_null(False).to_numpy(zero_copy_only=False)
+                keep = keep & pc.greater_equal(ts, cutoff).fill_null(False).to_numpy(zero_copy_only=False)
         if filter is not None:
-            keep &= filter_mask(filter, self._held.schema, rows, metadata_col="metadata")
+            keep = keep & filter_mask(filter, self._held.schema, rows, metadata_col="metadata")
         return keep
 
     def _held_rows(
@@ -1011,21 +1125,20 @@ class VectorDbSession:
         search_recent: bool,
         search_historical: bool,
         probes: dict[int, np.ndarray] | None,
-    ) -> pa.Table:
-        """The held live rows the search's predicate keeps (``_held_keep``),
-        only the probed clusters' when ``probes`` is given.  A session whose
-        rows are not held yet pulls them with one JVM-only ``toArrow()``;
-        after that no search makes a py4j call."""
+    ) -> tuple[np.ndarray, list[tuple[int, int, int]] | None]:
+        """The positions in the held rows of the live rows the search's
+        predicate keeps (``_held_keep``), and None; with ``probes``, only
+        those in the probed clusters' runs of the block index, cluster by
+        cluster, and the ``(cluster id, start, end)`` run of each among the
+        positions (``_HeldRows.probed``).  A session whose rows are not
+        held yet pulls them with one JVM-only ``toArrow()``; after that no
+        search makes a py4j call."""
         if self._held is None:
             self._held = _HeldRows.read(self._table)
-        held = self._held
-        if filter is None and search_recent and search_historical and probes is None:
-            return held.live
         keep = self._held_keep(filter, search_recent, search_historical)
-        if probes is not None:
-            cid = held.rows.column("cluster_id")
-            keep &= pc.is_in(cid, pa.array(sorted(probes), cid.type)).to_numpy(zero_copy_only=False)
-        return held.rows.filter(pa.array(keep))
+        if probes is None:
+            return np.flatnonzero(keep), None
+        return self._held.probed(keep, probes)
 
     def _search_points(
         self,
@@ -1047,14 +1160,21 @@ class VectorDbSession:
         rows themselves, in one of two places:
 
         - a small live table (``_ranks_on_driver``) is ranked on the
-          driver over the live rows the session holds (``_held_rows``):
-          the first search of a table version pulls them with one JVM-only
-          Arrow collect, and later ones run no Spark job;
+          driver from the block index of the rows the session holds
+          (``_HeldRows.blocks``): the predicate's mask picks row positions,
+          on the IVF path only in the probed clusters' runs
+          (``_held_rows``); their float32 vectors are ranked in float64,
+          one probed cluster at a time, and merged before any column is
+          taken, so only the kept rows' columns are taken from Arrow
+          (``_HeldRows.first_k``).  The first search of a table version
+          pulls the rows with one JVM-only Arrow collect if they are not
+          held, and builds the index; later ones run no Spark job;
         - a larger one stays on the executors: the queries are broadcast
           into ``partial_knn``, one map-only Arrow pass that emits <= k
           rows per (query, batch), collected as Arrow.
 
-        Both run the same per-batch kernel (``knn._topk_batch``), and one
+        Both rank with the same kernel (``knn._batch_topk_rows``, per
+        batch in ``knn._topk_batch`` on the executors), and one
         vectorized merge on the driver (``topk.first_k_per_query``) keeps
         the first k of each query by (round(distance, 6), id) — rounded as
         Spark's ``round``, the key of ``topk_per_query`` — then applies
@@ -1077,15 +1197,15 @@ class VectorDbSession:
         )
         carry = ["metadata"] + (["vector"] if include_vectors else [])
         if self._ranks_on_driver():
-            rows = self._held_rows(filter, search_recent, search_historical, probes)
-            ranked = _topk_batch(rows, qids_a, Q, k, "l2", "id", "vector", probes, carry)
+            pos, runs = self._held_rows(filter, search_recent, search_historical, probes)
+            kept = self._held.first_k(pos, runs, qids_a, Q, k, probes, carry)
         else:
             self._drop_held()
             pred = self._predicate(filter, search_recent, search_historical)
             ranked = partial_knn(
                 self._rows(pred), qids, Q, T.StringType(), k, probes=probes, carry=carry
             ).toArrow()
-        kept = _first_k_rows(ranked, qids_a, k)
+            kept = _first_k_rows(ranked, qids_a, k)
         # the carried columns of the kept rows as Spark Rows, exactly what
         # a collect of them returns
         carried = ArrowTableToRowsConversion.convert(
@@ -1475,7 +1595,7 @@ class VectorDbSession:
             return {"removed": 0, "remaining": 0}
         self._cache.invalidate()
         if self._held is not None:
-            live = self._held.live.num_rows
+            live = self._held.live_count
             removed = self._held.rows.num_rows - live
             self._held = self._held.vacuumed()
             self._replace_cached(None)
@@ -1507,17 +1627,18 @@ class VectorDbSession:
         cutoff = _utcnow() - _dt.timedelta(days=RECENCY_DAYS)
         now = _utcnow()
         if self._held is not None:
-            live = self._held.live
+            held = self._held
+            live = held.live_count
             # the instants F.lit(cutoff) and F.lit(now) stand for
-            ts = pc.cast(live.column("ts"), pa.int64()).to_numpy()
+            ts = pc.cast(held.rows.column("ts").filter(pa.array(held.alive)), pa.int64()).to_numpy()
             as_ts = T.TimestampType().toInternal
             recent = int(np.count_nonzero(ts >= as_ts(cutoff)))
             ages = (as_ts(now) / 1e6 - ts / 1e6) * 1000.0
             return {
-                "vectorCount": live.num_rows,
-                "deletedCount": self._held.rows.num_rows - live.num_rows,
+                "vectorCount": live,
+                "deletedCount": held.rows.num_rows - live,
                 "recentCount": recent,
-                "historicalCount": live.num_rows - recent,
+                "historicalCount": live - recent,
                 "avgAgeMs": float(ages.mean()) if len(ages) else 0.0,
                 "dimension": self._dim,
             }
@@ -1621,7 +1742,7 @@ class VectorDbSession:
         if rows is not None and self._fits(rows):
             # one pull materializes the cache and fills the held rows
             self._held = _HeldRows.read(clustered)
-            self._live_count = self._held.live.num_rows
+            self._live_count = self._held.live_count
         else:
             self._live_count = clustered.filter(~F.col("deleted")).count()
 
@@ -1661,7 +1782,7 @@ class VectorDbSession:
             self._held = self._held.rebased()
             self._replace_cached(None)
             self._write_held(vectors, codec.lower(), schema)
-            live = self._held.live.num_rows
+            live = self._held.live_count
             counts = {"live": live, "dead": self._held.rows.num_rows - live}
         else:
             counts = self._write_table(vectors, codec, schema)

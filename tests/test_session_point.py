@@ -88,8 +88,8 @@ def path(request, monkeypatch):
     if want == "partial_knn":
         monkeypatch.setattr(session_mod, "_DRIVER_RANK_MAX_BYTES", 0)
     calls = {"held": 0, "partial_knn": 0}
-    # the driver runs the per-batch kernel itself only over held rows
-    for name, fn in (("held", "_topk_batch"), ("partial_knn", "partial_knn")):
+    # the driver runs the ranking kernel itself only over held rows
+    for name, fn in (("held", "_batch_topk_rows"), ("partial_knn", "partial_knn")):
         def counted(*a, _name=name, _fn=getattr(session_mod, fn), **kw):
             calls[_name] += 1
             return _fn(*a, **kw)
@@ -329,7 +329,7 @@ def test_uncounted_bulk_load_falls_back_to_partial_knn(spark, exact, monkeypatch
     def no_driver_rank(*a, **kw):
         raise AssertionError("an uncounted table was ranked on the driver")
 
-    monkeypatch.setattr(session_mod, "_topk_batch", no_driver_rank)
+    monkeypatch.setattr(session_mod, "_batch_topk_rows", no_driver_rank)
     for qid, vec in QUERIES:
         got = bulk.search(vec, k=K)
         assert got == want[qid]
@@ -444,21 +444,26 @@ def test_unfiltered_held_search_makes_no_py4j_call(spark, monkeypatch):
     assert len(sent) > 0
 
 
-def test_each_write_is_seen_by_the_next_held_search(spark):
+def test_each_write_is_seen_by_the_next_held_search(tmp_path, spark):
     """Every write, vacuum and train_index leaves the session new held
     rows — applied on the driver, or pulled again by the next search after
     migrate_aged, which drops them — so the next search sees the write and
     equals the DataFrame plan, filtered (the filter evaluated afresh over
-    the new rows) or not."""
+    the new rows) or not, and probed (from a block index built afresh:
+    a write never builds one, so none is stale).  So does the first search
+    of a loaded session, whose rows arrive as one chunk per cluster file."""
     s = _session(spark, trained=True)
     qid, vec = QUERIES[1]
     flt = {"lang": "en", "rank": {"$lt": 40}}
 
-    def search():
+    def search(s=s):
+        assert s._held is None or s._held._blocks is None
         got = s.search(vec, k=K)
         assert s._held is not None
         assert got == _via_ranked(s, [(qid, vec)], K, threshold=0.0)[qid]
-        for kw in ({"filter": flt}, {"filter": flt, "search_recent": False}):
+        n_probe = s._index.n_clusters - 1
+        kws = ({"filter": flt}, {"filter": flt, "search_recent": False}, {"n_probe": n_probe})
+        for kw in kws:
             want = _via_ranked(s, [(qid, vec)], K, threshold=0.0, **kw)[qid]
             assert s.search(vec, k=K, **kw) == want, kw
         return got
@@ -490,28 +495,105 @@ def test_each_write_is_seen_by_the_next_held_search(spark):
         got = search()
         assert s._held is not held, name
         assert seen(got), name
+    s.save(str(tmp_path / "db"))
+    loaded = VectorDbSession.load(spark, str(tmp_path / "db"))
+    assert loaded._held.rows.column("vector").num_chunks == s._index.n_clusters
+    assert search(loaded) == got
 
 
-@pytest.mark.parametrize("which", ["exact", "trained"])
+# nine queries spread over the ``blocks`` session's square: at k=40 some
+# of a query's nearest rows lie in clusters only another query probes
+SPREAD = [
+    (f"s{i}", [x, y, 1.0, 0.0])
+    for i, (x, y) in enumerate(np.random.default_rng(23).uniform(0, 60, (9, 2)).tolist())
+]
+
+
+@pytest.fixture(scope="module")
+def blocks(spark):
+    """A session of 1,040 rows spread over a 60 x 60 square in the first
+    two dims and 12 clusters, then three appended batches (three more
+    chunks of the held rows) and soft-deleted rows in most clusters,
+    appended ones included.  Its live rows exceed the planner's
+    probe-everything size (1,000 rows), so search_batch probes a quarter
+    of the clusters, a different quarter per query."""
+    rng = np.random.default_rng(19)
+
+    def item(i):
+        return {
+            "id": f"b{i:04d}",
+            "vector": [*rng.uniform(0, 60, 2).tolist(), *rng.normal(0.0, 0.4, 2).tolist()],
+            "metadata": {"lang": "en" if i % 2 else "de", "rank": i},
+            **({"timestamp": OLD} if i % 3 == 0 else {}),
+        }
+
+    s = VectorDbSession(spark)
+    s.add_vectors([item(i) for i in range(1_040)])
+    s.train_index(n_clusters=12, seed=7)
+    for lo in (1_040, 1_060, 1_080):
+        s.add_vectors([item(i) for i in range(lo, lo + 20)])
+    s.batch_delete([f"b{i:04d}" for i in range(5, 1_100, 37)])
+    return s
+
+
+@pytest.mark.parametrize("which", ["exact", "trained", "blocks"])
 def test_held_rows_rank_as_partial_knn(request, which, monkeypatch):
-    """Every search case and search_batch give the same rows over the held
-    rows as in ``partial_knn`` (the cap set to 0 bytes)."""
+    """Every search case, each probe width (one cluster, half, all) and
+    search_batch give the same rows over the held rows as in
+    ``partial_knn`` (the cap set to 0 bytes).  On ``blocks`` the held rows
+    are ranked from their block index as the writes left them (appended
+    chunks, soft-deleted rows), and search_batch's queries probe different
+    clusters, so it ranks cluster by cluster."""
     s = request.getfixturevalue(which)
-    batch = [{"id": q, "vector": v} for q, v in QUERIES]
+    batch = [{"id": q, "vector": v} for q, v in QUERIES + SPREAD]
+    n = s._index.n_clusters if s._index is not None and s._index.is_trained else 1
+    cases = CASES + [{"n_probe": w} for w in sorted({1, n // 2 or 1, n})]
 
     def run():
         s._cache.invalidate()
         return (
-            [s.search(vec, k=K, **kw) for kw in CASES for _, vec in QUERIES],
+            [s.search(vec, k=K, **kw) for kw in cases for _, vec in QUERIES],
             [s.search_batch(batch, k=K, **kw) for kw in ({}, {"filter": {"lang": "de"}})],
+            # k past the rows near a query: some of its nearest rows lie in
+            # clusters only another query probes, and it must not see them
+            s.search_batch(batch, k=40),
         )
 
-    s._drop_held()
+    if which == "blocks":
+        assert s._held.rows.column("vector").num_chunks > 1 and not s._held.alive.all()
+        probes = s._index.probes_by_cluster(
+            np.asarray([q["vector"] for q in batch]), s._probe_width(40, None, None)
+        )
+        assert any(len(q) < len(batch) for q in probes.values())
+    else:
+        s._drop_held()
     held = run()
-    assert s._held is not None
+    assert s._held is not None and s._held._blocks is not None
     monkeypatch.setattr(session_mod, "_DRIVER_RANK_MAX_BYTES", 0)
     assert run() == held
     assert s._held is None
+
+
+def test_block_index_views_the_held_vectors(spark):
+    """The block index holds no copy of the vectors: after the first
+    probed search its matrix is a float32 view of the held rows' one
+    vector buffer, so the byte cap (float32 vectors plus a per-row
+    allowance) bounds what the driver holds.  A write builds no index; the
+    next search builds its own over the new rows."""
+    assert session_mod._DRIVER_RANK_MAX_BYTES == 64 << 20
+    s = _session(spark, trained=True)
+    s.add_vectors([{"id": "extra", "vector": [3.0, 0.2, 1.0, 0.0]}])
+    held = s._held
+    assert held._blocks is None and held.rows.column("vector").num_chunks > 1
+    s.search(QUERIES[0][1], k=K, n_probe=2)
+    assert s._held is held
+    vectors = held.rows.column("vector")
+    assert vectors.num_chunks == 1
+    m = held._blocks.vectors
+    assert m.dtype == np.float32 and m.shape == (held.rows.num_rows, 4)
+    assert np.shares_memory(m, vectors.chunk(0).values.to_numpy())
+    s.batch_delete(["extra"])
+    assert s._held is not held and s._held._blocks is None
 
 
 def test_loaded_session_reuses_saved_layout(tmp_path, spark, trained, monkeypatch):

@@ -45,6 +45,8 @@ def session(app: str, cores, partitions, driver_mem: str, bench: bool = False):
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
+        # no console progress bar: a tool's redirected output stays readable
+        .config("spark.ui.showConsoleProgress", "false")
     )
     if bench:
         b = (
